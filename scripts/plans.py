@@ -5,8 +5,8 @@
 Each section shows the `explain("formatted")` output the design claims
 rest on: pushed term filters + constant bucket partition pruning on a
 persisted index, the single-scan flat strategies (BM25 fold, Indri map
-reassembly, positional co-location), and the block-max WAND candidate
-plan. Regenerate after compiler changes so the committed evidence
+reassembly, positional co-location), the fused batch and the pipeline
+operators. Regenerate after compiler changes so the committed evidence
 matches the code.
 """
 
@@ -95,7 +95,6 @@ def main() -> None:
     idx = read_index(spark, pdir)
     eng = SearchEngine(idx)
 
-    from searchengine_spark.operators.wand import bm25_topk_pruned
     from searchengine_spark.pipeline import dedup
 
     sections = [
@@ -118,11 +117,6 @@ def main() -> None:
             "#NEAR/2 (single scan, position co-location, Arrow merge)",
             "One scan, one groupBy; match-ALL via `size(map) = k`; the positional kernel is the only Python stage.",
             eng.scores("#near/2(barim batok)", model="rankedboolean"),
-        ),
-        (
-            "Block-max WAND top-k (candidate-block scoring)",
-            "Single term-IN scan; candidate blocks broadcast; exact re-score only inside `ub >= theta` blocks.",
-            bm25_topk_pruned(idx, ["cerim", "dirim"], k=10),
         ),
         (
             "Fused 3-query BM25 batch (broadcast query-terms table, one scan)",

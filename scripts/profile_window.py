@@ -36,6 +36,7 @@ def main() -> None:
 
     from searchengine_spark.engine import SearchEngine
     from searchengine_spark.index.build import read_index
+    from searchengine_spark.plans.compiler import flat_terms
     from searchengine_spark.session import get_spark
 
     spark = get_spark("profile-window", cores=CPUS, shuffle_partitions=2 * CPUS)
@@ -50,8 +51,7 @@ def main() -> None:
     # the #window node is the score root's only child
     iop_node = node.args[0]
 
-    flat = comp._flat_term_items(iop_node.args)
-    rows = comp._iop_batch_rows(flat)
+    rows = comp._iop_batch_rows(flat_terms(iop_node))
 
     n_rows = rows.count()
     t_scan = best_of(lambda: rows.count())

@@ -76,7 +76,7 @@ def main() -> None:
     docs = assign_doc_ids(extract_fields(pages), ext_id_col="url")
     idx_mem = build_index(
         docs, fields={"body": "body", "title": "title"}, ext_id_col="url",
-        analyzer="english", with_blocks=True, cache=True,
+        analyzer="english", cache=True,
     )
     n_post = idx_mem.postings.count()
     build_sec = time.time() - t0

@@ -66,7 +66,7 @@ def child(cores: int) -> None:
     docs = assign_doc_ids(extract_fields(pages), ext_id_col="url")
     idx = build_index(
         docs, fields={"body": "body", "title": "title"}, ext_id_col="url",
-        analyzer="english", with_blocks=True,
+        analyzer="english",
     )
     n_post = idx.materialize()
     build_sec = time.time() - t0
@@ -117,6 +117,8 @@ def _child_cmd(cores: int) -> tuple[list[str], dict[str, str]]:
     if not submit:
         env.pop("SCALING_VIA_SUBMIT", None)
         return [sys.executable, os.path.abspath(__file__), "--child", str(cores)], env
+    from searchengine_spark.session import driver_memory
+
     zip_path = os.path.join(REPO, "searchengine_spark.zip")
     # always rebuild: a stale zip would silently measure old code
     subprocess.run(
@@ -129,7 +131,7 @@ def _child_cmd(cores: int) -> tuple[list[str], dict[str, str]]:
     return [
         submit,
         "--master", f"local[{cores}]",
-        "--driver-memory", env.get("SPARK_DRIVER_MEM", "32g"),
+        "--driver-memory", driver_memory(),
         "--conf", "spark.ui.enabled=false",
         "--py-files", zip_path,
         os.path.abspath(__file__), "--child", str(cores),

@@ -8,12 +8,12 @@ Spark DataFrame pipeline:
   (lowercase, stopword slots, Krovetz-style stemming).
 - :mod:`searchengine_spark.codec` — docID-delta + varbyte position codecs.
 - :mod:`searchengine_spark.index` — inverted-index build (postings, stats,
-  block-max metadata, checkpoint-resumable bucketed layout, forward index).
+  checkpoint-resumable bucketed layout, forward index).
 - :mod:`searchengine_spark.plans` — structured-query parser + AST compiler to
   DataFrame plans for ``#AND #OR #SUM #WAND #WSUM #NEAR/n #WINDOW/n #SYN``
   under UnrankedBoolean / RankedBoolean / BM25 / Indri.
-- :mod:`searchengine_spark.operators` — positional merges, top-k, block-max
-  WAND pruning, PRF expansion, xQuAD/PM2 diversification, LeToR, DRMM.
+- :mod:`searchengine_spark.operators` — positional merges, top-k, PRF
+  expansion, xQuAD/PM2 diversification, LeToR, DRMM.
 - :mod:`searchengine_spark.pipeline` — training-data operators (dedup,
   similarity search, text stats, multimodal columns, event streams).
 - :mod:`searchengine_spark.streaming` — incremental index ingest.

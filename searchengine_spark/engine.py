@@ -18,7 +18,7 @@ from searchengine_spark.functions.xxh64 import term_bucket
 from searchengine_spark.index.build import InvertedIndex
 from searchengine_spark.operators.topk import attach_ext_ids, topk, topk_grouped
 from searchengine_spark.plans.ast import IopNode, SopNode, TermNode
-from searchengine_spark.plans.compiler import Compiler
+from searchengine_spark.plans.compiler import Compiler, flat_terms
 from searchengine_spark.plans.models import make_model
 from searchengine_spark.plans.parser import QueryParser
 
@@ -42,10 +42,10 @@ def _flat_sum_leaves(ast) -> list[TermNode] | None:
 
 
 def _flat_positional(ast):
-    """The IopNode when ``ast`` is a model-wrapped SINGLE positional
+    """The IopNode when ``ast`` is a model-wrapped SINGLE flat positional
     query — ``#SUM(#SCORE(#NEAR/n(t1..tk)))`` (or the unwrapped
-    ``#SCORE`` form) with >=2 distinct same-field TermNode args — else
-    None. These fuse into one shared postings scan per batch."""
+    ``#SCORE`` form), flat per ``compiler.flat_terms`` — else None.
+    These fuse into one shared postings scan per batch."""
     node = ast
     if isinstance(node, SopNode) and node.op == "sum" and len(node.args) == 1:
         node = node.args[0]
@@ -54,58 +54,7 @@ def _flat_positional(ast):
     iop = node.args[0]
     if not isinstance(iop, IopNode) or iop.op not in ("near", "window"):
         return None
-    args = iop.args
-    if len(args) < 2 or not all(isinstance(a, TermNode) for a in args):
-        return None
-    fld = args[0].field
-    names = [a.term for a in args]
-    if any(a.field != fld for a in args) or len(set(names)) != len(names):
-        return None
-    return iop
-
-
-def _flat_op_leaves(ast):
-    """(op, [TermNode...], weights|None) for the flat Indri/Boolean
-    shape — #AND/#OR/#WAND/#WSUM over >=2 distinct same-field
-    #SCORE(term) args — else None. Mirrors the eligibility rules of
-    Compiler._indri_flat_strategy / _bool_flat_strategy so the fused
-    batch covers exactly the single-scan-able queries."""
-    if not isinstance(ast, SopNode) or ast.op not in ("and", "or", "wand", "wsum"):
-        return None
-    if len(ast.args) < 2:
-        return None
-    if not all(
-        isinstance(a, SopNode) and a.op == "score" and isinstance(a.args[0], TermNode)
-        for a in ast.args
-    ):
-        return None
-    terms = [a.args[0] for a in ast.args]
-    fld = terms[0].field
-    names = [t.term for t in terms]
-    if any(t.field != fld for t in terms) or len(set(names)) != len(names):
-        return None
-    return ast.op, terms, list(ast.weights) if ast.weights else None
-
-
-# Auto-pruning (VERDICT r4 item 4) — wired, measured, and turned OFF by
-# measurement (PRUNEBENCH.json, 400k + 4M persisted indexes, quiet
-# host): the pruned paths were 1.3-6x SLOWER than the exhaustive
-# single-scan plans at every measured posting volume. Two structural
-# reasons, not tuning artifacts:
-#   1. The postings layout is bucketed/pruned by TERM (that is what
-#      makes every other query fast), so the block filter — an
-#      expression over doc_id — cannot reduce parquet I/O; the seed
-#      and candidate jobs each re-read the same term postings the
-#      exhaustive plan reads ONCE.
-#   2. The block upper bound sums per-term maxima, so for multi-term
-#      queries theta never excludes blocks (measured candidate-block
-#      fraction 1.00 on the 7-term headline query at 4M pages).
-# The exact pruned operators stay available (prune=True) and pinned
-# rank/score-identical by tests/test_wand.py + gate `bm25_wand_pruned`;
-# AUTO_PRUNE exists so a doc-partitioned index layout (where the block
-# filter CAN reach the scan) can flip it back on with one line.
-AUTO_PRUNE = False
-PRUNE_MIN_POSTINGS = 100_000
+    return iop if flat_terms(iop) is not None else None
 
 
 class SearchEngine:
@@ -154,97 +103,20 @@ class SearchEngine:
         self.index.trim_temps()
         return out
 
-    def _pruned_topk(self, m, ast, k: int, prune) -> DataFrame | None:
-        """Route an eligible AST through an exact pruned top-k operator.
-
-        Returns the ranked frame, or None when the query/model shape is
-        not prunable or (``prune="auto"``) auto-routing is off
-        (AUTO_PRUNE, turned off by the PRUNEBENCH.json measurement) or
-        the estimated posting volume is below PRUNE_MIN_POSTINGS.
-        ``prune=True`` forces the pruned path regardless (tests pin
-        identity at small scale).
-        Covered shapes — both proven rank/score-identical to the
-        exhaustive plans:
-
-        - BM25 bag-of-words #SUM over distinct same-field terms ->
-          block-max WAND (operators/wand.bm25_topk_pruned, gate
-          ``bm25_wand_pruned``); needs the index's block_stats.
-        - RankedBoolean single flat #NEAR/#WINDOW -> min-term-tf bound
-          pruning of the Arrow merge (ranked_positional_topk_pruned).
-          BM25 positionals stay exhaustive: their exposed score needs
-          the derived op's exact df, which only the full merge knows.
-        """
-        if not prune or ast is None:
-            return None
-        from searchengine_spark.operators.wand import (
-            bm25_topk_pruned,
-            ranked_positional_topk_pruned,
-        )
-
-        name = getattr(m, "name", "")
-        comp = self.compiler(m)
-
-        def _volume(term_nodes) -> int:
-            comp.prefetch_term_stats(SopNode("sum", tuple(term_nodes)))
-            return sum(
-                comp.term_stats.get((t.term, t.field), (0, 0))[0]
-                for t in term_nodes
-            )
-
-        if name == "bm25" and self.index.block_stats is not None:
-            leaves = _flat_sum_leaves(ast)
-            if leaves is not None:
-                fld = leaves[0].field
-                names = [t.term for t in leaves]
-                if (
-                    all(t.field == fld for t in leaves)
-                    and len(set(names)) == len(names)
-                    and self.index.avg_len(fld) > 0
-                    and (
-                        prune is True
-                        or (AUTO_PRUNE and _volume(leaves) >= PRUNE_MIN_POSTINGS)
-                    )
-                ):
-                    scored = bm25_topk_pruned(
-                        self.index, names, k=k, k1=m.k1, b=m.b, field=fld
-                    )
-                    return topk(scored, k)
-        if name == "rankedboolean":
-            iop = _flat_positional(ast)
-            if iop is not None and (
-                prune is True
-                or (AUTO_PRUNE and _volume(iop.args) >= PRUNE_MIN_POSTINGS)
-            ):
-                return topk(
-                    ranked_positional_topk_pruned(self.index, iop, k=k), k
-                )
-        return None
-
     def search(
         self,
         query: str,
         model="bm25",
         k: int = 100,
         with_ext_id: bool = True,
-        prune="auto",
         **params,
     ) -> DataFrame:
-        """Top-k (doc_id[, ext_id], score, rank), reference tie-break.
-
-        ``prune="auto"`` (default) currently resolves to the exhaustive
-        plan: auto-routing through the pruned operators measured slower
-        at every scale (see AUTO_PRUNE / PRUNEBENCH.json). ``prune=True``
-        forces the exact pruned operators; rankings and scores are
-        identical either way — only the amount of postings scored
-        changes.
-        """
+        """Top-k (doc_id[, ext_id], score, rank), reference tie-break."""
         m = self._model(model, **params)
         ast = self.parse(query, m)
-        ranked = self._pruned_topk(m, ast, k, prune)
-        if ranked is None:
-            out = self.compiler(m).compile(ast)
-            self.index.trim_temps()
-            ranked = topk(out, k)
+        out = self.compiler(m).compile(ast)
+        self.index.trim_temps()
+        ranked = topk(out, k)
         if with_ext_id:
             ranked = attach_ext_ids(ranked, self.index.docs).select(
                 "doc_id", "ext_id", "score", "rank"
@@ -257,7 +129,6 @@ class SearchEngine:
         model="bm25",
         k: int = 100,
         fused: bool | str = "auto",
-        prune="auto",
         **params,
     ) -> DataFrame:
         """Evaluate (qid, query) pairs -> (qid, doc_id, ext_id, score, rank).
@@ -306,12 +177,12 @@ class SearchEngine:
                     rest.append((qid, ast))
         elif fused and name in ("indri", "rankedboolean", "unrankedboolean"):
             for qid, ast in parsed:
-                flat = _flat_op_leaves(ast)
-                if flat is not None and (
-                    name != "indri"
-                    or self.index.sum_len(flat[1][0].field) > 0
+                terms = flat_terms(ast) if isinstance(ast, SopNode) else None
+                if terms is not None and (
+                    name != "indri" or self.index.sum_len(terms[0].field) > 0
                 ):
-                    fused_items.append((qid, *flat))
+                    weights = list(ast.weights) if ast.weights else None
+                    fused_items.append((qid, ast.op, terms, weights))
                 else:
                     rest.append((qid, ast))
         else:
@@ -328,13 +199,7 @@ class SearchEngine:
         if pos_items:
             frames.append(self._fused_bm25_positional_batch(comp, pos_items, k))
         for qid, ast in rest:
-            # queries outside the fused shapes still get the exact
-            # pruned operators when eligible (same auto threshold as
-            # single-query search) — e.g. a RankedBoolean positional
-            # batch at 4M-page posting volumes
-            pr = self._pruned_topk(m, ast, k, prune)
-            fr = pr if pr is not None else topk(comp.compile(ast), k)
-            frames.append(fr.withColumn("qid", F.lit(qid)))
+            frames.append(topk(comp.compile(ast), k).withColumn("qid", F.lit(qid)))
         if not frames:
             return self.index.spark.createDataFrame(
                 [], "qid string, doc_id long, ext_id string, score double, rank int"

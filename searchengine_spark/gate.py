@@ -36,7 +36,6 @@ from searchengine_spark.plans.models import BM25, Indri, RankedBoolean, Unranked
 # ---------------------------------------------------------------------------
 
 _ENGINES: dict[str, SearchEngine] = {}
-_WAND_IDX: dict[str, object] = {}
 
 
 def docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1412,23 +1411,6 @@ SELECT doc_id, CAST(round(s0 + s1, 6) AS DOUBLE) AS score FROM sc
             K,
         ),
     )
-    def _wand_pruned(spark: SparkSession, sf: str) -> DataFrame:
-        # block-max pruned BM25 must be rank-identical to the exhaustive
-        # oracle — same SQL as bm25_sum. Small blocks so 500 docs still
-        # exercise real pruning; prune with slack then round-rank.
-        from searchengine_spark.operators.wand import bm25_topk_pruned
-
-        idx = _WAND_IDX.get(sf)
-        if idx is None:
-            idx = build_index(
-                docs_df(spark, sf), fields={"body": "text"}, doc_id_col="doc_id",
-                ext_id_col="doc_id", analyzer="simple", block_range=32,
-            )
-            _WAND_IDX[sf] = idx
-        scores = bm25_topk_pruned(idx, ["dup", "spark", "merge"], k=K + 10)
-        return _ranked(scores, K)
-
-    r["bm25_wand_pruned"] = (_wand_pruned, bm25_sum_sql(["dup", "spark", "merge"], K))
 
     r["rankedbool_and"] = (
         _sq("#and(spark merge)", RankedBoolean(), K),

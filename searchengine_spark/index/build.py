@@ -15,10 +15,6 @@ Layout (chosen for 100 TB scale, not translated from the reference):
 - ``term_stats`` — per (term, field): ``df long, ctf long`` (InvList.java
   header equivalents), broadcast-joined at query time.
 - ``doc_stats``  — per (doc_id, field): ``doc_len int`` (Idx.getFieldLength).
-- ``block_stats``— per (term, field, doc-id-range block): ``max_tf, min_len,
-  n`` — block-max metadata for WAND-style top-k pruning. Blocks are fixed
-  doc-id ranges (pure map-side agg — no per-term window, so head-term skew
-  never funnels one term through one task).
 - ``meta``       — corpus scalars: n_docs, per-field doc_count / sum_len /
   avg_len, analyzer name.
 
@@ -46,7 +42,6 @@ from searchengine_spark.analyzer import get_analyzer
 from searchengine_spark.codec import encode_positions_many
 
 DEFAULT_FIELDS = ("body",)
-BLOCK_RANGE = 4096  # doc ids per block-max block
 
 
 @F.pandas_udf(BinaryType())
@@ -123,13 +118,11 @@ class InvertedIndex:
     postings: DataFrame
     term_stats: DataFrame
     doc_stats: DataFrame
-    block_stats: DataFrame | None
     docs: DataFrame  # doc_id, ext_id (+ any metadata attribute columns)
     n_docs: int
     field_stats: dict  # field -> {doc_count, sum_len, avg_len}
     analyzer: str
     fields: tuple = dc_field(default=DEFAULT_FIELDS)
-    block_range: int = BLOCK_RANGE
     # set when postings carry the persisted bucket partition column:
     # term scans add a constant-foldable ``pmod(xxhash64(term), n) =
     # bucket`` predicate so only 1/n of the files are read.
@@ -162,7 +155,6 @@ class InvertedIndex:
         4x on the 1M-page minhash run)."""
         for fr in (
             [self.postings, self.term_stats, self.doc_stats, self.docs]
-            + ([self.block_stats] if self.block_stats is not None else [])
             + self._build_temps
             + self._temps
         ):
@@ -200,9 +192,7 @@ def build_index(
     doc_id_col: str = "doc_id",
     ext_id_col: str | None = None,
     analyzer: str = "english",
-    with_blocks: bool = True,
     cache: bool = True,
-    block_range: int = BLOCK_RANGE,
 ) -> InvertedIndex:
     """Tokenize ``docs`` and build the postings/stats DataFrames.
 
@@ -258,16 +248,6 @@ def build_index(
     if cache:
         term_stats = term_stats.persist()
 
-    block_stats = None
-    if with_blocks:
-        block_stats = postings.groupBy(
-            "term", "field", (F.col("doc_id") / block_range).cast("long").alias("block_id")
-        ).agg(
-            F.max("tf").alias("max_tf"),
-            F.min("doc_len").alias("min_len"),
-            F.count(F.lit(1)).alias("n"),
-        )
-
     # corpus scalars (one small action; broadcast by value afterwards)
     n_docs = docs.count()
     fs_rows = (
@@ -298,13 +278,11 @@ def build_index(
         postings=postings,
         term_stats=term_stats,
         doc_stats=doc_stats,
-        block_stats=block_stats,
         docs=docs_meta,
         n_docs=n_docs,
         field_stats=field_stats,
         analyzer=analyzer,
         fields=tuple(fields),
-        block_range=block_range,
         _build_temps=temps,
     )
 
@@ -446,16 +424,11 @@ def write_index(
     result["sides_skipped"] = sides_done
 
     # LSM side-table layout: every table is a set of append-only
-    # ``seg=`` partition dirs (term-keyed ones additionally bucketed
-    # by the postings' term hash). A streaming minor compaction then
-    # APPENDS delta-derived seg dirs — df/ctf/block maxima are
-    # additive/mergeable, so ``read_index`` folds segments with a
-    # vocab-sized aggregate instead of anyone rewriting base data.
-    def _with_bucket(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-        ).withColumn("seg", F.lit("base"))
-
+    # ``seg=`` partition dirs (term_stats additionally bucketed by the
+    # postings' term hash). A streaming minor compaction then
+    # APPENDS delta-derived seg dirs — df/ctf are additive, so
+    # ``read_index`` folds segments with a vocab-sized aggregate instead
+    # of anyone rewriting base data.
     def _timed_write(fn) -> float:
         t0 = time.time()
         fn()
@@ -463,7 +436,10 @@ def write_index(
 
     def _term_stats_work() -> float:
         return _timed_write(
-            lambda: _with_bucket(index.term_stats)
+            lambda: index.term_stats.withColumn(
+                "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
+            )
+            .withColumn("seg", F.lit("base"))
             .repartition(buckets, "bucket")
             .write.mode("overwrite")
             .partitionBy("bucket", "seg")
@@ -478,15 +454,6 @@ def write_index(
             .parquet(os.path.join(path, "doc_stats"))
         )
 
-    def _block_stats_work() -> float:
-        return _timed_write(
-            lambda: _with_bucket(index.block_stats)
-            .repartition(buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket", "seg")
-            .parquet(os.path.join(path, "block_stats"))
-        )
-
     def _docs_work() -> float:
         return _timed_write(
             lambda: index.docs.withColumn("seg", F.lit("base"))
@@ -495,7 +462,7 @@ def write_index(
             .parquet(os.path.join(path, "docs"))
         )
 
-    # The five writes are independent Spark jobs over cached inputs —
+    # The four writes are independent Spark jobs over cached inputs —
     # run them concurrently so the per-job fixed costs (scheduling,
     # dynamic-overwrite commit, parquet footer fsyncs) and the straggler
     # tails overlap instead of adding (same discipline as compaction's
@@ -503,15 +470,13 @@ def write_index(
     from concurrent.futures import ThreadPoolExecutor
 
     phases: dict[str, float] = {}
-    with ThreadPoolExecutor(max_workers=5) as pool:
+    with ThreadPoolExecutor(max_workers=4) as pool:
         futures = {}
         if todo:
             futures["postings"] = pool.submit(_postings_work)
         if not sides_done:
             futures["term_stats"] = pool.submit(_term_stats_work)
             futures["doc_stats"] = pool.submit(_doc_stats_work)
-            if index.block_stats is not None:
-                futures["block_stats"] = pool.submit(_block_stats_work)
             futures["docs"] = pool.submit(_docs_work)
         for name, fut in futures.items():
             phases[name] = round(fut.result(), 3)
@@ -529,7 +494,6 @@ def write_index(
         "fields": list(index.fields),
         "buckets": buckets,
         "fingerprint": fp,
-        "block_range": index.block_range,
         "layout": 3,
     }
     tmp = os.path.join(path, "meta.json.tmp")
@@ -558,7 +522,6 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
     postings = spark.read.parquet(os.path.join(path, "postings"))
     if "seg" in postings.columns:
         postings = postings.drop("seg")  # LSM generation dir — internal
-    block_path = os.path.join(path, "block_stats")
 
     def _side(name: str) -> DataFrame:
         # LSM layouts partition side tables (bucket / seg) so streaming
@@ -584,31 +547,16 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
             )
         return df
 
-    def _block_stats() -> DataFrame | None:
-        if not os.path.isdir(block_path):
-            return None
-        df = spark.read.parquet(block_path)
-        if "seg" in df.columns:
-            # block maxima/minima/counts merge associatively across segs
-            return df.groupBy("term", "field", "block_id").agg(
-                F.max("max_tf").alias("max_tf"),
-                F.min("min_len").alias("min_len"),
-                F.sum("n").alias("n"),
-            )
-        return df.drop("bucket") if "bucket" in df.columns else df
-
     return InvertedIndex(
         spark=spark,
         postings=postings,
         term_stats=_term_stats(),
         doc_stats=_side("doc_stats"),
-        block_stats=_block_stats(),
         docs=_side("docs"),
         n_docs=meta["n_docs"],
         field_stats=meta["field_stats"],
         analyzer=meta["analyzer"],
         fields=tuple(meta["fields"]),
-        block_range=meta.get("block_range", BLOCK_RANGE),
         n_buckets=int(meta["buckets"]),
     )
 

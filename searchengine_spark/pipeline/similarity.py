@@ -370,8 +370,7 @@ def ivf_centroids(
     Medoid selection is md5-ordered over the id — a data-derived but
     fully deterministic pick (no RNG state, no Lloyd iterations) so a
     SQL oracle can re-derive the exact same centroids from the table
-    itself. The collect is k-bounded (``n_cells`` rows), same class as
-    the WAND seed collect. Returned vectors are the double-cast
+    itself. The collect is k-bounded (``n_cells`` rows). Returned vectors are the double-cast
     embeddings in md5 order (cell id = list index).
     """
     rows = (

@@ -99,6 +99,34 @@ def _dl(f: str) -> str:
     return f"__dl_{f}"
 
 
+def flat_terms(node) -> list[TermNode] | None:
+    """The term args of a *flat* op, else None.
+
+    Flat: #AND/#OR/#WAND/#WSUM over ``#SCORE(term)`` args, or a
+    positional op over bare term args — at least two args, all of one
+    field, no term repeated. A flat op reads ONE ``term IN (...)``
+    postings scan regrouped per doc; this one predicate picks the
+    compiler's single-scan strategies and the engine's fused
+    ``run_batch`` paths alike."""
+    if isinstance(node, SopNode):
+        if node.op not in ("and", "or", "wand", "wsum") or not all(
+            isinstance(a, SopNode) and a.op == "score" for a in node.args
+        ):
+            return None
+        args = [a.args[0] for a in node.args]
+    elif isinstance(node, IopNode):
+        args = list(node.args)
+    else:
+        return None
+    if len(args) < 2 or not all(isinstance(a, TermNode) for a in args):
+        return None
+    fld = args[0].field
+    names = [a.term for a in args]
+    if any(a.field != fld for a in args) or len(set(names)) != len(names):
+        return None
+    return args
+
+
 class Compiler:
     def __init__(self, index: InvertedIndex, model, agg_threshold: int = 1):
         self.index = index
@@ -180,13 +208,13 @@ class Compiler:
             st = self.term_stats.get((node.term, node.field))
             return IopResult(fr, node.field, _stats=st, _temps=self.index._temps)
 
-        flat_items = self._flat_term_items(node.args)
+        flat = flat_terms(node)
         k = len(node.args)
 
         if node.op == "syn":
-            if flat_items is not None:
+            if flat is not None:
                 # ONE term-IN scan feeds the union directly
-                u = self._iop_batch_rows(flat_items).drop("__ti")
+                u = self._iop_batch_rows(flat).drop("__ti")
             else:
                 children = [self.compile_iop(a) for a in node.args]
                 u = children[0].frame
@@ -209,8 +237,8 @@ class Compiler:
         # Arrow merge kernel. Flat distinct-term args: ONE scan + ONE
         # groupBy (map of __ti -> positions, match-ALL via map size);
         # nested args fall back to the k-way inner-join chain.
-        if flat_items is not None:
-            rows = self._iop_batch_rows(flat_items)
+        if flat is not None:
+            rows = self._iop_batch_rows(flat)
             joined = (
                 rows.groupBy("doc_id")
                 .agg(
@@ -251,28 +279,18 @@ class Compiler:
         )
         return IopResult(fr, node.field, _temps=self.index._temps)
 
-    def _flat_term_items(self, args) -> list | None:
-        """[(arg_index, TermNode)] when every arg is a distinct-term
-        TermNode of one field (the single-scan-able shape), else None."""
-        if len(args) < 2 or not all(isinstance(a, TermNode) for a in args):
-            return None
-        fld = args[0].field
-        names = [a.term for a in args]
-        if any(a.field != fld for a in args) or len(set(names)) != len(names):
-            return None
-        return list(enumerate(args))
-
-    def _iop_batch_rows(self, items: list) -> DataFrame:
-        """(doc_id, __ti, tf, doc_len, positions) for several distinct
-        terms of one field from a single bucket-pruned scan."""
-        fld = items[0][1].field
-        names = [t.term for _, t in items]
+    def _iop_batch_rows(self, terms: list[TermNode]) -> DataFrame:
+        """(doc_id, __ti, tf, doc_len, positions) for the distinct terms
+        of one field from a single bucket-pruned scan; ``__ti`` is the
+        term's arg index."""
+        fld = terms[0].field
+        names = [t.term for t in terms]
         cond = (F.col("field") == fld) & F.col("term").isin(names)
         bc = self._bucket_cond(names)
         if bc is not None:
             cond = cond & bc
         ti_col = None
-        for i, t in items:
+        for i, t in enumerate(terms):
             match = F.col("term") == t.term
             ti_col = (
                 F.when(match, F.lit(i)) if ti_col is None else ti_col.when(match, F.lit(i))
@@ -431,24 +449,15 @@ class Compiler:
         join path's operand order, so scores are bit-identical — the
         Indri gate oracles pin this.
 
-        Returns None when the shape doesn't apply (nested args, multiple
-        fields, duplicate terms, degenerate stats) — the generic join
-        path is the fallback.
+        Returns None when ``node`` is not flat (``flat_terms``) or its
+        field is empty — the generic join path is the fallback.
         """
         m = self.model
-        if node.op not in ("and", "or", "wand", "wsum") or len(node.args) < 2:
+        terms = flat_terms(node)
+        if terms is None:
             return None
-        if not all(
-            a.op == "score" and isinstance(a.args[0], TermNode) for a in node.args
-        ):
-            return None
-        terms = [a.args[0] for a in node.args]
         fld = terms[0].field
-        if any(t.field != fld for t in terms):
-            return None
         names = [t.term for t in terms]
-        if len(set(names)) != len(names):
-            return None
         collen = float(self.index.sum_len(fld))
         if collen <= 0:
             return None
@@ -567,19 +576,13 @@ class Compiler:
         reassembled tf map — identical values to the join path (min/max
         are order-exact)."""
         m = self.model
-        if node.op not in ("and", "or", "wand", "wsum") or len(node.args) < 2:
+        terms = flat_terms(node)
+        if terms is None:
             return None
-        if not all(
-            a.op == "score" and isinstance(a.args[0], TermNode) for a in node.args
-        ):
-            return None
-        items = self._flat_term_items([a.args[0] for a in node.args])
-        if items is None:
-            return None
-        fld = items[0][1].field
-        k = len(items)
+        fld = terms[0].field
+        k = len(terms)
 
-        rows = self._iop_batch_rows(items).select(
+        rows = self._iop_batch_rows(terms).select(
             "doc_id", "__ti", F.col("tf").cast("double").alias("__s")
         )
         g = rows.groupBy("doc_id").agg(

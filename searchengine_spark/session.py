@@ -12,6 +12,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM``, else 40% of physical RAM. Local mode runs
+    every executor inside the driver JVM, so a heap sized past the host
+    lets the JVM grow until the kernel OOM-kills it mid-job; the rest of
+    RAM is left to Python workers and the page cache."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) * 2 // 5 // 1024}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "searchengine-spark",
     cores: int | None = None,
@@ -53,7 +71,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -15,13 +15,13 @@ Compaction is LSM-shaped (layout v3, written by ``write_index``):
 
 - **minor** (the default): the delta is re-bucketed and lands as NEW
   ``bucket=B/seg=bLO_HI`` partition dirs under postings, and as
-  append-only ``seg=`` dirs under term_stats / block_stats / doc_stats
-  / docs. df/ctf and block maxima are additive across segments, so
-  ``read_index`` folds them with a vocab-sized aggregate — **no base
-  byte is read or rewritten**. Cost scales with DELTA size. (A
-  per-bucket base rewrite was measured first and rejected: natural
-  text deltas touch every term bucket, so "rewrite touched buckets"
-  degenerates to a full rewrite plus overhead.)
+  append-only ``seg=`` dirs under term_stats / doc_stats / docs. df/ctf
+  are additive across segments, so ``read_index`` folds them with a
+  vocab-sized aggregate — **no base byte is read or rewritten**. Cost
+  scales with DELTA size. (A per-bucket base rewrite was measured first
+  and rejected: natural text deltas touch every term bucket, so
+  "rewrite touched buckets" degenerates to a full rewrite plus
+  overhead.)
 - **major** (``full_rewrite=True``, or any pre-v3 layout): fold base +
   all segments + deltas into a fresh ``seg=base`` generation —
   bounding segment-count growth and compacting row groups. This is the
@@ -280,9 +280,9 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
       ``xxhash64``) and written as ``bucket=B/seg=bLO_HI`` dirs — bucket
       pruning on term scans keeps working, and the base seg files in
       each bucket are not read;
-    - term_stats / block_stats: df/ctf sums and block max_tf/min_len/n
-      are additive across disjoint doc sets, so the delta's stats land
-      as their own seg dirs and ``read_index`` folds them at read time;
+    - term_stats: df/ctf sums are additive across disjoint doc sets, so
+      the delta's stats land as their own seg dirs and ``read_index``
+      folds them at read time;
     - doc_stats / docs: append-only by construction — new seg dirs;
     - meta.json: n_docs / field_stats patched arithmetically from the
       delta side segments (no full-table agg); ``folded_through``
@@ -296,7 +296,6 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
     have arrived alongside the stale dirs.
     """
     buckets = int(meta.get("buckets") or 16)
-    block_range = int(meta.get("block_range") or 4096)
     t0 = time.time()
     phases: dict[str, float] = {}
 
@@ -349,40 +348,12 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
         return round(time.time() - t, 3)
 
     def _stats_work() -> float:
-        # term_stats + block_stats in ONE delta pass: block maxima are
-        # grouped finer, so df/ctf fold out of the (cached) block frame
-        # with a blocks-sized second agg instead of a second full-delta
-        # shuffle
         t = time.time()
-        blocks = (
-            delta.groupBy(
-                "bucket",
-                "term",
-                "field",
-                (F.col("doc_id") / block_range).cast("long").alias("block_id"),
-            )
-            .agg(
-                F.max("tf").alias("max_tf"),
-                F.min("doc_len").alias("min_len"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum("tf").cast("long").alias("sum_tf"),
-            )
-            .persist()
-        )
-        if os.path.isdir(os.path.join(index_dir, "block_stats")):
-            _append_seg(
-                blocks.select(
-                    "term", "field", "block_id", "max_tf", "min_len", "n", "bucket"
-                ).repartition(stats_width, "bucket"),
-                os.path.join(index_dir, "block_stats"),
-                seg,
-                ["bucket"],
-            )
         _append_seg(
-            blocks.groupBy("bucket", "term", "field")
+            delta.groupBy("bucket", "term", "field")
             .agg(
-                F.sum("n").cast("long").alias("df"),
-                F.sum("sum_tf").cast("long").alias("ctf"),
+                F.count(F.lit(1)).cast("long").alias("df"),
+                F.sum("tf").cast("long").alias("ctf"),
             )
             .select("term", "field", "df", "ctf", "bucket")
             .repartition(stats_width, "bucket"),
@@ -390,7 +361,6 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
             seg,
             ["bucket"],
         )
-        blocks.unpersist()
         return round(time.time() - t, 3)
 
     def _doc_stats_work() -> tuple[float, dict]:
@@ -476,7 +446,6 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
             "field_stats": field_stats,
             "fingerprint": fp,
             "buckets": buckets,
-            "block_range": block_range,
             "compactions": n_compactions,
             "layout": 3,
             "folded_through": batch_ids[-1],
@@ -499,12 +468,10 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> None:
     This is the heavyweight periodic pass — minor compactions are the
     per-crawl-cycle path."""
     buckets = int(meta.get("buckets") or 16)
-    block_range = int(meta.get("block_range") or 4096)
     folded_through = int(meta.get("folded_through", -1))
     t0 = time.time()
 
     ts_tmp = os.path.join(index_dir, "term_stats.compact")
-    bs_tmp = os.path.join(index_dir, "block_stats.compact")
     ds_tmp = os.path.join(index_dir, "doc_stats.compact")
     docs_tmp = os.path.join(index_dir, "docs.compact")
 
@@ -585,28 +552,10 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> None:
             .parquet(ts_tmp)
         )
 
-    def _block_stats_work(merged: DataFrame) -> None:
-        (
-            merged.groupBy(
-                "bucket", "term", "field",
-                (F.col("doc_id") / block_range).cast("long").alias("block_id"),
-            )
-            .agg(
-                F.max("tf").alias("max_tf"),
-                F.min("doc_len").alias("min_len"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select("term", "field", "block_id", "max_tf", "min_len", "n", "bucket")
-            .withColumn("seg", F.lit("base"))
-            .repartition(buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket", "seg")
-            .parquet(bs_tmp)
-        )
-
-    # doc-keyed rebuilds are independent of the postings fold; the two
-    # stats rebuilds depend only on the folded postings. Same threaded
-    # shape as the minor path, so minor-vs-major comparisons stay fair.
+    # doc-keyed rebuilds are independent of the postings fold; the
+    # term_stats rebuild depends only on the folded postings. Same
+    # threaded shape as the minor path, so minor-vs-major comparisons
+    # stay fair.
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_ds = pool.submit(_doc_stats_work)
         f_docs = pool.submit(_docs_work)
@@ -631,8 +580,7 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> None:
         # side tables rebuilt in layout v3 (bucket+seg partitioned) so
         # the next compaction can run minor
         f_ts = pool.submit(_term_stats_work, merged)
-        f_bs = pool.submit(_block_stats_work, merged)
-        for f in (f_ts, f_bs, f_ds, f_docs):
+        for f in (f_ts, f_ds, f_docs):
             f.result()
 
     new_ds = spark.read.parquet(ds_tmp)
@@ -669,7 +617,6 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> None:
     # swap everything in, then refresh meta + manifests
     _swap(post_tmp, os.path.join(index_dir, "postings"))
     _swap(ts_tmp, os.path.join(index_dir, "term_stats"))
-    _swap(bs_tmp, os.path.join(index_dir, "block_stats"))
     _swap(ds_tmp, os.path.join(index_dir, "doc_stats"))
     _swap(docs_tmp, os.path.join(index_dir, "docs"))
 
@@ -677,7 +624,7 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> None:
     fp = f"compact|ndocs={n_docs}|analyzer={meta.get('analyzer')}|fields={','.join(meta.get('fields', []))}"
     meta.update(
         {"n_docs": n_docs, "field_stats": field_stats, "fingerprint": fp,
-         "buckets": buckets, "block_range": block_range,
+         "buckets": buckets,
          "compactions": n_compactions, "layout": 3,
          "folded_through": folded_through, "segs": []}
     )

@@ -1,4 +1,6 @@
+import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -104,8 +106,6 @@ def test_read_index_rejects_stale_analyzer_version(spark, tmp_path):
     """meta.json records an analyzer rule-table hash; read_index must
     fail loudly when the code's rules drifted since the index was
     written (silent index/query tokenize mismatch otherwise)."""
-    import json
-
     import pytest
 
     docs = _tiny_docs(spark)
@@ -136,7 +136,7 @@ def test_read_index_rejects_stale_analyzer_version(spark, tmp_path):
 def test_xxh64_matches_spark(spark):
     """The driver-side XXH64 (functions/xxh64.py) must be bit-equal to
     Spark's F.xxhash64 on UTF-8 strings — every bucket-pruning literal
-    in the compiler/engine/WAND paths depends on it. A divergence would
+    in the compiler/engine paths depends on it. A divergence would
     silently prune the WRONG bucket dir (missing postings, no error)."""
     from pyspark.sql import functions as F
 
@@ -161,3 +161,47 @@ def test_xxh64_matches_spark(spark):
         signed = got - (1 << 64) if got >= 1 << 63 else got
         assert signed == r["h"], f"xxh64 mismatch on {r['s']!r}"
         assert term_bucket(r["s"], 32) == r["b"], f"bucket mismatch on {r['s']!r}"
+
+
+def test_read_index_ignores_leftover_block_max_table(spark, tmp_path):
+    """Indexes written before the block-max pruning table was dropped
+    still carry its dir and its meta key; read_index must open them and
+    rank exactly as a fresh write of the same docs does."""
+    from searchengine_spark.engine import SearchEngine
+
+    docs = assign_doc_ids(extract_fields(make_pages(spark, 120, seed=5)), ext_id_col="url")
+    idx = build_index(docs, fields={"body": "body"}, ext_id_col="url", analyzer="english")
+    fresh, legacy = str(tmp_path / "fresh"), str(tmp_path / "legacy")
+    write_index(idx, fresh, buckets=4)
+    shutil.copytree(fresh, legacy)
+    # the old table: per (term, field, 4096-doc-id block) max_tf /
+    # min_len / n, partitioned like term_stats
+    old_range = 4096
+    (
+        idx.postings.groupBy(
+            "term", "field", (F.col("doc_id") / old_range).cast("long").alias("block_id")
+        )
+        .agg(F.max("tf").alias("max_tf"), F.min("doc_len").alias("min_len"),
+             F.count(F.lit(1)).alias("n"))
+        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(4)).cast("int"))
+        .withColumn("seg", F.lit("base"))
+        .write.partitionBy("bucket", "seg")
+        .parquet(os.path.join(legacy, "block_stats"))
+    )
+    meta_path = os.path.join(legacy, "meta.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    meta["block_range"] = old_range
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+
+    def top10(path):
+        eng = SearchEngine(read_index(spark, path))
+        return [
+            (r["doc_id"], r["ext_id"], r["score"])
+            for r in eng.search("cerim dirim", model="bm25", k=10).collect()
+        ]
+
+    want = top10(fresh)
+    assert len(want) == 10
+    assert top10(legacy) == want

@@ -362,6 +362,17 @@ def test_incremental_compact_touches_only_delta_buckets(spark, tmp_path):
     meta0 = json.load(open(os.path.join(idx_dir, "meta.json")))
     assert meta0["layout"] == 3
 
+    # the persisted layout: four tables, the manifests and meta.json
+    # (checked after the write and after each compaction mode below)
+    layout = ["_manifest", "doc_stats", "docs", "meta.json", "postings", "term_stats"]
+    write_keys = {
+        "n_docs", "field_stats", "analyzer", "analyzer_version", "fields",
+        "buckets", "fingerprint", "layout",
+    }
+    compact_keys = write_keys | {"compactions", "folded_through", "segs"}
+    assert sorted(os.listdir(idx_dir)) == layout
+    assert set(meta0) == write_keys
+
     def _base_seg_state(table: str) -> dict:
         """(path -> (size, mtime)) of every base-generation parquet file."""
         out = {}
@@ -451,3 +462,15 @@ def test_incremental_compact_touches_only_delta_buckets(spark, tmp_path):
     idx2 = read_index(spark, idx_dir)
     assert idx2.n_docs == 31
     assert idx2.doc_stats.where(F.col("doc_id") == 1000).count() == 1
+    assert sorted(os.listdir(idx_dir)) == layout
+    assert set(meta2) == compact_keys
+
+    # a major compaction folds the segments into a fresh base and keeps
+    # the same four-table layout and ranking
+    assert ingest.compact(spark, idx_dir, full_rewrite=True)["mode"] == "major"
+    assert sorted(os.listdir(idx_dir)) == layout
+    meta3 = json.load(open(os.path.join(idx_dir, "meta.json")))
+    assert set(meta3) == compact_keys and meta3["segs"] == []
+    idx3 = read_index(spark, idx_dir)
+    assert idx3.n_docs == 31
+    assert SearchEngine(idx3).search(term, model="bm25", k=5).collect() == got

@@ -83,36 +83,6 @@ def test_disk_query_matches_memory(spark, disk_index):
     assert a == b
 
 
-def test_wand_pruned_path_prunes_buckets_per_term(spark, disk_index):
-    """The block-max WAND top-k over a persisted index must push a
-    CONSTANT bucket predicate per term scan — the plan shows
-    `bucket#N = <const>` partition filters, so only the matching
-    bucket directories are listed/read (VERDICT r1 item 10)."""
-    import re
-
-    from searchengine_spark.operators.wand import bm25_topk_pruned
-
-    idx, _ = disk_index
-    terms = ["cerim", "dirim"]
-    plan = (
-        bm25_topk_pruned(idx, terms, k=10)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    expected_buckets = {
-        t: int(
-            spark.sql(f"SELECT pmod(xxhash64('{t}'), {idx.n_buckets}) AS b").first()["b"]
-        )
-        for t in terms
-    }
-    got = _bucket_literals(plan)
-    assert got, f"no constant bucket partition filter in plan:\n{plan[:2000]}"
-    assert set(expected_buckets.values()) <= got, (expected_buckets, got)
-    # and the scans carry the pushed term filters too
-    assert "PartitionFilters" in plan and "PushedFilters" in plan
-
-
 def test_stats_prefetch_prunes_term_stats_buckets(spark, disk_index):
     """The compiler's stats prefetch reads the persisted term_stats
     table with a literal bucket-IN — the scan must show bucket
