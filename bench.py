@@ -103,8 +103,8 @@ def main() -> None:
     # --- multi-query throughput: 100-query BM25 batch -----------------------
     # vocabulary-derived 3-term queries (ranks 50..349 by df: big posting
     # lists but nonzero idf). Fused = ONE term-IN scan + one (qid, doc_id)
-    # fold + per-qid top-k; union = 100 per-query subplans. Rank-identical
-    # (test_run_batch_fused_bit_identical_to_union).
+    # fold + per-qid top-k; union = 100 per-query ``search`` plans, each
+    # qid rank-identical (test_run_batch_fused_bit_identical_to_union).
     all_terms = [
         r["term"]
         for r in eng.index.term_stats.where(F.col("field") == "body")
@@ -120,22 +120,22 @@ def main() -> None:
     # identical measurement discipline for both paths (warm-up + best-of-2)
     # so the reported speedup is apples-to-apples, not warm-vs-cold
     fused_fn = lambda: eng.run_batch(batch100, model="bm25", k=10).collect()  # noqa: E731
-    union_fn = lambda: eng.run_batch(batch100, model="bm25", k=10, fused=False).collect()  # noqa: E731
+    union_fn = lambda: [eng.search(q, model="bm25", k=10).collect() for _, q in batch100]  # noqa: E731
     fused_fn()  # warm-up: codegen + python-UDF worker spin-up
     queries["q_batch100_fused"] = round(_best_of(fused_fn, 2), 3)
     union_fn()  # warm-up
     batch100_union_sec = round(_best_of(union_fn, 2), 3)
 
     # --- 100-query positional (#NEAR) batch: one shared scan + one Arrow
-    # merge pass for the whole batch vs 100 per-query plans (each with its
-    # own stats action). Rank-identical (test_run_batch_fused_positional_*).
+    # merge pass for the whole batch vs 100 per-query ``search`` plans (each
+    # with its own stats action). Rank-identical (test_run_batch_fused_positional_*).
     near100 = [
         (f"n{i}", f"#near/{2 + i % 4}({vocab[(3 * i) % len(vocab)]} "
                   f"{vocab[(3 * i + 1) % len(vocab)]})")
         for i in range(100)
     ]
     nfused_fn = lambda: eng.run_batch(near100, model="bm25", k=10).collect()  # noqa: E731
-    nunion_fn = lambda: eng.run_batch(near100, model="bm25", k=10, fused=False).collect()  # noqa: E731
+    nunion_fn = lambda: [eng.search(q, model="bm25", k=10).collect() for _, q in near100]  # noqa: E731
     nfused_fn()  # warm-up
     queries["q_batch100_near_fused"] = round(_best_of(nfused_fn, 2), 3)
     # single union measurement: workers/codegen are already warm from the

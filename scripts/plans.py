@@ -4,10 +4,10 @@
 
 Each section shows the `explain("formatted")` output the design claims
 rest on: pushed term filters + constant bucket partition pruning on a
-persisted index, the single-scan flat strategies (BM25 fold, Indri map
-reassembly, positional co-location), the fused batch and the pipeline
-operators. Regenerate after compiler changes so the committed evidence
-matches the code.
+persisted index, the single-scan flat scorers (BM25 fold, Indri map
+reassembly, positional co-location) for one query and for a batch, and
+the pipeline operators. Regenerate after compiler changes so the
+committed evidence matches the code.
 """
 
 from __future__ import annotations
@@ -105,7 +105,7 @@ def main() -> None:
         ),
         (
             "Flat BM25 #SUM (single term-IN scan + in-order fold)",
-            "5 terms, ONE FileScan, bucket pruning to the union of the terms' buckets, `aggregate(array_sort(collect_list(...)))` fold.",
+            "5 terms, ONE FileScan, bucket pruning to the union of the terms' buckets, literal CASE-on-term idf constants (no broadcast), `aggregate(array_sort(collect_list(...)))` fold.",
             eng.scores("cerim dirim barim batok balan", model="bm25"),
         ),
         (
@@ -115,12 +115,12 @@ def main() -> None:
         ),
         (
             "#NEAR/2 (single scan, position co-location, Arrow merge)",
-            "One scan, one groupBy; match-ALL via `size(map) = k`; the positional kernel is the only Python stage.",
+            "One scan, one groupBy; match-ALL via `size(__ps) = k`; the positional kernel is the only Python stage.",
             eng.scores("#near/2(barim batok)", model="rankedboolean"),
         ),
         (
-            "Fused 3-query BM25 batch (broadcast query-terms table, one scan)",
-            "ONE term-IN FileScan for the whole batch, BroadcastHashJoin on term, groupBy(qid, doc_id) fold, per-qid row_number window — scan count independent of batch size.",
+            "3-query BM25 run_batch (the flat scorer with broadcast constants, one scan)",
+            "The same scorer as the flat BM25 #SUM above, fed a batch: ONE term-IN FileScan for the whole batch, BroadcastHashJoin on term with the (qid, __ti, term, __idf) table, groupBy(qid, doc_id) fold, per-qid row_number window — scan count independent of batch size.",
             eng.run_batch(
                 [("q1", "cerim dirim"), ("q2", "barim cerim"), ("q3", "dirim batok")],
                 model="bm25", k=10,

@@ -36,7 +36,6 @@ def main() -> None:
 
     from searchengine_spark.engine import SearchEngine
     from searchengine_spark.index.build import read_index
-    from searchengine_spark.plans.compiler import flat_terms
     from searchengine_spark.session import get_spark
 
     spark = get_spark("profile-window", cores=CPUS, shuffle_partitions=2 * CPUS)
@@ -51,18 +50,20 @@ def main() -> None:
     # the #window node is the score root's only child
     iop_node = node.args[0]
 
-    rows = comp._iop_batch_rows(flat_terms(iop_node))
+    rows = comp.term_scan(
+        iop_node.field, [("", i, t.term) for i, t in enumerate(iop_node.args)]
+    )
 
     n_rows = rows.count()
     t_scan = best_of(lambda: rows.count())
 
     grouped = (
-        rows.groupBy("doc_id")
+        rows.groupBy("qid", "doc_id")
         .agg(
-            F.map_from_entries(F.collect_list(F.struct("__ti", "positions"))).alias("__pm"),
+            F.array_sort(F.collect_list(F.struct("__ti", "positions"))).alias("__ps"),
             F.max("doc_len").alias("doc_len"),
         )
-        .where(F.size("__pm") == len(iop_node.args))
+        .where(F.size("__ps") == len(iop_node.args))
     )
     n_docs = grouped.count()
     t_group = best_of(lambda: grouped.count())

@@ -187,30 +187,38 @@ def _window_merge_any(arrays: list[list[int]], dist: int) -> list[int]:
                 ptr[i] = j
 
 
-def positional_merge_udf(kind: str, dist: int, n_args: int, with_positions: bool = True):
-    """pandas UDF: n binary position columns -> struct<tf, positions>.
+def positional_merge_udf(with_positions: bool = True):
+    """pandas UDF: (position lists, kind, dist) -> struct<tf, positions>.
 
-    Rows where the merge produces no positions yield tf=0 (callers
-    filter ``tf > 0`` — the reference only appends non-empty postings).
-    ``with_positions=False`` (op feeds #SCORE directly, only tf is
-    read) skips the batch re-encode of match positions.
+    ``position lists`` is an array<binary> column, one encoded list per
+    arg in arg order; ``kind`` ("near"/"window") and ``dist`` are
+    columns, literal for one query and per row when one Arrow pass
+    merges a batch's queries. Rows where the merge produces no
+    positions yield tf=0 (callers filter ``tf > 0`` — the reference only
+    appends non-empty postings). ``with_positions=False`` (op feeds
+    #SCORE directly, only tf is read) skips the batch re-encode of
+    match positions.
     """
-    merge = near_merge if kind == "near" else window_merge
 
     @F.pandas_udf(MERGE_RESULT)
-    def _merge(*cols: pd.Series) -> pd.DataFrame:
-        n = len(cols[0])
+    def _merge(pos_arrays: pd.Series, kinds: pd.Series, dists: pd.Series) -> pd.DataFrame:
+        rows = list(pos_arrays)
+        kind_a = kinds.to_numpy()
+        dist_a = dists.to_numpy()
+        n = len(rows)
         tfs = np.zeros(n, dtype=np.int32)
         blobs: list[bytes | None] = [None] * n
-        # ONE vectorized decode pass per column for the whole Arrow
-        # batch — per-row decode calls were the q_near bottleneck at
-        # 400k pages
-        decoded = [decode_positions_many(list(c)) for c in cols]
+        # ONE vectorized decode pass for every blob of every row in the
+        # Arrow batch — per-row decode calls were the q_near bottleneck
+        # at 400k pages
+        decoded = decode_positions_many([b for lists in rows for b in lists])
         hit_rows: list[int] = []
         hit_pos: list[list[int]] = []
-        for r in range(n):
-            arrays = [decoded[c][r] for c in range(n_args)]
-            pos = merge(arrays, dist)
+        i = 0
+        for r, lists in enumerate(rows):
+            arrays, i = decoded[i : i + len(lists)], i + len(lists)
+            merge = near_merge if kind_a[r] == "near" else window_merge
+            pos = merge(arrays, int(dist_a[r]))
             if pos:
                 tfs[r] = len(pos)
                 if with_positions:
@@ -228,37 +236,6 @@ def positional_merge_udf(kind: str, dist: int, n_args: int, with_positions: bool
     # stages, running the whole merge twice (seen in the 400k-page
     # plans; compiler filters on the projected alias for the same
     # reason).
-    return _merge.asNondeterministic()
-
-
-def fused_positional_tf_udf():
-    """pandas UDF for the fused positional BATCH: one Arrow pass merges
-    rows belonging to DIFFERENT queries (variable arity via an
-    array<binary> column, per-row kind/dist from the broadcast params
-    join). Returns tf only — the fused path feeds #SCORE directly, so
-    match positions are never re-encoded. Merge kernels and pointer
-    discipline are the exact per-query ones (near_merge/window_merge),
-    so tf is bit-identical to the per-query plans."""
-
-    @F.pandas_udf(IntegerType())
-    def _merge(pos_arrays: pd.Series, kinds: pd.Series, dists: pd.Series) -> pd.Series:
-        rows = list(pos_arrays)
-        kind_a = kinds.to_numpy()
-        dist_a = dists.to_numpy()
-        # ONE vectorized decode for every blob of every row in the batch
-        flat = [b for blobs in rows for b in blobs]
-        decoded = decode_positions_many(flat)
-        out = np.zeros(len(rows), dtype=np.int32)
-        i = 0
-        for r, blobs in enumerate(rows):
-            cnt = len(blobs)
-            arrays, i = decoded[i : i + cnt], i + cnt
-            merge = near_merge if kind_a[r] == 0 else window_merge
-            out[r] = len(merge(arrays, int(dist_a[r])))
-        return pd.Series(out)
-
-    # same rationale as positional_merge_udf: prevent Catalyst from
-    # duplicating the expression into two ArrowEvalPython stages
     return _merge.asNondeterministic()
 
 

@@ -17,6 +17,15 @@ the physical strategy:
   Joins and score expressions are built strictly in argument order so
   floating-point results are reproducible and bit-comparable with the
   ANSI-SQL oracle.
+- Flat nodes (``Compiler.flat_scorer``: a BM25 bag of words or
+  ``#SCORE`` of a flat #NEAR/#WINDOW, a flat Indri or Boolean op) skip
+  the joins: each model has ONE flat scorer, keyed by ``qid``, that
+  reads the terms from a single bucket-pruned ``term IN (...)`` scan
+  per field and regroups per (qid, doc_id) with an arg-ordered fold.
+  ``compile`` calls it with one ``(qid, node)`` item at any depth;
+  ``SearchEngine.run_batch`` with all of a batch's flat queries. Only
+  how the per-query constants reach the rows depends on the item count
+  (``term_scan``/``_with_meta``).
 
 Indri's default-score semantics (QrySopScore.getDefaultScore — a doc
 that misses an argument still contributes a smoothed score that
@@ -105,9 +114,7 @@ def flat_terms(node) -> list[TermNode] | None:
     Flat: #AND/#OR/#WAND/#WSUM over ``#SCORE(term)`` args, or a
     positional op over bare term args — at least two args, all of one
     field, no term repeated. A flat op reads ONE ``term IN (...)``
-    postings scan regrouped per doc; this one predicate picks the
-    compiler's single-scan strategies and the engine's fused
-    ``run_batch`` paths alike."""
+    postings scan regrouped per doc (``Compiler.flat_scorer``)."""
     if isinstance(node, SopNode):
         if node.op not in ("and", "or", "wand", "wsum") or not all(
             isinstance(a, SopNode) and a.op == "score" for a in node.args
@@ -127,17 +134,123 @@ def flat_terms(node) -> list[TermNode] | None:
     return args
 
 
+def _bow_terms(node) -> list[TermNode] | None:
+    """The leaves of a bag-of-words node — ``#SUM`` of ``#SCORE(term)``
+    args or one ``#SCORE(term)``; any fields, repeats allowed — else None."""
+    args = [node] if node.op == "score" else node.args if node.op == "sum" else ()
+    if not args or not all(
+        isinstance(a, SopNode) and a.op == "score" and isinstance(a.args[0], TermNode)
+        for a in args
+    ):
+        return None
+    return [a.args[0] for a in args]
+
+
+def _by_field(items, field_of) -> dict[str, list]:
+    out: dict[str, list] = {}
+    for qid, node in items:
+        out.setdefault(field_of(node), []).append((qid, node))
+    return out
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    u = frames[0]
+    for fr in frames[1:]:
+        u = u.unionByName(fr, allowMissingColumns=True)
+    return u
+
+
+def _case(by_term: dict) -> Column:
+    """``CASE term WHEN t THEN <literal> ...`` over ``{term: value}``."""
+    out = None
+    for t, v in by_term.items():
+        match = F.col("term") == t
+        out = F.when(match, F.lit(v)) if out is None else out.when(match, F.lit(v))
+    return out
+
+
+def _fold(k, init: Column, step) -> Column:
+    """Left fold of ``step(acc, i)`` over the arg indexes ``0..k-1``.
+
+    One query has a literal ``k``: the fold unrolls into plain codegen'd
+    arithmetic. In a batch ``k`` is a per-qid column: ``aggregate`` over
+    ``sequence``. Both run the same float ops in the same order (the
+    inits 1.0/* and 0.0/+ are IEEE-exact)."""
+    if isinstance(k, int):
+        acc = init
+        for i in range(k):
+            acc = step(acc, i)
+        return acc
+    return F.aggregate(F.sequence(F.lit(0), k - F.lit(1)), init, step)
+
+
+def _indri_fold(op, k, w, total, eff) -> Column:
+    """Indri ``#op`` over the arg scores ``eff(i)``, in arg order.
+
+    ``op``/``k``/``w``/``total`` are Python values (a join-path node, one
+    flat query) or per-qid columns (a flat batch). Every caller — the
+    flat scorer, its ``default_fn``, the join path and its
+    ``default_fn`` — folds here, so their float ops are the same."""
+    one, zero = F.lit(1.0), F.lit(0.0)
+    w, total = F.lit(w), F.lit(total)
+    ops = {
+        # geometric mean w/ defaults (QrySopAnd.java:73-91)
+        "and": lambda: F.pow(
+            _fold(k, one, lambda acc, i: acc * eff(i)), one / F.lit(k).cast("double")
+        ),
+        # as-implemented reference quirk: prod(1 - s_i) WITHOUT the
+        # final complement (QrySopOr.java:75-87)
+        "or": lambda: _fold(k, one, lambda acc, i: acc * (one - eff(i))),
+        # weighted geometric mean (QrySopWAnd.java:82-98)
+        "wand": lambda: _fold(
+            k, one, lambda acc, i: acc * F.pow(eff(i), F.element_at(w, i + 1) / total)
+        ),
+        # weighted arithmetic mean (QrySopWSum.java:83-100): (s*w)/total,
+        # the reference's evaluation order
+        "wsum": lambda: _fold(
+            k, zero, lambda acc, i: acc + eff(i) * F.element_at(w, i + 1) / total
+        ),
+    }
+    if isinstance(op, str):
+        return ops[op]()
+    out = None
+    for name, fn in ops.items():
+        out = F.when(op == name, fn()) if out is None else out.when(op == name, fn())
+    return out
+
+
+def _merge(frame: DataFrame, positions: Column, kind, dist, with_positions: bool,
+           keys: tuple = ()) -> DataFrame:
+    """Run the positional merge UDF over ``positions`` (array<binary>,
+    arg order) -> (*keys, doc_id, tf, doc_len[, positions]), tf > 0."""
+    udf = positional_merge_udf(with_positions)
+    cols = [*keys, "doc_id", F.col("__m.tf").alias("tf"), "doc_len"]
+    if with_positions:
+        cols.append(F.col("__m.positions").alias("positions"))
+    # project the struct fields BEFORE filtering: a `where` on
+    # `__m.tf` followed by a select of `__m.*` duplicates the field
+    # accesses into filter and project, and UDF extraction then plans
+    # TWO ArrowEvalPython stages — the whole merge ran twice (seen in
+    # the 400k PLANS.md). Filtering on the projected alias keeps one
+    # Arrow pass.
+    return (
+        frame.withColumn("__m", udf(positions, F.lit(kind), F.lit(dist)))
+        .select(*cols)
+        .where(F.col("tf") > 0)
+    )
+
+
 class Compiler:
     def __init__(self, index: InvertedIndex, model, agg_threshold: int = 1):
         self.index = index
         self.model = model
         self.term_stats: dict[tuple[str, str], tuple[int, int]] = {}
-        # bag-of-words #SUM queries longer than this use the batched-scan
-        # union+agg physical strategy (ONE term-IN scan per field + one
-        # shuffle) instead of k-way joins. The term-order fold makes it
-        # bit-identical to the join path (test_agg_strategy pins this),
-        # so it is the default for every multi-term query; raise the
-        # threshold to force the join shape (plan tests do).
+        # nodes with more args than this take the flat scorers (ONE
+        # term-IN scan per field + one shuffle) instead of k-way joins.
+        # Their term-order folds make them bit-identical to the join
+        # path (test_agg_strategy and test_properties pin this), so the
+        # default covers every multi-term node; raise the threshold to
+        # force the join shape (plan tests do).
         self.agg_threshold = agg_threshold
 
     def _bucket_cond(self, terms) -> Column | None:
@@ -187,6 +300,88 @@ class Compiler:
             self.term_stats[tf] = found.get(tf, (0, 0))
 
     # ------------------------------------------------------------------
+    # flat scans: how per-query constants reach the postings rows
+    # ------------------------------------------------------------------
+
+    def term_scan(self, fld: str, rows: list[tuple], consts: tuple = ()) -> DataFrame:
+        """Postings of one field's query terms from ONE bucket-pruned
+        ``term IN (...)`` scan, tagged per query arg.
+
+        ``rows`` holds one ``(qid, ti, term, *values)`` per arg and
+        ``consts`` the values' ``"name type"`` columns. Each posting
+        comes out once per arg naming its term, with ``qid``, ``__ti``
+        and the constants. One query binds them as literal CASE-on-term
+        columns: no Python-built table, no broadcast, no extra job (a
+        repeated term explodes to one row per arg). Two or more join a
+        broadcast ``(qid, __ti, term, ...)`` table, so the scan count
+        stays one per field whatever the batch size.
+        """
+        names = sorted({r[2] for r in rows})
+        cond = (F.col("field") == fld) & F.col("term").isin(names)
+        bc = self._bucket_cond(names)
+        if bc is not None:
+            cond = cond & bc
+        fr = self.index.postings.where(cond)
+        if len({r[0] for r in rows}) > 1:
+            schema = ", ".join(["qid string", "__ti int", "term string", *consts])
+            qt = self.index.spark.createDataFrame(rows, schema)
+            return fr.join(F.broadcast(qt), on="term")
+        tis: dict[str, list[int]] = {}
+        for r in rows:
+            tis.setdefault(r[2], []).append(r[1])
+        if all(len(v) == 1 for v in tis.values()):
+            ti = _case({t: v[0] for t, v in tis.items()})
+        else:
+            ti = F.explode(_case(tis))
+        cols = [F.lit(rows[0][0]).alias("qid"), ti.alias("__ti")]
+        for j, c in enumerate(consts):
+            cols.append(_case({r[2]: r[3 + j] for r in rows}).alias(c.split()[0]))
+        return fr.select("*", *cols)
+
+    def _with_meta(self, frame: DataFrame, rows: list[tuple], cols: tuple):
+        """Per-qid constants ``rows`` = ``[(qid, *values)]`` (``cols``:
+        their ``"name type"``) for a qid-keyed ``frame`` -> (frame,
+        {name: value}). One query gets its values back as Python
+        literals, which the scoring expressions fold; a batch joins a
+        broadcast table and gets its columns."""
+        names = [c.split()[0] for c in cols]
+        if len(rows) == 1:
+            return frame, dict(zip(names, rows[0][1:]))
+        meta = self.index.spark.createDataFrame(rows, ", ".join(["qid string", *cols]))
+        return frame.join(F.broadcast(meta), on="qid"), {n: F.col(n) for n in names}
+
+    def flat_scorer(self, node, threshold: int = 0):
+        """The flat scorer for ``node`` when it has more than
+        ``threshold`` term args, else None. This one predicate routes
+        both ``compile`` (any tree node, threshold ``agg_threshold``)
+        and ``SearchEngine.run_batch`` (query roots).
+
+        - BM25: a bag of words (``_bow_terms``), or ``#SCORE`` of a flat
+          ``#NEAR``/``#WINDOW``.
+        - Indri: a flat op (``flat_terms``) over a non-empty field.
+        - Ranked/UnrankedBoolean: a flat op.
+        """
+        m = self.model
+        if not isinstance(node, SopNode):
+            return None
+        if isinstance(m, BM25):
+            iop = node.args[0] if node.op == "score" else None
+            if isinstance(iop, IopNode):
+                flat = iop.op in ("near", "window") and flat_terms(iop) is not None
+                ok = flat and len(iop.args) > threshold
+                return self._bm25_positional if ok else None
+            terms = _bow_terms(node)
+            return self._bm25_flat if terms and len(terms) > threshold else None
+        terms = flat_terms(node)
+        if terms is None or len(terms) <= threshold:
+            return None
+        if isinstance(m, Indri):
+            return self._indri_flat if self.index.sum_len(terms[0].field) > 0 else None
+        if isinstance(m, (RankedBoolean, UnrankedBoolean)):
+            return self._bool_flat
+        return None
+
+    # ------------------------------------------------------------------
     # Iop compilation
     # ------------------------------------------------------------------
 
@@ -208,13 +403,13 @@ class Compiler:
             st = self.term_stats.get((node.term, node.field))
             return IopResult(fr, node.field, _stats=st, _temps=self.index._temps)
 
-        flat = flat_terms(node)
         k = len(node.args)
+        flat = flat_terms(node) if k > self.agg_threshold else None
 
         if node.op == "syn":
             if flat is not None:
                 # ONE term-IN scan feeds the union directly
-                u = self._iop_batch_rows(flat).drop("__ti")
+                u = self.term_scan(node.field, [("", i, t.term) for i, t in enumerate(flat)])
             else:
                 children = [self.compile_iop(a) for a in node.args]
                 u = children[0].frame
@@ -233,23 +428,10 @@ class Compiler:
             fr = u.groupBy("doc_id").agg(*aggs).select(*cols)
             return IopResult(fr, node.field, _temps=self.index._temps)
 
-        # near / window: co-locate the k position lists per doc, then the
-        # Arrow merge kernel. Flat distinct-term args: ONE scan + ONE
-        # groupBy (map of __ti -> positions, match-ALL via map size);
-        # nested args fall back to the k-way inner-join chain.
+        # near / window: flat args take the shared single-scan merge;
+        # nested args fall back to the k-way inner-join chain
         if flat is not None:
-            rows = self._iop_batch_rows(flat)
-            joined = (
-                rows.groupBy("doc_id")
-                .agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("__ti", "positions"))
-                    ).alias("__pm"),
-                    F.max("doc_len").alias("doc_len"),
-                )
-                .where(F.size("__pm") == k)
-            )
-            pcols = [F.element_at(F.col("__pm"), F.lit(i)) for i in range(k)]
+            fr = self._positional([("", node)], need_positions).drop("qid")
         else:
             children = [self.compile_iop(a) for a in node.args]
             joined = children[0].frame.select(
@@ -261,43 +443,38 @@ class Compiler:
                     on="doc_id",
                     how="inner",
                 )
-            pcols = [F.col(f"__p{i}") for i in range(k)]
-        merge = positional_merge_udf(node.op, node.dist, k, with_positions=need_positions)
-        out_cols = ["doc_id", F.col("__m.tf").alias("tf"), "doc_len"]
-        if need_positions:
-            out_cols.append(F.col("__m.positions").alias("positions"))
-        # project the struct fields BEFORE filtering: a `where` on
-        # `__m.tf` followed by a select of `__m.*` duplicates the field
-        # accesses into filter and project, and UDF extraction then
-        # plans TWO ArrowEvalPython stages — the whole merge ran twice
-        # (seen in the 400k PLANS.md). Filtering on the projected alias
-        # keeps one Arrow pass.
-        fr = (
-            joined.withColumn("__m", merge(*pcols))
-            .select(*out_cols)
-            .where(F.col("tf") > 0)
-        )
+            pcols = F.array(*[F.col(f"__p{i}") for i in range(k)])
+            fr = _merge(joined, pcols, node.op, node.dist, need_positions)
         return IopResult(fr, node.field, _temps=self.index._temps)
 
-    def _iop_batch_rows(self, terms: list[TermNode]) -> DataFrame:
-        """(doc_id, __ti, tf, doc_len, positions) for the distinct terms
-        of one field from a single bucket-pruned scan; ``__ti`` is the
-        term's arg index."""
-        fld = terms[0].field
-        names = [t.term for t in terms]
-        cond = (F.col("field") == fld) & F.col("term").isin(names)
-        bc = self._bucket_cond(names)
-        if bc is not None:
-            cond = cond & bc
-        ti_col = None
-        for i, t in enumerate(terms):
-            match = F.col("term") == t.term
-            ti_col = (
-                F.when(match, F.lit(i)) if ti_col is None else ti_col.when(match, F.lit(i))
+    def _positional(self, items: list, with_positions: bool) -> DataFrame:
+        """(qid, doc_id, tf, doc_len[, positions]) for flat #NEAR/#WINDOW
+        items ``[(qid, iop)]``: per field, one scan, one groupBy(qid,
+        doc_id) collecting the arg-ordered position lists, one Arrow
+        merge pass with each query's (kind, dist)."""
+        frames = []
+        for fld, f_items in _by_field(items, lambda iop: iop.field).items():
+            qt = [(qid, i, t.term) for qid, iop in f_items for i, t in enumerate(iop.args)]
+            g = (
+                self.term_scan(fld, qt)
+                .groupBy("qid", "doc_id")
+                .agg(
+                    F.array_sort(F.collect_list(F.struct("__ti", "positions"))).alias("__ps"),
+                    F.max("doc_len").alias("doc_len"),
+                )
             )
-        return self.index.postings.where(cond).select(
-            "doc_id", ti_col.alias("__ti"), "tf", "doc_len", "positions"
-        )
+            g, c = self._with_meta(
+                g,
+                [(qid, iop.op, int(iop.dist), len(iop.args)) for qid, iop in f_items],
+                ("__kind string", "__dist int", "__k int"),
+            )
+            # NEAR/WINDOW match only docs containing EVERY arg
+            g = g.where(F.size("__ps") == F.lit(c["__k"]))
+            frames.append(
+                _merge(g, F.col("__ps.positions"), c["__kind"], c["__dist"],
+                       with_positions, keys=("qid",))
+            )
+        return _union(frames)
 
     # ------------------------------------------------------------------
     # Sop compilation
@@ -315,32 +492,12 @@ class Compiler:
 
     def compile_sop(self, node: SopNode) -> ScoreResult:
         m = self.model
+        scorer = self.flat_scorer(node, self.agg_threshold)
+        if scorer is not None:
+            res = scorer([("", node)])
+            return ScoreResult(res.frame.drop("qid"), res.fields, res.default_fn)
         if node.op == "score":
             return self._leaf(node)
-
-        # Scalable path for long bag-of-words BM25: #SUM over pure term
-        # leaves is semantically a union + groupBy-sum (missing args
-        # contribute 0), ONE shuffle instead of k-1 joins. The join path
-        # stays the default for short queries because its fixed operand
-        # order is float-reproducible against the SQL oracle.
-        if (
-            node.op == "sum"
-            and isinstance(m, BM25)
-            and len(node.args) > self.agg_threshold
-            and all(
-                a.op == "score" and isinstance(a.args[0], TermNode) for a in node.args
-            )
-        ):
-            return self._sum_by_aggregation(node)
-
-        if isinstance(m, Indri):
-            flat = self._indri_flat_strategy(node)
-            if flat is not None:
-                return flat
-        if isinstance(m, (RankedBoolean, UnrankedBoolean)):
-            flat = self._bool_flat_strategy(node)
-            if flat is not None:
-                return flat
 
         children = [self.compile_sop(a) for a in node.args]
         k = len(children)
@@ -396,42 +553,35 @@ class Compiler:
                 out_cols.append(dlmap[f].alias(_dl(f)))
         return ScoreResult(joined.select(*out_cols), all_fields, default_fn)
 
-    def _sum_by_aggregation(self, node: SopNode) -> ScoreResult:
-        """Long bag-of-words BM25 #SUM: ONE postings scan per field with
-        ``term IN (...)`` (k-fold less IO than k per-term scans — the
-        dominant cost at corpus scale), then one groupBy(doc_id).
+    # -- flat scorers: items [(qid, node)] -> (qid, doc_id, score, ...) --
 
-        The per-doc sum folds the collected (term_index, score) pairs in
-        ascending argument order, NOT in arrival order: a plain ``sum``
-        would accumulate in shuffle-dependent order, making %.18f run
-        files differ across runs/parallelism. The per-term idf constants
-        are selected by a CASE on the term column, so every row's float
-        ops are exactly the leaf formula — bit-identical to the
-        k-way-join path (interleaved ``+ 0.0`` for missing terms is
-        exact in IEEE) and to the SQL oracle."""
-        leaves = [(i, a.args[0]) for i, a in enumerate(node.args)]
+    def _bm25_flat(self, items: list) -> ScoreResult:
+        """BM25 bag of words: per field ONE term-IN scan scores every
+        (qid, arg) row with its term's idf; one groupBy(qid, doc_id)
+        folds the (arg index, score) pairs in ascending arg order, NOT
+        in arrival order — a plain ``sum`` would accumulate in
+        shuffle-dependent order and %.18f run files would differ across
+        runs. Each row's float ops are the leaf formula, so the fold is
+        bit-identical to the k-way-join path (``+ 0.0`` for a missing
+        term is exact) and to the SQL oracle. A missing term adds no
+        row: its BM25 score is 0."""
         by_field: dict[str, list] = {}
-        for i, t in leaves:
-            by_field.setdefault(t.field, []).append((i, t))
-
+        for qid, node in items:
+            for i, t in enumerate(_bow_terms(node)):
+                by_field.setdefault(t.field, []).append((qid, i, t.term))
         frames = []
-        for fld, items in by_field.items():
-            terms = [t.term for _, t in items]
-            if len(set(terms)) == len(terms):
-                frames.append(self._bm25_batch_scan(fld, items))
-            else:
-                # duplicate term under one #SUM contributes once per
-                # occurrence — fall back to per-leaf frames for this field
-                for i, t in items:
-                    frames.append(
-                        self._leaf(SopNode("score", (t,))).frame.select(
-                            "doc_id", F.lit(i).alias("__ti"), F.col("score")
-                        )
-                    )
-        u = frames[0]
-        for fr in frames[1:]:
-            u = u.unionByName(fr)
-        out = u.groupBy("doc_id").agg(
+        for fld, qt in by_field.items():
+            avg = self.index.avg_len(fld)
+            rows = [
+                (qid, i, term, self._idf(self.term_stats.get((term, fld), (0, 0))[0], avg))
+                for qid, i, term in qt
+            ]
+            frames.append(
+                self.term_scan(fld, rows, ("__idf double",)).select(
+                    "qid", "doc_id", "__ti", self._bm25(F.col("__idf"), avg).alias("score")
+                )
+            )
+        out = _union(frames).groupBy("qid", "doc_id").agg(
             F.expr(
                 "aggregate(array_sort(collect_list(struct(__ti, score))), "
                 "cast(0.0 as double), (acc, x) -> acc + x.score)"
@@ -439,206 +589,142 @@ class Compiler:
         )
         return ScoreResult(out, frozenset(by_field))
 
-    def _indri_flat_strategy(self, node: SopNode) -> ScoreResult | None:
-        """Flat single-field Indri #AND/#OR/#WAND/#WSUM over distinct term
-        leaves: ONE ``term IN (...)`` scan + ONE groupBy instead of k-1
-        full-outer joins. Per-doc, the collected (term_index, score)
-        pairs reassemble into a map; a missing term falls back to its
-        default-score expression using the doc length carried by any
-        present term's row (same field). Every float op replicates the
-        join path's operand order, so scores are bit-identical — the
-        Indri gate oracles pin this.
+    def _bm25_positional(self, items: list) -> ScoreResult:
+        """BM25 ``#SCORE`` of a flat ``#NEAR``/``#WINDOW``. BM25's idf
+        needs each query's df over the merged list (QrySopScore's
+        materialize-then-score, QryIop.java:174-190): ONE groupBy(qid)
+        action on the persisted merge gives every query's df."""
+        iops = [(qid, node.args[0]) for qid, node in items]
+        merged = self._positional(iops, with_positions=False).persist()
+        if self.index._temps is not None:
+            self.index._temps.append(merged)
+        dfs = {r["qid"]: r["count"] for r in merged.groupBy("qid").count().collect()}
+        consts = []
+        for qid, iop in iops:
+            avg = self.index.avg_len(iop.field)
+            consts.append((qid, self._idf(dfs.get(qid, 0), avg), avg))
+        fr, c = self._with_meta(merged, consts, ("__idf double", "__avg double"))
+        out = fr.select("qid", "doc_id", self._bm25(c["__idf"], c["__avg"]).alias("score"))
+        return ScoreResult(out, frozenset(iop.field for _, iop in iops))
 
-        Returns None when ``node`` is not flat (``flat_terms``) or its
-        field is empty — the generic join path is the fallback.
-        """
-        m = self.model
-        terms = flat_terms(node)
-        if terms is None:
-            return None
-        fld = terms[0].field
-        names = [t.term for t in terms]
-        collen = float(self.index.sum_len(fld))
-        if collen <= 0:
-            return None
-
-        k = len(terms)
-        ps, p_defs = [], []
-        for t in terms:
-            _df, ctf = self.term_stats.get((t.term, fld), (0, 0))
-            ps.append(ctf / collen)
-            ctf_def = float(ctf) if ctf >= 1.0 else 0.5
-            p_defs.append(ctf_def / collen)
-
-        cond = (F.col("field") == fld) & F.col("term").isin(names)
-        bc = self._bucket_cond(names)
-        if bc is not None:
-            cond = cond & bc
-        fr = self.index.postings.where(cond)
-
-        tf = F.col("tf").cast("double")
-        dl_row = F.col("doc_len").cast("double")
-        p_col, ti_col = None, None
-        for i, t in enumerate(names):
-            match = F.col("term") == t
-            p_col = (
-                F.when(match, F.lit(ps[i]))
-                if p_col is None
-                else p_col.when(match, F.lit(ps[i]))
+    def _indri_flat(self, items: list) -> ScoreResult:
+        """Flat Indri #AND/#OR/#WAND/#WSUM: per field ONE term-IN scan
+        scores each (qid, arg) row with the leaf formula; per (qid,
+        doc_id) the (arg index -> score) map reassembles, and a missing
+        arg falls back to its default score at the doc length carried
+        by any present arg's row (same field). The op's fold replicates
+        the join path's operand order (``_combine``), so scores are
+        bit-identical — the Indri gate oracles pin this. With one item,
+        ``default_fn`` is the same fold over an empty score map."""
+        frames = []
+        by_field = _by_field(items, lambda n: flat_terms(n)[0].field)
+        for fld, f_items in by_field.items():
+            collen = float(self.index.sum_len(fld))
+            qt, meta = [], []
+            for qid, node in f_items:
+                terms = flat_terms(node)
+                pdefs = []
+                for i, t in enumerate(terms):
+                    ctf = self.term_stats.get((t.term, fld), (0, 0))[1]
+                    qt.append((qid, i, t.term, ctf / collen))
+                    pdefs.append((float(ctf) if ctf >= 1.0 else 0.5) / collen)
+                w = list(node.weights) if node.weights else [1.0] * len(terms)
+                meta.append((qid, node.op, len(terms), pdefs, w, sum(w)))
+            tf = F.col("tf").cast("double")
+            dl = F.col("doc_len").cast("double")
+            g = (
+                self.term_scan(fld, qt, ("__p double",))
+                .select("qid", "doc_id", "__ti", self._indri(tf, dl, F.col("__p")).alias("__s"),
+                        "doc_len")
+                .groupBy("qid", "doc_id")
+                .agg(
+                    F.map_from_entries(F.collect_list(F.struct("__ti", "__s"))).alias("__m"),
+                    F.max("doc_len").alias("__gdl"),
+                )
             )
-            ti_col = (
-                F.when(match, F.lit(i)) if ti_col is None else ti_col.when(match, F.lit(i))
-            )
-        leaf_score = (
-            F.lit(1.0 - m.lam) * (tf + F.lit(m.mu) * p_col) / (dl_row + F.lit(m.mu))
-            + F.lit(m.lam) * p_col
-        )
-        rows = fr.select(
-            "doc_id", ti_col.alias("__ti"), leaf_score.alias("__s"), F.col("doc_len")
-        )
-        grouped = rows.groupBy("doc_id").agg(
-            F.map_from_entries(F.collect_list(F.struct("__ti", "__s"))).alias("__m"),
-            F.max("doc_len").alias("__gdl"),
-        )
-        dlc = F.col("__gdl").cast("double")
-
-        def leaf_default(dl_col: Column, i: int) -> Column:
-            return (
-                F.lit(1.0 - m.lam)
-                * (F.lit(0.0) + F.lit(m.mu) * F.lit(p_defs[i]))
-                / (dl_col + F.lit(m.mu))
-                + F.lit(m.lam) * F.lit(p_defs[i])
+            g, c = self._with_meta(
+                g, meta,
+                ("__op string", "__k int", "__pdefs array<double>", "__w array<double>",
+                 "__total double"),
             )
 
-        eff = [
-            F.coalesce(F.element_at(F.col("__m"), F.lit(i)), leaf_default(dlc, i))
-            for i in range(k)
-        ]
-        weights = list(node.weights) if node.weights else [1.0] * k
-        total = sum(weights)
+            def fold(scores: Column, dl: Column, c=c) -> Column:
+                def eff(i):
+                    p_def = F.element_at(F.lit(c["__pdefs"]), i + 1)
+                    return F.coalesce(
+                        F.element_at(scores, i), self._indri(F.lit(0.0), dl, p_def)
+                    )
 
-        if node.op == "and":
-            prod = eff[0]
-            for x in eff[1:]:
-                prod = prod * x
-            score = F.pow(prod, F.lit(1.0 / k))
-        elif node.op == "or":
-            prod = F.lit(1.0) - eff[0]
-            for x in eff[1:]:
-                prod = prod * (F.lit(1.0) - x)
-            score = prod
-        elif node.op == "wand":
-            prod = F.pow(eff[0], F.lit(weights[0] / total))
-            for i in range(1, k):
-                prod = prod * F.pow(eff[i], F.lit(weights[i] / total))
-            score = prod
-        else:  # wsum
-            score = eff[0] * F.lit(weights[0]) / F.lit(total)
-            for i in range(1, k):
-                score = score + eff[i] * F.lit(weights[i]) / F.lit(total)
+                return _indri_fold(c["__op"], c["__k"], c["__w"], c["__total"], eff)
 
-        op = node.op
+            score = fold(F.col("__m"), F.col("__gdl").cast("double"))
+            frames.append(
+                g.select("qid", "doc_id", score.cast("double").alias("score"),
+                         F.col("__gdl").alias(_dl(fld)))
+            )
 
-        def dfn(dlmap, _op=op, _w=weights, _total=total, _k=k):
-            d = dlmap[fld].cast("double")
-            defs = [leaf_default(d, i) for i in range(_k)]
-            if _op == "and":
-                prod = defs[0]
-                for x in defs[1:]:
-                    prod = prod * x
-                return F.pow(prod, F.lit(1.0 / _k))
-            if _op == "or":
-                prod = F.lit(1.0) - defs[0]
-                for x in defs[1:]:
-                    prod = prod * (F.lit(1.0) - x)
-                return prod
-            if _op == "wand":
-                prod = F.pow(defs[0], F.lit(_w[0] / _total))
-                for i in range(1, _k):
-                    prod = prod * F.pow(defs[i], F.lit(_w[i] / _total))
-                return prod
-            acc = defs[0] * F.lit(_w[0]) / F.lit(_total)
-            for i in range(1, _k):
-                acc = acc + defs[i] * F.lit(_w[i]) / F.lit(_total)
-            return acc
+        def default_fn(dlmap, fold=fold, fld=fld):
+            return fold(F.lit(None).cast("map<int,double>"), dlmap[fld].cast("double"))
 
-        out = grouped.select(
-            F.col("doc_id"),
-            score.cast("double").alias("score"),
-            F.col("__gdl").alias(_dl(fld)),
-        )
-        return ScoreResult(out, frozenset([fld]), dfn)
+        return ScoreResult(_union(frames), frozenset(by_field), default_fn)
 
-    def _bool_flat_strategy(self, node: SopNode) -> ScoreResult | None:
-        """Flat Boolean ops over distinct same-field term leaves: one
-        scan + one groupBy. match-ALL (#AND/#WAND/#WSUM) filters on the
-        per-doc matched-term count; scores are min/max over the
-        reassembled tf map — identical values to the join path (min/max
-        are order-exact)."""
-        m = self.model
-        terms = flat_terms(node)
-        if terms is None:
-            return None
-        fld = terms[0].field
-        k = len(terms)
+    def _bool_flat(self, items: list) -> ScoreResult:
+        """Flat Boolean ops: per field ONE term-IN scan, one groupBy(qid,
+        doc_id) collecting tf. match-ALL (#AND/#WAND/#WSUM) keeps docs
+        holding every arg, scored by the min tf; #OR scores the max
+        (QrySopAnd/Or); UnrankedBoolean scores 1.0. min/max are
+        order-exact, so scores equal the join path's."""
+        unranked = isinstance(self.model, UnrankedBoolean)
+        frames = []
+        by_field = _by_field(items, lambda n: flat_terms(n)[0].field)
+        for fld, f_items in by_field.items():
+            qt = [
+                (qid, i, t.term) for qid, node in f_items for i, t in enumerate(flat_terms(node))
+            ]
+            g = (
+                self.term_scan(fld, qt)
+                .groupBy("qid", "doc_id")
+                .agg(F.collect_list(F.col("tf").cast("double")).alias("__tfs"))
+            )
+            g, c = self._with_meta(
+                g,
+                [(qid, node.op != "or", len(node.args)) for qid, node in f_items],
+                ("__all boolean", "__k int"),
+            )
+            match_all = F.lit(c["__all"])
+            g = g.where(~match_all | (F.size("__tfs") == F.lit(c["__k"])))
+            score = (
+                F.lit(1.0)
+                if unranked
+                else F.when(match_all, F.array_min("__tfs")).otherwise(F.array_max("__tfs"))
+            )
+            frames.append(g.select("qid", "doc_id", score.cast("double").alias("score")))
+        return ScoreResult(_union(frames), frozenset(by_field))
 
-        rows = self._iop_batch_rows(terms).select(
-            "doc_id", "__ti", F.col("tf").cast("double").alias("__s")
-        )
-        g = rows.groupBy("doc_id").agg(
-            F.map_from_entries(F.collect_list(F.struct("__ti", "__s"))).alias("__m")
-        )
-        match_all = node.op != "or"
-        if match_all:
-            g = g.where(F.size("__m") == k)
-        e = [F.element_at(F.col("__m"), F.lit(i)) for i in range(k)]
-        if isinstance(m, UnrankedBoolean):
-            score = F.lit(1.0)
-        elif match_all:
-            # QrySopAnd/WAnd/WSum: min over args
-            score = F.least(*e)
-        else:
-            cs = [F.coalesce(x, F.lit(0.0)) for x in e]
-            score = F.greatest(*cs)
-        out = g.select("doc_id", score.cast("double").alias("score"))
-        return ScoreResult(out, frozenset([fld]))
+    # -- shared leaf formulas --------------------------------------------
 
-    def _bm25_batch_scan(self, fld: str, items: list) -> DataFrame:
-        """(doc_id, __ti, score) for several distinct terms of one field
-        from a single pushed-down scan. Bucket pruning still applies: the
-        OR of constant-foldable per-term bucket equalities prunes to the
-        union of the terms' bucket directories."""
-        m = self.model
-        terms = [t.term for _, t in items]
-        cond = (F.col("field") == fld) & F.col("term").isin(terms)
-        bc = self._bucket_cond(terms)
-        if bc is not None:
-            cond = cond & bc
-        fr = self.index.postings.where(cond)
-
+    def _idf(self, df: int, avg: float) -> float:
+        """max(0, ln((N-df+.5)/(df+.5))) (QrySopScore.java:114-133)."""
         n = float(self.index.n_docs)
-        avg = self.index.avg_len(fld)
+        return max(0.0, math.log((n - df + 0.5) / (df + 0.5))) if avg > 0 else 0.0
+
+    def _bm25(self, idf, avg) -> Column:
+        """idf * tf/(tf+k1*(1-b+b*len/avglen)); k3 read but unused."""
+        m = self.model
         tf = F.col("tf").cast("double")
         denom = tf + F.lit(m.k1) * (
             F.lit(1.0 - m.b) + F.lit(m.b) * F.col("doc_len") / F.lit(avg)
         )
-        idf_col, ti_col = None, None
-        for i, t in items:
-            df, _ctf = self.term_stats.get((t.term, fld), (0, 0))
-            idf = max(0.0, math.log((n - df + 0.5) / (df + 0.5))) if avg > 0 else 0.0
-            match = F.col("term") == t.term
-            idf_col = (
-                F.when(match, F.lit(idf))
-                if idf_col is None
-                else idf_col.when(match, F.lit(idf))
-            )
-            ti_col = (
-                F.when(match, F.lit(i)) if ti_col is None else ti_col.when(match, F.lit(i))
-            )
-        return fr.select(
-            "doc_id",
-            ti_col.alias("__ti"),
-            (idf_col * tf / denom).alias("score"),
+        return F.lit(idf) * tf / denom
+
+    def _indri(self, tf: Column, dl: Column, p) -> Column:
+        """(1-λ)(tf+μp)/(len+μ) + λp (QrySopScore.getScoreIndri); the
+        default score is tf=0 with p from ctf<1 -> 0.5 (getDefaultScore)."""
+        m = self.model
+        p = F.lit(p)
+        return (
+            F.lit(1.0 - m.lam) * (tf + F.lit(m.mu) * p) / (dl + F.lit(m.mu))
+            + F.lit(m.lam) * p
         )
 
     # -- score expressions ---------------------------------------------
@@ -683,70 +769,14 @@ class Compiler:
             raise ValueError(f"#{op} unsupported under BM25 (reference throws too)")
 
         if isinstance(m, Indri):
-            weights = list(node.weights) if node.weights else [1.0] * k
-            total = sum(weights)
-            eff = [
-                F.coalesce(s[i], children[i].default_fn(dlmap)) for i in range(k)
-            ]
+            if op in ("and", "or", "wand", "wsum"):
+                w = list(node.weights) if node.weights else [1.0] * k
 
-            def _dfn_factory():
-                if op == "and":
-                    def dfn(dl):
-                        prod = children[0].default_fn(dl)
-                        for c in children[1:]:
-                            prod = prod * c.default_fn(dl)
-                        return F.pow(prod, F.lit(1.0 / k))
-                    return dfn
-                if op == "or":
-                    def dfn(dl):
-                        prod = F.lit(1.0) - children[0].default_fn(dl)
-                        for c in children[1:]:
-                            prod = prod * (F.lit(1.0) - c.default_fn(dl))
-                        return prod
-                    return dfn
-                if op == "wand":
-                    def dfn(dl):
-                        prod = F.pow(children[0].default_fn(dl), F.lit(weights[0] / total))
-                        for i, c in enumerate(children[1:], start=1):
-                            prod = prod * F.pow(c.default_fn(dl), F.lit(weights[i] / total))
-                        return prod
-                    return dfn
-                if op == "wsum":
-                    def dfn(dl):
-                        acc = children[0].default_fn(dl) * F.lit(weights[0]) / F.lit(total)
-                        for i, c in enumerate(children[1:], start=1):
-                            acc = acc + c.default_fn(dl) * F.lit(weights[i]) / F.lit(total)
-                        return acc
-                    return dfn
-                return None
+                def fold(eff):
+                    return _indri_fold(op, k, w, sum(w), eff)
 
-            if op == "and":
-                # geometric mean w/ defaults (QrySopAnd.java:73-91)
-                prod = eff[0]
-                for x in eff[1:]:
-                    prod = prod * x
-                return F.pow(prod, F.lit(1.0 / k)), _dfn_factory()
-            if op == "or":
-                # as-implemented reference quirk: returns prod(1 - s_i)
-                # WITHOUT the final complement (QrySopOr.java:75-87)
-                prod = F.lit(1.0) - eff[0]
-                for x in eff[1:]:
-                    prod = prod * (F.lit(1.0) - x)
-                return prod, _dfn_factory()
-            if op == "wand":
-                # weighted geometric mean (QrySopWAnd.java:82-98)
-                prod = F.pow(eff[0], F.lit(weights[0] / total))
-                for i in range(1, k):
-                    prod = prod * F.pow(eff[i], F.lit(weights[i] / total))
-                return prod, _dfn_factory()
-            if op == "wsum":
-                # weighted arithmetic mean (QrySopWSum.java:83-100);
-                # expression shape (s*w)/total matches the reference's
-                # evaluation order for float reproducibility
-                acc = eff[0] * F.lit(weights[0]) / F.lit(total)
-                for i in range(1, k):
-                    acc = acc + eff[i] * F.lit(weights[i]) / F.lit(total)
-                return acc, _dfn_factory()
+                score = fold(lambda i: F.coalesce(s[i], children[i].default_fn(dlmap)))
+                return score, lambda dl: fold(lambda i: children[i].default_fn(dl))
             raise ValueError(f"#{op} unsupported under Indri (reference throws too)")
 
         raise ValueError(f"unknown model {m!r}")
@@ -769,46 +799,25 @@ class Compiler:
             return ScoreResult(out, frozenset([f]))
 
         if isinstance(m, BM25):
-            # max(0, ln((N-df+.5)/(df+.5))) * tf/(tf+k1*(1-b+b*len/avglen))
-            # (QrySopScore.java:114-133; k3 read but unused)
             df, _ctf = iop.stats()
-            n = float(self.index.n_docs)
             avg = self.index.avg_len(f)
-            idf = max(0.0, math.log((n - df + 0.5) / (df + 0.5))) if avg > 0 else 0.0
-            tf = F.col("tf").cast("double")
-            denom = tf + F.lit(m.k1) * (
-                F.lit(1.0 - m.b) + F.lit(m.b) * F.col("doc_len") / F.lit(avg)
-            )
-            out = fr.select("doc_id", (F.lit(idf) * tf / denom).alias("score"))
+            out = fr.select("doc_id", self._bm25(self._idf(df, avg), avg).alias("score"))
             return ScoreResult(out, frozenset([f]))
 
         if isinstance(m, Indri):
-            # (1-λ)(tf+μp)/(len+μ) + λp, p = ctf/collen
-            # (QrySopScore.getScoreIndri); default: tf=0, ctf<1 -> 0.5
-            # (getDefaultScore)
             _df, ctf = iop.stats()
             collen = float(self.index.sum_len(f))
             p = (ctf / collen) if collen > 0 else 0.0
             ctf_def = float(ctf) if ctf >= 1.0 else 0.5
             p_def = (ctf_def / collen) if collen > 0 else 0.0
             tf = F.col("tf").cast("double")
-            dl = F.col("doc_len").cast("double")
-            score = (
-                F.lit(1.0 - m.lam) * (tf + F.lit(m.mu) * F.lit(p)) / (dl + F.lit(m.mu))
-                + F.lit(m.lam) * F.lit(p)
-            )
+            score = self._indri(tf, F.col("doc_len").cast("double"), p)
             out = fr.select(
                 "doc_id", score.alias("score"), F.col("doc_len").alias(_dl(f))
             )
 
-            def default_fn(dlmap, _mu=m.mu, _lam=m.lam, _p=p_def):
-                dlc = dlmap[f].cast("double")
-                return (
-                    F.lit(1.0 - _lam)
-                    * (F.lit(0.0) + F.lit(_mu) * F.lit(_p))
-                    / (dlc + F.lit(_mu))
-                    + F.lit(_lam) * F.lit(_p)
-                )
+            def default_fn(dlmap):
+                return self._indri(F.lit(0.0), dlmap[f].cast("double"), p_def)
 
             return ScoreResult(out, frozenset([f]), default_fn)
 

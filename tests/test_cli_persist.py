@@ -204,3 +204,34 @@ def test_cli_eval_metrics_output(spark, persisted, tmp_path):
     assert metrics[("ap", "2")] == 0.0  # no qrels for query 2
     assert metrics[("num_q", "all")] == 2.0
     assert metrics[("map", "all")] == metrics[("ap", "1")] / 2
+
+
+def test_single_query_plans_bind_literals(spark, persisted):
+    """``search`` binds one query's constants as literals: its plan has
+    no broadcast and no Python-built (ExistingRDD) table. The 3-query
+    BM25 ``run_batch`` of scripts/plans.py still reads the postings with
+    exactly one FileScan."""
+    from searchengine_spark.engine import SearchEngine
+
+    path, _ = persisted
+    eng = SearchEngine(read_index(spark, path))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for model, q in [
+        ("bm25", "cerim dirim batok"),
+        ("indri", "#and(cerim dirim)"),
+        ("rankedboolean", "#and(cerim dirim)"),
+        ("bm25", "#near/2(barim batok)"),
+    ]:
+        p = plan(eng.search(q, model=model, k=10, with_ext_id=False))
+        assert "BroadcastExchange" not in p, (q, p)
+        assert "ExistingRDD" not in p, (q, p)
+
+    batch = eng.run_batch(
+        [("q1", "cerim dirim"), ("q2", "barim cerim"), ("q3", "dirim batok")],
+        model="bm25", k=10,
+    )
+    scans = [ln for ln in plan(batch).splitlines() if "FileScan" in ln and "/postings]" in ln]
+    assert len(scans) == 1, scans

@@ -175,10 +175,10 @@ def test_flat_strategy_bit_identical_to_join_path(pages_index, data):
         int(r["doc_id"]): float(r["score"])
         for r in Compiler(pages_index, m).compile(ast).collect()
     }
-    join = {
-        int(r["doc_id"]): float(r["score"])
-        for r in Compiler(pages_index, m, agg_threshold=100).compile(ast).collect()
-    }
+    join_df = Compiler(pages_index, m, agg_threshold=100).compile(ast)
+    # the raised threshold must really take the k-way-join path
+    assert "Join" in join_df._jdf.queryExecution().executedPlan().toString(), q
+    join = {int(r["doc_id"]): float(r["score"]) for r in join_df.collect()}
     assert set(flat) == set(join), q
     for d, s in join.items():
         assert flat[d] == s, (q, d, flat[d], s)

@@ -124,33 +124,41 @@ def test_run_batch_multiple_queries(pages_index):
     assert all(len(v) <= 5 for v in per.values())
 
 
+def _assert_batch_equals_search(eng, batch, model, **params):
+    """Every qid of ``run_batch`` must equal its own ``search(q)``:
+    same docs, ranks, ext ids and %.18f scores."""
+    got: dict = {}
+    for r in eng.run_batch(batch, model=model, k=10, **params).collect():
+        got[(r["qid"], r["rank"])] = (r["doc_id"], r["ext_id"], f"{r['score']:.18f}")
+    want: dict = {}
+    for qid, q in batch:
+        for r in eng.search(q, model=model, k=10, **params).collect():
+            want[(qid, r["rank"])] = (r["doc_id"], r["ext_id"], f"{r['score']:.18f}")
+    assert got == want
+    return {qid for qid, _ in got}
+
+
 def test_run_batch_fused_bit_identical_to_union(pages_index):
-    """The fused one-plan BM25 batch must reproduce the per-query union
-    path exactly — same docs, same ranks, same %.18f scores — including
-    single-term, duplicate-term, and mixed batches where structured
-    queries fall back to the union path."""
+    """The one-plan BM25 batch must reproduce each query's ``search``
+    exactly, including single-term, duplicate-term, and mixed batches
+    where structured queries fall back to per-query plans."""
     eng = SearchEngine(pages_index)
     batch = [
         ("q1", "cerim dirim"),
         ("q2", "cerim"),
         ("q3", "cerim cerim dirim"),  # duplicate term under #SUM
-        ("q4", "#near/2(barim batok)"),  # -> fused positional path
+        ("q4", "#near/2(barim batok)"),  # -> flat positional scorer
         ("q5", "dirim batok cerim fulan"),
     ]
-    fused = eng.run_batch(batch, model=BM25(), k=10).collect()
-    union = eng.run_batch(batch, model=BM25(), k=10, fused=False).collect()
-    key = lambda r: (r["qid"], r["rank"])  # noqa: E731
-    fused_rows = {key(r): (r["doc_id"], r["ext_id"], f"{r['score']:.18f}") for r in fused}
-    union_rows = {key(r): (r["doc_id"], r["ext_id"], f"{r['score']:.18f}") for r in union}
-    assert set(r["qid"] for r in fused) == {"q1", "q2", "q3", "q4", "q5"}
-    assert fused_rows == union_rows
+    qids = _assert_batch_equals_search(eng, batch, BM25())
+    assert qids == {"q1", "q2", "q3", "q4", "q5"}
 
 
 def test_run_batch_fused_positional_bit_identical(pages_index):
-    """The fused positional batch (one shared scan + one Arrow merge
-    pass for the whole batch, VERDICT r3 item 5) must reproduce the
-    per-query union path exactly — mixed #NEAR/#WINDOW, varying arity
-    and distance, nested/ineligible shapes falling back."""
+    """The positional batch (one shared scan + one Arrow merge pass for
+    the whole batch) must reproduce each query's ``search`` exactly —
+    mixed #NEAR/#WINDOW, varying arity and distance, nested/ineligible
+    shapes falling back."""
     eng = SearchEngine(pages_index)
     batch = [
         ("n1", "#near/2(barim batok)"),
@@ -158,17 +166,12 @@ def test_run_batch_fused_positional_bit_identical(pages_index):
         ("n3", "#near/4(balan batok cerim)"),       # arity 3
         ("w1", "#window/4(barim balan)"),
         ("w2", "#window/8(dirim barim batok)"),
-        ("m1", "cerim dirim"),                       # flat -> bm25 fused path
+        ("m1", "cerim dirim"),                       # flat -> bm25 bag of words
         ("x1", "#near/2(#syn(barim balan) batok)"),  # nested -> fallback
         ("x2", "#near/2(barim barim)"),              # dup term -> fallback
     ]
-    fused = eng.run_batch(batch, model=BM25(), k=10).collect()
-    union = eng.run_batch(batch, model=BM25(), k=10, fused=False).collect()
-    key = lambda r: (r["qid"], r["rank"])  # noqa: E731
-    fused_rows = {key(r): (r["doc_id"], r["ext_id"], f"{r['score']:.18f}") for r in fused}
-    union_rows = {key(r): (r["doc_id"], r["ext_id"], f"{r['score']:.18f}") for r in union}
-    assert fused_rows == union_rows
-    assert {r["qid"] for r in fused} >= {"n1", "n2", "w1", "m1"}
+    qids = _assert_batch_equals_search(eng, batch, BM25())
+    assert qids >= {"n1", "n2", "w1", "m1"}
 
 
 @pytest.mark.parametrize(
@@ -182,6 +185,7 @@ def test_run_batch_fused_positional_bit_identical(pages_index):
                 ("i3", "#wand(0.7 cerim 0.3 dirim)"),
                 ("i4", "#wsum(0.2 barim 0.8 cerim 1.0 dirim)"),
                 ("i5", "#and(cerim #near/2(barim batok))"),  # nested -> fallback
+                ("i6", "#wsum(0.5 barim 1.0 cerim 1.5 dirim)"),  # total 3.0: inexact /
             ],
         ),
         (
@@ -202,16 +206,10 @@ def test_run_batch_fused_positional_bit_identical(pages_index):
     ],
 )
 def test_run_batch_fused_models_bit_identical(pages_index, model, batch):
-    """Fused Indri/Boolean batches must reproduce the per-query union
-    path exactly, including weighted ops and nested-query fallback."""
+    """Indri/Boolean batches must reproduce each query's ``search``
+    exactly, including weighted ops and nested-query fallback."""
     eng = SearchEngine(pages_index)
-    fused = eng.run_batch(batch, model=model, k=10, mu=1500.0, lam=0.3).collect()
-    union = eng.run_batch(
-        batch, model=model, k=10, mu=1500.0, lam=0.3, fused=False
-    ).collect()
-    to_rows = lambda rs: {  # noqa: E731
-        (r["qid"], r["rank"]): (r["doc_id"], r["ext_id"], f"{r['score']:.18f}")
-        for r in rs
-    }
-    assert {r["qid"] for r in fused} == {q for q, _ in batch}
-    assert to_rows(fused) == to_rows(union)
+    qids = _assert_batch_equals_search(eng, batch, model, mu=1500.0, lam=0.3)
+    assert qids == {q for q, _ in batch}
+
+
