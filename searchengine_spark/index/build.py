@@ -29,16 +29,17 @@ stopword-grade terms cannot blow a single reducer.
 from __future__ import annotations
 
 import json
-import math
 import os
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dc_field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import BinaryType
 
-from searchengine_spark.analyzer import get_analyzer
+from searchengine_spark.analyzer import analyzer_version, get_analyzer
 from searchengine_spark.codec import encode_positions_many
 
 DEFAULT_FIELDS = ("body",)
@@ -186,6 +187,33 @@ class InvertedIndex:
         return self.field_stats[fld]["doc_count"]
 
 
+def df_ctf(postings: DataFrame, *keys: str) -> DataFrame:
+    """Per-(term, field) document and collection frequency (the InvList
+    header), grouped by ``keys`` first."""
+    return postings.groupBy(*keys, "term", "field").agg(
+        F.count(F.lit(1)).cast("long").alias("df"),
+        F.sum("tf").cast("long").alias("ctf"),
+    )
+
+
+def field_stats_of(doc_stats: DataFrame, fields=()) -> dict:
+    """Per-field doc_count / sum_len / avg_len (one small collect);
+    ``fields`` absent from ``doc_stats`` get zeros."""
+    stats = {
+        r["field"]: {
+            "doc_count": int(r["doc_count"]),
+            "sum_len": int(r["sum_len"]),
+            "avg_len": float(r["sum_len"]) / max(1, int(r["doc_count"])),
+        }
+        for r in doc_stats.groupBy("field")
+        .agg(F.count(F.lit(1)).alias("doc_count"), F.sum("doc_len").alias("sum_len"))
+        .collect()
+    }
+    for fld in fields:
+        stats.setdefault(fld, {"doc_count": 0, "sum_len": 0, "avg_len": 0.0})
+    return stats
+
+
 def build_index(
     docs: DataFrame,
     fields: dict[str, str] | None = None,
@@ -241,33 +269,13 @@ def build_index(
         doc_stats = doc_stats.unionByName(s)
     doc_stats = doc_stats.select("doc_id", "field", "doc_len")
 
-    term_stats = postings.groupBy("term", "field").agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.sum("tf").cast("long").alias("ctf"),
-    )
+    term_stats = df_ctf(postings)
     if cache:
         term_stats = term_stats.persist()
 
     # corpus scalars (one small action; broadcast by value afterwards)
     n_docs = docs.count()
-    fs_rows = (
-        doc_stats.groupBy("field")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum("doc_len").alias("sum_len"),
-        )
-        .collect()
-    )
-    field_stats = {
-        r["field"]: {
-            "doc_count": int(r["doc_count"]),
-            "sum_len": int(r["sum_len"]),
-            "avg_len": float(r["sum_len"]) / max(1, int(r["doc_count"])),
-        }
-        for r in fs_rows
-    }
-    for fld in fields:
-        field_stats.setdefault(fld, {"doc_count": 0, "sum_len": 0, "avg_len": 0.0})
+    field_stats = field_stats_of(doc_stats, fields)
 
     doc_cols = [F.col(doc_id_col).cast("long").alias("doc_id"), F.col(ext).cast("string").alias("ext_id")]
     extra = [c for c in docs.columns if c not in (doc_id_col, ext)]
@@ -288,8 +296,21 @@ def build_index(
 
 
 # ---------------------------------------------------------------------------
-# Checkpoint-resumable persisted layout (north_rule: per-partition lineage)
+# Layout v3: the one writer of the persisted tables
 # ---------------------------------------------------------------------------
+#
+# Every table is a set of ``seg=`` generation dirs: ``base`` from
+# ``write_index`` or a major compaction, ``bLO_HI`` from a minor
+# compaction of delta batches LO..HI. The term-keyed tables (postings,
+# term_stats) are also partitioned by ``bucket = pmod(xxhash64(term), n)``
+# so term scans and stats lookups prune to 1/n of the files. df/ctf are
+# sums over disjoint doc sets, so ``read_index`` folds term_stats
+# generations with a vocab-sized aggregate and nobody rewrites base data
+# to add a delta.
+
+TERM_TABLES = ("postings", "term_stats")
+DOC_TABLES = ("doc_stats", "docs")
+
 
 def _dir_parquet_bytes(root: str) -> int:
     """Total parquet bytes under ``root`` (recursive — seg subdirs)."""
@@ -303,12 +324,123 @@ def _dir_parquet_bytes(root: str) -> int:
     return total
 
 
-def _manifest_dir(path: str) -> str:
-    return os.path.join(path, "_manifest")
-
-
 def _bucket_entry(path: str, bucket: int) -> str:
-    return os.path.join(_manifest_dir(path), f"bucket-{bucket:05d}.json")
+    return os.path.join(path, "_manifest", f"bucket-{bucket:05d}.json")
+
+
+def _write_json(path: str, obj: dict, indent: int | None = None) -> None:
+    """Atomic replace: a reader sees the old file or the new one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=indent)
+    os.replace(tmp, path)
+
+
+def write_manifests(path: str, buckets, fp: str, wall: float, compacted: bool = False) -> None:
+    """Per-bucket lineage entries (input fingerprint, bytes, wall seconds);
+    ``write_index`` resume skips buckets whose entry matches its fingerprint."""
+    os.makedirs(os.path.join(path, "_manifest"), exist_ok=True)
+    for b in buckets:
+        _write_json(_bucket_entry(path, int(b)), {
+            "bucket": int(b),
+            "fingerprint": fp,
+            "status": "ok",
+            "bytes": _dir_parquet_bytes(os.path.join(path, "postings", f"bucket={b}")),
+            "wall_sec_total_job": wall,
+            "compacted": compacted,
+        })
+
+
+def write_meta(path: str, meta: dict) -> None:
+    """Commit ``meta.json`` — the last step of every write and compaction."""
+    _write_json(os.path.join(path, "meta.json"), meta, indent=1)
+
+
+def write_tables(
+    path: str,
+    seg: str,
+    buckets: int,
+    field_stats: dict,
+    postings: DataFrame | None = None,
+    doc_stats: DataFrame | None = None,
+    docs: DataFrame | None = None,
+    term_stats: DataFrame | None = None,
+    only_buckets: list[int] | None = None,
+) -> dict[str, float]:
+    """Write generation ``seg`` of the tables given (``None``: not written)
+    under ``path``; returns wall seconds per table.
+
+    ``postings`` and ``term_stats`` are written to ``bucket=B/seg=S`` dirs,
+    only for ``only_buckets`` when given; ``term_stats`` defaults to the
+    df/ctf of ``postings``. ``doc_stats`` and ``docs`` go to ``seg=S``.
+    Every write is a dynamic partition overwrite: only the partition dirs
+    present in the data are replaced, so a replayed write of the same seg
+    is idempotent and other generations are never touched. A caller that
+    replaces a table wholesale removes the old dirs first.
+    """
+    # Salt scales with the token count (from field_stats — no extra
+    # job): partitioning by bucket alone funnels a stopword-heavy
+    # bucket's whole posting mass through one writer task, and a FIXED
+    # salt lets per-writer sort size grow with the corpus until the
+    # external sorter falls off the in-memory cliff (the 4M-page run
+    # measured 7.4x write cost for 4x the postings with salt pinned at 8).
+    tokens = sum(int(v.get("sum_len", 0)) for v in field_stats.values())
+    salt = max(8, -(-tokens // (buckets * 500_000)))
+
+    def by_bucket(df: DataFrame) -> DataFrame:
+        # the term-hash partitioner; functions.xxh64 mirrors it driver-side
+        df = df.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int"))
+        return df if only_buckets is None else df.where(F.col("bucket").isin(only_buckets))
+
+    frames: dict[str, DataFrame] = {}
+    cached = []
+    if term_stats is not None:
+        term_stats = by_bucket(term_stats)
+    if postings is not None:
+        bucketed = by_bucket(postings)
+        if term_stats is None:
+            # postings and df/ctf both read it: compute the input once
+            bucketed = bucketed.persist()
+            cached.append(bucketed)
+            term_stats = df_ctf(bucketed, "bucket")
+        # a doc-id salt spreads each bucket over `salt` writers: several
+        # (term, field, doc_id)-sorted files per bucket dir
+        frames["postings"] = bucketed.repartition(
+            (buckets if only_buckets is None else len(only_buckets)) * salt,
+            "bucket",
+            F.pmod(F.col("doc_id"), F.lit(salt)),
+        ).sortWithinPartitions("term", "field", "doc_id")
+    if term_stats is not None:
+        frames["term_stats"] = term_stats.select(
+            "term", "field", "df", "ctf", "bucket"
+        ).repartition(buckets, "bucket")
+    for name, df in (("doc_stats", doc_stats), ("docs", docs)):
+        if df is not None:
+            frames[name] = df
+
+    def write(name: str) -> float:
+        t0 = time.time()
+        (
+            frames[name].withColumn("seg", F.lit(seg))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*(["bucket"] if name in TERM_TABLES else []), "seg")
+            .parquet(os.path.join(path, name))
+        )
+        return round(time.time() - t0, 3)
+
+    # The writes are independent Spark jobs: run them concurrently so
+    # their per-job fixed costs (scheduling, dynamic-overwrite commit,
+    # parquet footer fsyncs) and straggler tails overlap instead of
+    # adding. Concurrent first touch of a persisted input is safe: the
+    # BlockManager serializes per-partition cache materialization.
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futures = {name: pool.submit(write, name) for name in frames}
+            return {name: fut.result() for name, fut in futures.items()}
+    finally:
+        for fr in cached:
+            fr.unpersist()
 
 
 def write_index(
@@ -318,172 +450,58 @@ def write_index(
     fingerprint: str | None = None,
     resume: bool = True,
 ) -> dict:
-    """Persist the index, bucketed by ``xxhash64(term)`` with a lineage
-    manifest per bucket (input fingerprint, rows, bytes, wall seconds).
+    """Persist the index as the ``seg=base`` generation of layout v3,
+    with a lineage manifest per bucket.
 
-    Resume: buckets whose manifest entry exists with a matching fingerprint
-    are skipped; only missing buckets are recomputed — all in one Spark job
-    (filter on the bucket column), not one job per bucket.
+    Resume: buckets whose manifest entry matches the fingerprint keep
+    their postings and term_stats; the doc-keyed tables are kept when
+    meta.json records the fingerprint. The rest is rewritten in one
+    ``write_tables`` call (a filter on the bucket column, not one job per
+    bucket). Whatever is not kept is removed first, so no generation of
+    an earlier index at ``path`` survives the rewrite.
     """
-    os.makedirs(_manifest_dir(path), exist_ok=True)
     fp = fingerprint or f"ndocs={index.n_docs}|analyzer={index.analyzer}|fields={','.join(index.fields)}"
 
-    done: set[int] = set()
-    if resume:
-        for b in range(buckets):
-            entry = _bucket_entry(path, b)
-            if os.path.exists(entry):
-                try:
-                    with open(entry) as f:
-                        rec = json.load(f)
-                    if rec.get("fingerprint") == fp and rec.get("status") == "ok":
-                        done.add(b)
-                except (json.JSONDecodeError, OSError):
-                    pass
-
-    todo = [b for b in range(buckets) if b not in done]
-    result = {"buckets": buckets, "skipped": sorted(done), "written": todo, "fingerprint": fp}
-
-    bucketed = index.postings.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-    ).withColumn("seg", F.lit("base"))
-
-    def _postings_work() -> float:
-        t0 = time.time()
-        # Salted shuffle: partitioning by bucket alone would funnel a
-        # stopword-heavy bucket's entire posting mass through ONE writer
-        # task at web scale. Salting by a doc-id range spreads each
-        # bucket across `salt` writers (several sorted files per bucket
-        # directory — readers still prune on the bucket dir, and rows
-        # within each file stay (term, field, doc_id)-sorted).
-        # ``seg`` is the LSM generation: streaming minor compactions
-        # APPEND ``seg=bN_M`` dirs under each bucket instead of
-        # rewriting the base — a web-scale index is ingested into, and
-        # a full rewrite per crawl cycle does not survive 100 TB.
-        #
-        # Salt scales with corpus size (token count from field_stats —
-        # free, no extra job): a FIXED salt means per-writer sort size
-        # grows linearly with the corpus, and the external sorter falls
-        # off the in-memory cliff — the 4M-page run measured 7.4x write
-        # cost for 4x the postings with salt pinned at 8.
-        env_salt = os.environ.get("SPARK_GRAFT_WRITE_SALT")
-        if env_salt is not None:
-            salt = int(env_salt)
-        else:
-            est_tokens = sum(
-                int(v.get("sum_len", 0)) for v in index.field_stats.values()
-            )
-            salt = max(8, -(-est_tokens // (buckets * 500_000)))
-        (
-            bucketed.where(F.col("bucket").isin([int(b) for b in todo]))
-            .repartition(
-                max(len(todo) * salt, 1),
-                "bucket",
-                F.pmod(F.col("doc_id"), F.lit(salt)),
-            )
-            .sortWithinPartitions("term", "field", "doc_id")
-            .write.mode("overwrite")
-            # dynamic: only the bucket= directories present in THIS write
-            # are replaced. The default (static) mode truncates the whole
-            # postings dir first — a resume writing 1 todo bucket would
-            # silently delete the other buckets while their manifests
-            # still said ok.
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket", "seg")
-            .parquet(os.path.join(path, "postings"))
-        )
-        wall = time.time() - t0
-        for b in todo:
-            bdir = os.path.join(path, "postings", f"bucket={b}")
-            nbytes = _dir_parquet_bytes(bdir)
-            rec = {
-                "bucket": b,
-                "fingerprint": fp,
-                "status": "ok",
-                "bytes": nbytes,
-                "wall_sec_total_job": round(wall, 3),
-                "written_at_monotonic": round(t0, 3),
-            }
-            tmp = _bucket_entry(path, b) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.replace(tmp, _bucket_entry(path, b))
-        return wall
-
-    # Side tables: idempotent under resume — if meta.json already records
-    # this fingerprint they are complete; rewriting would also self-clobber
-    # when `index` was read from this very path.
-    meta_path = os.path.join(path, "meta.json")
-    sides_done = False
-    if resume and os.path.exists(meta_path):
+    def _fingerprint(file: str) -> str | None:
         try:
-            with open(meta_path) as f:
-                sides_done = json.load(f).get("fingerprint") == fp
+            with open(file) as f:
+                return json.load(f).get("fingerprint")
         except (json.JSONDecodeError, OSError):
-            sides_done = False
-    result["sides_skipped"] = sides_done
+            return None
 
-    # LSM side-table layout: every table is a set of append-only
-    # ``seg=`` partition dirs (term_stats additionally bucketed by the
-    # postings' term hash). A streaming minor compaction then
-    # APPENDS delta-derived seg dirs — df/ctf are additive, so
-    # ``read_index`` folds segments with a vocab-sized aggregate instead
-    # of anyone rewriting base data.
-    def _timed_write(fn) -> float:
-        t0 = time.time()
-        fn()
-        return time.time() - t0
+    done = [b for b in range(buckets) if resume and _fingerprint(_bucket_entry(path, b)) == fp]
+    todo = [b for b in range(buckets) if b not in done]
+    # the doc-keyed tables are complete once meta.json records the
+    # fingerprint; rewriting them would also self-clobber when `index`
+    # was read from this very path
+    sides_done = resume and _fingerprint(os.path.join(path, "meta.json")) == fp
+    result = {
+        "buckets": buckets, "skipped": done, "written": todo, "fingerprint": fp,
+        "sides_skipped": sides_done,
+    }
 
-    def _term_stats_work() -> float:
-        return _timed_write(
-            lambda: index.term_stats.withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-            )
-            .withColumn("seg", F.lit("base"))
-            .repartition(buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket", "seg")
-            .parquet(os.path.join(path, "term_stats"))
-        )
+    # dynamic overwrite replaces only the partitions written: drop the
+    # rest of what is not kept first (an earlier index's other buckets
+    # and minor-compaction generations)
+    for table in TERM_TABLES:
+        root = os.path.join(path, table)
+        for d in os.listdir(root) if os.path.isdir(root) else ():
+            if d.startswith("bucket=") and int(d.split("=", 1)[1]) not in done:
+                shutil.rmtree(os.path.join(root, d))
+    if not sides_done:
+        for table in DOC_TABLES:
+            shutil.rmtree(os.path.join(path, table), ignore_errors=True)
 
-    def _doc_stats_work() -> float:
-        return _timed_write(
-            lambda: index.doc_stats.withColumn("seg", F.lit("base"))
-            .write.mode("overwrite")
-            .partitionBy("seg")
-            .parquet(os.path.join(path, "doc_stats"))
-        )
-
-    def _docs_work() -> float:
-        return _timed_write(
-            lambda: index.docs.withColumn("seg", F.lit("base"))
-            .write.mode("overwrite")
-            .partitionBy("seg")
-            .parquet(os.path.join(path, "docs"))
-        )
-
-    # The four writes are independent Spark jobs over cached inputs —
-    # run them concurrently so the per-job fixed costs (scheduling,
-    # dynamic-overwrite commit, parquet footer fsyncs) and the straggler
-    # tails overlap instead of adding (same discipline as compaction's
-    # threaded seg writes, streaming/ingest.py).
-    from concurrent.futures import ThreadPoolExecutor
-
-    phases: dict[str, float] = {}
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = {}
-        if todo:
-            futures["postings"] = pool.submit(_postings_work)
-        if not sides_done:
-            futures["term_stats"] = pool.submit(_term_stats_work)
-            futures["doc_stats"] = pool.submit(_doc_stats_work)
-            futures["docs"] = pool.submit(_docs_work)
-        for name, fut in futures.items():
-            phases[name] = round(fut.result(), 3)
-    result["phase_sec"] = phases
-    from searchengine_spark.analyzer import analyzer_version
-
-    meta = {
+    result["phase_sec"] = write_tables(
+        path, "base", buckets, index.field_stats,
+        postings=index.postings if todo else None,
+        term_stats=index.term_stats if todo else None,
+        doc_stats=None if sides_done else index.doc_stats,
+        docs=None if sides_done else index.docs,
+        only_buckets=todo if done else None,
+    )
+    write_manifests(path, todo, fp, result["phase_sec"].get("postings", 0.0))
+    write_meta(path, {
         "n_docs": index.n_docs,
         "field_stats": index.field_stats,
         "analyzer": index.analyzer,
@@ -495,11 +513,7 @@ def write_index(
         "buckets": buckets,
         "fingerprint": fp,
         "layout": 3,
-    }
-    tmp = os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, os.path.join(path, "meta.json"))
+    })
     return result
 
 
@@ -508,8 +522,6 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
         meta = json.load(f)
     persisted_ver = meta.get("analyzer_version")
     if persisted_ver is not None:
-        from searchengine_spark.analyzer import analyzer_version
-
         current = analyzer_version(meta["analyzer"])
         if current != persisted_ver:
             raise ValueError(

@@ -72,6 +72,22 @@ def test_write_read_resume(spark, tmp_path):
     got = idx2.postings.where("term='cat' and doc_id=0").collect()[0]
     assert decode_positions(got.positions).tolist() == [1]
 
+    # a different corpus written to the same path replaces the index:
+    # nothing of the old one survives in the buckets the new one leaves
+    # empty (dynamic overwrite alone only replaces the buckets written)
+    other = spark.createDataFrame(
+        [(10, "zebra zebra"), (11, "zebra yak")], "doc_id long, text string"
+    )
+    res3 = write_index(build_index(other, {"body": "text"}, analyzer="simple"), path, buckets=4)
+    assert res3["written"] == [0, 1, 2, 3]
+    idx3 = read_index(spark, path)
+    assert idx3.n_docs == 2
+    assert sorted(r.doc_id for r in idx3.postings.select("doc_id").distinct().collect()) == [10, 11]
+    assert sorted(r.doc_id for r in idx3.doc_stats.collect()) == [10, 11]
+    assert {(r.term, r.df, r.ctf) for r in idx3.term_stats.collect()} == {
+        ("zebra", 2, 3), ("yak", 1, 1)
+    }
+
 
 def test_corpus_deterministic_and_invariant(spark):
     a = make_pages(spark, 120, seed=42, partitions=3).orderBy("url").collect()

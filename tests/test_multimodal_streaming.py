@@ -474,3 +474,67 @@ def test_incremental_compact_touches_only_delta_buckets(spark, tmp_path):
     idx3 = read_index(spark, idx_dir)
     assert idx3.n_docs == 31
     assert SearchEngine(idx3).search(term, model="bm25", k=5).collect() == got
+
+
+def test_three_write_paths_agree(spark, stream_dirs):
+    """write_index, a minor compaction and a major compaction all write
+    through index.build.write_tables: base + one streamed delta, folded
+    minor then major, must read back exactly like a fresh build of the
+    union docs — corpus stats, the whole term_stats table and %.18f
+    top-10 rankings under BM25, #near/2 and Indri."""
+    import random
+
+    from searchengine_spark.engine import SearchEngine
+    from searchengine_spark.index.build import build_index, read_index, write_index
+
+    rng = random.Random(5)
+    vocab = ["ant", "bee", "cat", "dog", "eel", "fox", "gnu", "hen", "ibis", "jay"]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 14))), f"u{i:04d}")
+        for i in range(55)
+    ]
+    schema = "doc_id long, text string, url string"
+    base = spark.createDataFrame(rows[:40], schema)
+    write_index(
+        build_index(base, fields={"body": "text"}, ext_id_col="url", analyzer="simple"),
+        stream_dirs["idx"], buckets=4,
+    )
+    spark.createDataFrame(rows[40:], schema).select(
+        "doc_id", "url", F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"), "text", F.lit("en").alias("lang"),
+    ).coalesce(1).write.parquet(stream_dirs["in"], mode="append")
+    ingest.start_ingest(
+        spark, stream_dirs["in"], stream_dirs["idx"], stream_dirs["ckpt"], analyzer="simple"
+    ).awaitTermination(120)
+
+    fresh_dir = os.path.join(os.path.dirname(stream_dirs["idx"]), "fresh")
+    write_index(
+        build_index(spark.createDataFrame(rows, schema), fields={"body": "text"},
+                    ext_id_col="url", analyzer="simple"),
+        fresh_dir, buckets=4,
+    )
+    queries = [("bm25", "cat dog ibis"), ("bm25", "#near/2(cat dog)"), ("indri", "cat fox jay")]
+
+    def snapshot(path):
+        idx = read_index(spark, path)
+        eng = SearchEngine(idx)
+        return {
+            "n_docs": idx.n_docs,
+            "field_stats": idx.field_stats,
+            "term_stats": sorted(
+                (r["term"], r["field"], r["df"], r["ctf"])
+                for r in idx.term_stats.select("term", "field", "df", "ctf").collect()
+            ),
+            "top10": [
+                [(r["doc_id"], r["ext_id"], "%.18f" % r["score"])
+                 for r in eng.search(q, model=m, k=10).collect()]
+                for m, q in queries
+            ],
+        }
+
+    want = snapshot(fresh_dir)
+    assert want["n_docs"] == 55 and all(want["top10"])
+    assert ingest.compact(spark, stream_dirs["idx"])["mode"] == "minor"
+    assert snapshot(stream_dirs["idx"]) == want
+    assert ingest.compact(spark, stream_dirs["idx"], full_rewrite=True)["mode"] == "major"
+    assert snapshot(stream_dirs["idx"]) == want
