@@ -5,8 +5,8 @@
 Each section shows the `explain("formatted")` output the design claims
 rest on: pushed term filters + constant bucket partition pruning on a
 persisted index, the single-scan flat scorers (BM25 fold, Indri map
-reassembly, positional co-location) for one query and for a batch, and
-the pipeline operators. Regenerate after compiler changes so the
+reassembly, positional co-location) for one query and for a batch, the
+tree scorer for a nested query, and the pipeline operators. Regenerate after compiler changes so the
 committed evidence matches the code.
 """
 
@@ -112,6 +112,14 @@ def main() -> None:
             "Flat Indri #WAND (single scan + map reassembly with defaults)",
             "No joins; `map_from_entries(collect_list(...))`, per-term `element_at` with coalesce-to-default expressions.",
             eng.scores("#wand(0.4 cerim 0.3 dirim 0.3 batok)", model="indri", mu=1500.0, lam=0.3),
+        ),
+        (
+            "Nested PRF #WAND (tree scorer: one scan, one groupBy)",
+            "The Indri PRF shape `#wand(w #and(orig) 1-w #wand(expansion))`: ONE term-IN FileScan for all seven leaves, one groupBy(doc_id) into a leaf -> score map, one argument-order `_indri_fold` expression per op with `coalesce`-to-default leaves — no Join.",
+            eng.scores(
+                "#wand(0.4 #and(cerim dirim barim) 0.6 #wand(0.3 cetok 0.3 ditok 0.2 celan 0.2 dilan))",
+                model="indri", mu=1500.0, lam=0.3,
+            ),
         ),
         (
             "#NEAR/2 (single scan, position co-location, Arrow merge)",

@@ -130,8 +130,9 @@ class SearchEngine:
             else:
                 flat.setdefault(scorer, []).append((qid, ast))
         for scorer, items in flat.items():
-            scored = scorer(items).frame.select("qid", "doc_id", "score")
+            scored = scorer(items).select("qid", "doc_id", "score")
             frames.append(topk_grouped(scored, k).select("qid", "doc_id", "score", "rank"))
+        self.index.trim_temps()
         if not frames:
             return self.index.spark.createDataFrame(
                 [], "qid string, doc_id long, ext_id string, score double, rank int"

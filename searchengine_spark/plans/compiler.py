@@ -1,38 +1,39 @@
 """Query AST -> DataFrame plan compiler.
 
 The reference evaluates query trees document-at-a-time with iterator
-merges (Qry.java:16-41, QryEval.java:133-138). Here each AST node
-compiles to a declarative DataFrame subplan and Catalyst/Tungsten pick
-the physical strategy:
+merges (Qry.java:16-41, QryEval.java:133-138). Here each AST compiles
+to a declarative DataFrame plan and Catalyst/Tungsten pick the physical
+strategy:
 
 - Iop nodes -> positional-postings frames
   ``(doc_id, tf, doc_len, positions)``; a TERM is a pushed-down filter
   on the postings table (partition-prunable by term bucket), NEAR /
   WINDOW are doc_id inner joins + Arrow positional-merge UDFs, SYN is
   a union + groupBy.
-- Sop nodes -> score frames ``(doc_id, score)``. Match-ALL combiners
-  (Boolean #AND, #WAND/#WSUM outside Indri — Qry.java:255-302) become
-  k-way **inner joins** on doc_id; match-MIN combiners (#OR, #SUM,
-  all Indri ops — Qry.java:332-355) become k-way **full-outer joins**.
-  Joins and score expressions are built strictly in argument order so
-  floating-point results are reproducible and bit-comparable with the
-  ANSI-SQL oracle.
-- Flat nodes (``Compiler.flat_scorer``: a BM25 bag of words or
-  ``#SCORE`` of a flat #NEAR/#WINDOW, a flat Indri or Boolean op) skip
-  the joins: each model has ONE flat scorer, keyed by ``qid``, that
-  reads the terms from a single bucket-pruned ``term IN (...)`` scan
-  per field and regroups per (qid, doc_id) with an arg-ordered fold.
-  ``compile`` calls it with one ``(qid, node)`` item at any depth;
-  ``SearchEngine.run_batch`` with all of a batch's flat queries. Only
-  how the per-query constants reach the rows depends on the item count
-  (``term_scan``/``_with_meta``).
+- Flat score roots (``Compiler.flat_scorer``: a BM25 bag of words or
+  ``#SCORE`` of a flat #NEAR/#WINDOW, a flat Indri or Boolean op) take
+  their model's ONE flat scorer, keyed by ``qid``: a single
+  bucket-pruned ``term IN (...)`` scan per field, regrouped per (qid,
+  doc_id) with an arg-ordered fold. ``compile`` calls it with one
+  ``(qid, node)`` item; ``SearchEngine.run_batch`` with all of a
+  batch's flat queries. Only how the per-query constants reach the
+  rows depends on the item count (``term_scan``/``_with_meta``).
+- Every other score tree (nested ops, repeated terms, mixed fields)
+  takes the ONE tree scorer (``Compiler.score_tree``), the reference's
+  document-at-a-time pass over all leaves: the ``#SCORE`` leaves are
+  scored row by row, the terms from one scan per field, and one
+  groupBy(doc_id) gathers each doc's leaf scores into a map that a
+  single Column expression folds up the tree. Match-ALL ops (Boolean
+  #AND, #WAND/#WSUM outside Indri — Qry.java:255-302) are null unless
+  every arg matches, match-MIN ops (#OR, #SUM, all Indri ops —
+  Qry.java:332-355) unless some arg does. Indri's default score
+  (QrySopScore.getDefaultScore: a doc that misses an argument still
+  gets a smoothed score from that argument's ctf and the doc's field
+  length) stands in for every missing leaf.
 
-Indri's default-score semantics (QrySopScore.getDefaultScore — a doc
-that misses an argument still contributes a smoothed score that
-depends on that argument's ctf and the doc's field length) are
-implemented as coalesce-to-computed-default columns over the
-full-outer join; every compiled node carries a ``default_fn`` that
-builds its default-score expression from per-field doc-length columns.
+Score expressions are built strictly in argument order, so
+floating-point results are reproducible and bit-comparable with the
+ANSI-SQL oracle.
 
 Corpus scalars (N, avg/sum field length) and per-term df/ctf are
 resolved driver-side — one small filtered collect on ``term_stats``
@@ -87,25 +88,6 @@ class IopResult:
             ).first()
             self._stats = (int(row["df"] or 0), int(row["ctf"] or 0))
         return self._stats
-
-
-@dataclass
-class ScoreResult:
-    """Compiled score operator.
-
-    ``frame`` holds doc_id, score and (Indri only) ``__dl_<field>``
-    doc-length columns for every field under this subtree.
-    ``default_fn(dlmap)`` builds the node's default-score Column from
-    a {field: doc_len Column} map (Indri only).
-    """
-
-    frame: DataFrame
-    fields: frozenset
-    default_fn: object | None = None
-
-
-def _dl(f: str) -> str:
-    return f"__dl_{f}"
 
 
 def flat_terms(node) -> list[TermNode] | None:
@@ -187,10 +169,10 @@ def _fold(k, init: Column, step) -> Column:
 def _indri_fold(op, k, w, total, eff) -> Column:
     """Indri ``#op`` over the arg scores ``eff(i)``, in arg order.
 
-    ``op``/``k``/``w``/``total`` are Python values (a join-path node, one
-    flat query) or per-qid columns (a flat batch). Every caller — the
-    flat scorer, its ``default_fn``, the join path and its
-    ``default_fn`` — folds here, so their float ops are the same."""
+    ``op``/``k``/``w``/``total`` are Python values (a tree-scorer node,
+    one flat query) or per-qid columns (a flat batch). The flat scorer
+    and the tree scorer both fold here, so their float ops are the
+    same."""
     one, zero = F.lit(1.0), F.lit(0.0)
     w, total = F.lit(w), F.lit(total)
     ops = {
@@ -241,17 +223,10 @@ def _merge(frame: DataFrame, positions: Column, kind, dist, with_positions: bool
 
 
 class Compiler:
-    def __init__(self, index: InvertedIndex, model, agg_threshold: int = 1):
+    def __init__(self, index: InvertedIndex, model):
         self.index = index
         self.model = model
         self.term_stats: dict[tuple[str, str], tuple[int, int]] = {}
-        # nodes with more args than this take the flat scorers (ONE
-        # term-IN scan per field + one shuffle) instead of k-way joins.
-        # Their term-order folds make them bit-identical to the join
-        # path (test_agg_strategy and test_properties pin this), so the
-        # default covers every multi-term node; raise the threshold to
-        # force the join shape (plan tests do).
-        self.agg_threshold = agg_threshold
 
     def _bucket_cond(self, terms) -> Column | None:
         """``bucket IN (<literal ids>)`` partition-pruning predicate,
@@ -350,11 +325,10 @@ class Compiler:
         meta = self.index.spark.createDataFrame(rows, ", ".join(["qid string", *cols]))
         return frame.join(F.broadcast(meta), on="qid"), {n: F.col(n) for n in names}
 
-    def flat_scorer(self, node, threshold: int = 0):
-        """The flat scorer for ``node`` when it has more than
-        ``threshold`` term args, else None. This one predicate routes
-        both ``compile`` (any tree node, threshold ``agg_threshold``)
-        and ``SearchEngine.run_batch`` (query roots).
+    def flat_scorer(self, node):
+        """The flat scorer for the query root ``node``, else None (the
+        tree scorer takes it). This one predicate routes both
+        ``compile`` and ``SearchEngine.run_batch``.
 
         - BM25: a bag of words (``_bow_terms``), or ``#SCORE`` of a flat
           ``#NEAR``/``#WINDOW``.
@@ -368,12 +342,10 @@ class Compiler:
             iop = node.args[0] if node.op == "score" else None
             if isinstance(iop, IopNode):
                 flat = iop.op in ("near", "window") and flat_terms(iop) is not None
-                ok = flat and len(iop.args) > threshold
-                return self._bm25_positional if ok else None
-            terms = _bow_terms(node)
-            return self._bm25_flat if terms and len(terms) > threshold else None
+                return self._bm25_positional if flat else None
+            return self._bm25_flat if _bow_terms(node) else None
         terms = flat_terms(node)
-        if terms is None or len(terms) <= threshold:
+        if terms is None:
             return None
         if isinstance(m, Indri):
             return self._indri_flat if self.index.sum_len(terms[0].field) > 0 else None
@@ -404,7 +376,7 @@ class Compiler:
             return IopResult(fr, node.field, _stats=st, _temps=self.index._temps)
 
         k = len(node.args)
-        flat = flat_terms(node) if k > self.agg_threshold else None
+        flat = flat_terms(node)
 
         if node.op == "syn":
             if flat is not None:
@@ -487,109 +459,131 @@ class Compiler:
         if is_iop(node):
             node = SopNode("score", (node,))
         self.prefetch_term_stats(node)
-        res = self.compile_sop(node)
-        return res.frame.select("doc_id", "score")
-
-    def compile_sop(self, node: SopNode) -> ScoreResult:
-        m = self.model
-        scorer = self.flat_scorer(node, self.agg_threshold)
+        # one #SCORE(term) is a projection of its postings, not a
+        # one-term BM25 bag-of-words groupBy
+        one_term = node.op == "score" and isinstance(node.args[0], TermNode)
+        scorer = None if one_term else self.flat_scorer(node)
         if scorer is not None:
-            res = scorer([("", node)])
-            return ScoreResult(res.frame.drop("qid"), res.fields, res.default_fn)
+            return scorer([("", node)]).select("doc_id", "score")
+        return self.score_tree(node)
+
+    def score_tree(self, node: SopNode) -> DataFrame:
+        """(doc_id, score) of a score tree ``flat_scorer`` does not take.
+
+        The ``#SCORE`` leaves, numbered in depth-first arg order, are
+        scored row by row with the leaf formula: the term leaves from
+        ONE ``term_scan`` per field (a repeated term explodes to one row
+        per leaf), each #SYN/#NEAR/#WINDOW leaf from its ``compile_iop``
+        frame. One groupBy(doc_id) gathers each doc's (leaf -> score)
+        map and, under Indri, its length in every field of the tree;
+        ``_combine`` folds the map up the tree into one Column. A tree
+        over more than one field takes a doc's length in a field none
+        of its leaves matched from ``doc_stats`` (0 when absent). A
+        one-leaf tree is a plain projection of its frame."""
         if node.op == "score":
-            return self._leaf(node)
+            iop = self.compile_iop(node.args[0], need_positions=False)
+            c, _ = self._leaf_consts(iop.field, iop.stats)
+            return iop.frame.select("doc_id", self._leaf_score(iop.field, c).alias("score"))
 
-        children = [self.compile_sop(a) for a in node.args]
-        k = len(children)
-        indri = isinstance(m, Indri)
+        indri = isinstance(self.model, Indri)
+        leaves: list[tuple[str, float | None]] = []  # (field, Indri default p)
+        terms: dict[str, list] = {}
+        frames = []
 
-        # Match strategy (QrySop*.docIteratorHasMatch):
-        # OR and SUM are match-MIN; AND/WAND/WSUM are match-MIN under
-        # Indri, match-ALL otherwise.
-        if node.op in ("or", "sum") or indri:
-            how = "full_outer"
-        else:
-            how = "inner"
+        def walk(n):
+            if n.op != "score":
+                for a in n.args:
+                    walk(a)
+                return
+            arg, i = n.args[0], len(leaves)
+            if isinstance(arg, TermNode):
+                c, p_def = self._leaf_consts(arg.field, lambda: self._stats(arg.term, arg.field))
+                terms.setdefault(arg.field, []).append(("", i, arg.term, c))
+            else:
+                iop = self.compile_iop(arg, need_positions=False)
+                c, p_def = self._leaf_consts(iop.field, iop.stats)
+                frames.append(iop.frame.select(
+                    "doc_id", F.lit(i).alias("__ti"),
+                    self._leaf_score(iop.field, c).alias("__s"),
+                    "doc_len", F.lit(iop.field).alias("field"),
+                ))
+            leaves.append((arg.field, p_def))
 
-        def _child_cols(c, i):
-            cols = [F.col("doc_id"), F.col("score").alias(f"__s{i}")]
-            if indri:  # dl columns only ride along under Indri (defaults)
-                cols += [F.col(_dl(f)).alias(f"{_dl(f)}_{i}") for f in sorted(c.fields)]
-            return cols
+        walk(node)
+        for fld, rows in terms.items():
+            frames.append(self.term_scan(fld, rows, ("__c double",)).select(
+                "doc_id", "__ti", self._leaf_score(fld, F.col("__c")).alias("__s"),
+                "doc_len", "field",
+            ))
 
-        joined = children[0].frame.select(*_child_cols(children[0], 0))
-        for i, c in enumerate(children[1:], start=1):
-            joined = joined.join(
-                c.frame.select(*_child_cols(c, i)), on="doc_id", how=how
-            )
-
-        all_fields = frozenset().union(*[c.fields for c in children])
-        dlmap: dict[str, Column] = {}
+        fields = sorted({f for f, _ in leaves})
+        aggs = [F.map_from_entries(F.collect_list(F.struct("__ti", "__s"))).alias("__m")]
         if indri:
-            # Reassemble one doc-length column per field. With a single
-            # field, every surviving doc matched >=1 child, so coalesce
-            # across children is total; with mixed fields a doc may have
-            # matched no child of some field -> fall back to doc_stats.
-            multi = len(all_fields) > 1
-            for f in sorted(all_fields):
-                cands = [
-                    F.col(f"{_dl(f)}_{i}")
-                    for i, c in enumerate(children)
-                    if f in c.fields
-                ]
-                if multi:
-                    ds = (
-                        self.index.doc_stats.where(F.col("field") == f)
-                        .select("doc_id", F.col("doc_len").alias(f"__ds_{f}"))
-                    )
-                    joined = joined.join(ds, on="doc_id", how="left")
-                    cands = cands + [F.col(f"__ds_{f}"), F.lit(0)]
-                dlmap[f] = F.coalesce(*cands) if len(cands) > 1 else cands[0]
+            aggs += [
+                F.max(F.when(F.col("field") == f, F.col("doc_len"))).alias(f"__dl{j}")
+                for j, f in enumerate(fields)
+            ]
+        g = _union(frames).groupBy("doc_id").agg(*aggs)
+        dl = {}
+        for j, f in enumerate(fields if indri else ()):
+            dl[f] = F.col(f"__dl{j}")
+            if len(fields) > 1:
+                ds = self.index.doc_stats.where(F.col("field") == f).select(
+                    "doc_id", F.col("doc_len").alias(f"__ds{j}")
+                )
+                g = g.join(ds, on="doc_id", how="left")
+                dl[f] = F.coalesce(dl[f], F.col(f"__ds{j}"), F.lit(0))
 
-        score, default_fn = self._combine(node, children, dlmap)
-        out_cols = [F.col("doc_id"), score.cast("double").alias("score")]
-        if indri:
-            for f in sorted(all_fields):
-                out_cols.append(dlmap[f].alias(_dl(f)))
-        return ScoreResult(joined.select(*out_cols), all_fields, default_fn)
+        def leaf_col(i, fld, p_def):
+            s = F.element_at(F.col("__m"), i)
+            if indri:  # a missing leaf scores its default at the doc length
+                s = F.coalesce(s, self._indri(F.lit(0.0), dl[fld].cast("double"), p_def))
+            return s
 
-    # -- flat scorers: items [(qid, node)] -> (qid, doc_id, score, ...) --
+        cols = iter([leaf_col(i, f, p) for i, (f, p) in enumerate(leaves)])
 
-    def _bm25_flat(self, items: list) -> ScoreResult:
+        def tree(n):
+            return next(cols) if n.op == "score" else self._combine(n, [tree(a) for a in n.args])
+
+        out = g.select("doc_id", tree(node).cast("double").alias("score"))
+        # Indri scores every grouped doc: each one matched some leaf
+        return out if indri else out.where(F.col("score").isNotNull())
+
+    # -- flat scorers: items [(qid, node)] -> (qid, doc_id, score) ------
+
+    def _bm25_flat(self, items: list) -> DataFrame:
         """BM25 bag of words: per field ONE term-IN scan scores every
         (qid, arg) row with its term's idf; one groupBy(qid, doc_id)
         folds the (arg index, score) pairs in ascending arg order, NOT
         in arrival order — a plain ``sum`` would accumulate in
         shuffle-dependent order and %.18f run files would differ across
         runs. Each row's float ops are the leaf formula, so the fold is
-        bit-identical to the k-way-join path (``+ 0.0`` for a missing
-        term is exact) and to the SQL oracle. A missing term adds no
-        row: its BM25 score is 0."""
+        bit-identical to the tree scorer's ``#SUM`` (``+ 0.0`` for a
+        missing term is exact) and to the SQL oracle. A missing term
+        adds no row: its BM25 score is 0."""
         by_field: dict[str, list] = {}
         for qid, node in items:
             for i, t in enumerate(_bow_terms(node)):
                 by_field.setdefault(t.field, []).append((qid, i, t.term))
         frames = []
         for fld, qt in by_field.items():
-            avg = self.index.avg_len(fld)
             rows = [
-                (qid, i, term, self._idf(self.term_stats.get((term, fld), (0, 0))[0], avg))
+                (qid, i, term, self._leaf_consts(fld, lambda: self._stats(term, fld))[0])
                 for qid, i, term in qt
             ]
             frames.append(
                 self.term_scan(fld, rows, ("__idf double",)).select(
-                    "qid", "doc_id", "__ti", self._bm25(F.col("__idf"), avg).alias("score")
+                    "qid", "doc_id", "__ti", self._leaf_score(fld, F.col("__idf")).alias("score")
                 )
             )
-        out = _union(frames).groupBy("qid", "doc_id").agg(
+        return _union(frames).groupBy("qid", "doc_id").agg(
             F.expr(
                 "aggregate(array_sort(collect_list(struct(__ti, score))), "
                 "cast(0.0 as double), (acc, x) -> acc + x.score)"
             ).alias("score")
         )
-        return ScoreResult(out, frozenset(by_field))
 
-    def _bm25_positional(self, items: list) -> ScoreResult:
+    def _bm25_positional(self, items: list) -> DataFrame:
         """BM25 ``#SCORE`` of a flat ``#NEAR``/``#WINDOW``. BM25's idf
         needs each query's df over the merged list (QrySopScore's
         materialize-then-score, QryIop.java:174-190): ONE groupBy(qid)
@@ -604,38 +598,32 @@ class Compiler:
             avg = self.index.avg_len(iop.field)
             consts.append((qid, self._idf(dfs.get(qid, 0), avg), avg))
         fr, c = self._with_meta(merged, consts, ("__idf double", "__avg double"))
-        out = fr.select("qid", "doc_id", self._bm25(c["__idf"], c["__avg"]).alias("score"))
-        return ScoreResult(out, frozenset(iop.field for _, iop in iops))
+        return fr.select("qid", "doc_id", self._bm25(c["__idf"], c["__avg"]).alias("score"))
 
-    def _indri_flat(self, items: list) -> ScoreResult:
+    def _indri_flat(self, items: list) -> DataFrame:
         """Flat Indri #AND/#OR/#WAND/#WSUM: per field ONE term-IN scan
         scores each (qid, arg) row with the leaf formula; per (qid,
         doc_id) the (arg index -> score) map reassembles, and a missing
         arg falls back to its default score at the doc length carried
-        by any present arg's row (same field). The op's fold replicates
-        the join path's operand order (``_combine``), so scores are
-        bit-identical — the Indri gate oracles pin this. With one item,
-        ``default_fn`` is the same fold over an empty score map."""
+        by any present arg's row (same field). The op's fold is the tree
+        scorer's (``_indri_fold``), so scores are bit-identical — the
+        Indri gate oracles pin this."""
         frames = []
-        by_field = _by_field(items, lambda n: flat_terms(n)[0].field)
-        for fld, f_items in by_field.items():
-            collen = float(self.index.sum_len(fld))
+        for fld, f_items in _by_field(items, lambda n: flat_terms(n)[0].field).items():
             qt, meta = [], []
             for qid, node in f_items:
                 terms = flat_terms(node)
                 pdefs = []
                 for i, t in enumerate(terms):
-                    ctf = self.term_stats.get((t.term, fld), (0, 0))[1]
-                    qt.append((qid, i, t.term, ctf / collen))
-                    pdefs.append((float(ctf) if ctf >= 1.0 else 0.5) / collen)
+                    p, p_def = self._leaf_consts(fld, lambda: self._stats(t.term, fld))
+                    qt.append((qid, i, t.term, p))
+                    pdefs.append(p_def)
                 w = list(node.weights) if node.weights else [1.0] * len(terms)
                 meta.append((qid, node.op, len(terms), pdefs, w, sum(w)))
-            tf = F.col("tf").cast("double")
-            dl = F.col("doc_len").cast("double")
             g = (
                 self.term_scan(fld, qt, ("__p double",))
-                .select("qid", "doc_id", "__ti", self._indri(tf, dl, F.col("__p")).alias("__s"),
-                        "doc_len")
+                .select("qid", "doc_id", "__ti",
+                        self._leaf_score(fld, F.col("__p")).alias("__s"), "doc_len")
                 .groupBy("qid", "doc_id")
                 .agg(
                     F.map_from_entries(F.collect_list(F.struct("__ti", "__s"))).alias("__m"),
@@ -647,33 +635,24 @@ class Compiler:
                 ("__op string", "__k int", "__pdefs array<double>", "__w array<double>",
                  "__total double"),
             )
+            dl = F.col("__gdl").cast("double")
 
-            def fold(scores: Column, dl: Column, c=c) -> Column:
-                def eff(i):
-                    p_def = F.element_at(F.lit(c["__pdefs"]), i + 1)
-                    return F.coalesce(
-                        F.element_at(scores, i), self._indri(F.lit(0.0), dl, p_def)
-                    )
+            def eff(i):
+                p_def = F.element_at(F.lit(c["__pdefs"]), i + 1)
+                return F.coalesce(
+                    F.element_at(F.col("__m"), i), self._indri(F.lit(0.0), dl, p_def)
+                )
 
-                return _indri_fold(c["__op"], c["__k"], c["__w"], c["__total"], eff)
+            score = _indri_fold(c["__op"], c["__k"], c["__w"], c["__total"], eff)
+            frames.append(g.select("qid", "doc_id", score.cast("double").alias("score")))
+        return _union(frames)
 
-            score = fold(F.col("__m"), F.col("__gdl").cast("double"))
-            frames.append(
-                g.select("qid", "doc_id", score.cast("double").alias("score"),
-                         F.col("__gdl").alias(_dl(fld)))
-            )
-
-        def default_fn(dlmap, fold=fold, fld=fld):
-            return fold(F.lit(None).cast("map<int,double>"), dlmap[fld].cast("double"))
-
-        return ScoreResult(_union(frames), frozenset(by_field), default_fn)
-
-    def _bool_flat(self, items: list) -> ScoreResult:
+    def _bool_flat(self, items: list) -> DataFrame:
         """Flat Boolean ops: per field ONE term-IN scan, one groupBy(qid,
         doc_id) collecting tf. match-ALL (#AND/#WAND/#WSUM) keeps docs
         holding every arg, scored by the min tf; #OR scores the max
         (QrySopAnd/Or); UnrankedBoolean scores 1.0. min/max are
-        order-exact, so scores equal the join path's."""
+        order-exact, so scores equal the tree scorer's."""
         unranked = isinstance(self.model, UnrankedBoolean)
         frames = []
         by_field = _by_field(items, lambda n: flat_terms(n)[0].field)
@@ -699,9 +678,44 @@ class Compiler:
                 else F.when(match_all, F.array_min("__tfs")).otherwise(F.array_max("__tfs"))
             )
             frames.append(g.select("qid", "doc_id", score.cast("double").alias("score")))
-        return ScoreResult(_union(frames), frozenset(by_field))
+        return _union(frames)
 
     # -- shared leaf formulas --------------------------------------------
+
+    def _stats(self, term: str, fld: str) -> tuple[int, int]:
+        """A prefetched term's (df, ctf); (0, 0) for an unknown term."""
+        return self.term_stats.get((term, fld), (0, 0))
+
+    def _leaf_consts(self, fld: str, stats) -> tuple:
+        """(row constant, Indri default p) of a ``#SCORE`` leaf over
+        ``fld``, from its lazy ``stats() -> (df, ctf)``: BM25's idf;
+        Indri's p = ctf/collen and p_def from ctf<1 -> 0.5
+        (getDefaultScore), both 0 over an empty field. Boolean leaves
+        need neither, so a derived leaf runs no stats job."""
+        m = self.model
+        if isinstance(m, BM25):
+            return self._idf(stats()[0], self.index.avg_len(fld)), None
+        if isinstance(m, Indri):
+            ctf, collen = stats()[1], float(self.index.sum_len(fld))
+            if collen == 0:
+                return 0.0, 0.0
+            return ctf / collen, (float(ctf) if ctf >= 1.0 else 0.5) / collen
+        return None, None
+
+    def _leaf_score(self, fld: str, c) -> Column:
+        """Leaf score of posting rows ``(tf, doc_len)`` over ``fld`` with
+        the leaf's row constant ``c`` (a value or a Column)."""
+        m = self.model
+        tf = F.col("tf").cast("double")
+        if isinstance(m, UnrankedBoolean):
+            return F.lit(1.0)
+        if isinstance(m, RankedBoolean):
+            return tf  # QrySopScore.getScoreRankedBoolean
+        if isinstance(m, BM25):
+            return self._bm25(c, self.index.avg_len(fld))
+        if isinstance(m, Indri):
+            return self._indri(tf, F.col("doc_len").cast("double"), c)
+        raise ValueError(f"unknown model {m!r}")
 
     def _idf(self, df: int, avg: float) -> float:
         """max(0, ln((N-df+.5)/(df+.5))) (QrySopScore.java:114-133)."""
@@ -729,16 +743,26 @@ class Compiler:
 
     # -- score expressions ---------------------------------------------
 
-    def _combine(self, node, children, dlmap):
-        """Score Column + default_fn for a non-leaf Sop (arg order preserved)."""
-        m = self.model
-        k = len(children)
-        op = node.op
-        s = [F.col(f"__s{i}") for i in range(k)]
+    def _combine(self, node, s: list[Column]) -> Column:
+        """Score Column of a non-leaf op over its args' Columns ``s``, in
+        arg order; null where the op does not match the doc.
+
+        Match-ALL ops (#AND/#WAND/#WSUM outside Indri) are null unless
+        every arg is non-null, match-MIN ops (#OR, #SUM) unless some arg
+        is (QrySop*.docIteratorHasMatchAll/MatchMin). An Indri arg is
+        never null — a missing leaf is its default score — so every
+        Indri op is match-MIN."""
+        m, op, k = self.model, node.op, len(s)
+
+        def match(every: bool, expr: Column) -> Column:
+            cond = s[0].isNotNull()
+            for x in s[1:]:
+                cond = (cond & x.isNotNull()) if every else (cond | x.isNotNull())
+            return F.when(cond, expr)
 
         if isinstance(m, UnrankedBoolean):
             if op in ("and", "or", "wand", "wsum"):
-                return F.lit(1.0), None
+                return match(op != "or", F.lit(1.0))
             raise ValueError(f"#{op} unsupported under UnrankedBoolean")
 
         if isinstance(m, RankedBoolean):
@@ -746,79 +770,26 @@ class Compiler:
             # QrySopWAnd.java:72-81, QrySopWSum.java:73-82); OR: max over
             # matching args (QrySopOr.java:61-73).
             if op in ("and", "wand", "wsum"):
-                return F.least(*s) if k > 1 else s[0], None
+                return match(True, F.least(*s) if k > 1 else s[0])
             if op == "or":
-                cs = [F.coalesce(x, F.lit(0.0)) for x in s]
-                return F.greatest(*cs) if k > 1 else cs[0], None
+                return match(False, F.greatest(*s) if k > 1 else s[0])
             raise ValueError(f"#{op} unsupported under RankedBoolean")
 
         if isinstance(m, BM25):
             # SUM: sum over matching args (QrySopSum.java:44-52).
             # WSUM under BM25 ignores weights and sums matching args,
             # with match-ALL (QrySopWSum.java:116-127) — replicated quirk.
-            if op == "sum":
+            if op in ("sum", "wsum"):
                 expr = F.coalesce(s[0], F.lit(0.0))
                 for x in s[1:]:
                     expr = expr + F.coalesce(x, F.lit(0.0))
-                return expr, None
-            if op == "wsum":
-                expr = s[0]
-                for x in s[1:]:
-                    expr = expr + x
-                return expr, None
+                return match(op == "wsum", expr)
             raise ValueError(f"#{op} unsupported under BM25 (reference throws too)")
 
         if isinstance(m, Indri):
             if op in ("and", "or", "wand", "wsum"):
                 w = list(node.weights) if node.weights else [1.0] * k
-
-                def fold(eff):
-                    return _indri_fold(op, k, w, sum(w), eff)
-
-                score = fold(lambda i: F.coalesce(s[i], children[i].default_fn(dlmap)))
-                return score, lambda dl: fold(lambda i: children[i].default_fn(dl))
+                return _indri_fold(op, k, w, sum(w), lambda i: s[i])
             raise ValueError(f"#{op} unsupported under Indri (reference throws too)")
-
-        raise ValueError(f"unknown model {m!r}")
-
-    # -- leaf (#SCORE) ----------------------------------------------------
-
-    def _leaf(self, node: SopNode) -> ScoreResult:
-        m = self.model
-        iop = self.compile_iop(node.args[0], need_positions=False)
-        f = iop.field
-        fr = iop.frame
-
-        if isinstance(m, UnrankedBoolean):
-            out = fr.select("doc_id", F.lit(1.0).alias("score"))
-            return ScoreResult(out, frozenset([f]))
-
-        if isinstance(m, RankedBoolean):
-            # score = tf (QrySopScore.getScoreRankedBoolean)
-            out = fr.select("doc_id", F.col("tf").cast("double").alias("score"))
-            return ScoreResult(out, frozenset([f]))
-
-        if isinstance(m, BM25):
-            df, _ctf = iop.stats()
-            avg = self.index.avg_len(f)
-            out = fr.select("doc_id", self._bm25(self._idf(df, avg), avg).alias("score"))
-            return ScoreResult(out, frozenset([f]))
-
-        if isinstance(m, Indri):
-            _df, ctf = iop.stats()
-            collen = float(self.index.sum_len(f))
-            p = (ctf / collen) if collen > 0 else 0.0
-            ctf_def = float(ctf) if ctf >= 1.0 else 0.5
-            p_def = (ctf_def / collen) if collen > 0 else 0.0
-            tf = F.col("tf").cast("double")
-            score = self._indri(tf, F.col("doc_len").cast("double"), p)
-            out = fr.select(
-                "doc_id", score.alias("score"), F.col("doc_len").alias(_dl(f))
-            )
-
-            def default_fn(dlmap):
-                return self._indri(F.lit(0.0), dlmap[f].cast("double"), p_def)
-
-            return ScoreResult(out, frozenset([f]), default_fn)
 
         raise ValueError(f"unknown model {m!r}")

@@ -1,5 +1,6 @@
-"""The union+agg physical strategy for long BM25 #SUM queries must be
-score-equivalent to the join strategy (and to the oracle)."""
+"""Flat queries take their model's single-scan scorer (one scan, one
+shuffle, no join) and score like the oracle; nested trees take the
+tree scorer, also without joins."""
 
 import pytest
 
@@ -9,27 +10,17 @@ from searchengine_spark.plans.models import BM25
 from tests import oracle as orc
 
 
-def test_agg_equals_join_strategy(pages_index, py_index):
+def test_flat_bm25_sum_matches_oracle(pages_index, py_index):
+    """A 10-term BM25 #SUM through the flat scorer equals the oracle."""
     eng = SearchEngine(pages_index)
     m = BM25()
-    # 10 terms triggers the agg path in one compiler, never in the other
     q = "barim batok balan cerim cetok celan dirim ditok dilan baser"
     ast = eng.parse(q, m)
 
-    join_comp = Compiler(pages_index, m, agg_threshold=100)
-    agg_comp = Compiler(pages_index, m, agg_threshold=2)
-
-    join_scores = {
-        int(r["doc_id"]): float(r["score"]) for r in join_comp.compile(ast).collect()
-    }
     agg_scores = {
-        int(r["doc_id"]): float(r["score"]) for r in agg_comp.compile(ast).collect()
+        int(r["doc_id"]): float(r["score"])
+        for r in Compiler(pages_index, m).compile(ast).collect()
     }
-    assert set(join_scores) == set(agg_scores)
-    # the agg path folds in term order -> BIT-identical to the join path
-    for d, s in join_scores.items():
-        assert agg_scores[d] == s, (d, agg_scores[d], s)
-
     expected = dict(orc.search(py_index, ast, m, k=10**9))
     assert set(agg_scores) == set(expected)
     for d, s in expected.items():
@@ -47,37 +38,26 @@ def test_default_short_query_uses_single_scan_fold(pages_index):
     assert "Join" not in plan
     assert "aggregate(array_sort" in plan or "collect_list" in plan
 
-    # raising the threshold forces the k-way-join shape (the
-    # float-reproducibility reference plan)
-    jplan = (
-        Compiler(pages_index, m, agg_threshold=100)
-        .compile(ast)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "FullOuter" in jplan or "SortMergeJoin" in jplan or "Join" in jplan
-
 
 def test_flat_indri_single_scan_no_joins(pages_index, py_index):
-    """Flat single-field Indri ops compile to one scan + one groupBy (no
-    k-way full-outer join chain) and stay score-identical to the oracle."""
+    """Flat single-field Indri ops compile to one scan + one groupBy and
+    stay score-identical to the oracle; a nested tree takes the tree
+    scorer, also without a join."""
     from searchengine_spark.plans.models import Indri
 
     eng = SearchEngine(pages_index)
     m = Indri(mu=1500.0, lam=0.3)
-    ast = eng.parse("#wand(0.4 barim 0.3 cerim 0.2 dirim 0.1 batok)", m)
     comp = Compiler(pages_index, m)
-    df = comp.compile(ast)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan[:1500]
-    got = {int(r["doc_id"]): float(r["score"]) for r in df.collect()}
-    expected = dict(orc.search(py_index, ast, m, k=10**9))
-    assert set(got) == set(expected)
-    for d, s in expected.items():
-        assert got[d] == pytest.approx(s, rel=1e-12), d
-
-    # nested args fall back to the join path (still correct per gates)
-    ast2 = eng.parse("#wand(0.6 #and(barim cerim) 0.4 dirim)", m)
-    plan2 = comp.compile(ast2)._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan2
+    for q in [
+        "#wand(0.4 barim 0.3 cerim 0.2 dirim 0.1 batok)",
+        "#wand(0.6 #and(barim cerim) 0.4 dirim)",
+    ]:
+        ast = eng.parse(q, m)
+        df = comp.compile(ast)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan, (q, plan[:1500])
+        got = {int(r["doc_id"]): float(r["score"]) for r in df.collect()}
+        expected = dict(orc.search(py_index, ast, m, k=10**9))
+        assert set(got) == set(expected), q
+        for d, s in expected.items():
+            assert got[d] == pytest.approx(s, rel=1e-12), (q, d)

@@ -235,3 +235,39 @@ def test_single_query_plans_bind_literals(spark, persisted):
     )
     scans = [ln for ln in plan(batch).splitlines() if "FileScan" in ln and "/postings]" in ln]
     assert len(scans) == 1, scans
+
+
+def test_nested_trees_plan_one_scan_no_score_joins(spark, persisted):
+    """Nested score trees take the tree scorer: one postings scan per
+    field and one groupBy(doc_id), no per-child score joins. The PRF
+    shapes (Indri ``#wand`` over ``#and``, BM25 ``#wsum`` over ``#sum``)
+    read the postings with exactly one FileScan and join nothing; a
+    multi-field Indri tree joins only ``doc_stats`` (its doc-length
+    fallback)."""
+    from searchengine_spark.engine import SearchEngine
+
+    path, _ = persisted
+    eng = SearchEngine(read_index(spark, path))
+
+    def plan_lines(q, model):
+        df = eng.scores(q, model=model)
+        assert df.count() > 0, q
+        return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def scans(lines, table):
+        return [ln for ln in lines if "FileScan" in ln and f"/{table}]" in ln]
+
+    for model, q in [
+        ("indri", "#wand(0.4 #and(cerim dirim barim) 0.6 "
+                  "#wand(0.3 cetok 0.3 ditok 0.2 celan 0.2 dilan))"),
+        ("bm25", "#wsum(0.4 #sum(cerim dirim barim) 0.6 "
+                 "#wsum(0.3 cetok 0.3 ditok 0.2 celan 0.2 dilan))"),
+    ]:
+        lines = plan_lines(q, model)
+        assert len(scans(lines, "postings")) == 1, (q, lines)
+        assert not [ln for ln in lines if "Join" in ln], (q, lines)
+
+    lines = plan_lines("#wsum(0.4 cerim.title 0.6 dirim)", "indri")
+    assert len(scans(lines, "postings")) == 2, lines
+    joins = [ln for ln in lines if "Join" in ln]
+    assert joins and len(joins) == len(scans(lines, "doc_stats")), lines

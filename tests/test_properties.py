@@ -1,7 +1,9 @@
 """Property-based tests (hypothesis): codec round-trips and positional
-merge kernels vs brute-force specifications."""
+merge kernels vs brute-force specifications, and the scorers vs
+one another and the oracle."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from searchengine_spark.codec import decode_positions, encode_positions, vb_decode, vb_encode
@@ -124,7 +126,7 @@ def test_near_tf_le_min_list_len(a, b, dist):
 
 
 # ---------------------------------------------------------------------------
-# single-scan flat strategies vs forced join path: bit-identical frames
+# flat scorers vs the tree scorer, and random nested trees vs the oracle
 # ---------------------------------------------------------------------------
 
 FLAT_VOCAB = [
@@ -133,17 +135,22 @@ FLAT_VOCAB = [
 ]
 
 
+def _scores(df) -> dict:
+    return {int(r["doc_id"]): float(r["score"]) for r in df.collect()}
+
+
 @settings(max_examples=12, deadline=None)
 @given(st.data())
-def test_flat_strategy_bit_identical_to_join_path(pages_index, data):
-    """Random flat Indri/Boolean queries: the single-scan map-reassembly
-    strategy (default compiler) must produce BIT-identical (doc_id,
-    score) frames to the k-way-join path (agg_threshold raised), for
-    every op x weight combination — generalizing the specific queries
-    the driver gates pin."""
+def test_flat_strategy_bit_identical_to_tree_scorer(pages_index, py_index, data):
+    """Random flat Indri/Boolean queries: the model's flat scorer (the
+    route ``compile`` takes) and the tree scorer, called directly on the
+    same AST, give BIT-identical (doc_id, score) frames for every op x
+    weight combination, and both match the oracle — generalizing the
+    specific queries the oracle gates pin."""
     from searchengine_spark.engine import SearchEngine
     from searchengine_spark.plans.compiler import Compiler
     from searchengine_spark.plans.models import Indri, RankedBoolean
+    from tests import oracle as orc
 
     model_kind = data.draw(st.sampled_from(["indri", "bool"]))
     if model_kind == "indri":
@@ -169,19 +176,82 @@ def test_flat_strategy_bit_identical_to_join_path(pages_index, data):
         body = " ".join(terms)
     q = f"#{op}({body})"
 
-    eng = SearchEngine(pages_index)
-    ast = eng.parse(q, m)
-    flat = {
-        int(r["doc_id"]): float(r["score"])
-        for r in Compiler(pages_index, m).compile(ast).collect()
-    }
-    join_df = Compiler(pages_index, m, agg_threshold=100).compile(ast)
-    # the raised threshold must really take the k-way-join path
-    assert "Join" in join_df._jdf.queryExecution().executedPlan().toString(), q
-    join = {int(r["doc_id"]): float(r["score"]) for r in join_df.collect()}
-    assert set(flat) == set(join), q
-    for d, s in join.items():
+    ast = SearchEngine(pages_index).parse(q, m)
+    comp = Compiler(pages_index, m)
+    assert comp.flat_scorer(ast) is not None, q
+    flat = _scores(comp.compile(ast))
+    tree = _scores(comp.score_tree(ast))
+    assert set(flat) == set(tree), q
+    for d, s in tree.items():
         assert flat[d] == s, (q, d, flat[d], s)
+    expected = dict(orc.search(py_index, ast, m, k=10**9))
+    assert set(flat) == set(expected), q
+    for d, s in expected.items():
+        assert flat[d] == pytest.approx(s, rel=1e-12), (q, d)
+
+
+NESTED_OPS = {
+    "indri": ("and", "or", "wand", "wsum"),
+    "bm25": ("sum", "wsum"),
+    "rankedboolean": ("and", "or", "wand", "wsum"),
+    "unrankedboolean": ("and", "or"),
+}
+
+
+def _nested_leaf(draw, fields) -> str:
+    """A term, #SYN, #NEAR/n or #WINDOW/n leaf over one of ``fields``;
+    terms drawn with replacement, so repeats occur."""
+    fld = draw(st.sampled_from(fields))
+    sfx = "" if fld == "body" else f".{fld}"
+    kind = draw(st.sampled_from(["term", "term", "syn", "near", "window"]))
+    if kind == "term":
+        return draw(st.sampled_from(FLAT_VOCAB)) + sfx
+    n = draw(st.integers(min_value=2, max_value=3))
+    args = " ".join(t + sfx for t in draw(
+        st.lists(st.sampled_from(FLAT_VOCAB[:6]), min_size=n, max_size=n)
+    ))
+    if kind == "syn":
+        return f"#syn({args})"
+    return f"#{kind}/{draw(st.integers(min_value=1, max_value=4))}({args})"
+
+
+def _nested_tree(draw, ops, fields, depth: int) -> str:
+    """An op of arity 2-3 whose args are leaves or, while ``depth`` > 1,
+    subtrees; weighted ops get a weight per arg."""
+    op = draw(st.sampled_from(ops))
+    args = [
+        _nested_tree(draw, ops, fields, depth - 1)
+        if depth > 1 and draw(st.booleans())
+        else _nested_leaf(draw, fields)
+        for _ in range(draw(st.integers(min_value=2, max_value=3)))
+    ]
+    if op in ("wand", "wsum"):
+        ws = [draw(st.sampled_from([0.1, 0.4, 1.0, 2.5])) for _ in args]
+        args = [f"{w} {a}" for w, a in zip(ws, args)]
+    return f"#{op}({' '.join(args)})"
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.data())
+def test_nested_trees_match_oracle(pages_index, py_index, data):
+    """Random nested score trees (depth <= 3, arity 2-3, one or three
+    fields, term/#SYN/#NEAR/#WINDOW leaves, repeated terms, weights)
+    under every model and its ops: ``scores`` returns the oracle's doc
+    set, each score within rel 1e-9."""
+    from searchengine_spark.engine import SearchEngine
+    from searchengine_spark.plans.models import make_model
+    from tests import oracle as orc
+
+    model = data.draw(st.sampled_from(sorted(NESTED_OPS)))
+    fields = data.draw(st.sampled_from([("body",), ("body", "title", "keywords")]))
+    q = _nested_tree(data.draw, NESTED_OPS[model], fields, depth=3)
+    m = make_model(model)
+    eng = SearchEngine(pages_index)
+    expected, _ = orc.eval_sop(py_index, eng.parse(q, m), m)
+    got = _scores(eng.scores(q, model=m))
+    assert set(got) == set(expected), q
+    for d, s in expected.items():
+        assert got[d] == pytest.approx(s, rel=1e-9), (q, d)
 
 
 # --- k=2 fast-path merges are trace-identical to the generic walks ----

@@ -213,3 +213,17 @@ def test_run_batch_fused_models_bit_identical(pages_index, model, batch):
     assert qids == {q for q, _ in batch}
 
 
+
+
+def test_run_batch_trims_derived_frames(pages_index):
+    """``run_batch`` bounds the persisted derived-frame registry the way
+    ``search`` does: 18 distinct positional queries over 9 calls (a
+    flat ``#NEAR`` merge and a nested ``#NEAR`` leaf each persist one
+    frame for their df) leave at most 16 frames cached."""
+    eng = SearchEngine(pages_index)
+    for k in range(1, 10):
+        eng.run_batch(
+            [("p", f"#near/{k}(barim batok)"), ("n", f"#sum(cerim #near/{k}(barim cerim))")],
+            model=BM25(), k=5,
+        )
+    assert len(pages_index._temps) <= 16
