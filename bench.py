@@ -156,12 +156,11 @@ def main() -> None:
         _best_of(lambda: similarity.cosine_topk(edf, [0, 1, 2], k=10).collect(), 2), 3
     )
     # cell_udf=True is the row-count scale path (one Arrow matmul per
-    # batch); the literal-SQL path stays the oracle-gated default, same
-    # split as the LSH plane_udf entries in scripts/scalebench.py.
-    # Build/query split mirrors scripts/scalebench.py: the O(n*cells*dim)
-    # assignment is the amortized index-build cost (single-shot), the
-    # prebuilt query is the per-query latency a deployment sees — the
-    # old one-call `p_ann_ivf` entry folded both into a "query" number.
+    # batch); the literal-SQL path stays the oracle-gated default. The
+    # O(n*cells*dim) assignment is the amortized index-build cost
+    # (single-shot), the prebuilt query is the per-query latency a
+    # deployment sees — the old one-call `p_ann_ivf` entry folded both
+    # into a "query" number.
     t0 = time.time()
     ivf_assigned, ivf_cents = similarity.ivf_assign(edf, n_cells=16, cell_udf=True)
     ivf_assigned = ivf_assigned.persist()
@@ -178,22 +177,6 @@ def main() -> None:
         3,
     )
     ivf_assigned.unpersist()
-    # Same build/query split for the LSH ANN family (build_lsh_buckets
-    # is the one-time hashing pass; prebuilt queries pay probe+rerank).
-    t0 = time.time()
-    lsh_idx = similarity.build_lsh_buckets(edf, n_tables=8, bits=8, dim=64)
-    queries["p_ann_lsh_build"] = round(time.time() - t0, 3)
-    queries["p_ann_lsh_query"] = round(
-        _best_of(
-            lambda: similarity.lsh_bucket_topk(
-                edf, [0, 1, 2], k=10, n_tables=8, bits=8, dim=64,
-                prebuilt=lsh_idx,
-            ).collect(),
-            2,
-        ),
-        3,
-    )
-    lsh_idx[0].unpersist()
     queries["p_token_stats"] = round(
         _best_of(lambda: __import__("searchengine_spark.pipeline.textstats", fromlist=["token_stats"]).token_stats(ddf).count(), 2), 3
     )

@@ -5,8 +5,8 @@
 Runs the LLM-data-pipeline surface end-to-end over a deterministic
 synthetic corpus: exact + MinHash-LSH near-dup detection, connected
 components -> keep-representatives, corpus filtering, text stats, and
-similarity search three ways (exact brute force, hyperplane LSH with
-multi-probe, IVF-flat with a persisted cell-partitioned index).
+similarity search two ways (exact brute force, and IVF-flat over a
+persisted cell-partitioned index).
 """
 
 from __future__ import annotations
@@ -54,9 +54,8 @@ def main() -> None:
     emb = make_embeddings(spark, 2000, dim=64).persist()
     emb.count()
     qids = [0, 1, 2]
-    print("[4/5] similarity search: brute force vs LSH multi-probe vs IVF-flat")
+    print("[4/5] similarity search: brute force vs IVF-flat")
     brute = similarity.cosine_topk(emb, qids, k=5)
-    lsh = similarity.lsh_bucket_topk(emb, qids, k=5, n_probes=8)
     work = tempfile.mkdtemp(prefix="sespark_ivf_")
     similarity.write_ivf_index(emb, work, n_cells=32, cell_udf=True)
     ivf = similarity.ivf_topk(
@@ -64,9 +63,8 @@ def main() -> None:
         prebuilt=similarity.read_ivf_index(spark, work),
     )
     truth = {(r["query_id"], r["vec_id"]) for r in brute.collect()}
-    for name, df in [("lsh", lsh), ("ivf", ivf)]:
-        got = {(r["query_id"], r["vec_id"]) for r in df.collect()}
-        print(f"      {name}: recall@5 = {len(truth & got) / len(truth):.2f}")
+    got = {(r["query_id"], r["vec_id"]) for r in ivf.collect()}
+    print(f"      ivf: recall@5 = {len(truth & got) / len(truth):.2f}")
 
     print(f"[5/5] persisted IVF index layout under {work}:")
     for p in sorted(os.listdir(os.path.join(work, "cells")))[:4]:

@@ -82,7 +82,7 @@ def main() -> None:
     spark = get_spark("plans", cores=4, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     docs = assign_doc_ids(extract_fields(make_pages(spark, 400, seed=9)), ext_id_col="url")
-    # PLANS_INDEX_DIR: reuse a pre-persisted index (e.g. scalebench's 400k-page
+    # PLANS_INDEX_DIR: reuse a pre-persisted index (e.g. a 400k-page
     # one) so the committed plan evidence is from the scale it claims to cover;
     # default builds a small local one. Plan SHAPES are size-independent —
     # regenerating at scale proves it.

@@ -87,64 +87,6 @@ def make_pages(spark: SparkSession, n: int, seed: int = 42, partitions: int | No
     return base.mapInPandas(gen, schema=PAGE_SCHEMA)
 
 
-# the cookie-banner/nav sentence real crawls repeat on a third of all
-# pages — every one of these tokens becomes a df~0.3n head term
-BOILERPLATE = (
-    "cookie consent privacy policy navigation menu home about contact "
-    "terms conditions copyright all rights reserved subscribe newsletter"
-)
-
-
-def make_pages_skew(
-    spark: SparkSession,
-    n: int,
-    seed: int = 42,
-    dup_fraction: float = 0.15,
-    n_templates: int = 200,
-    boiler_fraction: float = 0.3,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Deliberately HOSTILE deterministic corpus (verdict r3 item 3).
-
-    Two hazards organic ``make_pages`` (1% dups, natural zipf) never
-    exercises:
-
-    - **boilerplate mega-clusters**: ``dup_fraction`` of the pages are
-      near-copies of one of ``n_templates`` templates, with template
-      popularity ~ u^4 — the head template collects ~25% of all dups
-      (~16k copies at 400k pages). Any per-bucket O(m^2) step in the
-      dedup path goes quadratic here.
-    - **head terms**: ``boiler_fraction`` of the pages share the same
-      16-token BOILERPLATE sentence, so those terms hit df ~ 0.3n —
-      skewed posting lists, skewed shingle buckets, one hot term
-      bucket.
-
-    Each dup copy appends one unique token so copies are near- (not
-    exact-) duplicates — exact-hash dedup must NOT collapse them.
-    """
-    base = spark.range(0, n, 1, partitions or max(8, n // 50_000 + 1))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in (int(x) for x in pdf["id"]):
-                rng = np.random.default_rng((seed << 33) ^ (i * 2654435761 % (1 << 31)))
-                u = rng.random()
-                if i >= n_templates and u < dup_fraction:
-                    t = min(n_templates - 1, int(n_templates * rng.random() ** 4))
-                    url, ts, html, text, lang = _page_record(seed, t)
-                    text = f"{text} uniq{i}"
-                else:
-                    url, ts, html, text, lang = _page_record(seed, i)
-                if rng.random() < boiler_fraction:
-                    text = f"{BOILERPLATE} {text}"
-                url = f"http://skew{i % 89:02d}.example/p{i:010d}"
-                rows.append((url, ts, html, text, lang))
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return base.mapInPandas(gen, schema=PAGE_SCHEMA)
-
-
 EMB_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 
 

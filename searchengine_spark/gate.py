@@ -997,7 +997,7 @@ FROM sel WHERE step > 0 ORDER BY rank
 """
 
 
-# -- hyperplane-LSH ANN oracles ----------------------------------------------
+# -- embedding oracles: IVF top-k, hyperplane-LSH near-dup -------------------
 
 
 def _lsh_bucket_ctes(n_tables: int, bits: int, dim: int, seed: int) -> str:
@@ -1023,109 +1023,6 @@ def _lsh_bucket_ctes(n_tables: int, bits: int, dim: int, seed: int) -> str:
 n AS (SELECT vec_id, v, sqrt(list_sum([v[i] * v[i] FOR i IN range(1, len(v) + 1)])) AS nrm FROM base),
 bb AS (SELECT vec_id, {', '.join(bcols)} FROM n),
 stk AS ({stk})"""
-
-
-def ann_lsh_sql(
-    query_ids: list[int], k: int,
-    n_tables: int = 16, bits: int = 4, dim: int = 64, seed: int = 13,
-) -> str:
-    qs = ", ".join(str(q) for q in query_ids)
-    return f"""
-WITH {_lsh_bucket_ctes(n_tables, bits, dim, seed)},
-qv AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n WHERE vec_id IN ({qs})),
-qb AS (SELECT vec_id AS query_id, tbl, bucket FROM stk WHERE vec_id IN ({qs})),
-cand AS (SELECT DISTINCT s.vec_id, q.query_id
-         FROM stk s JOIN qb q ON s.tbl = q.tbl AND s.bucket = q.bucket
-         WHERE s.vec_id != q.query_id),
-p AS (SELECT c.query_id, c.vec_id,
-        CAST(round(list_sum([q.qv[i] * n.v[i] FOR i IN range(1, len(n.v) + 1)])
-          / (q.qn * n.nrm), 6) AS DOUBLE) AS cos
-      FROM cand c JOIN n ON n.vec_id = c.vec_id JOIN qv q ON q.query_id = c.query_id)
-SELECT query_id, vec_id, cos, rank FROM (
-  SELECT query_id, vec_id, cos,
-         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-  FROM p) __r
-WHERE rank <= {k} ORDER BY query_id, rank
-"""
-
-
-def ann_multiprobe_sql(
-    query_ids: list[int], k: int, n_probes: int = 8,
-    n_tables: int = 16, bits: int = 4, dim: int = 64, seed: int = 13,
-) -> str:
-    """SQL twin of multi-probe LSH top-k (similarity._multiprobe_keys).
-
-    Valid exactly when the flip pool covers every bit — i.e. ``m =
-    min(bits, ceil(log2(n_probes)) + 2) == bits`` — because then the
-    candidate probe set is ALL 2^bits sign-flip masks and the Python
-    margin-argsort (which only picks WHICH bits enter the pool) drops
-    out: both sides rank the same 2^bits masks by (flipped-margin sum,
-    flip count) and keep the cheapest ``n_probes``. The gated config
-    (bits=4, n_probes=8 -> m=4) satisfies this; the assert below keeps
-    the oracle honest if the config drifts.
-    """
-    import math
-
-    m = min(bits, max(1, int(math.ceil(math.log2(max(2, n_probes)))) + 2))
-    assert m == bits, "SQL oracle requires the flip pool to cover all bits"
-    from searchengine_spark.pipeline.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_tables, bits, seed)
-    qs = ", ".join(str(q) for q in query_ids)
-    qp_selects = []
-    for t in range(n_tables):
-        dots = ", ".join(
-            "list_dot_product(qv, ["
-            + ", ".join(repr(float(x)) for x in planes[t, b_])
-            + "])"
-            for b_ in range(bits)
-        )
-        qp_selects.append(
-            f"SELECT query_id, {t} AS tbl, [{dots}] AS proj FROM qv0"
-        )
-    qp = " UNION ALL ".join(qp_selects)
-    mask_rows = ", ".join(
-        "(["
-        + ", ".join(str((i >> b_) & 1) for b_ in range(bits))
-        + f"], {bin(i).count('1')})"
-        for i in range(2**bits)
-    )
-    bitcases = ", ".join(
-        f"CASE WHEN (proj[{b_ + 1}] >= 0) <> (flip[{b_ + 1}] = 1) THEN '1' ELSE '0' END"
-        for b_ in range(bits)
-    )
-    cost = (
-        "list_sum(["
-        + ", ".join(
-            f"CASE WHEN flip[{b_ + 1}] = 1 THEN abs(proj[{b_ + 1}]) ELSE 0.0 END"
-            for b_ in range(bits)
-        )
-        + "])"
-    )
-    return f"""
-WITH {_lsh_bucket_ctes(n_tables, bits, dim, seed)},
-qv0 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n WHERE vec_id IN ({qs})),
-qp AS ({qp}),
-masks AS (SELECT * FROM (VALUES {mask_rows}) AS __m(flip, pc)),
-pk AS (SELECT query_id, tbl, concat({bitcases}) AS bucket, {cost} AS cost, pc
-       FROM qp CROSS JOIN masks),
-sel AS (SELECT query_id, tbl, bucket FROM (
-          SELECT pk.*, row_number() OVER (PARTITION BY query_id, tbl
-                                          ORDER BY cost, pc, bucket) AS pr
-          FROM pk) __p WHERE pr <= {n_probes}),
-cand AS (SELECT DISTINCT s.vec_id, p.query_id
-         FROM stk s JOIN sel p ON s.tbl = p.tbl AND s.bucket = p.bucket
-         WHERE s.vec_id != p.query_id),
-p AS (SELECT c.query_id, c.vec_id,
-        CAST(round(list_sum([q.qv[i] * n.v[i] FOR i IN range(1, len(n.v) + 1)])
-          / (q.qn * n.nrm), 6) AS DOUBLE) AS cos
-      FROM cand c JOIN n ON n.vec_id = c.vec_id JOIN qv0 q ON q.query_id = c.query_id)
-SELECT query_id, vec_id, cos, rank FROM (
-  SELECT query_id, vec_id, cos,
-         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS INT) AS rank
-  FROM p) __r
-WHERE rank <= {k} ORDER BY query_id, rank
-"""
 
 
 def ann_ivf_sql(
@@ -1990,31 +1887,11 @@ ORDER BY doc_id
 
     r["drmm_rerank"] = (_drmm_rerank, drmm_sql(["dup", "spark"], 20, 10))
 
-    # scale-path ANN: the oracle rebuilds the hyperplane buckets from the
-    # same seeded generator, so even the approximate candidate set is
-    # verified value-for-value (recall vs brute force stays pytest-pinned).
-    r["ann_lsh_topk"] = (
-        lambda spark, sf: similarity.lsh_bucket_topk(emb_df(spark, sf), QIDS, k=10)
-        .orderBy("query_id", "rank"),
-        ann_lsh_sql(QIDS, 10),
-    )
-    # multi-probe variant (Lv et al. '07): at the gated config
-    # (bits=4, n_probes=8) the flip pool covers every bit, so the probe
-    # set is SQL-expressible after all — the oracle ranks all 2^bits
-    # masks by (flipped-margin sum, flip count) exactly as the Python
-    # side does; recall-vs-brute improvement and n_probes=1
-    # byte-identity stay pytest-pinned (tests/test_make_embeddings.py).
-    r["ann_multiprobe_topk"] = (
-        lambda spark, sf: similarity.lsh_bucket_topk(
-            emb_df(spark, sf), QIDS, k=10, n_probes=8
-        ).orderBy("query_id", "rank"),
-        ann_multiprobe_sql(QIDS, 10, n_probes=8),
-    )
-    # second ANN family: IVF-flat coarse quantization. Centroids are
+    # ANN top-k: IVF-flat coarse quantization. Centroids are
     # deterministic md5-ordered medoids, so the oracle re-derives the
     # whole index structure (centroids -> assignment -> probes) from
     # the table in SQL — the approximate candidate set is verified
-    # value-for-value, like the LSH gates.
+    # value-for-value (recall vs brute force stays pytest-pinned).
     r["ann_ivf_topk"] = (
         lambda spark, sf: similarity.ivf_topk(
             emb_df(spark, sf), QIDS, k=10, n_cells=16, n_probe=4

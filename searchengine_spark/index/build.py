@@ -37,17 +37,10 @@ from dataclasses import dataclass, field as dc_field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import BinaryType
 
 from searchengine_spark.analyzer import analyzer_version, get_analyzer
-from searchengine_spark.codec import encode_positions_many
 
 DEFAULT_FIELDS = ("body",)
-
-
-@F.pandas_udf(BinaryType())
-def _encode_positions_udf(pos_lists: pd.Series) -> pd.Series:
-    return pd.Series(encode_positions_many(pos_lists.tolist()), index=pos_lists.index)
 
 
 POSTING_ROW_SCHEMA = (

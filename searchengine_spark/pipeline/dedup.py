@@ -133,16 +133,10 @@ def _mh_multipliers(n_hashes: int) -> list[int]:
     ]
 
 
-def _with_shingle_hash(ex: DataFrame) -> DataFrame:
-    """Adds the 40-bit base hash ``__h`` to an exploded shingle frame
-    with column ``s``."""
-    return ex.withColumn("__h", F.expr(MH_H))
-
-
 def _signature_aggs(n_hashes: int) -> list:
     """The one place the MinHash definition lives: ``min((a_i * h) &
-    MH_MASK)`` over a ``_with_shingle_hash`` frame (mirrored verbatim
-    by the gate oracle's mh_cols SQL)."""
+    MH_MASK)`` over a frame carrying the 40-bit base hash ``__h``
+    (``MH_H``; mirrored verbatim by the gate oracle's mh_cols SQL)."""
     return [
         F.min((F.lit(a) * F.col("__h")).bitwiseAND(F.lit(MH_MASK))).alias(f"mh_{i}")
         for i, a in enumerate(_mh_multipliers(n_hashes))
@@ -174,31 +168,6 @@ def _hashed_sig(sh: DataFrame, n_hashes: int) -> DataFrame:
     return ex.groupBy("id").agg(
         F.collect_list("hh").alias("__hh"), *_signature_aggs(n_hashes)
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = DEFAULT_HASHES,
-    n: int = 3,
-) -> DataFrame:
-    """(id, __sh, mh_0..mh_{n-1}) MinHash signature over 3-gram shingles.
-
-    Computed as posexplode -> ONE groupBy carrying both the n_hashes
-    ``min(md5(...))`` aggregates AND the document-ordered shingle list
-    (``array_sort(collect_list(struct(pos, s)))``): a single pass with
-    map-side partial aggregation, no persist, no join-back. (The naive
-    ``array_min(transform(...))`` per hash inlines the whole
-    tokenize+shingle expression once PER HASH — 8x the work.)
-    """
-    sh = _with_shingles(df, id_col, text_col, n)
-    ex = _with_shingle_hash(sh.select("id", F.posexplode("__sh").alias("pos", "s")))
-    rebuilt_sh = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "s"))), lambda x: x["s"]
-    ).alias("__sh")
-    agged = ex.groupBy("id").agg(rebuilt_sh, *_signature_aggs(n_hashes))
-    return agged.select("id", "__sh", *[f"mh_{i}" for i in range(n_hashes)])
 
 
 def minhash_lsh_pairs(
@@ -297,8 +266,7 @@ def minhash_lsh_star_edges(
 
     The all-pairs band join of ``minhash_lsh_pairs`` is exact but
     inherently O(m^2) per bucket — a 16k-copy boilerplate template (the
-    hostile web shape; see scripts/skewbench.py) puts 128M candidate
-    pairs in ONE bucket. For dedup clustering the pairs themselves are
+    hostile web shape) puts 128M candidate pairs in ONE bucket. For dedup clustering the pairs themselves are
     not needed, only connectivity: per (band, bucket) this emits ONLY
     the (bucket-min, member) star — O(m) per bucket — then verifies
     exact shingle Jaccard on those edges. Connected components over

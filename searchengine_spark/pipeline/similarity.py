@@ -5,13 +5,18 @@
   higher-order functions (zip_with + aggregate) entirely JVM-side,
   summed left-to-right so an ANSI-SQL oracle reproduces the doubles
   bit-for-bit.
-- ``lsh_bucket_topk``: the scale path — random-hyperplane LSH buckets
-  (deterministic planes from a seeded RNG, inlined as literals);
-  candidates share >=1 of ``n_tables`` bucket keys, then exact cosine
-  re-ranks. Probe cost ~ bucket size x n_tables instead of corpus
-  size. Recall<1 by construction; verified against brute force AND
-  value-for-value against a DuckDB oracle that replays the same seeded
-  planes (gate ``ann_lsh_topk``).
+- ``ivf_topk``: the approximate top-k — IVF-flat coarse quantization
+  (``ivf_assign`` builds the inverted lists once, ``write_ivf_index``
+  persists them partitioned by cell); a query probes its ``n_probe``
+  nearest cells and exact cosine re-ranks their members. Verified
+  value-for-value against a DuckDB oracle that re-derives the same
+  centroids from the table (gate ``ann_ivf_topk``). It replaced a
+  hyperplane-LSH top-k that matched or lost to it at every measured
+  recall level (COVERAGE.md).
+- ``embedding_near_dup_pairs``: all pairs above a cosine threshold via
+  random-hyperplane LSH buckets (deterministic planes from a seeded
+  RNG); pairs share >=1 of ``n_tables`` bucket keys, then exact cosine
+  verifies them (gate ``emb_near_dup``).
 
 Plane shipping auto-switches on dimension (``PLANE_LITERAL_MAX_DIM``):
 at dim<=128 the literal arrays are a few hundred KB of plan text and
@@ -25,18 +30,19 @@ numpy matmul per batch. The UDF is the row-count scale path too, not
 just the dim path: Spark evaluates higher-order-function lambdas
 interpreted (never codegen-vectorized), so the literal dot products
 cost tables*bits*dim lambda steps per vector — 66s for 400k vectors
-at 8x16x64 vs ~2s for the matmul (scripts/scalebench.py).
+at 8x16x64 vs ~2s for the matmul (32-vCPU host). IVF cell assignment
+makes the same switch (``cell_udf``).
 
-Both paths emit the bucket keys as one ``array<string>`` column that
-``posexplode`` stacks into (table, bucket) rows — a single scan
-computes every table's key (the round-2 design re-scanned the corpus
-once per table via union).
+Both plane paths emit the bucket keys as one ``array<string>`` column
+that ``posexplode`` stacks into (table, bucket) rows — a single scan
+computes every table's key.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 PLANE_LITERAL_MAX_DIM = 128
@@ -147,186 +153,6 @@ def _bucket_array_col(
     return buckets(F.col(vec_col))
 
 
-def _multiprobe_keys(planes: np.ndarray, qvec: np.ndarray, n_probes: int) -> list[list[str]]:
-    """Per-table probe buckets for one query vector (Lv et al. '07).
-
-    The base key plus the cheapest bit-flips: a near-miss neighbor most
-    likely differs in the sign bits whose hyperplane projection is
-    closest to zero, so probe keys are generated by flipping subsets of
-    the lowest-|projection| bits in increasing total-margin order.
-    Query-side only — the corpus keeps ONE key per table, so probe cost
-    grows the broadcast join's small side, never the corpus scan.
-    """
-    from itertools import combinations
-
-    n_tables, bits, _dim = planes.shape
-    # flip sets drawn from the m smallest-margin bits; m sized so there
-    # are >= n_probes subsets (2^m) with a little slack
-    m = min(bits, max(1, int(np.ceil(np.log2(max(2, n_probes)))) + 2))
-    out: list[list[str]] = []
-    for t in range(n_tables):
-        proj = planes[t] @ qvec  # (bits,)
-        margins = np.abs(proj)
-        signs = proj >= 0.0
-        idxs = np.argsort(margins)[:m]
-        cand: list[tuple[float, tuple[int, ...]]] = []
-        for r in range(0, m + 1):
-            for flip in combinations(range(m), r):
-                cost = float(margins[idxs[list(flip)]].sum()) if flip else 0.0
-                cand.append((cost, tuple(int(idxs[f]) for f in flip)))
-        cand.sort(key=lambda cf: (cf[0], len(cf[1])))
-        keys = []
-        for _cost, flips in cand[:n_probes]:
-            s = signs.copy()
-            for f in flips:
-                s[f] = not s[f]
-            keys.append("".join("1" if x else "0" for x in s))
-        out.append(keys)
-    return out
-
-
-def build_lsh_buckets(
-    emb: DataFrame,
-    n_tables: int = 16,
-    bits: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 13,
-    plane_udf: bool | None = None,
-) -> tuple[DataFrame, np.ndarray]:
-    """One-time LSH index build: per-vector bucket keys for every table.
-
-    Returns ``(hashed, planes)`` for ``lsh_bucket_topk(prebuilt=...)``:
-    ``hashed`` is the persisted, eagerly materialized
-    (vec_id, __v, __norm, __bks) frame — the O(n·tables·bits·dim)
-    hashing cost paid ONCE, like ``ivf_assign`` for IVF — and
-    ``planes`` the hyperplane tensor queries probe with. The caller
-    owns the release: ``hashed.unpersist()`` when done (leaked build
-    caches evict later stages' caches into silent recompute). Caveat:
-    a ONE-CALL ``lsh_bucket_topk`` with identical params hashes the
-    same logical plan and its internal unpersist() drops this frame's
-    cache entry too — don't interleave the two modes on one corpus."""
-    planes = _hyperplanes(dim, n_tables, bits, seed)
-    base = with_norm(emb, vec_col).select(
-        F.col(id_col).cast("long").alias("vec_id"), "__v", "__norm"
-    )
-    hashed = base.withColumn(
-        "__bks", _bucket_array_col(planes, plane_udf=plane_udf)
-    ).persist()
-    hashed.count()
-    return hashed, planes
-
-
-def lsh_bucket_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    n_tables: int = 16,
-    bits: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 13,
-    plane_udf: bool | None = None,
-    n_probes: int = 1,
-    prebuilt: tuple[DataFrame, np.ndarray] | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k via random-hyperplane LSH.
-
-    Bucket key per table = sign-bit string of ``bits`` hyperplane dot
-    products. Join on (table, bucket) -> candidates -> exact cosine ->
-    per-query top-k. At 10^12 scale the bucket join replaces the full
-    cross product; planes ship as literals (dim<=128) or inside a
-    pandas-UDF closure (higher dims) — see ``_bucket_array_col``.
-
-    ``n_probes > 1`` turns on multi-probe LSH: each query additionally
-    probes the buckets reachable by flipping its lowest-margin sign
-    bits (``_multiprobe_keys``), trading a slightly larger broadcast
-    query side for recall — the standard way to buy recall without
-    adding tables (which would re-hash the whole corpus). The corpus
-    side of the plan is byte-identical to ``n_probes=1``; the default
-    stays 1 so the oracle-gated path is untouched.
-
-    EAGER: the call materializes its result (persist + count) so the
-    corpus-sized bucket cache can be released before returning; the
-    k-bounded top-k comes back as a driver-local frame with no cache
-    attached (see ``_localized``).
-
-    One-call mode re-hashes the corpus every call (honest cost; it is
-    what the oracle gate replays). Amortized serving passes
-    ``prebuilt=build_lsh_buckets(...)``: each call then pays only the
-    probe join + rerank against the already-persisted bucket frame,
-    which this function does NOT unpersist (the builder's caller owns
-    that) — the same build/query split ``ivf_topk(prebuilt=)`` has.
-    """
-    if prebuilt is not None:
-        hashed, planes = prebuilt
-    else:
-        hashed, planes = build_lsh_buckets(
-            emb, n_tables=n_tables, bits=bits, dim=dim, id_col=id_col,
-            vec_col=vec_col, seed=seed, plane_udf=plane_udf,
-        )
-    stacked = hashed.select(
-        "vec_id", "__v", "__norm", F.posexplode("__bks").alias("table", "bucket")
-    )
-
-    if n_probes > 1:
-        # probe keys are computed driver-side from the (k-bounded) query
-        # vectors — the collect pulls len(query_ids) rows, nothing
-        # corpus-sized
-        qid_list = [int(i) for i in query_ids]
-        qrows = emb.where(F.col(id_col).cast("long").isin(qid_list)).select(
-            F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("__qe")
-        ).collect()
-        probe_rows = []
-        for r in qrows:
-            v = np.asarray(r["__qe"], dtype=np.float64)
-            for t, keys in enumerate(_multiprobe_keys(planes, v, n_probes)):
-                for key in keys:
-                    probe_rows.append((int(r["vec_id"]), t, key))
-        probes = emb.sparkSession.createDataFrame(
-            probe_rows, "query_id long, table int, bucket string"
-        )
-        qvecs = hashed.where(F.col("vec_id").isin(qid_list)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("__v").alias("__qv"),
-            F.col("__norm").alias("__qnorm"),
-        )
-        q = probes.join(qvecs, on="query_id").select(
-            "query_id", "__qv", "__qnorm", "table", "bucket"
-        )
-    else:
-        q = stacked.where(F.col("vec_id").isin([int(i) for i in query_ids])).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("__v").alias("__qv"),
-            F.col("__norm").alias("__qnorm"),
-            "table",
-            "bucket",
-        )
-    cand = (
-        stacked.join(F.broadcast(q), on=["table", "bucket"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "__qv", "__qnorm", "__v", "__norm")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    cos = F.expr(DOT.format(a="__qv", b="__v")) / (F.col("__qnorm") * F.col("__norm"))
-    scored = cand.select("query_id", "vec_id", F.round(cos, 6).alias("cos"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-    # materialize the (k-bounded) result, then release the corpus-sized
-    # bucket cache — a leaked `hashed` per call evicts later stages'
-    # caches into silent recompute (the round-3 1M-minhash lesson; a
-    # widened ANN bench section measured embedding_near_dup_pairs at 5x
-    # its isolated cost purely from these accumulated leaks). The result
-    # is k*len(query_ids) rows, so it localizes: the caller gets a frame
-    # with NO cache attached (nothing left to leak). Prebuilt bucket
-    # frames are the caller's to release, never unpersisted here.
-    return _localized(ranked, *([] if prebuilt is not None else [hashed]))
-
-
 # Results at or under this many rows are pulled to the driver and
 # re-emitted as a local frame so the corpus-sized build cache can be
 # unpersisted immediately (no persisted frame escapes to the caller).
@@ -391,8 +217,8 @@ def _ivf_score_exprs(cents: list[list[float]], vec_col: str = "__v") -> list[str
     Centroid arrays inline as literals (``repr(float)`` round-trips the
     exact doubles both engines read from parquet) and the centroid norm
     is computed IN SQL with the same ordered fold the oracle uses, so
-    the scores are bit-reproducible — the same discipline as the LSH
-    plane literals."""
+    the scores are bit-reproducible — the same discipline as the
+    near-dup LSH plane literals."""
     exprs = []
     for c in cents:
         arr = "array(" + ", ".join(repr(float(x)) for x in c) + ")"
@@ -565,13 +391,12 @@ def ivf_topk(
 ) -> DataFrame:
     """Approximate cosine top-k via IVF-flat coarse quantization.
 
-    The second ANN family next to hyperplane LSH (IVF: Jegou et al.,
-    "Product Quantization for Nearest Neighbor Search", TPAMI'11 —
-    coarse inverted lists, here with flat exact rerank): every vector
-    is assigned to its nearest of ``n_cells`` deterministic medoid
-    centroids (``ivf_centroids``); a query probes its ``n_probe``
-    nearest cells and exact cosine re-ranks only those cells'
-    members. Probe cost ~ n_probe/n_cells of the corpus instead of
+    IVF (Jegou et al., "Product Quantization for Nearest Neighbor
+    Search", TPAMI'11 — coarse inverted lists, here with flat exact
+    rerank): every vector is assigned to its nearest of ``n_cells``
+    deterministic medoid centroids (``ivf_centroids``); a query probes
+    its ``n_probe`` nearest cells and exact cosine re-ranks only those
+    cells' members. Probe cost ~ n_probe/n_cells of the corpus instead of
     all of it.
 
     Scale shape: centroids are k-bounded and ship in a UDF closure /
@@ -590,23 +415,25 @@ def ivf_topk(
     back through ``prebuilt``; each call then pays only the probe-join
     + rerank (the per-query cost a deployment actually sees).
     """
-    own_assigned = prebuilt is None
+    own_cache = False
     if prebuilt is not None:
         assigned, cents = prebuilt
-        if cell_udf is None:
-            cell_udf = (len(cents[0]) if cents else 0) > PLANE_LITERAL_MAX_DIM
     else:
         assigned, cents = ivf_assign(
             emb, n_cells, id_col=id_col, vec_col=vec_col, cell_udf=cell_udf,
             lloyd_iters=lloyd_iters,
         )
         # one-call mode: both the probe collect and the candidate scan
-        # read the assignment — cache it for the call, release before
-        # returning (lsh_bucket_topk's discipline); without this the
-        # O(n*cells*dim) assignment runs twice
-        assigned = assigned.persist()
-        if cell_udf is None:
-            cell_udf = (len(cents[0]) if cents else 0) > PLANE_LITERAL_MAX_DIM
+        # read the assignment — cache it for the call and release it
+        # before returning, else the O(n*cells*dim) assignment runs
+        # twice. Spark keys caches by plan: when the caller already
+        # persisted an identical ivf_assign frame, this one reads that
+        # entry, and unpersisting it would drop the caller's index.
+        own_cache = assigned.storageLevel == StorageLevel.NONE
+        if own_cache:
+            assigned.persist()
+    if cell_udf is None:
+        cell_udf = (len(cents[0]) if cents else 0) > PLANE_LITERAL_MAX_DIM
 
     # query probes: top-n_probe cells per query. One-call literal mode
     # ranks the SAME literal score exprs in SQL (bit-identical to the
@@ -614,9 +441,8 @@ def ivf_topk(
     # driver-side from the (k-bounded) collected query vectors — at
     # scale n_cells ~ sqrt(n) is hundreds of cells and a literal plan
     # would carry n_cells*dim floats through Catalyst analysis for no
-    # reason (same driver-side probe pattern as lsh_bucket_topk's
-    # multi-probe keys), and driver-known probe cells are what turn
-    # into PartitionFilters against a write_ivf_index layout.
+    # reason, and driver-known probe cells are what turn into
+    # PartitionFilters against a write_ivf_index layout.
     qid_list = [int(i) for i in query_ids]
     qbase = assigned.where(F.col("vec_id").isin(qid_list))
     from pyspark.sql import Window
@@ -676,14 +502,14 @@ def ivf_topk(
     scored = cand.select("query_id", "vec_id", F.round(cos, 6).alias("cos"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     ranked = scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-    if own_assigned:
+    if prebuilt is None:
         # EAGER in one-call mode: localize the k-bounded result and free
-        # the assignment cache before returning (no persisted frame
+        # the call's assignment cache before returning (no persisted frame
         # escapes — see _localized). Prebuilt mode stays lazy: the
         # caller owns the cache, and an eager materialize here would
         # hide the cell PartitionFilters the persisted-index plan
         # evidence relies on.
-        return _localized(ranked, assigned)
+        return _localized(ranked, *([assigned] if own_cache else []))
     return ranked
 
 
@@ -698,7 +524,7 @@ def embedding_near_dup_pairs(
     seed: int = 13,
     plane_udf: bool | None = None,
 ) -> DataFrame:
-    """(id_a < id_b, cos >= threshold) via the same LSH bucketing.
+    """(id_a < id_b, cos >= threshold) via hyperplane-LSH bucketing.
 
     EAGER: materializes the verified pair set so the corpus-sized hash
     cache can be released before returning. Small pair sets (the normal

@@ -70,12 +70,6 @@ def _batch_rows(docs: DataFrame, field: str = "body", src_col: str = "text",
     ).mapInPandas(_doc_postings_gen(analyzer, field, "__src"), POSTING_ROW_SCHEMA)
 
 
-def batch_postings(docs: DataFrame, field: str = "body", src_col: str = "text",
-                   analyzer: str = "english") -> DataFrame:
-    """Same tokenize->postings transform as the batch build, per batch."""
-    return _batch_rows(docs, field, src_col, analyzer).where(F.col("term") != "")
-
-
 def start_ingest(
     spark: SparkSession,
     input_dir: str,

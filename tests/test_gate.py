@@ -4,8 +4,6 @@ compared exactly the way the driver does — row count, column names,
 order-insensitive values.
 """
 
-import math
-
 import duckdb
 import pytest
 
@@ -77,24 +75,9 @@ def test_entry_smoke(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
-def test_ann_lsh_recall_vs_bruteforce(spark):
-    """LSH ANN must reach >=60% recall@10 vs exact brute force here."""
-    from searchengine_spark.pipeline import similarity
-
-    emb = gate.emb_df(spark, SF)
-    qids = [0, 1, 2]
-    exact = similarity.cosine_topk(emb, qids, k=10).collect()
-    approx = similarity.lsh_bucket_topk(emb, qids, k=10).collect()
-    ex = {(r["query_id"], r["vec_id"]) for r in exact}
-    ap = {(r["query_id"], r["vec_id"]) for r in approx}
-    recall = len(ex & ap) / len(ex)
-    assert recall >= 0.6, f"LSH recall {recall}"
-    assert not math.isnan(recall)
-
-
-def test_ann_highdim_plane_broadcast(spark, monkeypatch):
-    """dim=768 switches the LSH bucket step to the pandas-UDF closure
-    path: identical results to the literal-SQL path on the same planes,
+def test_near_dup_highdim_plane_broadcast(spark, monkeypatch):
+    """dim=768 switches the near-dup bucket step to the pandas-UDF closure
+    path: identical pairs to the literal-SQL path on the same planes,
     with plan text that stays O(1) in dim instead of inlining
     n_tables*bits*dim float literals."""
     import numpy as np
@@ -103,7 +86,10 @@ def test_ann_highdim_plane_broadcast(spark, monkeypatch):
 
     rng = np.random.default_rng(77)
     dim, n = 768, 200
-    rows = [(i, rng.standard_normal(dim).astype("float32").tolist()) for i in range(n)]
+    vecs = rng.standard_normal((n, dim))
+    # plant near-dups: every 20th vector is a jittered copy of its predecessor
+    vecs[1::20] = vecs[::20] + 0.05 * rng.standard_normal((n // 20, dim))
+    rows = [(i, v.astype("float32").tolist()) for i, v in enumerate(vecs)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     # keep the distributed plan inspectable: localization (the default)
@@ -111,12 +97,12 @@ def test_ann_highdim_plane_broadcast(spark, monkeypatch):
     # persisted-passthrough branch for this plan-size test
     monkeypatch.setattr(similarity, "LOCALIZE_MAX_ROWS", -1)
 
-    kw = dict(k=10, n_tables=4, bits=4, dim=dim, seed=13)
-    udf_df = similarity.lsh_bucket_topk(emb, [0, 1], **kw)
+    kw = dict(threshold=0.9, n_tables=4, bits=4, dim=dim, seed=13)
+    udf_df = similarity.embedding_near_dup_pairs(emb, **kw)
     udf_rows = sorted(map(tuple, udf_df.collect()))
 
     monkeypatch.setattr(similarity, "PLANE_LITERAL_MAX_DIM", 10_000)
-    lit_df = similarity.lsh_bucket_topk(emb, [0, 1], **kw)
+    lit_df = similarity.embedding_near_dup_pairs(emb, **kw)
     lit_rows = sorted(map(tuple, lit_df.collect()))
     assert udf_rows == lit_rows and len(udf_rows) > 0
 

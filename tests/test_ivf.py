@@ -63,6 +63,34 @@ def test_prebuilt_assignment_reuse(spark):
     assert _key(one_call) == _key(reused)
 
 
+def test_one_call_keeps_callers_cached_index(spark):
+    """Spark keys caches by plan, so a one-call query whose assignment
+    equals a caller's persisted ivf_assign frame reads that cache. It
+    must leave it cached (else every later prebuilt= query silently
+    recomputes the assignment) and, with no caller cache, release the
+    one it made."""
+    emb = make_embeddings(spark, 200, dim=16)
+    jsc = spark.sparkContext._jsc
+    for cell_udf in (False, True):
+        before = jsc.getPersistentRDDs().size()
+        similarity.ivf_topk(
+            emb, [0, 1], k=5, n_cells=8, n_probe=2, cell_udf=cell_udf
+        ).collect()
+        assert jsc.getPersistentRDDs().size() == before, cell_udf
+
+        idx = similarity.ivf_assign(emb, n_cells=8, cell_udf=cell_udf)
+        idx[0].persist().count()
+        one_call = similarity.ivf_topk(
+            emb, [0, 1], k=5, n_cells=8, n_probe=2, cell_udf=cell_udf
+        ).collect()
+        assert idx[0].storageLevel.useMemory, cell_udf
+        reused = similarity.ivf_topk(
+            emb, [0, 1], k=5, n_probe=2, cell_udf=cell_udf, prebuilt=idx
+        ).collect()
+        idx[0].unpersist()
+        assert _key(one_call) == _key(reused), cell_udf
+
+
 def test_persisted_index_prunes_partitions(spark, tmp_path):
     """write_ivf_index -> read_ivf_index -> query: results match the
     in-memory path AND the scan carries PartitionFilters on the probed

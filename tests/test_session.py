@@ -32,3 +32,46 @@ def test_driver_heap_fits_host(spark, monkeypatch):
     assert 0 < _bytes(driver_memory()) <= total // 2
     monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
     assert driver_memory() == "3g"
+
+
+def test_pyfiles_zip_imports_standalone(tmp_path):
+    """The ``scripts/make_pyfiles.py`` zip (what ``spark-submit
+    --py-files`` ships) is self-contained: a fresh interpreter with only
+    the zip on its path imports the package from it and parses and
+    tokenizes like the checkout (a data file the zip missed would fail
+    here)."""
+    import os
+    import subprocess
+    import sys
+
+    from searchengine_spark.analyzer import analyzer_version, get_analyzer
+    from searchengine_spark.plans.parser import parse_query
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    zip_path = str(tmp_path / "searchengine_spark.zip")
+    subprocess.run(
+        [sys.executable, os.path.join(repo, "scripts", "make_pyfiles.py"), zip_path],
+        check=True, capture_output=True,
+    )
+    query, text = "#and(running.title #near/2(cats dogs))", "The Running Cats"
+    child = (
+        "import searchengine_spark\n"
+        "from searchengine_spark.analyzer import analyzer_version, get_analyzer\n"
+        "from searchengine_spark.plans.parser import parse_query\n"
+        "print(searchengine_spark.__file__)\n"
+        f"print(repr(parse_query({query!r}, analyzer='english')))\n"
+        f"print(get_analyzer('english').tokens({text!r}))\n"
+        "print(analyzer_version('english'))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYTHONPATH"] = zip_path
+    out = subprocess.run(
+        [sys.executable, "-c", child], cwd=tmp_path, env=env,
+        check=True, capture_output=True, text=True,
+    ).stdout.splitlines()
+    assert out[0].startswith(zip_path + os.sep), out[0]
+    assert out[1:] == [
+        repr(parse_query(query, analyzer="english")),
+        str(get_analyzer("english").tokens(text)),
+        analyzer_version("english"),
+    ]
