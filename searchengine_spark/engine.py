@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, functions as F
 from searchengine_spark.analyzer import get_analyzer
 from searchengine_spark.index.build import InvertedIndex
 from searchengine_spark.operators.topk import attach_ext_ids, topk, topk_grouped
-from searchengine_spark.plans.ast import SopNode
+from searchengine_spark.plans.ast import SopNode, TermNode
 from searchengine_spark.plans.compiler import Compiler
 from searchengine_spark.plans.models import make_model
 from searchengine_spark.plans.parser import QueryParser
@@ -31,6 +31,11 @@ class SearchEngine:
             default_field="body" if "body" in self.fields else self.fields[0],
         )
         self._compilers: dict = {}
+        # (term, field) -> (df, ctf) is model-independent: ONE cache
+        # shared by every compiler this engine creates and by
+        # ``term_stats``, so repeated terms across searches, models and
+        # operators never re-run the driver-side stats collect
+        self._stats_cache: dict = {}
 
     # ------------------------------------------------------------------
 
@@ -38,19 +43,19 @@ class SearchEngine:
         return make_model(model, **params) if isinstance(model, str) else model
 
     def compiler(self, model) -> Compiler:
-        key = model
-        if key not in self._compilers:
+        if model not in self._compilers:
             comp = Compiler(self.index, model)
-            # (term, field) -> (df, ctf) is model-independent: share ONE
-            # cache across every compiler this engine creates, so
-            # repeated terms across searches/models never re-run the
-            # driver-side stats collect (per-query fixed-cost trim,
-            # VERDICT r3 item 9)
-            if not hasattr(self, "_stats_cache"):
-                self._stats_cache = {}
             comp.term_stats = self._stats_cache
-            self._compilers[key] = comp
-        return self._compilers[key]
+            self._compilers[model] = comp
+        return self._compilers[model]
+
+    def term_stats(self, terms, field: str) -> dict[str, tuple[int, int]]:
+        """term -> (df, ctf) in ``field``, (0, 0) when absent: the
+        compiler's bucket-pruned prefetch runs for the terms the shared
+        cache lacks (any model's compiler — the stats are the same)."""
+        node = SopNode("sum", tuple(TermNode(t, field) for t in terms))
+        self.compiler(make_model("bm25")).prefetch_term_stats(node)
+        return {t: self._stats_cache[(t, field)] for t in terms}
 
     def parse(self, query: str, model) -> object:
         """Wrap with the model default op, parse + optimize -> AST or None."""

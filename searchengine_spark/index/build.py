@@ -15,8 +15,9 @@ Layout (chosen for 100 TB scale, not translated from the reference):
 - ``term_stats`` — per (term, field): ``df long, ctf long`` (InvList.java
   header equivalents), broadcast-joined at query time.
 - ``doc_stats``  — per (doc_id, field): ``doc_len int`` (Idx.getFieldLength).
-- ``meta``       — corpus scalars: n_docs, per-field doc_count / sum_len /
-  avg_len, analyzer name.
+- ``meta``       — the commit (meta.json): corpus scalars (n_docs,
+  per-field doc_count / sum_len / avg_len, analyzer name) and the live
+  generations (``segs``; see "Layout v4" below).
 
 Skew note: posting rows are produced entirely task-locally (one
 mapInPandas pass per field — a doc's postings never cross an exchange),
@@ -28,6 +29,8 @@ stopword-grade terms cannot blow a single reducer.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
 import shutil
@@ -289,26 +292,42 @@ def build_index(
 
 
 # ---------------------------------------------------------------------------
-# Layout v3: the one writer of the persisted tables
+# Layout v4: immutable generations, one commit
 # ---------------------------------------------------------------------------
 #
-# Every table is a set of ``seg=`` generation dirs: ``base`` from
-# ``write_index`` or a major compaction, ``bLO_HI`` from a minor
-# compaction of delta batches LO..HI. The term-keyed tables (postings,
-# term_stats) are also partitioned by ``bucket = pmod(xxhash64(term), n)``
-# so term scans and stats lookups prune to 1/n of the files. df/ctf are
-# sums over disjoint doc sets, so ``read_index`` folds term_stats
-# generations with a vocab-sized aggregate and nobody rewrites base data
-# to add a delta.
+# Every table is a set of ``seg=S`` generation dirs. The term-keyed
+# tables (postings, term_stats) nest them in ``bucket=B`` dirs, with
+# ``bucket = pmod(xxhash64(term), n)``, so term scans and stats lookups
+# prune to 1/n of the files. Every mutation follows one rule:
+#
+# - write: ``write_tables`` writes the mutation's tables as NEW seg dirs,
+#   named deterministically from the operation and its input
+#   (``w<digest>`` for ``write_index``, ``bLO_HI`` for a minor compaction
+#   of delta batches LO..HI, ``m<digest>`` for a major compaction), so a
+#   replayed write overwrites only its own dirs;
+# - commit: ``write_meta`` replaces meta.json atomically; its ``segs``
+#   list names the live generations;
+# - read: ``read_table`` reads exactly the named segs;
+# - clean up: the commit then deletes every seg dir that neither it nor
+#   the commit it replaced names, so a reader opened before a commit
+#   keeps working until the next one.
+#
+# df/ctf are sums over disjoint doc sets, so ``read_index`` folds the
+# term_stats generations with a vocab-sized aggregate and nobody
+# rewrites a generation to add a delta.
 
+LAYOUT = 4
 TERM_TABLES = ("postings", "term_stats")
 DOC_TABLES = ("doc_stats", "docs")
 
 
+def seg_name(prefix: str, *inputs) -> str:
+    """Deterministic generation name for an operation and its input."""
+    return prefix + hashlib.sha1("|".join(map(str, inputs)).encode()).hexdigest()[:12]
+
+
 def _dir_parquet_bytes(root: str) -> int:
-    """Total parquet bytes under ``root`` (recursive — seg subdirs)."""
-    if not os.path.isdir(root):
-        return 0
+    """Total parquet bytes under ``root``."""
     total = 0
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
@@ -329,24 +348,71 @@ def _write_json(path: str, obj: dict, indent: int | None = None) -> None:
     os.replace(tmp, path)
 
 
-def write_manifests(path: str, buckets, fp: str, wall: float, compacted: bool = False) -> None:
-    """Per-bucket lineage entries (input fingerprint, bytes, wall seconds);
-    ``write_index`` resume skips buckets whose entry matches its fingerprint."""
+def write_manifests(path: str, buckets, seg: str, fp: str, wall: float,
+                    compacted: bool = False) -> None:
+    """Per-bucket lineage entries (input fingerprint, bytes of generation
+    ``seg``, wall seconds); ``write_index`` resume skips buckets whose
+    entry matches its fingerprint."""
     os.makedirs(os.path.join(path, "_manifest"), exist_ok=True)
     for b in buckets:
         _write_json(_bucket_entry(path, int(b)), {
             "bucket": int(b),
             "fingerprint": fp,
             "status": "ok",
-            "bytes": _dir_parquet_bytes(os.path.join(path, "postings", f"bucket={b}")),
+            "bytes": _dir_parquet_bytes(os.path.join(path, "postings", f"bucket={b}", f"seg={seg}")),
             "wall_sec_total_job": wall,
             "compacted": compacted,
         })
 
 
+def read_meta(path: str) -> dict:
+    """The committed meta.json; ``{}`` for a dir without one (an empty index)."""
+    try:
+        with open(os.path.join(path, "meta.json")) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
+
+
+def check_layout(meta: dict, path: str) -> None:
+    """Reject an index written in an older layout."""
+    if int(meta.get("layout") or 1) < LAYOUT:
+        raise ValueError(
+            f"index at {path} has layout {meta.get('layout')} but this code "
+            f"reads layout {LAYOUT} (generations named by meta.json). "
+            "Rebuild the index with write_index."
+        )
+
+
 def write_meta(path: str, meta: dict) -> None:
-    """Commit ``meta.json`` — the last step of every write and compaction."""
+    """Commit: replace ``meta.json`` atomically — the only commit of every
+    write and compaction; ``meta["segs"]`` names the live generations.
+    Then delete every seg dir named by neither this commit nor the one
+    it replaced."""
+    replaced = read_meta(path).get("segs") or []
     _write_json(os.path.join(path, "meta.json"), meta, indent=1)
+    _drop_segs(path, set(meta["segs"]) | set(replaced))
+
+
+def _drop_segs(path: str, keep: set) -> None:
+    for table in TERM_TABLES + DOC_TABLES:
+        nest = "bucket=*" if table in TERM_TABLES else ""
+        for d in glob.glob(os.path.join(path, table, nest, "seg=*")):
+            if d.rsplit("seg=", 1)[1] not in keep:
+                shutil.rmtree(d, ignore_errors=True)
+
+
+def read_table(spark: SparkSession, path: str, table: str, segs) -> DataFrame:
+    """The rows of ``table`` in generations ``segs`` (no ``seg`` column)."""
+    root = os.path.join(path, table)
+    if table == "docs":
+        # the named dirs only: docs' columns vary by generation, and
+        # schema inference must not pick a file of a dead one
+        dirs = [os.path.join(root, f"seg={s}") for s in segs]
+        df = spark.read.option("basePath", root).parquet(*[d for d in dirs if os.path.isdir(d)])
+    else:
+        df = spark.read.parquet(root).where(F.col("seg").isin(list(segs)))
+    return df.drop("seg")
 
 
 def write_tables(
@@ -368,8 +434,8 @@ def write_tables(
     df/ctf of ``postings``. ``doc_stats`` and ``docs`` go to ``seg=S``.
     Every write is a dynamic partition overwrite: only the partition dirs
     present in the data are replaced, so a replayed write of the same seg
-    is idempotent and other generations are never touched. A caller that
-    replaces a table wholesale removes the old dirs first.
+    is idempotent and other generations are never touched. Nothing is
+    live until ``write_meta`` names ``seg``.
     """
     # Salt scales with the token count (from field_stats — no extra
     # job): partitioning by bucket alone funnels a stopword-heavy
@@ -443,17 +509,26 @@ def write_index(
     fingerprint: str | None = None,
     resume: bool = True,
 ) -> dict:
-    """Persist the index as the ``seg=base`` generation of layout v3,
-    with a lineage manifest per bucket.
+    """Persist the index as one new generation, with a lineage manifest
+    per bucket, and commit it with ``write_meta``.
 
-    Resume: buckets whose manifest entry matches the fingerprint keep
-    their postings and term_stats; the doc-keyed tables are kept when
-    meta.json records the fingerprint. The rest is rewritten in one
-    ``write_tables`` call (a filter on the bucket column, not one job per
-    bucket). Whatever is not kept is removed first, so no generation of
-    an earlier index at ``path`` survives the rewrite.
+    The generation is named from the fingerprint and the generations it
+    replaces, so a rerun after a failed write reuses its own dirs.
+    Resume skips each bucket whose manifest matches the fingerprint and
+    whose seg dir exists; the rest is written in one ``write_tables``
+    call (a filter on the bucket column, not one job per bucket). A
+    rerun of a committed write (meta.json records the fingerprint)
+    keeps that generation and its doc-keyed tables, and rewrites in it
+    only the buckets whose manifest is missing.
     """
     fp = fingerprint or f"ndocs={index.n_docs}|analyzer={index.analyzer}|fields={','.join(index.fields)}"
+    meta = read_meta(path)  # the commit this write replaces
+    live = meta.get("segs") or []
+    # a committed write of the same input is this generation; rewriting
+    # its doc-keyed tables would also self-clobber when `index` was read
+    # from this very path
+    sides_done = resume and meta.get("fingerprint") == fp and len(live) == 1
+    seg = live[0] if sides_done else seg_name("w", fp, *live)
 
     def _fingerprint(file: str) -> str | None:
         try:
@@ -462,38 +537,25 @@ def write_index(
         except (json.JSONDecodeError, OSError):
             return None
 
-    done = [b for b in range(buckets) if resume and _fingerprint(_bucket_entry(path, b)) == fp]
+    done = [
+        b for b in range(buckets)
+        if resume and _fingerprint(_bucket_entry(path, b)) == fp
+        and os.path.isdir(os.path.join(path, "postings", f"bucket={b}", f"seg={seg}"))
+    ]
     todo = [b for b in range(buckets) if b not in done]
-    # the doc-keyed tables are complete once meta.json records the
-    # fingerprint; rewriting them would also self-clobber when `index`
-    # was read from this very path
-    sides_done = resume and _fingerprint(os.path.join(path, "meta.json")) == fp
     result = {
         "buckets": buckets, "skipped": done, "written": todo, "fingerprint": fp,
         "sides_skipped": sides_done,
     }
-
-    # dynamic overwrite replaces only the partitions written: drop the
-    # rest of what is not kept first (an earlier index's other buckets
-    # and minor-compaction generations)
-    for table in TERM_TABLES:
-        root = os.path.join(path, table)
-        for d in os.listdir(root) if os.path.isdir(root) else ():
-            if d.startswith("bucket=") and int(d.split("=", 1)[1]) not in done:
-                shutil.rmtree(os.path.join(root, d))
-    if not sides_done:
-        for table in DOC_TABLES:
-            shutil.rmtree(os.path.join(path, table), ignore_errors=True)
-
     result["phase_sec"] = write_tables(
-        path, "base", buckets, index.field_stats,
+        path, seg, buckets, index.field_stats,
         postings=index.postings if todo else None,
         term_stats=index.term_stats if todo else None,
         doc_stats=None if sides_done else index.doc_stats,
         docs=None if sides_done else index.docs,
         only_buckets=todo if done else None,
     )
-    write_manifests(path, todo, fp, result["phase_sec"].get("postings", 0.0))
+    write_manifests(path, todo, seg, fp, result["phase_sec"].get("postings", 0.0))
     write_meta(path, {
         "n_docs": index.n_docs,
         "field_stats": index.field_stats,
@@ -505,14 +567,17 @@ def write_index(
         "fields": list(index.fields),
         "buckets": buckets,
         "fingerprint": fp,
-        "layout": 3,
+        "layout": LAYOUT,
+        "segs": [seg],
     })
     return result
 
 
 def read_index(spark: SparkSession, path: str) -> InvertedIndex:
+    """Open the generations the committed meta.json names."""
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
+    check_layout(meta, path)
     persisted_ver = meta.get("analyzer_version")
     if persisted_ver is not None:
         current = analyzer_version(meta["analyzer"])
@@ -524,40 +589,20 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
                 "tokenization would silently mismatch the persisted terms. "
                 "Rebuild the index (or check out the matching code)."
             )
-    postings = spark.read.parquet(os.path.join(path, "postings"))
-    if "seg" in postings.columns:
-        postings = postings.drop("seg")  # LSM generation dir — internal
-
-    def _side(name: str) -> DataFrame:
-        # LSM layouts partition side tables (bucket / seg) so streaming
-        # compaction can append instead of rewrite; helpers are internal
-        df = spark.read.parquet(os.path.join(path, name))
-        for helper in ("bucket", "seg"):
-            if helper in df.columns:
-                df = df.drop(helper)
-        return df
-
-    def _term_stats() -> DataFrame:
-        df = spark.read.parquet(os.path.join(path, "term_stats"))
-        if "seg" in df.columns:
-            # df/ctf are sums — fold the append-only segments at read
-            # time (vocab-sized agg; minor compaction never rewrites
-            # the base stats segment). ``bucket`` is functionally
-            # determined by term, so keeping it in the keys changes no
-            # group — and lets stats prefetch prune partition dirs.
-            keys = ["bucket", "term", "field"] if "bucket" in df.columns else ["term", "field"]
-            return df.groupBy(*keys).agg(
-                F.sum("df").cast("long").alias("df"),
-                F.sum("ctf").cast("long").alias("ctf"),
-            )
-        return df
-
+    segs = meta["segs"]
+    # df/ctf are sums: fold the generations at read time. ``bucket`` is
+    # functionally determined by term, so keeping it in the keys changes
+    # no group — and lets the stats prefetch prune partition dirs.
+    term_stats = read_table(spark, path, "term_stats", segs).groupBy("bucket", "term", "field").agg(
+        F.sum("df").cast("long").alias("df"),
+        F.sum("ctf").cast("long").alias("ctf"),
+    )
     return InvertedIndex(
         spark=spark,
-        postings=postings,
-        term_stats=_term_stats(),
-        doc_stats=_side("doc_stats"),
-        docs=_side("docs"),
+        postings=read_table(spark, path, "postings", segs),
+        term_stats=term_stats,
+        doc_stats=read_table(spark, path, "doc_stats", segs),
+        docs=read_table(spark, path, "docs", segs),
         n_docs=meta["n_docs"],
         field_stats=meta["field_stats"],
         analyzer=meta["analyzer"],

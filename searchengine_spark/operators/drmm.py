@@ -167,15 +167,10 @@ def histogram_features(
 
 def idf_softmax(engine: SearchEngine, query_terms: list[str], field: str = "body") -> np.ndarray:
     """softmax(ln((N-df+0.5)/(df+0.5))) (RetrievalModelDRMM.java:139-155)."""
-    idx = engine.index
-    keys = [f"{t}\x00{field}" for t in query_terms]
-    rows = idx.term_stats.where(
-        F.concat_ws("\x00", F.col("term"), F.col("field")).isin(keys)
-    ).collect()
-    dfs = {r["term"]: int(r["df"]) for r in rows}
-    n = float(idx.n_docs)
+    stats = engine.term_stats(query_terms, field)
+    n = float(engine.index.n_docs)
     idfs = np.array(
-        [math.log((n - dfs.get(t, 0) + 0.5) / (dfs.get(t, 0) + 0.5)) for t in query_terms]
+        [math.log((n - stats[t][0] + 0.5) / (stats[t][0] + 0.5)) for t in query_terms]
     )
     e = np.exp(idfs - idfs.max())
     return e / e.sum()

@@ -65,13 +65,7 @@ def _field_features(engine: SearchEngine, terms: list[str], field: str,
     avg = idx.avg_len(field)
     collen = float(idx.sum_len(field))
 
-    keys = [f"{t}\x00{field}" for t in terms]
-    stats = {
-        (r["term"]): (int(r["df"]), int(r["ctf"]))
-        for r in idx.term_stats.where(
-            F.concat_ws("\x00", F.col("term"), F.col("field")).isin(keys)
-        ).collect()
-    }
+    stats = engine.term_stats(terms, field)
 
     posts = idx.postings.where(
         (F.col("field") == field) & F.col("term").isin(list(terms))
@@ -99,7 +93,7 @@ def _field_features(engine: SearchEngine, terms: list[str], field: str,
     overlap = F.lit(0)
     k_inv = 1.0 / len(terms)
     for i, t in enumerate(terms):
-        df_t, ctf_t = stats.get(t, (0, 0))
+        df_t, ctf_t = stats[t]
         idf = max(0.0, math.log((n - df_t + 0.5) / (df_t + 0.5)))
         tf = F.coalesce(F.col(f"tf{i}"), F.lit(0)).cast("double")
         bm25_expr = bm25_expr + F.when(

@@ -66,9 +66,15 @@ def candidate_term_scores(
         .where(~F.col("term").rlike("[.,]"))
     )
     # present part: Σ tf/(dl+μ)·s_d ; smoothing scalar S0 = Σ s_d/(dl_d+μ)
-    s0 = sum(
-        float(s) / (engine_doc_len(idx, d, f) + mu) for d, s in top_docs
-    )
+    # over the top docs' lengths (one small collect; 0 when the field
+    # is empty)
+    dls = {
+        int(r["doc_id"]): float(r["doc_len"])
+        for r in idx.doc_stats.where((F.col("field") == f) & F.col("doc_id").isin(doc_ids))
+        .select("doc_id", "doc_len")
+        .collect()
+    }
+    s0 = sum(float(s) / (dls.get(int(d), 0.0) + mu) for d, s in top_docs)
     present = posts.groupBy("term").agg(
         F.sum(
             F.col("tf").cast("double")
@@ -88,26 +94,6 @@ def candidate_term_scores(
         ).alias("fb_score"),
     )
     return scored
-
-
-_DOC_LEN_CACHE: dict = {}
-
-
-def engine_doc_len(idx, doc_id: int, field: str) -> float:
-    """Driver-side doc length lookup for the (tiny) feedback doc set."""
-    key = (id(idx), doc_id, field)
-    if len(_DOC_LEN_CACHE) > 100_000:  # bound driver memory in long sessions
-        _DOC_LEN_CACHE.clear()
-    if key not in _DOC_LEN_CACHE:
-        row = (
-            idx.doc_stats.where(
-                (F.col("doc_id") == int(doc_id)) & (F.col("field") == field)
-            )
-            .select("doc_len")
-            .first()
-        )
-        _DOC_LEN_CACHE[key] = float(row["doc_len"]) if row else 0.0
-    return _DOC_LEN_CACHE[key]
 
 
 def expand(

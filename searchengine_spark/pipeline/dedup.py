@@ -170,31 +170,26 @@ def _hashed_sig(sh: DataFrame, n_hashes: int) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = DEFAULT_HASHES,
-    n_bands: int = DEFAULT_BANDS,
-    n: int = 3,
+def _minhash_lsh(
+    df: DataFrame, threshold: float, id_col: str, text_col: str,
+    n_hashes: int, n_bands: int, n: int, candidates,
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard) via banded MinHash.
+    """The banded-MinHash pipeline around one candidate generator:
+    shingles -> ``_hashed_sig`` -> one ``(id, band, bkey)`` row per band;
+    ``candidates(banded)`` returns an ``(id_a, id_b)`` frame and the
+    frames it cached; then each candidate is verified with exact
+    shingle Jaccard (no LSH false positives — false negatives only).
 
-    Candidates = pairs agreeing on >=1 band (equi-join on band key);
-    each candidate is verified with exact shingle Jaccard so the output
-    has no LSH false positives (false negatives only — standard).
-
-    Scale discipline in the verify stage: the banded self-join carries
-    ONLY (id, band, bkey); exact Jaccard runs on 8-byte shingle hashes
-    (not the raw shingle strings), and only for docs that appear in some
+    Scale discipline in the verify stage: the band join carries ONLY
+    (id, band, bkey); exact Jaccard runs on 8-byte shingle hashes (not
+    the raw shingle strings), and only for docs that appear in some
     candidate pair (semi-join first) — the corpus-wide shingle payload
     never enters a shuffle.
     """
     rows_per_band = n_hashes // n_bands
     sh = _with_shingles(df, id_col, text_col, n)
-    # persist: the banded union reads sig once per band and the LSH
-    # self-join reads the union from BOTH sides — without the cache the
+    # persist: the banded union reads sig once per band and the band
+    # join reads the union from BOTH sides — without the cache the
     # explode+md5+groupBy signature pass re-runs up to 2*n_bands times
     # (measured 8x at 400k pages: 377s -> 86s total from this line).
     # ONE compact cache (ids + hashed shingles + signature) — see
@@ -205,22 +200,14 @@ def minhash_lsh_pairs(
     for b in range(n_bands):
         cols = [F.col(f"mh_{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
         bands.append(
-            sig.select(
-                "id", F.lit(b).alias("band"), band_key(cols).alias("bkey")
-            )
+            sig.select("id", F.lit(b).alias("band"), band_key(cols).alias("bkey"))
         )
     banded = bands[0]
     for fr in bands[1:]:
         banded = banded.unionByName(fr)
+    cand, cached = candidates(banded)
+    cand = cand.persist()
 
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), on=["band", "bkey"])
-        .where(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-        .persist()
-    )
     cand_ids = (
         cand.select(F.col("id_a").alias("id"))
         .unionByName(cand.select(F.col("id_b").alias("id")))
@@ -245,12 +232,40 @@ def minhash_lsh_pairs(
     # frames; only the small cached result outlives the call
     verified = verified.persist()
     verified.count()
-    for fr in (sig, cand):
+    for fr in (sig, *cached, cand):
         try:
             fr.unpersist()
         except Exception:
             pass
     return verified
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    threshold: float = 0.5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_hashes: int = DEFAULT_HASHES,
+    n_bands: int = DEFAULT_BANDS,
+    n: int = 3,
+) -> DataFrame:
+    """Near-duplicate pairs (id_a < id_b, jaccard) via banded MinHash.
+
+    Candidates = pairs agreeing on >=1 band (equi-join on band key),
+    verified by ``_minhash_lsh``.
+    """
+
+    def candidates(banded: DataFrame):
+        pairs = (
+            banded.alias("x")
+            .join(banded.alias("y"), on=["band", "bkey"])
+            .where(F.col("x.id") < F.col("y.id"))
+            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+            .distinct()
+        )
+        return pairs, []
+
+    return _minhash_lsh(df, threshold, id_col, text_col, n_hashes, n_bands, n, candidates)
 
 
 def minhash_lsh_star_edges(
@@ -276,61 +291,24 @@ def minhash_lsh_star_edges(
     tests/test_clustering.py). This is the standard production
     MinHash-dedup topology (one linear pass, no quadratic bucket).
     """
-    rows_per_band = n_hashes // n_bands
-    sh = _with_shingles(df, id_col, text_col, n)
-    sig = _hashed_sig(sh, n_hashes).persist()
 
-    bands = []
-    for b in range(n_bands):
-        cols = [F.col(f"mh_{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        bands.append(
-            sig.select("id", F.lit(b).alias("band"), band_key(cols).alias("bkey"))
+    def candidates(banded: DataFrame):
+        banded = banded.persist()  # read by the bucket agg and the join
+        reps = (
+            banded.groupBy("band", "bkey")
+            .agg(F.min("id").alias("id_a"), F.count(F.lit(1)).alias("__m"))
+            .where(F.col("__m") > 1)
+            .drop("__m")
         )
-    banded = bands[0]
-    for fr in bands[1:]:
-        banded = banded.unionByName(fr)
-    banded = banded.persist()
-
-    reps = (
-        banded.groupBy("band", "bkey")
-        .agg(F.min("id").alias("id_a"), F.count(F.lit(1)).alias("__m"))
-        .where(F.col("__m") > 1)
-        .drop("__m")
-    )
-    cand = (
-        banded.join(reps, on=["band", "bkey"])
-        .where(F.col("id") != F.col("id_a"))
-        .select("id_a", F.col("id").alias("id_b"))
-        .distinct()
-        .persist()
-    )
-
-    cand_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .unionByName(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    shh = sig.join(cand_ids, on="id", how="leftsemi").select("id", "__hh")
-    a = shh.select(F.col("id").alias("id_a"), F.col("__hh").alias("__hh_a"))
-    b_ = shh.select(F.col("id").alias("id_b"), F.col("__hh").alias("__hh_b"))
-    verified = (
-        cand.join(a, "id_a")
-        .join(b_, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(_jaccard(F.col("__hh_a"), F.col("__hh_b")), 6).alias("jaccard"),
+        edges = (
+            banded.join(reps, on=["band", "bkey"])
+            .where(F.col("id") != F.col("id_a"))
+            .select("id_a", F.col("id").alias("id_b"))
+            .distinct()
         )
-        .where(F.col("jaccard") >= threshold)
-    )
-    verified = verified.persist()
-    verified.count()
-    for fr in (sig, banded, cand):
-        try:
-            fr.unpersist()
-        except Exception:
-            pass
-    return verified
+        return edges, [banded]
+
+    return _minhash_lsh(df, threshold, id_col, text_col, n_hashes, n_bands, n, candidates)
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:

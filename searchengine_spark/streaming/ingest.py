@@ -5,32 +5,30 @@ asks for a *checkpoint-resumable* build. Batch resume is handled by
 ``index.build.write_index`` manifests; this module adds the streaming
 path: new page files land in a directory, a Structured Streaming job
 tokenizes each micro-batch and appends **delta posting segments** (plus
-delta doc_stats / docs side segments); a compaction merges deltas into
+delta doc_stats / docs side segments); a compaction folds deltas into
 the index. Exactly-once comes from the streaming checkpoint
 (file-source offsets) + idempotent per-batch output paths
 (overwrite-by-batch-id) + a ``folded_through`` batch watermark in
 meta.json that makes the fold itself replay-safe.
 
-Compaction is LSM-shaped. Layout v3 has one writer,
-``index.build.write_tables``: ``write_index`` calls it for the
-``seg=base`` generation and both compactions below call it too; this
-module only decides what goes into a generation and patches meta.json.
+Both compactions follow the index's one commit rule (``index.build``):
+write the new generation through ``write_tables`` as new ``seg=`` dirs,
+then commit it with ``write_meta``, whose ``segs`` list names the live
+generations. A dir without meta.json is an empty index; its first
+compaction is a minor fold onto nothing.
 
-- **minor** (the default): the delta is re-bucketed and lands as NEW
-  ``bucket=B/seg=bLO_HI`` partition dirs under postings, and as
-  append-only ``seg=`` dirs under term_stats / doc_stats / docs. df/ctf
-  are additive across segments, so ``read_index`` folds them with a
-  vocab-sized aggregate — **no base byte is read or rewritten**. Cost
-  scales with DELTA size. (A per-bucket base rewrite was measured first
-  and rejected: natural text deltas touch every term bucket, so
-  "rewrite touched buckets" degenerates to a full rewrite plus
-  overhead.)
-- **major** (``full_rewrite=True``, or any pre-v3 layout): fold base +
-  all segments + deltas into a fresh ``seg=base`` generation, written
-  to a scratch root and swapped in table by table —
-  bounding segment-count growth and compacting row groups. This is the
-  periodic background pass; at 100 TB it runs rarely and off-peak,
-  while minor compactions keep the live index fresh per crawl cycle.
+- **minor** (the default): the delta lands as generation
+  ``seg=bLO_HI`` (delta batches LO..HI) of every table, postings
+  re-bucketed with the index's partitioner; the commit appends it to
+  ``segs``. df/ctf are additive across generations, so ``read_index``
+  folds them with a vocab-sized aggregate — **no live byte is read or
+  rewritten**. Cost scales with DELTA size.
+- **major** (``full_rewrite=True``): fold every live generation and the
+  deltas into one fresh generation ``seg=m<digest>``, committed as the
+  only live one — bounding segment-count growth and compacting row
+  groups. This is the periodic background pass; at 100 TB it runs
+  rarely and off-peak, while minor compactions keep the live index
+  fresh per crawl cycle.
 
 Why not rewrite only touched buckets? Measured at 20k pages / 10%
 delta: every one of 32 buckets was touched (zipf vocab ⇒ each doc
@@ -40,18 +38,22 @@ rewrite. Segment append is the only shape whose cost is O(delta).
 
 from __future__ import annotations
 
-import json
+import contextlib
+import glob
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from searchengine_spark.index.build import (
-    DOC_TABLES,
+    LAYOUT,
     POSTING_ROW_SCHEMA,
-    TERM_TABLES,
     _doc_postings_gen,
+    check_layout,
     field_stats_of,
+    read_meta,
+    read_table,
+    seg_name,
     write_manifests,
     write_meta,
     write_tables,
@@ -129,21 +131,6 @@ def start_ingest(
     return writer.start()
 
 
-def _folded_through(index_dir: str) -> int:
-    """Highest delta batch id already folded into the index (-1: none).
-
-    Makes the fold replay-safe: if a crash lands between the meta write
-    and the delta deletion and NEW batches then arrive, the next
-    compaction must skip the already-folded batch dirs or their docs
-    would be double-counted (segments cannot be deduped after the fact
-    the way the old merge-rewrite could)."""
-    meta_path = os.path.join(index_dir, "meta.json")
-    if not os.path.exists(meta_path):
-        return -1
-    with open(meta_path) as fh:
-        return int(json.load(fh).get("folded_through", -1))
-
-
 def _delta_union(
     spark: SparkSession, index_dir: str, name: str, after: int = -1
 ) -> DataFrame | None:
@@ -157,19 +144,15 @@ def _delta_union(
 
 
 def read_live_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Union base postings (all folded segments) with un-folded deltas.
+    """Union the committed generations' postings with un-folded deltas.
 
     Replay-safe: delta batch dirs at or below the meta ``folded_through``
-    watermark are already inside the base segments and are excluded."""
+    watermark are already inside a committed generation and are excluded."""
+    meta = read_meta(index_dir)
     frames = []
-    base = os.path.join(index_dir, "postings")
-    if os.path.isdir(base):
-        fr = spark.read.parquet(base)
-        for helper in ("bucket", "seg"):
-            if helper in fr.columns:
-                fr = fr.drop(helper)
-        frames.append(fr)
-    delta = _delta_union(spark, index_dir, "delta", after=_folded_through(index_dir))
+    if meta.get("segs"):
+        frames.append(read_table(spark, index_dir, "postings", meta["segs"]).drop("bucket"))
+    delta = _delta_union(spark, index_dir, "delta", after=int(meta.get("folded_through", -1)))
     if delta is not None:
         frames.append(delta)
     if not frames:
@@ -180,148 +163,122 @@ def read_live_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     return out
 
 
-def _swap(tmp: str, final: str) -> None:
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    os.replace(tmp, final)
-
-
-def _batch_ids(index_dir: str) -> list[int]:
-    """Delta batch ids on disk, ascending."""
+def _batch_ids(index_dir: str, after: int) -> list[int]:
+    """Delta batch ids above ``after`` on disk, ascending."""
     root = os.path.join(index_dir, "delta")
     if not os.path.isdir(root):
         return []
-    return sorted(int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("batch="))
+    ids = (int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("batch="))
+    return sorted(i for i in ids if i > after)
 
 
 def _delta_frames(
     spark: SparkSession, index_dir: str, after: int
 ) -> tuple[DataFrame, DataFrame, DataFrame] | None:
     """The un-folded delta batches' (postings, doc_stats, docs), or None
-    without a delta. Deltas written before the side segments existed
-    fall back to what their postings carry: lengths from ``doc_len``,
-    the doc_id string as ``ext_id``."""
+    without a delta."""
     postings = _delta_union(spark, index_dir, "delta", after)
     if postings is None:
         return None
-    doc_stats = _delta_union(spark, index_dir, "delta_doc_stats", after)
-    if doc_stats is None:
-        doc_stats = postings.select("doc_id", "field", "doc_len").distinct()
-    docs = _delta_union(spark, index_dir, "delta_docs", after)
-    if docs is None:
-        docs = postings.select("doc_id").distinct().select(
-            "doc_id", F.col("doc_id").cast("string").alias("ext_id")
-        )
     return (
         postings,
-        doc_stats.select("doc_id", "field", "doc_len"),
-        docs.select("doc_id", "ext_id"),
+        _delta_union(spark, index_dir, "delta_doc_stats", after).select("doc_id", "field", "doc_len"),
+        _delta_union(spark, index_dir, "delta_docs", after).select("doc_id", "ext_id"),
     )
 
 
 def compact(spark: SparkSession, index_dir: str, full_rewrite: bool = False) -> dict:
-    """Fold delta segments into the index (idempotent, replay-safe).
+    """Fold the delta segments into the index (idempotent, replay-safe).
 
-    - plain delta-only / unbucketed dir: merged postings rewritten
-      term-partitioned (no side tables to maintain);
-    - persisted **layout v3**: MINOR seg-append — the delta lands as
-      new ``seg=`` partition dirs, base bytes are never read or
-      rewritten, and cost scales with delta size (the 100-TB
-      requirement; see module docstring for why per-bucket rewrite was
-      rejected);
-    - ``full_rewrite=True`` or a pre-v3 layout: MAJOR fold of base +
-      segments + deltas into a fresh ``seg=base`` generation (also the
-      upgrade path — the next compaction runs minor).
+    - MINOR (the default): the delta becomes one new generation appended
+      to the live ones; no live byte is read or rewritten, and cost
+      scales with delta size (the 100-TB requirement; see the module
+      docstring for why per-bucket rewrite was rejected). A dir without
+      meta.json is an empty index, and this is its first generation;
+    - ``full_rewrite=True``: MAJOR fold of every live generation and
+      the deltas into one fresh generation.
 
-    Returns ``{"mode", "phases"}``; ``phases`` holds the seconds per
-    table written (``write_tables``), empty when nothing was written.
+    Either way the new generation goes live in one ``write_meta``
+    commit; the folded delta batches are deleted after it. Returns
+    ``{"mode", "phases"}``; ``phases`` holds the seconds per table
+    written (``write_tables``), empty when nothing was written.
     """
-    meta_path = os.path.join(index_dir, "meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if full_rewrite or int(meta.get("layout") or 1) < 3:
-            info = {"mode": "major", "phases": _compact_major(spark, index_dir, meta)}
-        else:
-            info = {"mode": "minor", "phases": _compact_minor(spark, index_dir, meta)}
+    meta = read_meta(index_dir)
+    if meta:
+        check_layout(meta, index_dir)
+    if meta and full_rewrite:
+        info = {"mode": "major", "phases": _compact_major(spark, index_dir, meta)}
     else:
-        _compact_plain(spark, index_dir)
-        info = {"mode": "plain", "phases": {}}
+        info = {"mode": "minor", "phases": _compact_minor(spark, index_dir, meta)}
+    # only the folded batches: one that landed during the compaction
+    # waits for the next one
+    folded = int(read_meta(index_dir).get("folded_through", -1))
     for name in ("delta", "delta_doc_stats", "delta_docs"):
-        d = os.path.join(index_dir, name)
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+        root = os.path.join(index_dir, name)
+        for d in glob.glob(os.path.join(root, "batch=*")):
+            if int(d.rsplit("=", 1)[1]) <= folded:
+                shutil.rmtree(d)
+        with contextlib.suppress(OSError):  # absent, or a new batch
+            os.rmdir(root)
     return info
 
 
-def _compact_plain(spark: SparkSession, index_dir: str) -> None:
-    live = read_live_postings(spark, index_dir)
-    tmp = os.path.join(index_dir, "postings.compact")
-    live.repartition("term").sortWithinPartitions("term", "field", "doc_id").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    _swap(tmp, os.path.join(index_dir, "postings"))
-
-
 def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
-    """Seg-append fold: delta -> new LSM segments, base untouched.
+    """Seg-append fold: delta -> one new generation, live ones untouched.
 
     Per compaction:
 
     - the delta's four tables land as generation ``seg=bLO_HI`` through
-      ``write_tables``: postings re-bucketed with the base's partitioner
-      (bucket pruning on term scans keeps working, and the base seg
-      files in each bucket are not read); term_stats as the delta's
-      df/ctf, which ``read_index`` folds with the base's at read time;
-      doc_stats / docs are append-only by construction;
-    - meta.json: n_docs / field_stats patched arithmetically from the
-      delta side segments (no full-table agg); ``folded_through``
-      advances to the highest folded batch id; per-bucket lineage
-      manifests refreshed for buckets that gained a segment.
+      ``write_tables``: postings re-bucketed with the index's partitioner
+      (bucket pruning on term scans keeps working, and no live file in
+      any bucket is read); term_stats as the delta's df/ctf, which
+      ``read_index`` folds with the live ones at read time; doc_stats /
+      docs are append-only by construction;
+    - the meta.json commit appends the seg to ``segs``, patches n_docs /
+      field_stats arithmetically from the delta side segments (no
+      full-table agg) and advances ``folded_through`` to the highest
+      folded batch id; per-bucket lineage manifests are refreshed for
+      buckets that gained a segment.
 
-    Crash-safe: deltas are deleted only after the meta commit; a re-run
-    recomputes the same seg name from the same batch-id range and
-    dynamic-overwrites the same partition dirs; once meta commits,
-    ``folded_through`` excludes the folded batches even if new ones
-    have arrived alongside the stale dirs.
+    Crash-safe: a re-run before the commit recomputes the same seg name
+    from the same batch-id range and overwrites its own dirs; once meta
+    commits, ``folded_through`` excludes the folded batches even if new
+    ones have arrived alongside the stale dirs.
     """
     buckets = int(meta.get("buckets") or 16)
     folded_through = int(meta.get("folded_through", -1))
-    batch_ids = [b for b in _batch_ids(index_dir) if b > folded_through]
+    batch_ids = _batch_ids(index_dir, folded_through)
     if not batch_ids:
         return {}  # everything already folded; caller deletes the stale dirs
     seg = f"b{batch_ids[0]}_{batch_ids[-1]}"
+    segs = list(meta.get("segs") or [])
 
     postings, doc_stats, docs = _delta_frames(spark, index_dir, folded_through)
-    # align to the base docs schema (metadata cols -> null for delta)
-    base_docs_schema = spark.read.parquet(os.path.join(index_dir, "docs")).schema
-    aligned = docs.select(
-        *[
-            F.col(f.name) if f.name in docs.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in base_docs_schema.fields
-            if f.name != "seg"
-        ]
-    )
+    if segs:
+        # align to the live docs schema (metadata cols -> null for delta)
+        docs = docs.select(
+            *[
+                F.col(f.name) if f.name in docs.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in read_table(spark, index_dir, "docs", segs).schema.fields
+            ]
+        )
     doc_stats = doc_stats.persist()
     try:
         delta_fs = field_stats_of(doc_stats)
-        phases = write_tables(index_dir, seg, buckets, delta_fs, postings, doc_stats, aligned)
+        phases = write_tables(index_dir, seg, buckets, delta_fs, postings, doc_stats, docs)
     finally:
         doc_stats.unpersist()
     n_new = docs.select("doc_id").distinct().count()
 
     # touched buckets come from the dirs the write just created — no
     # extra full-delta distinct pass just to learn them. An empty list
-    # (all-empty-body delta) still falls through to the meta patch: the
+    # (all-empty-body delta) still falls through to the commit: the
     # docs/doc_stats segments above were written and n_docs must advance.
-    post_dir = os.path.join(index_dir, "postings")
-    touched = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(post_dir)
-        if d.startswith("bucket=")
-        and os.path.isdir(os.path.join(post_dir, d, f"seg={seg}"))
-    )
+    touched = [
+        b for b in range(buckets)
+        if os.path.isdir(os.path.join(index_dir, "postings", f"bucket={b}", f"seg={seg}"))
+    ]
     field_stats = dict(meta.get("field_stats") or {})
     for fld, delta in delta_fs.items():
         cur = dict(field_stats.get(fld) or {"doc_count": 0, "sum_len": 0})
@@ -331,10 +288,14 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
         field_stats[fld] = cur
     n_docs = int(meta.get("n_docs") or 0) + n_new
     n_compactions = int(meta.get("compactions") or 0) + 1
+    # a fold onto nothing records the delta's fields; the analyzer is
+    # unknown to the delta
+    meta.setdefault("analyzer", None)
+    meta.setdefault("fields", sorted(field_stats))
 
     fp = (
-        f"compact{n_compactions}|ndocs={n_docs}|analyzer={meta.get('analyzer')}"
-        f"|fields={','.join(meta.get('fields', []))}"
+        f"compact{n_compactions}|ndocs={n_docs}|analyzer={meta['analyzer']}"
+        f"|fields={','.join(meta['fields'])}"
     )
     meta.update(
         {
@@ -343,75 +304,61 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
             "fingerprint": fp,
             "buckets": buckets,
             "compactions": n_compactions,
-            "layout": 3,
+            "layout": LAYOUT,
             "folded_through": batch_ids[-1],
-            # observability: which minor segments the base carries (a
-            # major compaction folds them away and resets the list)
-            "segs": (list(meta.get("segs") or []) + [seg])[-64:],
+            "segs": segs + [seg],
         }
     )
     write_meta(index_dir, meta)
-    write_manifests(index_dir, touched, fp, phases["postings"], compacted=True)
+    write_manifests(index_dir, touched, seg, fp, phases["postings"], compacted=True)
     return phases
 
 
 def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> dict:
-    """Fold base + every minor segment + un-folded deltas into a fresh
-    ``seg=base`` generation (layout v3). Bounds segment-count growth,
-    re-sorts and re-compresses row groups, and upgrades pre-v3 layouts.
-    This is the heavyweight periodic pass — minor compactions are the
+    """Fold every live generation + un-folded deltas into one fresh
+    generation ``seg=m<digest>`` (named from the generations and batches
+    folded), committed as the only live one. Bounds segment-count
+    growth and re-sorts and re-compresses row groups. This is the
+    heavyweight periodic pass — minor compactions are the
     per-crawl-cycle path."""
     buckets = int(meta.get("buckets") or 16)
     folded_through = int(meta.get("folded_through", -1))
+    segs = meta["segs"]
+    batch_ids = _batch_ids(index_dir, folded_through)
+    seg = seg_name("m", *segs, *batch_ids)
 
-    # doc-keyed tables: base ∪ delta. Docs are append-only; the dedup
-    # keeps one row per key. docs keeps every base metadata column
+    # doc-keyed tables: live ∪ delta. Docs are append-only; the dedup
+    # keeps one row per key. docs keeps every live metadata column
     # (n_chars/lang/... — getAttribute reads them); delta rows carry
-    # only (doc_id, ext_id). Flat legacy and seg layouts both read.
-    doc_stats = spark.read.parquet(os.path.join(index_dir, "doc_stats")).select(
-        "doc_id", "field", "doc_len"
-    )
-    docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-    if "seg" in docs.columns:
-        docs = docs.drop("seg")
+    # only (doc_id, ext_id).
+    doc_stats = read_table(spark, index_dir, "doc_stats", segs).select("doc_id", "field", "doc_len")
+    docs = read_table(spark, index_dir, "docs", segs)
     delta = _delta_frames(spark, index_dir, folded_through)
     if delta is not None:
         doc_stats = doc_stats.unionByName(delta[1])
         docs = docs.unionByName(delta[2], allowMissingColumns=True)
 
-    # one generation into a scratch root, then swapped in table by table
-    tmp = os.path.join(index_dir, "_compact")
-    shutil.rmtree(tmp, ignore_errors=True)
     doc_stats = doc_stats.dropDuplicates(["doc_id", "field"]).persist()
     try:
         field_stats = field_stats_of(doc_stats, meta.get("fields", []))
         phases = write_tables(
-            tmp, "base", buckets, field_stats,
+            index_dir, seg, buckets, field_stats,
             read_live_postings(spark, index_dir), doc_stats, docs.dropDuplicates(["doc_id"]),
         )
     finally:
         doc_stats.unpersist()
     # count from the merged docs table — doc_stats excludes zero-length
     # docs, so counting its distinct ids would undercount N (and skew idf)
-    n_docs = max(
-        int(meta.get("n_docs") or 0),
-        spark.read.parquet(os.path.join(tmp, "docs")).count(),
-    )
-    # highest delta batch folded by this pass (if any deltas existed)
-    folded_through = max([folded_through, *_batch_ids(index_dir)])
-
-    for table in TERM_TABLES + DOC_TABLES:
-        _swap(os.path.join(tmp, table), os.path.join(index_dir, table))
-    shutil.rmtree(tmp)
+    n_docs = max(int(meta.get("n_docs") or 0), read_table(spark, index_dir, "docs", [seg]).count())
 
     n_compactions = int(meta.get("compactions") or 0) + 1
     fp = f"compact|ndocs={n_docs}|analyzer={meta.get('analyzer')}|fields={','.join(meta.get('fields', []))}"
     meta.update(
         {"n_docs": n_docs, "field_stats": field_stats, "fingerprint": fp,
          "buckets": buckets,
-         "compactions": n_compactions, "layout": 3,
-         "folded_through": folded_through, "segs": []}
+         "compactions": n_compactions, "layout": LAYOUT,
+         "folded_through": max([folded_through, *batch_ids]), "segs": [seg]}
     )
     write_meta(index_dir, meta)
-    write_manifests(index_dir, range(buckets), fp, phases["postings"], compacted=True)
+    write_manifests(index_dir, range(buckets), seg, fp, phases["postings"], compacted=True)
     return phases

@@ -360,25 +360,26 @@ def test_incremental_compact_touches_only_delta_buckets(spark, tmp_path):
     idx0 = build_index(docs, fields={"body": "text"}, ext_id_col="url", analyzer="simple")
     write_index(idx0, idx_dir, buckets=buckets)
     meta0 = json.load(open(os.path.join(idx_dir, "meta.json")))
-    assert meta0["layout"] == 3
+    assert meta0["layout"] == 4 and len(meta0["segs"]) == 1
 
     # the persisted layout: four tables, the manifests and meta.json
     # (checked after the write and after each compaction mode below)
     layout = ["_manifest", "doc_stats", "docs", "meta.json", "postings", "term_stats"]
     write_keys = {
         "n_docs", "field_stats", "analyzer", "analyzer_version", "fields",
-        "buckets", "fingerprint", "layout",
+        "buckets", "fingerprint", "layout", "segs",
     }
-    compact_keys = write_keys | {"compactions", "folded_through", "segs"}
+    compact_keys = write_keys | {"compactions", "folded_through"}
     assert sorted(os.listdir(idx_dir)) == layout
     assert set(meta0) == write_keys
 
     def _base_seg_state(table: str) -> dict:
-        """(path -> (size, mtime)) of every base-generation parquet file."""
+        """(path -> (size, mtime)) of every parquet file of the
+        generation write_index committed."""
         out = {}
         root = os.path.join(idx_dir, table)
         for dirpath, _dirs, files in os.walk(root):
-            if "seg=base" not in dirpath:
+            if f"seg={meta0['segs'][0]}" not in dirpath:
                 continue
             for f in files:
                 if f.endswith(".parquet"):
@@ -470,7 +471,9 @@ def test_incremental_compact_touches_only_delta_buckets(spark, tmp_path):
     assert ingest.compact(spark, idx_dir, full_rewrite=True)["mode"] == "major"
     assert sorted(os.listdir(idx_dir)) == layout
     meta3 = json.load(open(os.path.join(idx_dir, "meta.json")))
-    assert set(meta3) == compact_keys and meta3["segs"] == []
+    # one fresh generation replaces every minor segment
+    assert set(meta3) == compact_keys and len(meta3["segs"]) == 1
+    assert meta3["segs"][0] not in meta2["segs"]
     idx3 = read_index(spark, idx_dir)
     assert idx3.n_docs == 31
     assert SearchEngine(idx3).search(term, model="bm25", k=5).collect() == got

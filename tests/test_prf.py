@@ -57,3 +57,33 @@ def test_expand_bm25_uses_wsum(eng):
     assert fb_query.startswith("#wsum(")
     rows = eng.search(expanded, model=BM25(), k=5, with_ext_id=False).collect()
     assert len(rows) == 5
+
+
+def test_feedback_doc_lengths_belong_to_the_engines_index(spark):
+    """S0 = Σ s_d/(dl_d+μ) reads the doc lengths of the engine's own
+    index: two indexes with the same doc ids but other lengths, the
+    first freed before the second is made, each score their own."""
+    from searchengine_spark.index.build import InvertedIndex, build_index
+
+    params = prf.ExpandParams(fb="indri", fb_docs=2, fb_terms=10**6, fb_mu=100.0)
+    top = [(0, 0.9), (1, 0.4)]
+    corpora = (["cat dog", "cat"], ["cat dog eel eel eel fox", "cat gnu gnu gnu"])
+    handles = []
+    for texts in corpora:
+        docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+        handles.append(vars(build_index(docs, fields={"body": "text"}, analyzer="simple")).copy())
+    got = []
+    for fields in handles:
+        idx = InvertedIndex(**fields)
+        eng = SearchEngine(idx)
+        got.append({
+            r["term"]: r["fb_score"]
+            for r in prf.candidate_term_scores(eng, top, params).collect()
+        })
+        del eng, idx  # gone before the next index is made
+    for texts, scores in zip(corpora, got):
+        py = orc.PyIndex({d: {"body": t.split()} for d, t in enumerate(texts)})
+        expected = dict(orc.expand_terms(py, top, 10**6, 100.0))
+        assert set(scores) == set(expected)
+        for t, s in expected.items():
+            assert scores[t] == pytest.approx(s, rel=1e-9), (texts, t)
