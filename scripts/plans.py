@@ -6,7 +6,8 @@ Each section shows the `explain("formatted")` output the design claims
 rest on: pushed term filters + constant bucket partition pruning on a
 persisted index, the single-scan flat scorers (BM25 fold, Indri map
 reassembly, positional co-location) for one query and for a batch, the
-tree scorer for a nested query, and the pipeline operators. Regenerate after compiler changes so the
+tree scorer for a nested query, a whole flat ``search`` ending in one
+top-k collect, and the pipeline operators. Regenerate after compiler changes so the
 committed evidence matches the code.
 """
 
@@ -47,20 +48,6 @@ def formatted(df, max_lines: int = 200) -> str:
             + lines[-39:]
         )
     return "\n".join(lines)
-
-
-def _stats_prefetch_frame(idx):
-    """The exact frame Compiler.prefetch_term_stats collects."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.functions.xxh64 import term_bucket
-
-    terms = ["cerim", "dirim"]
-    cond = F.col("term").isin(terms) & F.col("field").isin(["body"])
-    if "bucket" in idx.term_stats.columns and idx.n_buckets:
-        ids = sorted({term_bucket(t, idx.n_buckets) for t in terms})
-        cond = F.col("bucket").isin(ids) & cond
-    return idx.term_stats.where(cond).select("term", "field", "df", "ctf")
 
 
 def _ivf_plan_frame(spark):
@@ -135,9 +122,9 @@ def main() -> None:
             ),
         ),
         (
-            "Stats prefetch (bucket-pruned term_stats segment fold)",
-            "The compiler's one-collect-per-batch stats prefetch: literal bucket-IN prunes the term_stats partition dirs (the segment-fold groupBy keeps `bucket` in its keys so the filter pushes through the aggregate); term/field filters push to the parquet scan.",
-            _stats_prefetch_frame(idx),
+            "Flat BM25 search (one top-k collect)",
+            "`eng.search('cerim dirim barim', k=10)` end to end: df/ctf come from the driver-side term_stats lookup (no plan, no job), so the plan is the flat scorer, the broadcast ext-id join and ONE `TakeOrderedAndProject` at the root — no range exchange for the final rank order.",
+            eng.search("cerim dirim barim", model="bm25", k=10),
         ),
         (
             "IVF-flat ANN over the persisted cell-partitioned index",

@@ -34,7 +34,7 @@ class SearchEngine:
         # (term, field) -> (df, ctf) is model-independent: ONE cache
         # shared by every compiler this engine creates and by
         # ``term_stats``, so repeated terms across searches, models and
-        # operators never re-run the driver-side stats collect
+        # operators never repeat the term-dictionary lookup
         self._stats_cache: dict = {}
 
     # ------------------------------------------------------------------
@@ -51,8 +51,8 @@ class SearchEngine:
 
     def term_stats(self, terms, field: str) -> dict[str, tuple[int, int]]:
         """term -> (df, ctf) in ``field``, (0, 0) when absent: the
-        compiler's bucket-pruned prefetch runs for the terms the shared
-        cache lacks (any model's compiler — the stats are the same)."""
+        compiler's prefetch looks up the terms the shared cache lacks
+        (any model's compiler — the stats are the same)."""
         node = SopNode("sum", tuple(TermNode(t, field) for t in terms))
         self.compiler(make_model("bm25")).prefetch_term_stats(node)
         return {t: self._stats_cache[(t, field)] for t in terms}
@@ -79,7 +79,12 @@ class SearchEngine:
         with_ext_id: bool = True,
         **params,
     ) -> DataFrame:
-        """Top-k (doc_id[, ext_id], score, rank), reference tie-break."""
+        """Top-k (doc_id[, ext_id], score, rank), reference tie-break.
+
+        Ranks are unique and at most ``k``, so the closing
+        ``orderBy(rank).limit(k)`` keeps every row and plans as one
+        TakeOrderedAndProject collect — a bare ``orderBy`` would add a
+        range exchange and its sampling job."""
         m = self._model(model, **params)
         ast = self.parse(query, m)
         out = self.compiler(m).compile(ast)
@@ -89,7 +94,7 @@ class SearchEngine:
             ranked = attach_ext_ids(ranked, self.index.docs).select(
                 "doc_id", "ext_id", "score", "rank"
             )
-        return ranked.orderBy("rank")
+        return ranked.orderBy("rank").limit(k)
 
     def run_batch(
         self,
@@ -119,11 +124,10 @@ class SearchEngine:
                 continue  # empty query (QryEval.java:131)
             parsed.append((qid, ast))
         if parsed:
-            # ONE stats collect for every term of every query in the
-            # batch — the scorers and per-query compile()s then hit the
-            # compiler's stats cache instead of each running its own
-            # driver-side job (SCALING.json showed per-query fixed costs
-            # bounding batch scaling at 1.9x from 1->4 cores)
+            # ONE term-dictionary lookup for every term of every query
+            # in the batch — the scorers and per-query compile()s then
+            # hit the compiler's stats cache instead of each looking up
+            # their own terms
             comp.prefetch_term_stats(SopNode("sum", tuple(a for _, a in parsed)))
 
         flat: dict = {}

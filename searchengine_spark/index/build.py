@@ -13,7 +13,8 @@ Layout (chosen for 100 TB scale, not translated from the reference):
   encoding makes the duplication cheap; the join it removes would shuffle
   the full candidate set per query.
 - ``term_stats`` — per (term, field): ``df long, ctf long`` (InvList.java
-  header equivalents), broadcast-joined at query time.
+  header equivalents), the term dictionary: queries look df/ctf up
+  driver-side (``InvertedIndex.lookup_term_stats``).
 - ``doc_stats``  — per (doc_id, field): ``doc_len int`` (Idx.getFieldLength).
 - ``meta``       — the commit (meta.json): corpus scalars (n_docs,
   per-field doc_count / sum_len / avg_len, analyzer name) and the live
@@ -39,9 +40,11 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dc_field
 
 import pandas as pd
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from searchengine_spark.analyzer import analyzer_version, get_analyzer
+from searchengine_spark.functions.xxh64 import term_bucket
 
 DEFAULT_FIELDS = ("body",)
 
@@ -124,6 +127,10 @@ class InvertedIndex:
     # term scans add a constant-foldable ``pmod(xxhash64(term), n) =
     # bucket`` predicate so only 1/n of the files are read.
     n_buckets: int | None = None
+    # set by ``read_index``: the index dir and the committed generations
+    # this handle reads — one fixed generation set
+    path: str | None = None
+    segs: tuple = ()
 
     # build-time tokenize caches (freed by materialize) and per-query
     # derived-operator caches (bounded by trim_temps) are SEPARATE lists:
@@ -172,6 +179,65 @@ class InvertedIndex:
                 fr.unpersist()
             except Exception:
                 pass
+
+    def lookup_term_stats(self, pairs) -> dict[tuple[str, str], tuple[int, int]]:
+        """(term, field) -> (df, ctf) for each of ``pairs``, (0, 0) when
+        absent — the reference's term-dictionary lookup
+        (Idx.getDocFreq/getTotalTermFreq).
+
+        A persisted index reads, driver-side with pyarrow and no Spark
+        job, only the term_stats files of the pairs' buckets in the
+        handle's generations, and sums df/ctf over the generations as
+        ``read_index``'s fold does. An index never written runs one
+        filtered collect on ``term_stats``."""
+        out = dict.fromkeys(pairs, (0, 0))
+        if not out:
+            return out
+        terms = sorted({t for t, _ in out})
+        flds = sorted({f for _, f in out})
+        if self.path is None:
+            rows = (
+                self.term_stats.where(F.col("term").isin(terms) & F.col("field").isin(flds))
+                .select("term", "field", "df", "ctf")
+                .collect()
+            )
+        else:
+            rows = self._read_term_stats(terms, flds)
+        for term, fld, df, ctf in rows:
+            if (term, fld) in out:
+                d0, c0 = out[(term, fld)]
+                out[(term, fld)] = (d0 + int(df), c0 + int(ctf))
+        return out
+
+    def _read_term_stats(self, terms: list[str], flds: list[str]) -> list[tuple]:
+        """(term, field, df, ctf) rows of ``terms`` x ``flds`` in each of
+        the handle's generations. Raises, as a Spark scan of the handle
+        would, when a generation is gone (a handle that outlived two
+        commits); every generation has a ``docs`` dir, while a bucket's
+        term_stats dir exists only where the generation has terms."""
+        for s in self.segs:
+            if not os.path.isdir(os.path.join(self.path, "docs", f"seg={s}")):
+                raise FileNotFoundError(
+                    f"generation {s} of the index at {self.path} is gone: a "
+                    "later commit replaced it. Reopen the index with read_index."
+                )
+        files = []
+        for b in sorted({term_bucket(t, self.n_buckets) for t in terms}):
+            for s in self.segs:
+                d = os.path.join(self.path, "term_stats", f"bucket={b}", f"seg={s}")
+                if os.path.isdir(d):
+                    files += [
+                        os.path.join(d, f) for f in sorted(os.listdir(d))
+                        if f.endswith(".parquet") and not f.startswith(("_", "."))
+                    ]
+        if not files:
+            return []
+        cols = ["term", "field", "df", "ctf"]
+        tbl = pads.dataset(files, format="parquet").to_table(
+            columns=cols,
+            filter=pads.field("term").isin(terms) & pads.field("field").isin(flds),
+        )
+        return list(zip(*(tbl.column(c).to_pylist() for c in cols)))
 
     def avg_len(self, fld: str) -> float:
         return self.field_stats[fld]["avg_len"]
@@ -590,9 +656,10 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
                 "Rebuild the index (or check out the matching code)."
             )
     segs = meta["segs"]
-    # df/ctf are sums: fold the generations at read time. ``bucket`` is
-    # functionally determined by term, so keeping it in the keys changes
-    # no group — and lets the stats prefetch prune partition dirs.
+    # df/ctf are sums: fold the generations at read time (the frame
+    # PRF reads; query df/ctf come from ``lookup_term_stats``). ``bucket``
+    # is functionally determined by term, so keeping it in the keys
+    # changes no group — and lets a term filter prune partition dirs.
     term_stats = read_table(spark, path, "term_stats", segs).groupBy("bucket", "term", "field").agg(
         F.sum("df").cast("long").alias("df"),
         F.sum("ctf").cast("long").alias("ctf"),
@@ -608,6 +675,8 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
         analyzer=meta["analyzer"],
         fields=tuple(meta["fields"]),
         n_buckets=int(meta["buckets"]),
+        path=path,
+        segs=tuple(segs),
     )
 
 

@@ -36,10 +36,13 @@ floating-point results are reproducible and bit-comparable with the
 ANSI-SQL oracle.
 
 Corpus scalars (N, avg/sum field length) and per-term df/ctf are
-resolved driver-side — one small filtered collect on ``term_stats``
-per query (the reference does the same per-term index lookups,
-Idx.java:74-77) — and embedded as literals, keeping the scoring
-expressions inside whole-stage codegen. Derived operators (NEAR/...)
+resolved driver-side and embedded as literals, keeping the scoring
+expressions inside whole-stage codegen. df/ctf come from one
+term-dictionary lookup per query (``prefetch_term_stats`` ->
+``InvertedIndex.lookup_term_stats``; the reference does the same
+per-term index lookups, Idx.java:74-77): for a persisted index a
+pyarrow read of the query buckets' ``term_stats`` files in the
+committed generations, with no Spark job. Derived operators (NEAR/...)
 need their df/ctf computed from the merged list, exactly like the
 reference's materialize-then-score discipline (QryIop.java:174-190):
 that costs one small Spark action on the (persisted) derived frame,
@@ -239,7 +242,7 @@ class Compiler:
         return F.col("bucket").isin(ids)
 
     # ------------------------------------------------------------------
-    # stats prefetch: ONE small filtered collect for all terms in a query
+    # stats prefetch: ONE term-dictionary lookup for all terms in a query
     # ------------------------------------------------------------------
 
     def _collect_terms(self, node, out):
@@ -250,29 +253,15 @@ class Compiler:
                 self._collect_terms(a, out)
 
     def prefetch_term_stats(self, node) -> None:
+        """df/ctf of every (term, field) under ``node`` into
+        ``term_stats``: one ``InvertedIndex.lookup_term_stats`` for the
+        pairs the cache lacks (driver-side, no Spark job, for a
+        persisted index)."""
         wanted = set()
         self._collect_terms(node, wanted)
-        missing = [tf for tf in wanted if tf not in self.term_stats]
-        if not missing:
-            return
-        # term-IN + field-IN push down to the parquet scan (dictionary
-        # + min/max row-group skipping); a literal bucket-IN prunes the
-        # stats table's partition dirs outright — the old concat_ws key
-        # filter was exact but unpushable, so every prefetch read the
-        # ENTIRE vocab-sized stats table. Over-selection (term x field
-        # cross pairs) is a constant factor; the lookup dict below keeps
-        # only the wanted pairs.
-        terms = sorted({t for t, _ in missing})
-        flds = sorted({f for _, f in missing})
-        fr = self.index.term_stats
-        cond = F.col("term").isin(terms) & F.col("field").isin(flds)
-        if "bucket" in fr.columns and self.index.n_buckets:
-            ids = sorted({term_bucket(t, self.index.n_buckets) for t in terms})
-            cond = F.col("bucket").isin(ids) & cond
-        rows = fr.where(cond).select("term", "field", "df", "ctf").collect()
-        found = {(r["term"], r["field"]): (int(r["df"]), int(r["ctf"])) for r in rows}
-        for tf in missing:
-            self.term_stats[tf] = found.get(tf, (0, 0))
+        missing = wanted - self.term_stats.keys()
+        if missing:
+            self.term_stats.update(self.index.lookup_term_stats(missing))
 
     # ------------------------------------------------------------------
     # flat scans: how per-query constants reach the postings rows

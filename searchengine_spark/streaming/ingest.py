@@ -15,7 +15,9 @@ Both compactions follow the index's one commit rule (``index.build``):
 write the new generation through ``write_tables`` as new ``seg=`` dirs,
 then commit it with ``write_meta``, whose ``segs`` list names the live
 generations. A dir without meta.json is an empty index; its first
-compaction is a minor fold onto nothing.
+compaction is a minor fold onto nothing, and commits the analyzer the
+delta batches name; every compaction rejects batches of another
+analyzer than the index's.
 
 - **minor** (the default): the delta lands as generation
   ``seg=bLO_HI`` (delta batches LO..HI) of every table, postings
@@ -40,15 +42,18 @@ from __future__ import annotations
 
 import contextlib
 import glob
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from searchengine_spark.analyzer import analyzer_version
 from searchengine_spark.index.build import (
     LAYOUT,
     POSTING_ROW_SCHEMA,
     _doc_postings_gen,
+    _write_json,
     check_layout,
     field_stats_of,
     read_meta,
@@ -60,6 +65,8 @@ from searchengine_spark.index.build import (
 )
 
 PAGE_SCHEMA = "doc_id long, url string, warc_ts timestamp, html binary, text string, lang string"
+# per delta batch: the analyzer that tokenized it (meta.json's keys)
+BATCH_ANALYZER = "_analyzer.json"
 
 
 def _batch_rows(docs: DataFrame, field: str = "body", src_col: str = "text",
@@ -87,7 +94,10 @@ def start_ingest(
     Per batch writes three idempotent segments (overwrite-by-batch-id):
     ``delta/batch=N`` postings, ``delta_doc_stats/batch=N`` field
     lengths, ``delta_docs/batch=N`` (doc_id, ext_id) — everything
-    ``compact`` needs to fold the docs into the base side tables.
+    ``compact`` needs to fold the docs into the base side tables — and
+    ``delta/batch=N/_analyzer.json``, the analyzer name and version the
+    batch was tokenized with (the first compaction of a streamed-only
+    index commits them; a later one checks them against meta.json).
 
     Returns the StreamingQuery. ``available_now=True`` drains what's
     there and stops (the batch-oriented test/ops mode); continuous mode
@@ -100,6 +110,7 @@ def start_ingest(
     for k, v in (reader_options or {}).items():
         reader = reader.option(k, v)
     stream = reader.parquet(input_dir)
+    tokenized_by = {"analyzer": analyzer, "analyzer_version": analyzer_version(analyzer)}
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         rows = _batch_rows(batch_df, field=field, analyzer=analyzer).persist()
@@ -118,6 +129,7 @@ def start_ingest(
             ).write.mode("overwrite").parquet(
                 os.path.join(index_dir, "delta_docs", f"batch={batch_id}")
             )
+            _write_json(os.path.join(out, BATCH_ANALYZER), tokenized_by)
         finally:
             rows.unpersist()
 
@@ -170,6 +182,32 @@ def _batch_ids(index_dir: str, after: int) -> list[int]:
         return []
     ids = (int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("batch="))
     return sorted(i for i in ids if i > after)
+
+
+def _adopt_analyzer(index_dir: str, batch_ids: list[int], meta: dict) -> None:
+    """Check that delta batches ``batch_ids`` were tokenized with the
+    index's analyzer (``ValueError`` otherwise: their terms would not
+    match the index's or the queries'), and record it in ``meta`` when
+    meta.json names none — the first compaction of a streamed-only
+    index. A batch without a record names no analyzer."""
+    seen = {}
+    if meta.get("analyzer"):
+        seen["meta.json"] = (meta["analyzer"], meta.get("analyzer_version"))
+    for b in batch_ids:
+        try:
+            with open(os.path.join(index_dir, "delta", f"batch={b}", BATCH_ANALYZER)) as f:
+                rec = json.load(f)
+        except FileNotFoundError:
+            continue
+        seen[f"batch {b}"] = (rec["analyzer"], rec["analyzer_version"])
+    if len(set(seen.values())) > 1:
+        raise ValueError(
+            f"delta batches under {index_dir} were tokenized with another "
+            f"analyzer than the index: {seen}. Re-ingest them with the "
+            "index's analyzer."
+        )
+    if not meta.get("analyzer"):
+        meta["analyzer"], meta["analyzer_version"] = next(iter(seen.values()), (None, None))
 
 
 def _delta_frames(
@@ -252,6 +290,7 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
         return {}  # everything already folded; caller deletes the stale dirs
     seg = f"b{batch_ids[0]}_{batch_ids[-1]}"
     segs = list(meta.get("segs") or [])
+    _adopt_analyzer(index_dir, batch_ids, meta)
 
     postings, doc_stats, docs = _delta_frames(spark, index_dir, folded_through)
     if segs:
@@ -288,9 +327,7 @@ def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
         field_stats[fld] = cur
     n_docs = int(meta.get("n_docs") or 0) + n_new
     n_compactions = int(meta.get("compactions") or 0) + 1
-    # a fold onto nothing records the delta's fields; the analyzer is
-    # unknown to the delta
-    meta.setdefault("analyzer", None)
+    # a fold onto nothing records the delta's fields
     meta.setdefault("fields", sorted(field_stats))
 
     fp = (
@@ -325,6 +362,7 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> dict:
     folded_through = int(meta.get("folded_through", -1))
     segs = meta["segs"]
     batch_ids = _batch_ids(index_dir, folded_through)
+    _adopt_analyzer(index_dir, batch_ids, meta)
     seg = seg_name("m", *segs, *batch_ids)
 
     # doc-keyed tables: live ∪ delta. Docs are append-only; the dedup

@@ -28,10 +28,7 @@ def list_postings(
 ) -> dict:
     """Posting list head for (term, field) with decoded positions
     (InspectIndex -list-postings)."""
-    st = (
-        index.term_stats.where((F.col("term") == term) & (F.col("field") == field))
-        .first()
-    )
+    df, ctf = index.lookup_term_stats([(term, field)])[(term, field)]
     rows = (
         index.postings.where((F.col("term") == term) & (F.col("field") == field))
         .orderBy("doc_id")
@@ -41,8 +38,8 @@ def list_postings(
     return {
         "term": term,
         "field": field,
-        "df": int(st["df"]) if st else 0,
-        "ctf": int(st["ctf"]) if st else 0,
+        "df": df,
+        "ctf": ctf,
         "postings": [
             {
                 "doc_id": int(r["doc_id"]),

@@ -84,10 +84,12 @@ def test_disk_query_matches_memory(spark, disk_index):
 
 
 def test_stats_prefetch_prunes_term_stats_buckets(spark, disk_index):
-    """The compiler's stats prefetch reads the persisted term_stats
-    table with a literal bucket-IN — the scan must show bucket
-    PartitionFilters (the segment-fold groupBy keeps ``bucket`` in its
-    keys precisely so this pruning survives), not a full-vocab read."""
+    """A term-filtered read of the persisted index's ``term_stats``
+    frame (the Spark fold of its generations, which PRF's expansion
+    terms read; query df/ctf come from the driver-side lookup) with a
+    literal bucket-IN — the scan must show bucket PartitionFilters (the
+    segment-fold groupBy keeps ``bucket`` in its keys precisely so this
+    pruning survives), not a full-vocab read."""
     from searchengine_spark.functions.xxh64 import term_bucket
 
     idx, _ = disk_index
