@@ -6,7 +6,6 @@ Spark DataFrame pipeline:
 
 - :mod:`searchengine_spark.analyzer` — vectorized Arrow/pandas tokenizers
   (lowercase, stopword slots, Krovetz-style stemming).
-- :mod:`searchengine_spark.codec` — docID-delta + varbyte position codecs.
 - :mod:`searchengine_spark.index` — inverted-index build (postings, stats,
   checkpoint-resumable bucketed layout, forward index).
 - :mod:`searchengine_spark.plans` — structured-query parser + AST compiler to

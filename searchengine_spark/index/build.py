@@ -6,8 +6,11 @@ Lucene did for it, re-expressed as a Spark job (cf. SURVEY.md §1.4, §7.3).
 Layout (chosen for 100 TB scale, not translated from the reference):
 
 - ``postings``   — one row per (term, field, doc): ``term string, field
-  string, doc_id long, tf int, doc_len int, positions binary``. Positions are
-  docID-delta + varbyte compressed (codec.py). ``doc_len`` is denormalized
+  string, doc_id long, tf int, doc_len int, positions array<int>``. The
+  positions are the ascending token slots of the term in the doc, stored as
+  a plain Parquet list: its dictionary/RLE encoding compresses the small
+  ints, and every reader (merge kernels, ``#SYN``, LeToR) takes the lists
+  as they are, with no codec. ``doc_len`` is denormalized
   onto the posting row so BM25/Indri leaf scoring needs **no join** — the
   whole scorer is a column expression over one scan. Parquet dictionary/RLE
   encoding makes the duplication cheap; the join it removes would shuffle
@@ -18,7 +21,7 @@ Layout (chosen for 100 TB scale, not translated from the reference):
 - ``doc_stats``  — per (doc_id, field): ``doc_len int`` (Idx.getFieldLength).
 - ``meta``       — the commit (meta.json): corpus scalars (n_docs,
   per-field doc_count / sum_len / avg_len, analyzer name) and the live
-  generations (``segs``; see "Layout v4" below).
+  generations (``segs``; see "Layout v5" below).
 
 Skew note: posting rows are produced entirely task-locally (one
 mapInPandas pass per field — a doc's postings never cross an exchange),
@@ -50,7 +53,7 @@ DEFAULT_FIELDS = ("body",)
 
 
 POSTING_ROW_SCHEMA = (
-    "term string, field string, doc_id long, tf int, doc_len int, positions binary"
+    "term string, field string, doc_id long, tf int, doc_len int, positions array<int>"
 )
 
 
@@ -58,14 +61,13 @@ def _doc_postings_gen(analyzer_name: str, fld: str, src_col: str):
     """mapInPandas kernel: one doc in -> its complete posting rows out.
 
     Postings are a per-(doc, term) quantity, so tokenize, position
-    collection, tf, and varbyte encoding all happen inside ONE Arrow
+    collection and tf all happen inside ONE Arrow
     batch pass with NO shuffle — the posexplode->groupBy alternative
     ships one row per token occurrence (~corpus token count) through an
     exchange just to reassemble what each doc already knew. A sentinel
     row (term='') per doc carries doc_len for doc_stats.
     """
     from searchengine_spark.analyzer import get_analyzer
-    from searchengine_spark.codec import encode_positions_many
 
     an = get_analyzer(analyzer_name)
 
@@ -85,7 +87,7 @@ def _doc_postings_gen(analyzer_name: str, fld: str, src_col: str):
                 dids.append(did)
                 tfs.append(0)
                 dls.append(dl)
-                plists.append(())
+                plists.append([])
                 for t, plist in bypos.items():
                     terms.append(t)
                     fields.append(fld)
@@ -93,9 +95,6 @@ def _doc_postings_gen(analyzer_name: str, fld: str, src_col: str):
                     tfs.append(len(plist))
                     dls.append(dl)
                     plists.append(plist)
-            # ONE vectorized varbyte pass for the whole Arrow batch —
-            # per-posting encode_positions was 63% of this kernel
-            poss = encode_positions_many(plists)
             yield pd.DataFrame(
                 {
                     "term": terms,
@@ -103,7 +102,7 @@ def _doc_postings_gen(analyzer_name: str, fld: str, src_col: str):
                     "doc_id": dids,
                     "tf": tfs,
                     "doc_len": dls,
-                    "positions": poss,
+                    "positions": plists,
                 }
             )
 
@@ -300,8 +299,8 @@ def build_index(
     stats_rows = []
     temps = []
     for fld, src in fields.items():
-        # ONE Arrow pass per field: tokenize + position-collect + varbyte
-        # encode inside the task that owns the doc — postings never cross
+        # ONE Arrow pass per field: tokenize + position-collect inside
+        # the task that owns the doc — postings never cross
         # an exchange (the posexplode->groupBy alternative shuffles one
         # row per token occurrence). Sentinel term='' rows carry doc_len.
         rows = docs.select(
@@ -358,8 +357,11 @@ def build_index(
 
 
 # ---------------------------------------------------------------------------
-# Layout v4: immutable generations, one commit
+# Layout v5: immutable generations, one commit
 # ---------------------------------------------------------------------------
+#
+# Since v5 the postings' positions are ``array<int>``; ``check_layout``
+# rejects an index in an older layout.
 #
 # Every table is a set of ``seg=S`` generation dirs. The term-keyed
 # tables (postings, term_stats) nest them in ``bucket=B`` dirs, with
@@ -382,7 +384,7 @@ def build_index(
 # term_stats generations with a vocab-sized aggregate and nobody
 # rewrites a generation to add a delta.
 
-LAYOUT = 4
+LAYOUT = 5
 TERM_TABLES = ("postings", "term_stats")
 DOC_TABLES = ("doc_stats", "docs")
 
@@ -445,7 +447,8 @@ def check_layout(meta: dict, path: str) -> None:
     if int(meta.get("layout") or 1) < LAYOUT:
         raise ValueError(
             f"index at {path} has layout {meta.get('layout')} but this code "
-            f"reads layout {LAYOUT} (generations named by meta.json). "
+            f"reads layout {LAYOUT} (generations named by meta.json, "
+            "positions as array<int>). "
             "Rebuild the index with write_index."
         )
 

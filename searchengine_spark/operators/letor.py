@@ -31,7 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType
 
-from searchengine_spark.codec import decode_positions
 from searchengine_spark.engine import SearchEngine
 
 LETOR_FIELDS = ("body", "title", "url", "inlink")
@@ -40,25 +39,25 @@ FEATURE_COLS = [f"f{i}" for i in range(1, N_FEATURES + 1)]
 
 
 @F.pandas_udf(DoubleType())
-def _pos_std_udf(pos_blobs: pd.Series) -> pd.Series:
+def _pos_std_udf(pos_lists: pd.Series) -> pd.Series:
     """Stddev of query-term positions with the reference's +0.1 smoothing
     (RetrievalModelLeToR.posStd, :98-123)."""
 
-    def calc(blobs):
-        if blobs is None:
+    def calc(lists):
+        if lists is None:
             return None
-        pos = [p for b in blobs if b is not None for p in decode_positions(b)]
+        pos = [p for a in lists for p in a.tolist()]
         n = float(len(pos)) + 0.1
         mean = sum(pos) / n
         var = sum((p - mean) ** 2 for p in pos) / n
         return math.sqrt(var)
 
-    return pos_blobs.map(calc)
+    return pos_lists.map(calc)
 
 
 def _field_features(engine: SearchEngine, terms: list[str], field: str,
                     cand: DataFrame, bm25, indri) -> DataFrame:
-    """(doc_id, bm25_<f>, indri_<f>, overlap_<f>[, posblobs for body])."""
+    """(doc_id, bm25_<f>, indri_<f>, overlap_<f>[, poslists for body])."""
     idx = engine.index
     # corpus stats
     n = float(idx.n_docs)
@@ -76,7 +75,7 @@ def _field_features(engine: SearchEngine, terms: list[str], field: str,
         aggs.append(F.max(F.when(F.col("term") == t, F.col("tf"))).alias(f"tf{i}"))
     aggs.append(F.max("doc_len").alias("dl"))
     if field == "body":
-        aggs.append(F.collect_list("positions").alias("posblobs"))
+        aggs.append(F.collect_list("positions").alias("poslists"))
     pv = posts.groupBy("doc_id").agg(*aggs)
 
     # doc_len for the field even when no query term matches (Indri defaults)
@@ -119,7 +118,7 @@ def _field_features(engine: SearchEngine, terms: list[str], field: str,
         F.when(has_field, overlap.cast("double") / F.lit(float(len(terms)))).alias(
             f"overlap_{field}"
         ),
-        *([F.col("posblobs")] if field == "body" else []),
+        *([F.col("poslists")] if field == "body" else []),
     )
     return out
 
@@ -163,7 +162,7 @@ def featurize(
             F.col(f"overlap_{fld}").alias(f"f{o}"),
         ]
         if fld == "body":
-            cols.append(_pos_std_udf(F.col("posblobs")).alias("f18"))
+            cols.append(_pos_std_udf(F.col("poslists")).alias("f18"))
         out = out.join(ff.select("doc_id", *cols), "doc_id", "left")
 
     for c in FEATURE_COLS:

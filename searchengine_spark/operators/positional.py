@@ -4,9 +4,10 @@ The reference evaluates these with per-doc location iterators
 (QryIopNear.java:27-83, QryIopWindow.java:27-77, QryIopSyn.java:17-71).
 Here the docid alignment is a Spark inner join / groupBy (distributed,
 sort-merge); only the *within-document* positional merge runs in
-Python, vectorized over Arrow record batches. Position lists arrive
-varbyte-delta-encoded (codec.py) and leave the same way, so the JVM
-never materializes int arrays.
+Python, over Arrow record batches. Position lists are the postings'
+``array<int>`` column: they arrive as int arrays and leave as int lists,
+with no codec on either side of the UDF. #SYN needs no Python at all:
+its union is a JVM aggregate in the compiler.
 
 Semantics replicated exactly (same pointer discipline => same tf):
 
@@ -19,7 +20,8 @@ Semantics replicated exactly (same pointer discipline => same tf):
   and advances all pointers; otherwise every pointer advances past the
   current minimum location.
 - SYN: union of lists; per-doc positions concatenated and sorted
-  (argument positions assumed disjoint, QryIopSyn.java:53-54).
+  (argument positions assumed disjoint, QryIopSyn.java:53-54) —
+  ``array_sort(flatten(collect_list(positions)))``.
 """
 
 from __future__ import annotations
@@ -29,14 +31,12 @@ from typing import Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
-
-from searchengine_spark.codec import decode_positions_many, encode_positions_many
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 MERGE_RESULT = StructType(
     [
         StructField("tf", IntegerType()),
-        StructField("positions", BinaryType()),
+        StructField("positions", ArrayType(IntegerType())),
     ]
 )
 
@@ -187,67 +187,34 @@ def _window_merge_any(arrays: list[list[int]], dist: int) -> list[int]:
                 ptr[i] = j
 
 
-def positional_merge_udf(with_positions: bool = True):
+@F.pandas_udf(MERGE_RESULT)
+def _merge(pos_arrays: pd.Series, kinds: pd.Series, dists: pd.Series) -> pd.DataFrame:
     """pandas UDF: (position lists, kind, dist) -> struct<tf, positions>.
 
-    ``position lists`` is an array<binary> column, one encoded list per
-    arg in arg order; ``kind`` ("near"/"window") and ``dist`` are
-    columns, literal for one query and per row when one Arrow pass
-    merges a batch's queries. Rows where the merge produces no
-    positions yield tf=0 (callers filter ``tf > 0`` — the reference only
-    appends non-empty postings). ``with_positions=False`` (op feeds
-    #SCORE directly, only tf is read) skips the batch re-encode of
-    match positions.
-    """
-
-    @F.pandas_udf(MERGE_RESULT)
-    def _merge(pos_arrays: pd.Series, kinds: pd.Series, dists: pd.Series) -> pd.DataFrame:
-        rows = list(pos_arrays)
-        kind_a = kinds.to_numpy()
-        dist_a = dists.to_numpy()
-        n = len(rows)
-        tfs = np.zeros(n, dtype=np.int32)
-        blobs: list[bytes | None] = [None] * n
-        # ONE vectorized decode pass for every blob of every row in the
-        # Arrow batch — per-row decode calls were the q_near bottleneck
-        # at 400k pages
-        decoded = decode_positions_many([b for lists in rows for b in lists])
-        hit_rows: list[int] = []
-        hit_pos: list[list[int]] = []
-        i = 0
-        for r, lists in enumerate(rows):
-            arrays, i = decoded[i : i + len(lists)], i + len(lists)
-            merge = near_merge if kind_a[r] == "near" else window_merge
-            pos = merge(arrays, int(dist_a[r]))
-            if pos:
-                tfs[r] = len(pos)
-                if with_positions:
-                    hit_rows.append(r)
-                    hit_pos.append(pos)
-        # mirror of the decode side: ONE vectorized encode pass per batch
-        for r, blob in zip(hit_rows, encode_positions_many(hit_pos)):
-            blobs[r] = blob
-        return pd.DataFrame({"tf": tfs, "positions": blobs})
-
-    # The merge IS deterministic; the marker only disables Catalyst
-    # optimizations that duplicate the expression — with `where(__m.tf
-    # > 0)` + `select(__m.*)` the field accesses get copied into filter
-    # AND project, and UDF extraction then plans TWO ArrowEvalPython
-    # stages, running the whole merge twice (seen in the 400k-page
-    # plans; compiler filters on the projected alias for the same
-    # reason).
-    return _merge.asNondeterministic()
+    ``position lists`` is an array<array<int>> column, one ascending
+    list per arg in arg order; ``kind`` ("near"/"window") and ``dist``
+    are columns, literal for one query and per row when one Arrow pass
+    merges a batch's queries. Rows where the merge produces no positions
+    yield tf=0 (callers filter ``tf > 0`` — the reference only appends
+    non-empty postings)."""
+    kind_a = kinds.to_numpy()
+    dist_a = dists.to_numpy()
+    n = len(pos_arrays)
+    tfs = np.zeros(n, dtype=np.int32)
+    hits: list[list[int] | None] = [None] * n
+    for r, arrays in enumerate(pos_arrays):
+        merge = near_merge if kind_a[r] == "near" else window_merge
+        pos = merge(arrays, int(dist_a[r]))
+        if pos:
+            tfs[r] = len(pos)
+            hits[r] = pos
+    return pd.DataFrame({"tf": tfs, "positions": hits})
 
 
-@F.pandas_udf(BinaryType())
-def syn_union_positions(pos_lists: pd.Series) -> pd.Series:
-    """Concatenate+sort a list of encoded position lists (QryIopSyn.java:60-68)."""
-    rows = list(pos_lists)
-    flat = [b for blobs in rows for b in blobs if b is not None]
-    decoded = decode_positions_many(flat)
-    merged_lists, i = [], 0
-    for blobs in rows:
-        cnt = sum(1 for b in blobs if b is not None)
-        arrays, i = decoded[i : i + cnt], i + cnt
-        merged_lists.append(np.sort(np.concatenate(arrays)) if arrays else ())
-    return pd.Series(encode_positions_many(merged_lists))
+# The merge IS deterministic; the marker only disables Catalyst
+# optimizations that duplicate the expression — with `where(__m.tf > 0)`
+# + `select(__m.*)` the field accesses get copied into filter AND
+# project, and UDF extraction then plans TWO ArrowEvalPython stages,
+# running the whole merge twice (seen in the 400k-page plans; compiler
+# filters on the projected alias for the same reason).
+positional_merge = _merge.asNondeterministic()

@@ -58,10 +58,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from searchengine_spark.functions.xxh64 import term_bucket
 from searchengine_spark.index.build import InvertedIndex
-from searchengine_spark.operators.positional import (
-    positional_merge_udf,
-    syn_union_positions,
-)
+from searchengine_spark.operators.positional import positional_merge
 from searchengine_spark.plans.ast import IopNode, SopNode, TermNode, is_iop
 from searchengine_spark.plans.models import BM25, Indri, RankedBoolean, UnrankedBoolean
 
@@ -82,7 +79,9 @@ class IopResult:
     def stats(self) -> tuple[int, int]:
         if self._stats is None:
             if not self._persisted:
-                self.frame = self.frame.persist()
+                # only scorers ask for stats, and they read tf/doc_len:
+                # the cached frame leaves the position lists out
+                self.frame = self.frame.drop("positions").persist()
                 self._persisted = True
                 if self._temps is not None:
                     self._temps.append(self.frame)
@@ -204,14 +203,11 @@ def _indri_fold(op, k, w, total, eff) -> Column:
     return out
 
 
-def _merge(frame: DataFrame, positions: Column, kind, dist, with_positions: bool,
-           keys: tuple = ()) -> DataFrame:
-    """Run the positional merge UDF over ``positions`` (array<binary>,
-    arg order) -> (*keys, doc_id, tf, doc_len[, positions]), tf > 0."""
-    udf = positional_merge_udf(with_positions)
-    cols = [*keys, "doc_id", F.col("__m.tf").alias("tf"), "doc_len"]
-    if with_positions:
-        cols.append(F.col("__m.positions").alias("positions"))
+def _merge(frame: DataFrame, positions: Column, kind, dist, keys: tuple = ()) -> DataFrame:
+    """Run the positional merge UDF over ``positions`` (array<array<int>>,
+    arg order) -> (*keys, doc_id, tf, doc_len, positions), tf > 0."""
+    cols = [*keys, "doc_id", F.col("__m.tf").alias("tf"), "doc_len",
+            F.col("__m.positions").alias("positions")]
     # project the struct fields BEFORE filtering: a `where` on
     # `__m.tf` followed by a select of `__m.*` duplicates the field
     # accesses into filter and project, and UDF extraction then plans
@@ -219,7 +215,7 @@ def _merge(frame: DataFrame, positions: Column, kind, dist, with_positions: bool
     # the 400k PLANS.md). Filtering on the projected alias keeps one
     # Arrow pass.
     return (
-        frame.withColumn("__m", udf(positions, F.lit(kind), F.lit(dist)))
+        frame.withColumn("__m", positional_merge(positions, F.lit(kind), F.lit(dist)))
         .select(*cols)
         .where(F.col("tf") > 0)
     )
@@ -346,12 +342,7 @@ class Compiler:
     # Iop compilation
     # ------------------------------------------------------------------
 
-    def compile_iop(self, node, need_positions: bool = True) -> IopResult:
-        # need_positions=False when the caller only scores the result
-        # (tf/doc_len/stats): the merge kernels skip re-encoding match
-        # positions, and #SYN drops its union UDF entirely (pure JVM
-        # agg). Nested iop arguments always pass True — their parents
-        # consume the position lists.
+    def compile_iop(self, node) -> IopResult:
         if isinstance(node, TermNode):
             cond = (F.col("term") == node.term) & (F.col("field") == node.field)
             bc = self._bucket_cond([node.term])
@@ -376,23 +367,19 @@ class Compiler:
                 u = children[0].frame
                 for c in children[1:]:
                     u = u.unionByName(c.frame)
-            aggs = [
+            # the union is a JVM aggregate; a caller that reads only
+            # tf/doc_len gets it pruned by Catalyst
+            fr = u.groupBy("doc_id").agg(
                 F.sum("tf").cast("int").alias("tf"),
                 F.max("doc_len").alias("doc_len"),
-            ]
-            cols = ["doc_id", "tf", "doc_len"]
-            if need_positions:
-                aggs.append(
-                    syn_union_positions(F.collect_list("positions")).alias("positions")
-                )
-                cols.append("positions")
-            fr = u.groupBy("doc_id").agg(*aggs).select(*cols)
+                F.array_sort(F.flatten(F.collect_list("positions"))).alias("positions"),
+            )
             return IopResult(fr, node.field, _temps=self.index._temps)
 
         # near / window: flat args take the shared single-scan merge;
         # nested args fall back to the k-way inner-join chain
         if flat is not None:
-            fr = self._positional([("", node)], need_positions).drop("qid")
+            fr = self._positional([("", node)]).drop("qid")
         else:
             children = [self.compile_iop(a) for a in node.args]
             joined = children[0].frame.select(
@@ -405,11 +392,11 @@ class Compiler:
                     how="inner",
                 )
             pcols = F.array(*[F.col(f"__p{i}") for i in range(k)])
-            fr = _merge(joined, pcols, node.op, node.dist, need_positions)
+            fr = _merge(joined, pcols, node.op, node.dist)
         return IopResult(fr, node.field, _temps=self.index._temps)
 
-    def _positional(self, items: list, with_positions: bool) -> DataFrame:
-        """(qid, doc_id, tf, doc_len[, positions]) for flat #NEAR/#WINDOW
+    def _positional(self, items: list) -> DataFrame:
+        """(qid, doc_id, tf, doc_len, positions) for flat #NEAR/#WINDOW
         items ``[(qid, iop)]``: per field, one scan, one groupBy(qid,
         doc_id) collecting the arg-ordered position lists, one Arrow
         merge pass with each query's (kind, dist)."""
@@ -432,8 +419,7 @@ class Compiler:
             # NEAR/WINDOW match only docs containing EVERY arg
             g = g.where(F.size("__ps") == F.lit(c["__k"]))
             frames.append(
-                _merge(g, F.col("__ps.positions"), c["__kind"], c["__dist"],
-                       with_positions, keys=("qid",))
+                _merge(g, F.col("__ps.positions"), c["__kind"], c["__dist"], keys=("qid",))
             )
         return _union(frames)
 
@@ -470,7 +456,7 @@ class Compiler:
         of its leaves matched from ``doc_stats`` (0 when absent). A
         one-leaf tree is a plain projection of its frame."""
         if node.op == "score":
-            iop = self.compile_iop(node.args[0], need_positions=False)
+            iop = self.compile_iop(node.args[0])
             c, _ = self._leaf_consts(iop.field, iop.stats)
             return iop.frame.select("doc_id", self._leaf_score(iop.field, c).alias("score"))
 
@@ -489,7 +475,7 @@ class Compiler:
                 c, p_def = self._leaf_consts(arg.field, lambda: self._stats(arg.term, arg.field))
                 terms.setdefault(arg.field, []).append(("", i, arg.term, c))
             else:
-                iop = self.compile_iop(arg, need_positions=False)
+                iop = self.compile_iop(arg)
                 c, p_def = self._leaf_consts(iop.field, iop.stats)
                 frames.append(iop.frame.select(
                     "doc_id", F.lit(i).alias("__ti"),
@@ -578,7 +564,7 @@ class Compiler:
         materialize-then-score, QryIop.java:174-190): ONE groupBy(qid)
         action on the persisted merge gives every query's df."""
         iops = [(qid, node.args[0]) for qid, node in items]
-        merged = self._positional(iops, with_positions=False).persist()
+        merged = self._positional(iops).drop("positions").persist()
         if self.index._temps is not None:
             self.index._temps.append(merged)
         dfs = {r["qid"]: r["count"] for r in merged.groupBy("qid").count().collect()}

@@ -71,7 +71,7 @@ BATCH_ANALYZER = "_analyzer.json"
 
 def _batch_rows(docs: DataFrame, field: str = "body", src_col: str = "text",
                 analyzer: str = "english") -> DataFrame:
-    """Fused tokenize+positions+encode rows (incl. term='' doc_len
+    """Fused tokenize+positions rows (incl. term='' doc_len
     sentinels) — the same shuffle-free kernel as the batch build."""
     return docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),

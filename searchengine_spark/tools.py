@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from searchengine_spark.codec import decode_positions
 from searchengine_spark.index.build import InvertedIndex
 
 
@@ -26,7 +25,7 @@ def list_stats(index: InvertedIndex) -> dict:
 def list_postings(
     index: InvertedIndex, term: str, field: str = "body", max_docs: int = 20
 ) -> dict:
-    """Posting list head for (term, field) with decoded positions
+    """Posting list head for (term, field) with its positions
     (InspectIndex -list-postings)."""
     df, ctf = index.lookup_term_stats([(term, field)])[(term, field)]
     rows = (
@@ -44,7 +43,7 @@ def list_postings(
             {
                 "doc_id": int(r["doc_id"]),
                 "tf": int(r["tf"]),
-                "positions": [int(p) for p in decode_positions(bytes(r["positions"]))],
+                "positions": list(r["positions"]),
             }
             for r in rows
         ],

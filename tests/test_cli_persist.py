@@ -4,29 +4,49 @@ Also covers write_index resume (per-bucket lineage manifests) and the
 forward index.
 """
 
+import glob
 import json
 import os
+import re
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark import cli
+from searchengine_spark.analyzer import get_analyzer
 from searchengine_spark.corpus import extract_fields, make_pages
 from searchengine_spark.index.build import assign_doc_ids, build_index, read_index, write_index
 from searchengine_spark.index.forward import forward_index, term_vector
+from searchengine_spark.plans.models import BM25
+from tests import oracle as orc
+
+
+FIELDS = {"body": "body", "title": "title"}
+
+
+def _docs(spark):
+    return assign_doc_ids(extract_fields(make_pages(spark, 120, seed=3)), ext_id_col="url")
 
 
 @pytest.fixture(scope="module")
 def persisted(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("idx")
-    docs = assign_doc_ids(extract_fields(make_pages(spark, 120, seed=3)), ext_id_col="url")
-    idx = build_index(
-        docs, fields={"body": "body", "title": "title"}, ext_id_col="url",
-        analyzer="english",
-    )
+    idx = build_index(_docs(spark), fields=FIELDS, ext_id_col="url", analyzer="english")
     path = str(tmp / "index")
     res = write_index(idx, path, buckets=4)
     return path, res
+
+
+@pytest.fixture(scope="module")
+def oracle(spark):
+    """The in-memory oracle over the persisted index's docs."""
+    an = get_analyzer("english")
+    rows = _docs(spark).select("doc_id", *FIELDS.values()).collect()
+    return orc.PyIndex({
+        int(r["doc_id"]): {f: an.tokens(r[src]) for f, src in FIELDS.items()} for r in rows
+    })
 
 
 def test_write_resume_skips_done_buckets(spark, persisted):
@@ -62,11 +82,7 @@ def test_partial_resume_preserves_other_buckets(spark, persisted):
 
     # resume from a rebuilt index (same deterministic source), as a
     # restarted job would — not from the path being overwritten
-    docs = assign_doc_ids(extract_fields(make_pages(spark, 120, seed=3)), ext_id_col="url")
-    idx = build_index(
-        docs, fields={"body": "body", "title": "title"}, ext_id_col="url",
-        analyzer="english",
-    )
+    idx = build_index(_docs(spark), fields=FIELDS, ext_id_col="url", analyzer="english")
     res = write_index(idx, path, buckets=4, fingerprint=first["fingerprint"])
     assert res["written"] == [2] and res["skipped"] == [0, 1, 3]
     for b in (0, 1, 3):
@@ -237,6 +253,27 @@ def test_single_query_plans_bind_literals(spark, persisted):
     assert len(scans) == 1, scans
 
 
+def test_nested_iop_plan_runs_one_python_udf(spark, persisted, oracle):
+    """``#near/2(#syn(a b) c)``: #SYN's union is a JVM aggregate, so the
+    plan's only Python evaluation is the positional merge; the top-10
+    equals the oracle's to %.18f."""
+    from searchengine_spark.engine import SearchEngine
+
+    path, _ = persisted
+    eng = SearchEngine(read_index(spark, path))
+    q = "#near/2(#syn(cerim dirim) batok)"
+    df = eng.search(q, model="bm25", k=10, with_ext_id=False)
+    rows = df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    udfs = set(re.findall(r"ArrowEvalPython \[(.*?)\], \[", plan))
+    assert len(udfs) == 1 and next(iter(udfs)).startswith("_merge("), udfs
+    want = orc.search(oracle, eng.parse(q, BM25()), BM25(), k=10)
+    assert len(want) == 10
+    assert [(r["doc_id"], "%.18f" % r["score"]) for r in rows] == [
+        (d, "%.18f" % s) for d, s in want
+    ]
+
+
 def test_nested_trees_plan_one_scan_no_score_joins(spark, persisted):
     """Nested score trees take the tree scorer: one postings scan per
     field and one groupBy(doc_id), no per-child score joins. The PRF
@@ -271,3 +308,16 @@ def test_nested_trees_plan_one_scan_no_score_joins(spark, persisted):
     assert len(scans(lines, "postings")) == 2, lines
     joins = [ln for ln in lines if "Join" in ln]
     assert joins and len(joins) == len(scans(lines, "doc_stats")), lines
+
+
+def test_postings_file_positions_are_int_lists(persisted, oracle):
+    """On disk, a postings file's ``positions`` column is a plain Parquet
+    ``list<int32>``: each row holds the term's token slots in the doc."""
+    path, _ = persisted
+    f = sorted(glob.glob(os.path.join(path, "postings", "bucket=0", "seg=*", "*.parquet")))[0]
+    t = pq.read_table(f)
+    assert t.schema.field("positions").type == pa.list_(pa.int32())
+    rows = t.select(["term", "field", "doc_id", "positions"]).to_pylist()
+    assert rows
+    for r in rows:
+        assert r["positions"] == oracle.postings[(r["term"], r["field"])][r["doc_id"]], r

@@ -200,11 +200,12 @@ def test_first_compaction_of_a_dir_without_meta_is_a_minor_fold(spark, states, t
     assert live.select("doc_id").distinct().count() == 15
 
 
-def test_older_layout_is_rejected(spark, states, tmp_path):
+@pytest.mark.parametrize("layout", [3, 4])
+def test_older_layout_is_rejected(spark, states, tmp_path, layout):
     path = str(tmp_path / "idx")
     shutil.copytree(states["streamed"], path)
     meta = _meta(path)
-    meta["layout"] = 3
+    meta["layout"] = layout
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(meta, f)
     with pytest.raises(ValueError, match="Rebuild"):

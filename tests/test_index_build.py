@@ -4,7 +4,6 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from searchengine_spark.codec import decode_positions
 from searchengine_spark.corpus import extract_fields, make_pages
 from searchengine_spark.index import build_index, read_index, write_index
 from searchengine_spark.index.build import assign_doc_ids
@@ -24,7 +23,7 @@ def test_build_postings_simple(spark):
     rows = {(r.term, r.doc_id): r for r in idx.postings.collect()}
     assert rows[("cat", 0)].tf == 1
     assert rows[("the", 0)].tf == 2
-    assert decode_positions(rows[("the", 0)].positions).tolist() == [0, 4]
+    assert rows[("the", 0)].positions == [0, 4]
     assert rows[("dogs", 2)].tf == 3
     assert rows[("cat", 0)].doc_len == 6
     ts = {(r.term): (r.df, r.ctf) for r in idx.term_stats.collect()}
@@ -39,7 +38,7 @@ def test_build_english_stopwords_keep_positions(spark):
     rows = {(r.term, r.doc_id): r for r in idx.postings.collect()}
     # 'the' is a stopword → no posting; 'cat' at position 1 (slot preserved)
     assert ("the", 0) not in rows
-    assert decode_positions(rows[("cat", 0)].positions).tolist() == [1]
+    assert rows[("cat", 0)].positions == [1]
     # doc_len counts stopword slots (Idx.java:97 semantics)
     assert rows[("cat", 0)].doc_len == 6
     # stemming: dogs → dog merges docs 1,2
@@ -70,7 +69,7 @@ def test_write_read_resume(spark, tmp_path):
     assert idx2.n_docs == 3
     assert idx2.postings.count() == idx.postings.count()
     got = idx2.postings.where("term='cat' and doc_id=0").collect()[0]
-    assert decode_positions(got.positions).tolist() == [1]
+    assert got.positions == [1]
 
     # a different corpus written to the same path replaces the index:
     # nothing of the old one survives in the buckets the new one leaves

@@ -360,7 +360,7 @@ def test_incremental_compact_touches_only_delta_buckets(spark, tmp_path):
     idx0 = build_index(docs, fields={"body": "text"}, ext_id_col="url", analyzer="simple")
     write_index(idx0, idx_dir, buckets=buckets)
     meta0 = json.load(open(os.path.join(idx_dir, "meta.json")))
-    assert meta0["layout"] == 4 and len(meta0["segs"]) == 1
+    assert meta0["layout"] == 5 and len(meta0["segs"]) == 1
 
     # the persisted layout: four tables, the manifests and meta.json
     # (checked after the write and after each compaction mode below)

@@ -1,27 +1,16 @@
-"""Property-based tests (hypothesis): codec round-trips and positional
-merge kernels vs brute-force specifications, and the scorers vs
-one another and the oracle."""
+"""Property-based tests (hypothesis): positional merge kernels vs
+brute-force specifications, and the scorers vs one another and the
+oracle."""
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from searchengine_spark.codec import decode_positions, encode_positions, vb_decode, vb_encode
 from searchengine_spark.operators.positional import near_merge, window_merge
 
 pos_lists = st.lists(st.integers(min_value=0, max_value=5000), min_size=0, max_size=60).map(
     lambda xs: sorted(set(xs))
 )
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**40), max_size=100))
-def test_varbyte_roundtrip(values):
-    assert list(vb_decode(vb_encode(values))) == values
-
-
-@given(pos_lists)
-def test_delta_roundtrip(positions):
-    assert list(decode_positions(encode_positions(positions))) == positions
 
 
 def _exists_ordered_chain(arrays, dist):
