@@ -115,7 +115,7 @@ def main() -> None:
         ),
         (
             "3-query BM25 run_batch (the flat scorer with broadcast constants, one scan)",
-            "The same scorer as the flat BM25 #SUM above, fed a batch: ONE term-IN FileScan for the whole batch, BroadcastHashJoin on term with the (qid, __ti, term, __idf) table, groupBy(qid, doc_id) fold, per-qid row_number window — scan count independent of batch size.",
+            "The same scorer as the flat BM25 #SUM above, fed a batch: ONE term-IN FileScan for the whole batch, BroadcastHashJoin on term with the (qid, __ti, term, __idf) table (built from Arrow: a LocalTableScan, no Python-worker task), groupBy(qid, doc_id) fold, per-qid row_number window — scan count independent of batch size — and ONE `TakeOrderedAndProject` at the root, like `search`: no range exchange for the (qid, rank) order.",
             eng.run_batch(
                 [("q1", "cerim dirim"), ("q2", "barim cerim"), ("q3", "dirim batok")],
                 model="bm25", k=10,

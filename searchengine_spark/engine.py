@@ -18,6 +18,7 @@ from searchengine_spark.plans.ast import SopNode, TermNode
 from searchengine_spark.plans.compiler import Compiler
 from searchengine_spark.plans.models import make_model
 from searchengine_spark.plans.parser import QueryParser
+from searchengine_spark.session import arrow_frame
 
 
 class SearchEngine:
@@ -114,6 +115,11 @@ class SearchEngine:
         needs. It is the same scorer ``search`` runs on one query, so
         every qid's rows equal its own ``search``. Other queries compile
         one by one and union in.
+
+        Each query keeps at most ``k`` unique ranks, so the closing
+        ``orderBy(qid, rank).limit(k * len(parsed))`` keeps every row
+        and plans as one TakeOrderedAndProject, like ``search``: no
+        range exchange and no sampling job.
         """
         m = self._model(model, **params)
         comp = self.compiler(m)
@@ -143,13 +149,16 @@ class SearchEngine:
             frames.append(topk_grouped(scored, k).select("qid", "doc_id", "score", "rank"))
         self.index.trim_temps()
         if not frames:
-            return self.index.spark.createDataFrame(
-                [], "qid string, doc_id long, ext_id string, score double, rank int"
+            return arrow_frame(
+                self.index.spark, [],
+                "qid string, doc_id long, ext_id string, score double, rank int",
             )
         u = frames[0]
         for fr in frames[1:]:
             u = u.unionByName(fr)
         out = attach_ext_ids(u, self.index.docs)
-        return out.select("qid", "doc_id", "ext_id", "score", "rank").orderBy(
-            "qid", "rank"
+        return (
+            out.select("qid", "doc_id", "ext_id", "score", "rank")
+            .orderBy("qid", "rank")
+            .limit(k * len(parsed))
         )

@@ -11,7 +11,7 @@ L2-NORMALIZES ON READ. Spark-first re-expression:
   entry). Text parsing is fully distributed (``spark.read.text`` +
   ``split``/``transform`` — each line is independent); the binary
   format is a single undelimited stream: small files parse as a
-  driver-side generator feeding ``spark.createDataFrame`` in chunks,
+  driver-side generator feeding ``arrow_frame`` in chunks,
   large files go through a two-pass distributed parse (driver offset
   scan reading only term bytes, executors decode their byte ranges —
   a 3M x 300 file never materializes driver-side).
@@ -36,6 +36,8 @@ from typing import Iterable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from searchengine_spark.session import arrow_frame
 
 # Above this vocab size the store joins instead of broadcasting
 # (3M x 300 float32 ~ 3.6 GB would wreck executors as a broadcast).
@@ -110,7 +112,7 @@ def load_word2vec_binary(
     Two parse paths, identical output (pinned by tests/test_wordvec.py):
 
     - driver streaming (default for small files): generator feeding
-      ``createDataFrame`` in ``chunk_rows`` chunks;
+      ``arrow_frame`` in ``chunk_rows`` chunks;
     - distributed (default above ~64 MB, or ``distributed=True``):
       two-pass — a cheap driver OFFSET scan reads only the term bytes
       and ``seek``s over every 4*dim payload (a few MB of reads for a
@@ -130,10 +132,10 @@ def load_word2vec_binary(
     for row in _iter_word2vec_bin(path):
         buf.append(row)
         if len(buf) >= chunk_rows:
-            frames.append(spark.createDataFrame(buf, schema))
+            frames.append(arrow_frame(spark, buf, schema))
             buf = []
     if buf or not frames:
-        frames.append(spark.createDataFrame(buf, schema))
+        frames.append(arrow_frame(spark, buf, schema))
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)
@@ -207,7 +209,7 @@ def _load_word2vec_binary_distributed(
                     {"term": terms, "vec": [v.astype(np.float32).tolist() for v in normed]}
                 )
 
-    bounds = spark.createDataFrame(chunks, "start long, n long").repartition(
+    bounds = arrow_frame(spark, chunks, "start long, n long").repartition(
         max(1, min(len(chunks), spark.sparkContext.defaultParallelism))
     )
     return bounds.mapInPandas(parse, "term string, vec array<float>")

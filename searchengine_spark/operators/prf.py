@@ -31,6 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.engine import SearchEngine
+from searchengine_spark.session import arrow_frame
 
 
 @dataclass(frozen=True)
@@ -56,8 +57,8 @@ def candidate_term_scores(
 
     doc_ids = [int(d) for d, _ in top_docs]
     spark = idx.spark
-    top_df = spark.createDataFrame(
-        [(int(d), float(s)) for d, s in top_docs], "doc_id long, fb_doc_score double"
+    top_df = arrow_frame(
+        spark, [(int(d), float(s)) for d, s in top_docs], "doc_id long, fb_doc_score double"
     )
 
     posts = (

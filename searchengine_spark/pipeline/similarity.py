@@ -45,6 +45,8 @@ import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
+from searchengine_spark.session import arrow_frame
+
 PLANE_LITERAL_MAX_DIM = 128
 
 DOT = (
@@ -173,13 +175,13 @@ def _localized(result: DataFrame, *caches: DataFrame) -> DataFrame:
     result = result.persist()
     n = result.count()
     if n <= LOCALIZE_MAX_ROWS:
-        rows = result.collect()
+        table = result.toArrow()
         schema = result.schema
         spark = result.sparkSession
         result.unpersist()
         for c in caches:
             c.unpersist()
-        return spark.createDataFrame(rows, schema)
+        return arrow_frame(spark, table, schema)
     for c in caches:
         c.unpersist()
     return result
@@ -358,8 +360,8 @@ def write_ivf_index(
     assigned.select("vec_id", "__v", "__norm", "cell").write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(os.path.join(path, "cells"))
-    emb.sparkSession.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid int, cv array<double>"
+    arrow_frame(
+        emb.sparkSession, [(i, c) for i, c in enumerate(cents)], "cid int, cv array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 
 
@@ -463,9 +465,7 @@ def ivf_topk(
             s = np.round((cmat @ qv) / (float(r["__norm"]) * cnrm), 6)
             for cell in np.argsort(-s, kind="stable")[:n_probe]:
                 probe_rows.append((int(r["vec_id"]), int(cell)))
-        probes = emb.sparkSession.createDataFrame(
-            probe_rows, "query_id long, cell int"
-        )
+        probes = arrow_frame(emb.sparkSession, probe_rows, "query_id long, cell int")
         # probe cells are known driver-side here, so push them as a
         # LITERAL IN filter: against a cell-partitioned on-disk index
         # (write_ivf_index) this becomes a PartitionFilter — the scan

@@ -61,6 +61,7 @@ from searchengine_spark.index.build import InvertedIndex
 from searchengine_spark.operators.positional import positional_merge
 from searchengine_spark.plans.ast import IopNode, SopNode, TermNode, is_iop
 from searchengine_spark.plans.models import BM25, Indri, RankedBoolean, UnrankedBoolean
+from searchengine_spark.session import arrow_frame
 
 
 @dataclass
@@ -271,9 +272,10 @@ class Compiler:
         ``consts`` the values' ``"name type"`` columns. Each posting
         comes out once per arg naming its term, with ``qid``, ``__ti``
         and the constants. One query binds them as literal CASE-on-term
-        columns: no Python-built table, no broadcast, no extra job (a
+        columns: no driver-built table, no broadcast, no extra job (a
         repeated term explodes to one row per arg). Two or more join a
-        broadcast ``(qid, __ti, term, ...)`` table, so the scan count
+        broadcast ``(qid, __ti, term, ...)`` table built from Arrow
+        (``arrow_frame``: no Python-worker task), so the scan count
         stays one per field whatever the batch size.
         """
         names = sorted({r[2] for r in rows})
@@ -284,7 +286,7 @@ class Compiler:
         fr = self.index.postings.where(cond)
         if len({r[0] for r in rows}) > 1:
             schema = ", ".join(["qid string", "__ti int", "term string", *consts])
-            qt = self.index.spark.createDataFrame(rows, schema)
+            qt = arrow_frame(self.index.spark, rows, schema)
             return fr.join(F.broadcast(qt), on="term")
         tis: dict[str, list[int]] = {}
         for r in rows:
@@ -303,11 +305,11 @@ class Compiler:
         their ``"name type"``) for a qid-keyed ``frame`` -> (frame,
         {name: value}). One query gets its values back as Python
         literals, which the scoring expressions fold; a batch joins a
-        broadcast table and gets its columns."""
+        broadcast Arrow-built table and gets its columns."""
         names = [c.split()[0] for c in cols]
         if len(rows) == 1:
             return frame, dict(zip(names, rows[0][1:]))
-        meta = self.index.spark.createDataFrame(rows, ", ".join(["qid string", *cols]))
+        meta = arrow_frame(self.index.spark, rows, ", ".join(["qid string", *cols]))
         return frame.join(F.broadcast(meta), on="qid"), {n: F.col(n) for n in names}
 
     def flat_scorer(self, node):
@@ -430,7 +432,7 @@ class Compiler:
     def compile(self, node) -> DataFrame:
         """Top-level: AST -> frame (doc_id long, score double)."""
         if node is None:
-            return self.index.spark.createDataFrame([], "doc_id long, score double")
+            return arrow_frame(self.index.spark, [], "doc_id long, score double")
         if is_iop(node):
             node = SopNode("score", (node,))
         self.prefetch_term_stats(node)

@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def driver_memory() -> str:
@@ -68,11 +71,38 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce plans over persisted frames too: a small
+        # derived #NEAR merge then runs its Arrow UDF in one task, not
+        # one per shuffle partition
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # orderBy().limit(n) plans as TakeOrderedAndProject, whose
+        # per-task heap is sized 2n up front; from 1M rows on (a huge k,
+        # or a run_batch of k * queries) a global sort is the safer plan
+        .config("spark.sql.execution.topKSortFallbackThreshold", str(1_000_000))
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
+
+
+def arrow_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A driver-side table (``rows``: tuples, or a ``pyarrow.Table``) as
+    a DataFrame of ``schema`` (DDL string or StructType), handed to the
+    JVM as Arrow: it plans as a LocalTableScan (an RDD of Arrow batches
+    past ``spark.sql.execution.arrow.localRelationThreshold``), runs no
+    Python worker, and passes values (doubles, ``array<double>``)
+    through exactly. ``createDataFrame(list)`` instead pickles the rows
+    through a PythonRDD: ``defaultParallelism`` Python-worker tasks per
+    table."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(struct)
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+    return spark.createDataFrame(rows, struct)

@@ -274,6 +274,28 @@ def test_nested_iop_plan_runs_one_python_udf(spark, persisted, oracle):
     ]
 
 
+def test_near_merge_persists_in_coalesced_partitions(spark, persisted, oracle):
+    """AQE coalesces plans over persisted frames too, so a small
+    ``#near/2`` merge is persisted in fewer partitions than
+    ``spark.sql.shuffle.partitions``: its Arrow UDF runs in as few
+    tasks as its rows need. The top-10 equals the oracle's to %.18f."""
+    from searchengine_spark.engine import SearchEngine
+
+    path, _ = persisted
+    idx = read_index(spark, path)
+    eng = SearchEngine(idx)
+    q = "#near/2(barim cerim)"
+    rows = eng.search(q, model="bm25", k=10, with_ext_id=False).collect()
+    assert len(idx._temps) == 1
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert idx._temps[0].rdd.getNumPartitions() < shuffle
+    want = orc.search(oracle, eng.parse(q, BM25()), BM25(), k=10)
+    assert len(want) == 10
+    assert [(r["doc_id"], "%.18f" % r["score"]) for r in rows] == [
+        (d, "%.18f" % s) for d, s in want
+    ]
+
+
 def test_nested_trees_plan_one_scan_no_score_joins(spark, persisted):
     """Nested score trees take the tree scorer: one postings scan per
     field and one groupBy(doc_id), no per-child score joins. The PRF

@@ -124,6 +124,53 @@ def test_run_batch_multiple_queries(pages_index):
     assert all(len(v) <= 5 for v in per.values())
 
 
+def test_run_batch_plans_one_topk_over_arrow_constants(pages_index):
+    """A multi-query BM25 ``run_batch`` ends in one TakeOrderedAndProject,
+    with no range exchange and no sampling job. Its per-query constants
+    tables are built from Arrow: no RDD under their scans runs a
+    PythonRDD, which would pickle the rows in one Python-worker task
+    per partition."""
+    eng = SearchEngine(pages_index)
+    batch = eng.run_batch(
+        [("q1", "cerim dirim"), ("q2", "barim cerim"), ("q3", "dirim batok fulan")],
+        model=BM25(), k=10,
+    )
+    assert {r["qid"] for r in batch.collect()} == {"q1", "q2", "q3"}
+    # the nodes of the batch's final adaptive plan, through its query
+    # stages; the plans of cached frames it reads stay out
+    nodes, todo = [], [batch._jdf.queryExecution().executedPlan().executedPlan()]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        todo += [node.children().apply(i) for i in range(node.children().length())]
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            todo.append(node.plan())
+    kinds = [n.getClass().getSimpleName() for n in nodes]
+    ranges = [
+        n.simpleString(8) for n, kind in zip(nodes, kinds)
+        if kind == "ShuffleExchangeExec" and "rangepartitioning" in n.simpleString(8)
+    ]
+    assert not ranges, ranges
+    assert "TakeOrderedAndProjectExec" in kinds, kinds
+    consts = [n for n, kind in zip(nodes, kinds) if kind in ("RDDScanExec", "LocalTableScanExec")]
+    assert consts, kinds
+    for scan in consts:
+        lineage = scan.execute().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+
+
+def test_run_batch_past_the_topk_heap_bound_plans_a_sort(pages_index):
+    """A batch of 2 queries at k = 1M (a 2M-row limit) plans a global
+    sort, not a TakeOrderedAndProject that would size a 2n heap per
+    task (``get_spark``'s ``topKSortFallbackThreshold``)."""
+    eng = SearchEngine(pages_index)
+    batch = eng.run_batch(
+        [("q1", "cerim dirim"), ("q2", "barim cerim")], model=BM25(), k=1_000_000
+    )
+    root = batch._jdf.queryExecution().executedPlan().inputPlan()
+    assert root.getClass().getSimpleName() != "TakeOrderedAndProjectExec", root.toString()
+
+
 def _assert_batch_equals_search(eng, batch, model, **params):
     """Every qid of ``run_batch`` must equal its own ``search(q)``:
     same docs, ranks, ext ids and %.18f scores."""
