@@ -612,7 +612,7 @@ labyrinth lacerate lactate lagoon lair lambast laminate lampshade landfill
 landlord landmark languish lanky lapdog lapel larder lark lasagna latitude
 lattice laurel lavender lawsuit lax laxity lectern ledger leech leery legacy
 legion legislate legitimize lemonade lentil lessen lethargic lethargy levee
-levity liberate lifeboat lifeguard lighten lighthouse likening lilac lily
+levity liberate lifeboat lifeguard lighten lighthouse liken lilac lily
 limber limescale limousine linchpin lineage lineup linguist lintel liquefy
 liquidate liquor listless literate lithe liturgy livid llama lob locket
 locksmith locomotive locust lodestone lofty loin loiter lollipop longevity
@@ -708,7 +708,7 @@ scurry seabird seamless seashell seashore secrecy sedate seedling seedy
 segregate semicircle senate senility seniority sentry sequel sequoia serenade
 serendipitous serenity serum severity shabby shamrock shantytown sharpen
 shimmy shipyard shoal shoddy shoehorn shoelace shorten shotgun showcase shrewd
-shrill shrivel shuttle sicken sideboard sidecar sidestep sidewalk signode
+shrill shrivel shuttle sicken sideboard sidecar sidestep sidewalk
 signpost silhouette silo similarity simplicity sincerity siphon sitar
 skateboard skid skimpy skylark skylight skyline skyscraper slacken slather
 sleazy sledge sleigh slick slingshot slither slog sluggish slur sly smokestack
@@ -746,7 +746,7 @@ turgid turnpike turnstile turntable turquoise tuxedo twister typhoon typify
 tyranny ubiquitous ukulele unbutton uncouth uncover undercurrent undergo
 undergrowth underscore understand undulate unduly unicorn unicycle unity
 unkempt unruly unsettle untangle unwieldy unwind upbeat upholstery uplift
-uppity uproute urgency usurp utensil utility vacancy vacate vaccinate vagary
+uppity urgency usurp utensil utility vacancy vacate vaccinate vagary
 vagrant valency valise vandalize vanguard vanity vanquish vantage vapid
 vaporize variety vassal vat veal vegetate vehement vellum velocity venerate
 ventilate veracity veranda verbose verbosity verdict verity versatile vertebra

@@ -383,7 +383,7 @@ def ivf_topk(
     emb: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    n_cells: int = 16,
+    n_cells: int | None = None,
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -416,14 +416,26 @@ def ivf_topk(
     ``ivf_assign`` once, persisting/writing the result, and passing it
     back through ``prebuilt``; each call then pays only the probe-join
     + rerank (the per-query cost a deployment actually sees).
+
+    ``n_cells`` defaults to 16 for a one-call build and to the prebuilt
+    index's own cell count; a prebuilt index raises ``ValueError`` when
+    an explicit ``n_cells`` or ``n_probe`` does not fit its centroids.
     """
     own_cache = False
     if prebuilt is not None:
         assigned, cents = prebuilt
+        if n_cells is not None and n_cells != len(cents):
+            raise ValueError(
+                f"n_cells={n_cells} but the prebuilt index has {len(cents)} cells"
+            )
+        if n_probe > len(cents):
+            raise ValueError(
+                f"n_probe={n_probe} exceeds the prebuilt index's {len(cents)} cells"
+            )
     else:
         assigned, cents = ivf_assign(
-            emb, n_cells, id_col=id_col, vec_col=vec_col, cell_udf=cell_udf,
-            lloyd_iters=lloyd_iters,
+            emb, 16 if n_cells is None else n_cells, id_col=id_col,
+            vec_col=vec_col, cell_udf=cell_udf, lloyd_iters=lloyd_iters,
         )
         # one-call mode: both the probe collect and the candidate scan
         # read the assignment — cache it for the call and release it

@@ -11,6 +11,8 @@ algebraic invariants the oracle can't see:
 - centroid selection is partitioning-invariant.
 """
 
+import pytest
+
 from searchengine_spark.corpus import make_embeddings
 from searchengine_spark.pipeline import similarity
 
@@ -61,6 +63,20 @@ def test_prebuilt_assignment_reuse(spark):
     reused = similarity.ivf_topk(emb, QIDS, k=10, n_probe=3, prebuilt=idx).collect()
     idx[0].unpersist()
     assert _key(one_call) == _key(reused)
+
+
+def test_prebuilt_rejects_params_that_do_not_fit(spark):
+    """A prebuilt index fixes the cell count: an explicit ``n_cells``
+    other than its own, or more probes than it has cells, raises
+    instead of being ignored; a matching ``n_cells`` is accepted."""
+    emb = make_embeddings(spark, 200, dim=16)
+    idx = similarity.ivf_assign(emb, n_cells=8)
+    with pytest.raises(ValueError, match="n_cells=16 but the prebuilt index has 8"):
+        similarity.ivf_topk(emb, QIDS, k=10, n_cells=16, n_probe=3, prebuilt=idx)
+    with pytest.raises(ValueError, match="n_probe=9 exceeds"):
+        similarity.ivf_topk(emb, QIDS, k=10, n_probe=9, prebuilt=idx)
+    full = similarity.ivf_topk(emb, QIDS, k=10, n_cells=8, n_probe=8, prebuilt=idx)
+    assert _key(full.collect()) == _key(similarity.cosine_topk(emb, QIDS, k=10).collect())
 
 
 def test_one_call_keeps_callers_cached_index(spark):

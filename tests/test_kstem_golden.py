@@ -466,7 +466,7 @@ resonate restate resuscitate retaliate reverberate revitalize revive ruminate
 salivate salute sanitize saturate scrutinize segregate serenade socialize
 stagnate standardize sterilize stifle stigmatize strangle strategize subjugate
 sublimate subsidize suffocate synchronize synthesize tabulate tantalize
-trample transpire traumatize truncate undulate uproute vacate vaccinate
+trample transpire traumatize truncate undulate vacate vaccinate
 vandalize vaporize vegetate venerate ventilate vindicate vocalize wriggle""".split()
 
 P_VERBS3 = """abandon abolish abound accent acclimate accost adjourn admonish afflict allot
@@ -486,7 +486,7 @@ ferment flatten flatter flicker flounder fluster forewarn freshen frighten
 frolic garner gleam glisten glitter harden hasten hearten heighten hoard
 hoodwink humph hunker hush impair impart impeach implant impose imprint
 imprison inflict instill interject interlock intermingle intersect intervene
-jumble kindle lambast languish lessen lighten likening loiter loosen madden
+jumble kindle lambast languish lessen lighten liken loiter loosen madden
 maim malign meander moisten mumble muse nourish obstruct ordain outlast
 outnumber outperform outrun outshine outsmart outweigh overreact oversimplify
 overwhelm pamper parch pelt perturb pester pilfer pinpoint plummet plunder
@@ -633,7 +633,7 @@ satellite sawdust sawhorse sawmill saxophone scabbard scallop scarecrow scarf
 schooner scimitar scoreboard scorpion scrapbook seabird seashell seashore
 seedling semicircle senate sentry sequel sequoia serum shamrock shantytown
 shipyard shoal shoehorn shoelace shotgun showcase shuttle sideboard sidecar
-sidewalk signode signpost silhouette silo sitar skateboard skylark skylight
+sidewalk signpost silhouette silo sitar skateboard skylark skylight
 skyline skyscraper sledge sleigh slingshot smokestack snapdragon snowdrift
 snowflake snowplow snowshoe sojourn solarium solvent sombrero sonata sonnet
 soot souvenir spa spaghetti spatula spearhead spearmint specimen spectacle

@@ -34,6 +34,23 @@ def test_driver_heap_fits_host(spark, monkeypatch):
     assert driver_memory() == "3g"
 
 
+def test_jit_pool_is_one_c1_and_one_c2_thread(spark):
+    """``get_spark`` launches the local-mode JVM (driver and every
+    executor) with two JIT compiler threads; it passes the flag through
+    ``spark.driver.defaultJavaOptions``, so ``extraJavaOptions`` stays
+    the caller's and a caller's own ``-XX:CICompilerCount`` still wins."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("CICompilerCount").getValue() == "2"
+    # Spark itself fills extraJavaOptions with its --add-opens list;
+    # the JIT flag must not be in it
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.driver.defaultJavaOptions") == "-XX:CICompilerCount=2"
+    assert "CICompilerCount" not in conf.get("spark.driver.extraJavaOptions", "")
+
+
 def test_pyfiles_zip_imports_standalone(tmp_path):
     """The ``scripts/make_pyfiles.py`` zip (what ``spark-submit
     --py-files`` ships) is self-contained: a fresh interpreter with only
