@@ -370,15 +370,18 @@ def build_index(
 #
 # - write: ``write_tables`` writes the mutation's tables as NEW seg dirs,
 #   named deterministically from the operation and its input
-#   (``w<digest>`` for ``write_index``, ``bLO_HI`` for a minor compaction
-#   of delta batches LO..HI, ``m<digest>`` for a major compaction), so a
-#   replayed write overwrites only its own dirs;
+#   (``w<digest>`` for ``write_index``, ``d<batch>`` for a streamed
+#   micro-batch, ``m<digest>`` for a major compaction), so a replayed
+#   write overwrites only its own dirs;
 # - commit: ``write_meta`` replaces meta.json atomically; its ``segs``
-#   list names the live generations;
+#   list names the live generations (a minor compaction only appends
+#   recorded ``d`` segs to it);
 # - read: ``read_table`` reads exactly the named segs;
 # - clean up: the commit then deletes every seg dir that neither it nor
 #   the commit it replaced names, so a reader opened before a commit
-#   keeps working until the next one.
+#   keeps working until the next one; a ``d`` seg above the commit's
+#   ``folded_through`` is a batch still waiting for a compaction and
+#   is kept.
 #
 # df/ctf are sums over disjoint doc sets, so ``read_index`` folds the
 # term_stats generations with a vocab-sized aggregate and nobody
@@ -453,21 +456,29 @@ def check_layout(meta: dict, path: str) -> None:
         )
 
 
+def batch_id(seg: str) -> int | None:
+    """The micro-batch id of a streamed generation ``d<batch>``, else None."""
+    return int(seg[1:]) if seg[:1] == "d" and seg[1:].isdigit() else None
+
+
 def write_meta(path: str, meta: dict) -> None:
     """Commit: replace ``meta.json`` atomically — the only commit of every
     write and compaction; ``meta["segs"]`` names the live generations.
     Then delete every seg dir named by neither this commit nor the one
-    it replaced."""
+    it replaced, except the streamed batches above its
+    ``folded_through`` (not yet compacted)."""
     replaced = read_meta(path).get("segs") or []
     _write_json(os.path.join(path, "meta.json"), meta, indent=1)
-    _drop_segs(path, set(meta["segs"]) | set(replaced))
+    _drop_segs(path, set(meta["segs"]) | set(replaced), int(meta.get("folded_through", -1)))
 
 
-def _drop_segs(path: str, keep: set) -> None:
+def _drop_segs(path: str, keep: set, folded_through: int) -> None:
     for table in TERM_TABLES + DOC_TABLES:
         nest = "bucket=*" if table in TERM_TABLES else ""
         for d in glob.glob(os.path.join(path, table, nest, "seg=*")):
-            if d.rsplit("seg=", 1)[1] not in keep:
+            seg = d.rsplit("seg=", 1)[1]
+            pending = batch_id(seg) is not None and batch_id(seg) > folded_through
+            if seg not in keep and not pending:
                 shutil.rmtree(d, ignore_errors=True)
 
 
@@ -482,6 +493,17 @@ def read_table(spark: SparkSession, path: str, table: str, segs) -> DataFrame:
     else:
         df = spark.read.parquet(root).where(F.col("seg").isin(list(segs)))
     return df.drop("seg")
+
+
+def writers_per_bucket(tokens: int, buckets: int) -> int:
+    """Postings writer tasks per bucket: one per 500k tokens of the
+    bucket (from field_stats, no extra job). Partitioning by bucket
+    alone funnels a stopword-heavy bucket's whole posting mass through
+    one writer, and a fixed count lets the per-writer sort grow with the
+    corpus until the external sorter falls off the in-memory cliff (the
+    4M-page run measured 7.4x write cost for 4x the postings with 8
+    writers); a small generation gets one file per bucket."""
+    return max(1, -(-tokens // (buckets * 500_000)))
 
 
 def write_tables(
@@ -506,14 +528,9 @@ def write_tables(
     is idempotent and other generations are never touched. Nothing is
     live until ``write_meta`` names ``seg``.
     """
-    # Salt scales with the token count (from field_stats — no extra
-    # job): partitioning by bucket alone funnels a stopword-heavy
-    # bucket's whole posting mass through one writer task, and a FIXED
-    # salt lets per-writer sort size grow with the corpus until the
-    # external sorter falls off the in-memory cliff (the 4M-page run
-    # measured 7.4x write cost for 4x the postings with salt pinned at 8).
-    tokens = sum(int(v.get("sum_len", 0)) for v in field_stats.values())
-    salt = max(8, -(-tokens // (buckets * 500_000)))
+    salt = writers_per_bucket(
+        sum(int(v.get("sum_len", 0)) for v in field_stats.values()), buckets
+    )
 
     def by_bucket(df: DataFrame) -> DataFrame:
         # the term-hash partitioner; functions.xxh64 mirrors it driver-side
@@ -531,25 +548,31 @@ def write_tables(
             bucketed = bucketed.persist()
             cached.append(bucketed)
             term_stats = df_ctf(bucketed, "bucket")
-        # a doc-id salt spreads each bucket over `salt` writers: several
-        # (term, field, doc_id)-sorted files per bucket dir
-        frames["postings"] = bucketed.repartition(
-            (buckets if only_buckets is None else len(only_buckets)) * salt,
-            "bucket",
-            F.pmod(F.col("doc_id"), F.lit(salt)),
-        ).sortWithinPartitions("term", "field", "doc_id")
+        # a doc-id salt spreads each bucket over `salt` writers, each file
+        # (term, field, doc_id)-sorted: the sort leads with the write's
+        # partition columns, so the planned write adds no (bucket, seg)
+        # sort of its own that would put the rows back in build order
+        frames["postings"] = (
+            bucketed.withColumn("seg", F.lit(seg))
+            .repartition(
+                (buckets if only_buckets is None else len(only_buckets)) * salt,
+                "bucket",
+                F.pmod(F.col("doc_id"), F.lit(salt)),
+            )
+            .sortWithinPartitions("bucket", "seg", "term", "field", "doc_id")
+        )
     if term_stats is not None:
         frames["term_stats"] = term_stats.select(
-            "term", "field", "df", "ctf", "bucket"
+            "term", "field", "df", "ctf", "bucket", F.lit(seg).alias("seg")
         ).repartition(buckets, "bucket")
     for name, df in (("doc_stats", doc_stats), ("docs", docs)):
         if df is not None:
-            frames[name] = df
+            frames[name] = df.withColumn("seg", F.lit(seg))
 
     def write(name: str) -> float:
         t0 = time.time()
         (
-            frames[name].withColumn("seg", F.lit(seg))
+            frames[name]
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*(["bucket"] if name in TERM_TABLES else []), "seg")

@@ -92,6 +92,13 @@ def get_spark(
         # `query`. defaultJavaOptions goes ahead of a caller's
         # extraJavaOptions, so a caller's -XX:CICompilerCount still wins.
         .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
+        # Janino's generated-class cache (default 100 entries) holds less
+        # than one warm query session: 4 rounds of perfbench's 8 stream
+        # and 8 batch queries (`query`, seed 1) in one local[4] session
+        # on a 4-vCPU host still compiled 57 stream and 81 batch classes
+        # in round 3 at 100 entries (6.73 and 5.60 CPU-s), and none at
+        # 2000 (5.92 and 4.60 CPU-s)
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

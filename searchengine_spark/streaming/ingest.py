@@ -3,34 +3,40 @@
 The reference is strictly batch (SURVEY.md §2.10) and the north rule
 asks for a *checkpoint-resumable* build. Batch resume is handled by
 ``index.build.write_index`` manifests; this module adds the streaming
-path: new page files land in a directory, a Structured Streaming job
-tokenizes each micro-batch and appends **delta posting segments** (plus
-delta doc_stats / docs side segments); a compaction folds deltas into
-the index. Exactly-once comes from the streaming checkpoint
-(file-source offsets) + idempotent per-batch output paths
-(overwrite-by-batch-id) + a ``folded_through`` batch watermark in
-meta.json that makes the fold itself replay-safe.
+path: new page files land in a directory, and a Structured Streaming
+job tokenizes each micro-batch and writes it **once**, in the index's
+own format, as generation ``seg=d<batch_id>`` of every table through
+the index's one writer (``index.build.write_tables``): postings
+bucketed, term_stats, doc_stats, and docs aligned to the live docs
+schema. The batch's last step is a small record (``_batch.json`` in its
+docs dir): its doc count, field stats and analyzer. Nothing a batch
+writes is live until a compaction commits it — the Delta Lake pattern
+(VLDB 2020): the streaming sink writes its files once and a log commit
+makes them visible.
+
+Exactly-once comes from the streaming checkpoint (file-source offsets),
+the per-batch seg name (a replayed batch overwrites only its own dirs)
+and the ``folded_through`` batch watermark in meta.json: a batch at or
+below it is already committed, and a replay of it writes nothing.
 
 Both compactions follow the index's one commit rule (``index.build``):
-write the new generation through ``write_tables`` as new ``seg=`` dirs,
-then commit it with ``write_meta``, whose ``segs`` list names the live
+``write_meta`` replaces meta.json, whose ``segs`` list names the live
 generations. A dir without meta.json is an empty index; its first
-compaction is a minor fold onto nothing, and commits the analyzer the
-delta batches name; every compaction rejects batches of another
-analyzer than the index's.
+compaction is a minor one and commits the analyzer the batch records
+name; every compaction rejects batches of another analyzer than the
+index's.
 
-- **minor** (the default): the delta lands as generation
-  ``seg=bLO_HI`` (delta batches LO..HI) of every table, postings
-  re-bucketed with the index's partitioner; the commit appends it to
-  ``segs``. df/ctf are additive across generations, so ``read_index``
-  folds them with a vocab-sized aggregate — **no live byte is read or
-  rewritten**. Cost scales with DELTA size.
+- **minor** (the default): a commit with **no Spark job**. It reads the
+  records of the batches above ``folded_through``, appends their ``d``
+  segs to ``segs``, patches n_docs and field_stats arithmetically and
+  advances ``folded_through``, in one ``write_meta``. df/ctf are
+  additive across generations, so ``read_index`` folds them with a
+  vocab-sized aggregate — no live byte is read or rewritten.
 - **major** (``full_rewrite=True``): fold every live generation and the
-  deltas into one fresh generation ``seg=m<digest>``, committed as the
-  only live one — bounding segment-count growth and compacting row
-  groups. This is the periodic background pass; at 100 TB it runs
-  rarely and off-peak, while minor compactions keep the live index
-  fresh per crawl cycle.
+  recorded batches into one fresh generation ``seg=m<digest>``,
+  committed as the only live one — bounding segment-count growth and
+  compacting row groups. This is the periodic background pass; at
+  100 TB it runs rarely and off-peak.
 
 Why not rewrite only touched buckets? Measured at 20k pages / 10%
 delta: every one of 32 buckets was touched (zipf vocab ⇒ each doc
@@ -40,11 +46,9 @@ rewrite. Segment append is the only shape whose cost is O(delta).
 
 from __future__ import annotations
 
-import contextlib
 import glob
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -54,6 +58,7 @@ from searchengine_spark.index.build import (
     POSTING_ROW_SCHEMA,
     _doc_postings_gen,
     _write_json,
+    batch_id,
     check_layout,
     field_stats_of,
     read_meta,
@@ -65,18 +70,64 @@ from searchengine_spark.index.build import (
 )
 
 PAGE_SCHEMA = "doc_id long, url string, warc_ts timestamp, html binary, text string, lang string"
-# per delta batch: the analyzer that tokenized it (meta.json's keys)
-BATCH_ANALYZER = "_analyzer.json"
+# a streamed batch's record, in its docs/seg=d<batch> dir; its last write
+BATCH_RECORD = "_batch.json"
 
 
-def _batch_rows(docs: DataFrame, field: str = "body", src_col: str = "text",
-                analyzer: str = "english") -> DataFrame:
-    """Fused tokenize+positions rows (incl. term='' doc_len
-    sentinels) — the same shuffle-free kernel as the batch build."""
-    return docs.select(
+def write_batch(
+    pages: DataFrame, batch: int, index_dir: str, analyzer: str = "english",
+    field: str = "body",
+) -> None:
+    """Write page batch ``batch`` as generation ``seg=d<batch>`` of every
+    table, then its record; a batch at or below the index's
+    ``folded_through`` is committed already and writes nothing.
+
+    ``pages`` carries ``doc_id``, ``url`` (the ext id) and ``text``
+    (field ``field``). The tables are bucketed like the index's (16
+    buckets for a dir without meta.json), and docs take the live docs
+    schema (the metadata columns null)."""
+    meta = read_meta(index_dir)
+    if batch <= int(meta.get("folded_through", -1)):
+        return
+    seg = f"d{batch}"
+    buckets = int(meta.get("buckets") or 16)
+    # fused tokenize+positions rows, incl. one term='' doc_len sentinel
+    # per doc: the same shuffle-free kernel as the batch build
+    rows = pages.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.col(src_col).cast("string").alias("__src"),
-    ).mapInPandas(_doc_postings_gen(analyzer, field, "__src"), POSTING_ROW_SCHEMA)
+        F.col("text").cast("string").alias("__src"),
+    ).mapInPandas(_doc_postings_gen(analyzer, field, "__src"), POSTING_ROW_SCHEMA).persist()
+    try:
+        sentinels = rows.where(F.col("term") == "")
+        n_docs = sentinels.count()
+        if not n_docs:
+            return
+        doc_stats = sentinels.where(F.col("doc_len") > 0).select("doc_id", "field", "doc_len")
+        field_stats = field_stats_of(doc_stats)
+        docs = pages.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("url").cast("string").alias("ext_id"),
+        )
+        if meta.get("segs"):
+            docs = docs.select(*[
+                F.col(f.name) if f.name in docs.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in read_table(pages.sparkSession, index_dir, "docs", meta["segs"]).schema
+            ])
+        phases = write_tables(
+            index_dir, seg, buckets, field_stats,
+            rows.where(F.col("term") != ""), doc_stats, docs,
+        )
+    finally:
+        rows.unpersist()
+    _write_json(os.path.join(index_dir, "docs", f"seg={seg}", BATCH_RECORD), {
+        "n_docs": n_docs,
+        "field_stats": field_stats,
+        "analyzer": analyzer,
+        "analyzer_version": analyzer_version(analyzer),
+        "buckets": buckets,
+        "write_s": phases["postings"],
+    })
 
 
 def start_ingest(
@@ -89,15 +140,8 @@ def start_ingest(
     field: str = "body",
     reader_options: dict | None = None,
 ):
-    """Stream page parquet files from ``input_dir`` into delta segments.
-
-    Per batch writes three idempotent segments (overwrite-by-batch-id):
-    ``delta/batch=N`` postings, ``delta_doc_stats/batch=N`` field
-    lengths, ``delta_docs/batch=N`` (doc_id, ext_id) — everything
-    ``compact`` needs to fold the docs into the base side tables — and
-    ``delta/batch=N/_analyzer.json``, the analyzer name and version the
-    batch was tokenized with (the first compaction of a streamed-only
-    index commits them; a later one checks them against meta.json).
+    """Stream page parquet files from ``input_dir`` into the index dir,
+    each micro-batch through ``write_batch`` as generation ``d<batch_id>``.
 
     Returns the StreamingQuery. ``available_now=True`` drains what's
     there and stops (the batch-oriented test/ops mode); continuous mode
@@ -109,32 +153,9 @@ def start_ingest(
     reader = spark.readStream.schema(PAGE_SCHEMA)
     for k, v in (reader_options or {}).items():
         reader = reader.option(k, v)
-    stream = reader.parquet(input_dir)
-    tokenized_by = {"analyzer": analyzer, "analyzer_version": analyzer_version(analyzer)}
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = _batch_rows(batch_df, field=field, analyzer=analyzer).persist()
-        try:
-            out = os.path.join(index_dir, "delta", f"batch={batch_id}")
-            rows.where(F.col("term") != "").write.mode("overwrite").parquet(out)
-            # doc_len sentinels from the same pass — no second tokenize
-            rows.where((F.col("term") == "") & (F.col("doc_len") > 0)).select(
-                "doc_id", "field", "doc_len"
-            ).write.mode("overwrite").parquet(
-                os.path.join(index_dir, "delta_doc_stats", f"batch={batch_id}")
-            )
-            batch_df.select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.col("url").cast("string").alias("ext_id"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(index_dir, "delta_docs", f"batch={batch_id}")
-            )
-            _write_json(os.path.join(out, BATCH_ANALYZER), tokenized_by)
-        finally:
-            rows.unpersist()
-
     writer = (
-        stream.writeStream.foreachBatch(process_batch)
+        reader.parquet(input_dir).writeStream
+        .foreachBatch(lambda pages, b: write_batch(pages, b, index_dir, analyzer, field))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )
@@ -143,245 +164,141 @@ def start_ingest(
     return writer.start()
 
 
-def _delta_union(
-    spark: SparkSession, index_dir: str, name: str, after: int = -1
-) -> DataFrame | None:
-    d = os.path.join(index_dir, name)
-    if not os.path.isdir(d):
-        return None
-    df = spark.read.option("basePath", d).parquet(d + "/batch=*")
-    if after >= 0:
-        df = df.where(F.col("batch") > after)
-    return df.drop("batch")
+def _records(index_dir: str, after: int) -> dict[int, dict]:
+    """The records of the streamed batches above ``after``, by ascending
+    batch id. A batch without a record has not finished writing."""
+    found = {}
+    for d in glob.glob(os.path.join(index_dir, "docs", "seg=d*")):
+        b = batch_id(d.rsplit("seg=", 1)[1])
+        if b is not None and b > after and os.path.isfile(os.path.join(d, BATCH_RECORD)):
+            with open(os.path.join(d, BATCH_RECORD)) as f:
+                found[b] = json.load(f)
+    return dict(sorted(found.items()))
 
 
-def read_live_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Union the committed generations' postings with un-folded deltas.
-
-    Replay-safe: delta batch dirs at or below the meta ``folded_through``
-    watermark are already inside a committed generation and are excluded."""
-    meta = read_meta(index_dir)
-    frames = []
-    if meta.get("segs"):
-        frames.append(read_table(spark, index_dir, "postings", meta["segs"]).drop("bucket"))
-    delta = _delta_union(spark, index_dir, "delta", after=int(meta.get("folded_through", -1)))
-    if delta is not None:
-        frames.append(delta)
-    if not frames:
-        raise FileNotFoundError(f"no postings under {index_dir}")
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
-
-
-def _batch_ids(index_dir: str, after: int) -> list[int]:
-    """Delta batch ids above ``after`` on disk, ascending."""
-    root = os.path.join(index_dir, "delta")
-    if not os.path.isdir(root):
-        return []
-    ids = (int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("batch="))
-    return sorted(i for i in ids if i > after)
-
-
-def _adopt_analyzer(index_dir: str, batch_ids: list[int], meta: dict) -> None:
-    """Check that delta batches ``batch_ids`` were tokenized with the
-    index's analyzer (``ValueError`` otherwise: their terms would not
-    match the index's or the queries'), and record it in ``meta`` when
-    meta.json names none — the first compaction of a streamed-only
-    index. A batch without a record names no analyzer."""
-    seen = {}
+def _adopt(index_dir: str, records: dict[int, dict], meta: dict) -> None:
+    """Check that the recorded batches were tokenized with the index's
+    analyzer and bucketed like it (``ValueError`` otherwise: their terms
+    would not match the index's or the queries', or a lookup would look
+    in the wrong bucket), and record both in ``meta`` when meta.json
+    names none — the first compaction of a streamed-only index."""
+    seen = {f"batch {b}": (r["analyzer"], r["analyzer_version"]) for b, r in records.items()}
     if meta.get("analyzer"):
         seen["meta.json"] = (meta["analyzer"], meta.get("analyzer_version"))
-    for b in batch_ids:
-        try:
-            with open(os.path.join(index_dir, "delta", f"batch={b}", BATCH_ANALYZER)) as f:
-                rec = json.load(f)
-        except FileNotFoundError:
-            continue
-        seen[f"batch {b}"] = (rec["analyzer"], rec["analyzer_version"])
     if len(set(seen.values())) > 1:
         raise ValueError(
-            f"delta batches under {index_dir} were tokenized with another "
+            f"streamed batches under {index_dir} were tokenized with another "
             f"analyzer than the index: {seen}. Re-ingest them with the "
             "index's analyzer."
         )
-    if not meta.get("analyzer"):
-        meta["analyzer"], meta["analyzer_version"] = next(iter(seen.values()), (None, None))
-
-
-def _delta_frames(
-    spark: SparkSession, index_dir: str, after: int
-) -> tuple[DataFrame, DataFrame, DataFrame] | None:
-    """The un-folded delta batches' (postings, doc_stats, docs), or None
-    without a delta."""
-    postings = _delta_union(spark, index_dir, "delta", after)
-    if postings is None:
-        return None
-    return (
-        postings,
-        _delta_union(spark, index_dir, "delta_doc_stats", after).select("doc_id", "field", "doc_len"),
-        _delta_union(spark, index_dir, "delta_docs", after).select("doc_id", "ext_id"),
+    buckets = {int(r["buckets"]) for r in records.values()} | (
+        {int(meta["buckets"])} if meta.get("buckets") else set()
     )
+    if len(buckets) > 1:
+        raise ValueError(
+            f"streamed batches under {index_dir} were bucketed {sorted(buckets)} "
+            "ways, unlike the index. Re-ingest them into the written index."
+        )
+    if records and not meta.get("analyzer"):
+        meta["analyzer"], meta["analyzer_version"] = next(iter(seen.values()))
+        meta["buckets"] = buckets.pop()
 
 
 def compact(spark: SparkSession, index_dir: str, full_rewrite: bool = False) -> dict:
-    """Fold the delta segments into the index (idempotent, replay-safe).
+    """Commit the recorded streamed batches (idempotent, replay-safe).
 
-    - MINOR (the default): the delta becomes one new generation appended
-      to the live ones; no live byte is read or rewritten, and cost
-      scales with delta size (the 100-TB requirement; see the module
-      docstring for why per-bucket rewrite was rejected). A dir without
-      meta.json is an empty index, and this is its first generation;
+    - MINOR (the default): append their ``d`` segs to the live ones in
+      one ``write_meta``, with no Spark job; no live byte is read or
+      rewritten. A dir without meta.json is an empty index, and this is
+      its first commit;
     - ``full_rewrite=True``: MAJOR fold of every live generation and
-      the deltas into one fresh generation.
+      the batches into one fresh generation.
 
-    Either way the new generation goes live in one ``write_meta``
-    commit; the folded delta batches are deleted after it. Returns
-    ``{"mode", "phases"}``; ``phases`` holds the seconds per table
+    Returns ``{"mode", "phases"}``; ``phases`` holds the seconds per table
     written (``write_tables``), empty when nothing was written.
     """
     meta = read_meta(index_dir)
     if meta:
         check_layout(meta, index_dir)
-    if meta and full_rewrite:
-        info = {"mode": "major", "phases": _compact_major(spark, index_dir, meta)}
-    else:
-        info = {"mode": "minor", "phases": _compact_minor(spark, index_dir, meta)}
-    # only the folded batches: one that landed during the compaction
-    # waits for the next one
-    folded = int(read_meta(index_dir).get("folded_through", -1))
-    for name in ("delta", "delta_doc_stats", "delta_docs"):
-        root = os.path.join(index_dir, name)
-        for d in glob.glob(os.path.join(root, "batch=*")):
-            if int(d.rsplit("=", 1)[1]) <= folded:
-                shutil.rmtree(d)
-        with contextlib.suppress(OSError):  # absent, or a new batch
-            os.rmdir(root)
-    return info
+    records = _records(index_dir, int(meta.get("folded_through", -1)))
+    _adopt(index_dir, records, meta)
+    if meta.get("segs") and full_rewrite:
+        return {"mode": "major", "phases": _compact_major(spark, index_dir, meta, records)}
+    _compact_minor(index_dir, meta, records)
+    return {"mode": "minor", "phases": {}}
 
 
-def _compact_minor(spark: SparkSession, index_dir: str, meta: dict) -> dict:
-    """Seg-append fold: delta -> one new generation, live ones untouched.
+def _compact_minor(index_dir: str, meta: dict, records: dict[int, dict]) -> None:
+    """Seg-append commit: the recorded batches' ``d`` segs join ``segs``;
+    n_docs / field_stats are patched from their records (no full-table
+    agg) and ``folded_through`` advances to the highest batch id; the
+    per-bucket lineage manifests are refreshed for buckets that gained a
+    generation.
 
-    Per compaction:
-
-    - the delta's four tables land as generation ``seg=bLO_HI`` through
-      ``write_tables``: postings re-bucketed with the index's partitioner
-      (bucket pruning on term scans keeps working, and no live file in
-      any bucket is read); term_stats as the delta's df/ctf, which
-      ``read_index`` folds with the live ones at read time; doc_stats /
-      docs are append-only by construction;
-    - the meta.json commit appends the seg to ``segs``, patches n_docs /
-      field_stats arithmetically from the delta side segments (no
-      full-table agg) and advances ``folded_through`` to the highest
-      folded batch id; per-bucket lineage manifests are refreshed for
-      buckets that gained a segment.
-
-    Crash-safe: a re-run before the commit recomputes the same seg name
-    from the same batch-id range and overwrites its own dirs; once meta
-    commits, ``folded_through`` excludes the folded batches even if new
-    ones have arrived alongside the stale dirs.
+    Crash-safe: before the commit the batches are pending and a rerun
+    recommits them; once meta commits, ``folded_through`` excludes them.
     """
-    buckets = int(meta.get("buckets") or 16)
-    folded_through = int(meta.get("folded_through", -1))
-    batch_ids = _batch_ids(index_dir, folded_through)
-    if not batch_ids:
-        return {}  # everything already folded; caller deletes the stale dirs
-    seg = f"b{batch_ids[0]}_{batch_ids[-1]}"
-    segs = list(meta.get("segs") or [])
-    _adopt_analyzer(index_dir, batch_ids, meta)
-
-    postings, doc_stats, docs = _delta_frames(spark, index_dir, folded_through)
-    if segs:
-        # align to the live docs schema (metadata cols -> null for delta)
-        docs = docs.select(
-            *[
-                F.col(f.name) if f.name in docs.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in read_table(spark, index_dir, "docs", segs).schema.fields
-            ]
-        )
-    doc_stats = doc_stats.persist()
-    try:
-        delta_fs = field_stats_of(doc_stats)
-        phases = write_tables(index_dir, seg, buckets, delta_fs, postings, doc_stats, docs)
-    finally:
-        doc_stats.unpersist()
-    n_new = docs.select("doc_id").distinct().count()
-
-    # touched buckets come from the dirs the write just created — no
-    # extra full-delta distinct pass just to learn them. An empty list
-    # (all-empty-body delta) still falls through to the commit: the
-    # docs/doc_stats segments above were written and n_docs must advance.
-    touched = [
-        b for b in range(buckets)
-        if os.path.isdir(os.path.join(index_dir, "postings", f"bucket={b}", f"seg={seg}"))
-    ]
+    if not records:
+        return
     field_stats = dict(meta.get("field_stats") or {})
-    for fld, delta in delta_fs.items():
-        cur = dict(field_stats.get(fld) or {"doc_count": 0, "sum_len": 0})
-        cur["doc_count"] = int(cur.get("doc_count") or 0) + delta["doc_count"]
-        cur["sum_len"] = int(cur.get("sum_len") or 0) + delta["sum_len"]
-        cur["avg_len"] = cur["sum_len"] / max(1, cur["doc_count"])
-        field_stats[fld] = cur
-    n_docs = int(meta.get("n_docs") or 0) + n_new
+    for rec in records.values():
+        for fld, delta in rec["field_stats"].items():
+            cur = field_stats.get(fld) or {}
+            doc_count = int(cur.get("doc_count") or 0) + delta["doc_count"]
+            sum_len = int(cur.get("sum_len") or 0) + delta["sum_len"]
+            field_stats[fld] = {
+                "doc_count": doc_count, "sum_len": sum_len, "avg_len": sum_len / max(1, doc_count),
+            }
+    n_docs = int(meta.get("n_docs") or 0) + sum(r["n_docs"] for r in records.values())
     n_compactions = int(meta.get("compactions") or 0) + 1
-    # a fold onto nothing records the delta's fields
+    # a fold onto nothing records the batches' fields
     meta.setdefault("fields", sorted(field_stats))
-
     fp = (
         f"compact{n_compactions}|ndocs={n_docs}|analyzer={meta['analyzer']}"
         f"|fields={','.join(meta['fields'])}"
     )
-    meta.update(
-        {
-            "n_docs": n_docs,
-            "field_stats": field_stats,
-            "fingerprint": fp,
-            "buckets": buckets,
-            "compactions": n_compactions,
-            "layout": LAYOUT,
-            "folded_through": batch_ids[-1],
-            "segs": segs + [seg],
-        }
-    )
+    meta.update({
+        "n_docs": n_docs,
+        "field_stats": field_stats,
+        "fingerprint": fp,
+        "compactions": n_compactions,
+        "layout": LAYOUT,
+        "folded_through": max(records),
+        "segs": list(meta.get("segs") or []) + [f"d{b}" for b in records],
+    })
     write_meta(index_dir, meta)
-    write_manifests(index_dir, touched, seg, fp, phases["postings"], compacted=True)
-    return phases
+    for b, rec in records.items():
+        seg = f"d{b}"
+        touched = [
+            k for k in range(int(meta["buckets"]))
+            if os.path.isdir(os.path.join(index_dir, "postings", f"bucket={k}", f"seg={seg}"))
+        ]
+        write_manifests(index_dir, touched, seg, fp, rec["write_s"], compacted=True)
 
 
-def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> dict:
-    """Fold every live generation + un-folded deltas into one fresh
-    generation ``seg=m<digest>`` (named from the generations and batches
-    folded), committed as the only live one. Bounds segment-count
-    growth and re-sorts and re-compresses row groups. This is the
-    heavyweight periodic pass — minor compactions are the
-    per-crawl-cycle path."""
-    buckets = int(meta.get("buckets") or 16)
-    folded_through = int(meta.get("folded_through", -1))
-    segs = meta["segs"]
-    batch_ids = _batch_ids(index_dir, folded_through)
-    _adopt_analyzer(index_dir, batch_ids, meta)
-    seg = seg_name("m", *segs, *batch_ids)
-
-    # doc-keyed tables: live ∪ delta. Docs are append-only; the dedup
-    # keeps one row per key. docs keeps every live metadata column
-    # (n_chars/lang/... — getAttribute reads them); delta rows carry
-    # only (doc_id, ext_id).
-    doc_stats = read_table(spark, index_dir, "doc_stats", segs).select("doc_id", "field", "doc_len")
-    docs = read_table(spark, index_dir, "docs", segs)
-    delta = _delta_frames(spark, index_dir, folded_through)
-    if delta is not None:
-        doc_stats = doc_stats.unionByName(delta[1])
-        docs = docs.unionByName(delta[2], allowMissingColumns=True)
-
-    doc_stats = doc_stats.dropDuplicates(["doc_id", "field"]).persist()
+def _compact_major(spark: SparkSession, index_dir: str, meta: dict, records: dict[int, dict]) -> dict:
+    """Fold every live generation and the recorded batches into one fresh
+    generation ``seg=m<digest>`` (named from the generations folded),
+    committed as the only live one. Bounds segment-count growth and
+    re-sorts and re-compresses row groups. This is the heavyweight
+    periodic pass — minor compactions are the per-crawl-cycle path."""
+    buckets = int(meta["buckets"])
+    segs = meta["segs"] + [f"d{b}" for b in records]
+    seg = seg_name("m", *segs)
+    # docs are append-only; the dedups keep one row per key. docs keeps
+    # every live metadata column (n_chars/lang/... — getAttribute reads
+    # them): streamed batches wrote theirs in the live docs schema.
+    doc_stats = (
+        read_table(spark, index_dir, "doc_stats", segs).select("doc_id", "field", "doc_len")
+        .dropDuplicates(["doc_id", "field"]).persist()
+    )
     try:
         field_stats = field_stats_of(doc_stats, meta.get("fields", []))
         phases = write_tables(
             index_dir, seg, buckets, field_stats,
-            read_live_postings(spark, index_dir), doc_stats, docs.dropDuplicates(["doc_id"]),
+            read_table(spark, index_dir, "postings", segs).drop("bucket"),
+            doc_stats,
+            read_table(spark, index_dir, "docs", segs).dropDuplicates(["doc_id"]),
         )
     finally:
         doc_stats.unpersist()
@@ -393,9 +310,9 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict) -> dict:
     fp = f"compact|ndocs={n_docs}|analyzer={meta.get('analyzer')}|fields={','.join(meta.get('fields', []))}"
     meta.update(
         {"n_docs": n_docs, "field_stats": field_stats, "fingerprint": fp,
-         "buckets": buckets,
          "compactions": n_compactions, "layout": LAYOUT,
-         "folded_through": max([folded_through, *batch_ids]), "segs": [seg]}
+         "folded_through": max([int(meta.get("folded_through", -1)), *records]),
+         "segs": [seg]}
     )
     write_meta(index_dir, meta)
     write_manifests(index_dir, range(buckets), seg, fp, phases["postings"], compacted=True)

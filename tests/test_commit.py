@@ -1,16 +1,19 @@
-"""One commit protocol for every index mutation (index.build, layout v4).
+"""One commit protocol for every index mutation (index.build, layout v5).
 
-``write_index``, the minor and the major compaction write new ``seg=``
-generation dirs and make them live with one atomic meta.json replace.
+``write_index``, a streamed batch and the major compaction write new
+``seg=`` generation dirs; ``write_index`` and the minor and the major
+compaction make them live with one atomic meta.json replace (a minor
+compaction writes no table: it commits the streamed ``d<batch>`` segs).
 These tests make a mutation fail after each of its steps and check that
 the index then reads as exactly the old generation or the new one, and
 that rerunning the mutation completes it; that a reader opened before a
 major compaction keeps answering; that the commit removes only
-generations neither it nor the commit it replaced names, and a
-compaction only the delta batches it folded; and that older layouts are
-rejected.
+generations neither it nor the commit it replaced names, and keeps the
+streamed batches no compaction folded yet; that a replay of a folded
+batch writes nothing; and that older layouts are rejected.
 """
 
+import glob
 import itertools
 import json
 import os
@@ -18,6 +21,7 @@ import random
 import shutil
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
@@ -25,10 +29,10 @@ from searchengine_spark.engine import SearchEngine
 from searchengine_spark.index import build
 from searchengine_spark.index.build import build_index, read_index, read_table, write_index
 from searchengine_spark.streaming import ingest
+from tests.test_term_stats_lookup import count_jobs
 
 SCHEMA = "doc_id long, text string, url string"
 QUERIES = [("bm25", "cat dog ibis"), ("bm25", "#near/2(cat dog)"), ("indri", "cat fox jay")]
-DELTAS = ("delta", "delta_doc_stats", "delta_docs")
 
 
 class Crash(Exception):
@@ -59,6 +63,27 @@ def _meta(path):
         return json.load(f)
 
 
+def _stream(spark, incoming, path, ckpt):
+    """Stream ``incoming`` into ``path``; a ``Crash`` in a batch ends the
+    query, and is raised as itself."""
+    try:
+        ingest.start_ingest(spark, incoming, path, ckpt, analyzer="simple").awaitTermination(120)
+    except StreamingQueryException as e:
+        if "Crash" in str(e):
+            raise Crash(str(e)) from e
+        raise
+
+
+def _copy_batch(src, dst, batch=0, to=None):
+    """Copy the seg dirs of streamed batch ``batch`` (its record too) from
+    index dir ``src`` into ``dst``, as batch ``to`` (default: the same)."""
+    for table in build.TERM_TABLES + build.DOC_TABLES:
+        nest = "bucket=*" if table in build.TERM_TABLES else ""
+        for d in glob.glob(os.path.join(src, table, nest, f"seg=d{batch}")):
+            parent = os.path.dirname(os.path.relpath(d, src))
+            shutil.copytree(d, os.path.join(dst, parent, f"seg=d{batch if to is None else to}"))
+
+
 def _segs_on_disk(path):
     return {
         d.split("=", 1)[1]
@@ -72,8 +97,9 @@ def _segs_on_disk(path):
 @pytest.fixture(scope="module")
 def states(spark, tmp_path_factory):
     """Pristine dirs: ``base`` (40 docs written), ``streamed`` (base plus
-    the other 15 docs as un-folded delta batches) and ``fresh`` (all 55
-    written at once), with the snapshots of the old and the new index."""
+    the other 15 docs as streamed batch 0, not yet compacted) and
+    ``fresh`` (all 55 written at once), with the snapshots of the old
+    and the new index, and the page dir the stream reads."""
     root = tmp_path_factory.mktemp("commit")
     rng = random.Random(5)
     vocab = ["ant", "bee", "cat", "dog", "eel", "fox", "gnu", "hen", "ibis", "jay"]
@@ -89,20 +115,30 @@ def states(spark, tmp_path_factory):
         "doc_id", "url", F.lit(None).cast("timestamp").alias("warc_ts"),
         F.lit(None).cast("binary").alias("html"), "text", F.lit("en").alias("lang"),
     ).coalesce(1).write.parquet(incoming)
-    ingest.start_ingest(
-        spark, incoming, streamed, str(root / "ckpt"), analyzer="simple"
-    ).awaitTermination(120)
+    _stream(spark, incoming, streamed, str(root / "ckpt"))
     _write(spark, rows, fresh)
     old, new = _snapshot(spark, base), _snapshot(spark, fresh)
     assert old["n_docs"] == 40 and new["n_docs"] == 55 and old["top10"] != new["top10"]
-    return {"rows": rows, "base": base, "streamed": streamed, "old": old, "new": new}
+    return {
+        "rows": rows, "base": base, "streamed": streamed, "incoming": incoming,
+        "old": old, "new": new,
+    }
+
+
+def _stream_and_compact(spark, states, path):
+    """The streamed path: batch 0 (the 15 pages) lands, then a minor
+    compaction commits it; a rerun replays the batch from the stream's
+    checkpoint if it had not finished."""
+    _stream(spark, states["incoming"], path, path + "_ckpt")
+    return ingest.compact(spark, path)
 
 
 MUTATIONS = {
     # name -> (pristine dir, run)
-    "write_index": ("base", lambda spark, rows, path: _write(spark, rows, path)),
-    "minor": ("streamed", lambda spark, rows, path: ingest.compact(spark, path)),
-    "major": ("streamed", lambda spark, rows, path: ingest.compact(spark, path, full_rewrite=True)),
+    "write_index": ("base", lambda spark, states, path: _write(spark, states["rows"], path)),
+    # the table writes of the minor path happen in the streamed batch
+    "minor": ("base", _stream_and_compact),
+    "major": ("streamed", lambda spark, states, path: ingest.compact(spark, path, full_rewrite=True)),
 }
 
 # each step of a mutation, in the order the steps run; the generation
@@ -149,11 +185,11 @@ def test_failed_mutation_reads_old_or_new(spark, states, tmp_path, monkeypatch, 
     with monkeypatch.context() as mp:
         _inject(mp, fault)
         with pytest.raises(Crash):
-            run(spark, states["rows"], path)
+            run(spark, states, path)
     committed = fault == "after_commit" or (fault == "write_manifests" and mutation != "write_index")
     assert _snapshot(spark, path) == states["new" if committed else "old"]
     # a rerun completes the mutation
-    run(spark, states["rows"], path)
+    run(spark, states, path)
     assert _snapshot(spark, path) == states["new"]
     assert set(_meta(path)["segs"]) <= _segs_on_disk(path)
 
@@ -186,17 +222,15 @@ def test_old_reader_survives_major_compaction(spark, states, tmp_path):
 
 def test_first_compaction_of_a_dir_without_meta_is_a_minor_fold(spark, states, tmp_path):
     path = str(tmp_path / "idx")
-    for name in DELTAS:
-        shutil.copytree(os.path.join(states["streamed"], name), os.path.join(path, name))
+    _copy_batch(states["streamed"], path)
     assert ingest.compact(spark, path)["mode"] == "minor"
     meta = _meta(path)
-    seg = meta["segs"][0]
-    assert meta["segs"] == [seg] and seg.startswith("b") and meta["n_docs"] == 15
+    assert meta["segs"] == ["d0"] and meta["n_docs"] == 15 and meta["buckets"] == 4
     assert meta["layout"] == build.LAYOUT and meta["fields"] == ["body"]
     assert sorted(os.listdir(path)) == ["_manifest", "doc_stats", "docs", "meta.json", "postings", "term_stats"]
     ids = {r["doc_id"] for r in read_table(spark, path, "docs", meta["segs"]).collect()}
     assert ids == set(range(40, 55))
-    live = ingest.read_live_postings(spark, path)
+    live = read_index(spark, path).postings
     assert live.select("doc_id").distinct().count() == 15
 
 
@@ -212,28 +246,97 @@ def test_older_layout_is_rejected(spark, states, tmp_path, layout):
         read_index(spark, path)
     with pytest.raises(ValueError, match="Rebuild"):
         ingest.compact(spark, path)
-    assert all(os.path.isdir(os.path.join(path, name)) for name in DELTAS)
+    assert "d0" in _segs_on_disk(path)
 
 
 def test_batch_landing_during_compaction_waits_for_the_next(spark, states, tmp_path, monkeypatch):
-    """A compaction deletes only the batches it folded: one the stream
-    writes while the compaction runs is folded by the next compaction."""
+    """A commit keeps the streamed batches it does not fold: one the
+    stream writes while a compaction runs is folded by the next one."""
     path = str(tmp_path / "idx")
     shutil.copytree(states["streamed"], path)
     real = ingest.write_meta
 
     def commit_while_a_batch_lands(p, meta):
-        for name in DELTAS:  # batch 1: the same 15 pages redelivered
-            shutil.copytree(os.path.join(p, name, "batch=0"), os.path.join(p, name, "batch=1"))
+        _copy_batch(p, p, to=1)  # batch 1: the same 15 pages redelivered
         real(p, meta)
 
     monkeypatch.setattr(ingest, "write_meta", commit_while_a_batch_lands)
     ingest.compact(spark, path)
     monkeypatch.setattr(ingest, "write_meta", real)
-    assert _meta(path)["folded_through"] == 0 and _meta(path)["n_docs"] == 55
-    assert all(os.listdir(os.path.join(path, name)) == ["batch=1"] for name in DELTAS)
+    meta = _meta(path)
+    assert meta["folded_through"] == 0 and meta["n_docs"] == 55 and "d1" not in meta["segs"]
+    assert _segs_on_disk(path) == set(meta["segs"]) | {"d1"}
     ingest.compact(spark, path)
     meta = _meta(path)
     assert meta["folded_through"] == 1 and meta["n_docs"] == 70
-    assert meta["segs"][-2:] == ["b0_0", "b1_1"]
-    assert not any(os.path.exists(os.path.join(path, name)) for name in DELTAS)
+    assert meta["segs"][-2:] == ["d0", "d1"] and _segs_on_disk(path) == set(meta["segs"])
+
+
+def test_commit_keeps_a_pending_batch(spark, states, tmp_path):
+    """``write_meta`` drops a seg dir no commit names unless it is a
+    streamed batch above the commit's ``folded_through``."""
+    path = str(tmp_path / "idx")
+    shutil.copytree(states["streamed"], path)
+    meta = _meta(path)
+    assert "d0" not in meta["segs"]
+    build.write_meta(path, meta)
+    assert "d0" in _segs_on_disk(path)
+    build.write_meta(path, {**meta, "folded_through": 0})
+    assert _segs_on_disk(path) == set(meta["segs"])
+
+
+def test_batch_without_a_record_is_not_committed(spark, states, tmp_path, monkeypatch):
+    """A batch that dies after its tables but before its record is not
+    committed by a compaction; the stream's replay of it completes it."""
+    path = str(tmp_path / "idx")
+    shutil.copytree(states["base"], path)
+    with monkeypatch.context() as mp:
+        _inject(mp, "write_tables")
+        with pytest.raises(Crash):
+            _stream(spark, states["incoming"], path, path + "_ckpt")
+    assert "d0" in _segs_on_disk(path)
+    ingest.compact(spark, path)
+    assert _snapshot(spark, path) == states["old"] and "folded_through" not in _meta(path)
+    _stream_and_compact(spark, states, path)
+    assert _snapshot(spark, path) == states["new"]
+
+
+def test_minor_compaction_is_a_commit_without_a_spark_job(spark, states, tmp_path):
+    path = str(tmp_path / "idx")
+    shutil.copytree(states["streamed"], path)
+    with count_jobs(spark, "minor") as jobs:
+        assert ingest.compact(spark, path) == {"mode": "minor", "phases": {}}
+    assert jobs == [] and _meta(path)["segs"][-1] == "d0"
+    assert _snapshot(spark, path) == states["new"]
+
+
+def test_replay_of_a_folded_batch_writes_nothing(spark, states, tmp_path):
+    """A stream that replays batch 0 (here: a new checkpoint over the
+    same pages) after a compaction folded it leaves every file alone."""
+    path = str(tmp_path / "idx")
+    shutil.copytree(states["streamed"], path)
+    ingest.compact(spark, path)
+
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _dirs, fs in os.walk(path) for f in fs
+        }
+
+    before = files()
+    _stream(spark, states["incoming"], path, str(tmp_path / "ckpt2"))
+    assert files() == before
+    assert ingest.compact(spark, path) == {"mode": "minor", "phases": {}} and files() == before
+
+
+def test_compaction_rejects_batches_of_another_bucket_count(spark, states, tmp_path):
+    """A batch streamed into an empty dir is bucketed 16 ways; once
+    ``write_index`` has made a 4-bucket index there, compacting it would
+    file its terms under the wrong buckets."""
+    path = str(tmp_path / "idx")
+    ingest.write_batch(spark.createDataFrame(states["rows"][40:], SCHEMA), 0, path, analyzer="simple")
+    _write(spark, states["rows"][:40], path)
+    for full_rewrite in (False, True):
+        with pytest.raises(ValueError, match="bucketed"):
+            ingest.compact(spark, path, full_rewrite=full_rewrite)
+    assert _snapshot(spark, path) == states["old"]

@@ -1,15 +1,20 @@
 """Persisted-index physical-plan checks: term scans must hit parquet
-with pushed filters AND bucket partition pruning; salted write must
-spread each bucket over several files."""
+with pushed filters AND bucket partition pruning; the postings writer
+count follows the token count, and each written file is sorted by
+(term, field, doc_id)."""
 
+import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark.corpus import extract_fields, make_pages
 from searchengine_spark.engine import SearchEngine
-from searchengine_spark.index.build import assign_doc_ids, build_index, read_index, write_index
+from searchengine_spark.index.build import (
+    assign_doc_ids, build_index, read_index, write_index, writers_per_bucket,
+)
 
 
 def _bucket_literals(plan: str) -> set[int]:
@@ -51,23 +56,31 @@ def test_term_scan_prunes_buckets(spark, disk_index):
     assert "PushedFilters" in plan and "cerim" in plan
 
 
-def test_salted_write_spreads_buckets(disk_index):
+def test_writers_per_bucket_follow_the_tokens(disk_index):
+    """One postings writer per bucket up to 500k tokens a bucket, one
+    more per 500k after; the 400-page index writes one file a bucket."""
+    assert writers_per_bucket(0, 8) == 1
+    assert writers_per_bucket(8 * 500_000, 8) == 1
+    assert writers_per_bucket(8 * 500_000 + 1, 8) == 2
+    assert writers_per_bucket(16 * 5_000_000, 16) == 10
     _, path = disk_index
-    per_bucket_files = []
-    base = os.path.join(path, "postings")
-    for d in os.listdir(base):
-        if d.startswith("bucket="):
-            # seg= generation dirs nest inside each bucket
-            n = sum(
-                1
-                for dirpath, _dirs, files in os.walk(os.path.join(base, d))
-                for f in files
-                if f.endswith(".parquet")
-            )
-            per_bucket_files.append(n)
-    assert per_bucket_files
-    # salt=8 spreads a bucket over several sorted files (skew spreading)
-    assert max(per_bucket_files) > 1, per_bucket_files
+    per_bucket = [
+        len(glob.glob(os.path.join(d, "seg=*", "*.parquet")))
+        for d in glob.glob(os.path.join(path, "postings", "bucket=*"))
+    ]
+    assert len(per_bucket) == 8 and set(per_bucket) == {1}, per_bucket
+
+
+def test_postings_files_are_term_sorted(disk_index):
+    """Every written postings file holds its rows in (term, field,
+    doc_id) order, read back with pyarrow."""
+    _, path = disk_index
+    files = glob.glob(os.path.join(path, "postings", "bucket=*", "seg=*", "*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["term", "field", "doc_id"])
+        keys = list(zip(*(t.column(c).to_pylist() for c in ("term", "field", "doc_id"))))
+        assert len(keys) > 1 and keys == sorted(keys), f
 
 
 def test_disk_query_matches_memory(spark, disk_index):

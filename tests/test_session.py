@@ -51,6 +51,13 @@ def test_jit_pool_is_one_c1_and_one_c2_thread(spark):
     assert "CICompilerCount" not in conf.get("spark.driver.extraJavaOptions", "")
 
 
+def test_codegen_cache_holds_a_warm_query_session(spark):
+    """``get_spark`` sizes the (static) generated-class cache above
+    Spark's default of 100 entries, which one warm round of the
+    perfbench query shapes overflows."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+
+
 def test_pyfiles_zip_imports_standalone(tmp_path):
     """The ``scripts/make_pyfiles.py`` zip (what ``spark-submit
     --py-files`` ships) is self-contained: a fresh interpreter with only
