@@ -486,10 +486,15 @@ def read_table(spark: SparkSession, path: str, table: str, segs) -> DataFrame:
     """The rows of ``table`` in generations ``segs`` (no ``seg`` column)."""
     root = os.path.join(path, table)
     if table == "docs":
-        # the named dirs only: docs' columns vary by generation, and
-        # schema inference must not pick a file of a dead one
+        # the named dirs only, their schemas merged: docs' columns vary
+        # by generation (a streamed batch holds doc_id and ext_id only;
+        # the others read null there), and schema inference must neither
+        # pick one generation's columns nor read a dead one's file
         dirs = [os.path.join(root, f"seg={s}") for s in segs]
-        df = spark.read.option("basePath", root).parquet(*[d for d in dirs if os.path.isdir(d)])
+        df = (
+            spark.read.option("basePath", root).option("mergeSchema", "true")
+            .parquet(*[d for d in dirs if os.path.isdir(d)])
+        )
     else:
         df = spark.read.parquet(root).where(F.col("seg").isin(list(segs)))
     return df.drop("seg")
@@ -661,6 +666,9 @@ def write_index(
         "fingerprint": fp,
         "layout": LAYOUT,
         "segs": [seg],
+        # the streamed batches already committed stay committed: a
+        # later compaction must not append them again
+        **({"folded_through": meta["folded_through"]} if "folded_through" in meta else {}),
     })
     return result
 

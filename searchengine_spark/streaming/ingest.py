@@ -7,12 +7,12 @@ path: new page files land in a directory, and a Structured Streaming
 job tokenizes each micro-batch and writes it **once**, in the index's
 own format, as generation ``seg=d<batch_id>`` of every table through
 the index's one writer (``index.build.write_tables``): postings
-bucketed, term_stats, doc_stats, and docs aligned to the live docs
-schema. The batch's last step is a small record (``_batch.json`` in its
-docs dir): its doc count, field stats and analyzer. Nothing a batch
-writes is live until a compaction commits it — the Delta Lake pattern
-(VLDB 2020): the streaming sink writes its files once and a log commit
-makes them visible.
+bucketed, term_stats, doc_stats, and docs as (doc_id, ext_id), which
+``read_table`` reads in the live docs schema. The batch's last step is
+a small record (``_batch.json`` in its docs dir): its doc count, field
+stats and analyzer. Nothing a batch writes is live until a compaction
+commits it — the Delta Lake pattern (VLDB 2020): the streaming sink
+writes its files once and a log commit makes them visible.
 
 Exactly-once comes from the streaming checkpoint (file-source offsets),
 the per-batch seg name (a replayed batch overwrites only its own dirs)
@@ -83,20 +83,26 @@ def write_batch(
     ``folded_through`` is committed already and writes nothing.
 
     ``pages`` carries ``doc_id``, ``url`` (the ext id) and ``text``
-    (field ``field``). The tables are bucketed like the index's (16
-    buckets for a dir without meta.json), and docs take the live docs
-    schema (the metadata columns null)."""
+    (field ``field``); a doc_id delivered twice in the batch is one doc
+    (one row kept). The tables are bucketed like the index's (16
+    buckets for a dir without meta.json); docs holds (doc_id, ext_id),
+    and ``read_table`` reads it in the live docs schema (the metadata
+    columns null)."""
     meta = read_meta(index_dir)
     if batch <= int(meta.get("folded_through", -1)):
         return
     seg = f"d{batch}"
     buckets = int(meta.get("buckets") or 16)
+    pages = pages.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("url").cast("string").alias("ext_id"),
+        F.col("text").cast("string").alias("__src"),
+    ).dropDuplicates(["doc_id"]).persist()
     # fused tokenize+positions rows, incl. one term='' doc_len sentinel
     # per doc: the same shuffle-free kernel as the batch build
-    rows = pages.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("text").cast("string").alias("__src"),
-    ).mapInPandas(_doc_postings_gen(analyzer, field, "__src"), POSTING_ROW_SCHEMA).persist()
+    rows = pages.select("doc_id", "__src").mapInPandas(
+        _doc_postings_gen(analyzer, field, "__src"), POSTING_ROW_SCHEMA
+    ).persist()
     try:
         sentinels = rows.where(F.col("term") == "")
         n_docs = sentinels.count()
@@ -104,22 +110,13 @@ def write_batch(
             return
         doc_stats = sentinels.where(F.col("doc_len") > 0).select("doc_id", "field", "doc_len")
         field_stats = field_stats_of(doc_stats)
-        docs = pages.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("url").cast("string").alias("ext_id"),
-        )
-        if meta.get("segs"):
-            docs = docs.select(*[
-                F.col(f.name) if f.name in docs.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in read_table(pages.sparkSession, index_dir, "docs", meta["segs"]).schema
-            ])
         phases = write_tables(
             index_dir, seg, buckets, field_stats,
-            rows.where(F.col("term") != ""), doc_stats, docs,
+            rows.where(F.col("term") != ""), doc_stats, pages.select("doc_id", "ext_id"),
         )
     finally:
         rows.unpersist()
+        pages.unpersist()
     _write_json(os.path.join(index_dir, "docs", f"seg={seg}", BATCH_RECORD), {
         "n_docs": n_docs,
         "field_stats": field_stats,
@@ -287,7 +284,7 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict, records: dic
     seg = seg_name("m", *segs)
     # docs are append-only; the dedups keep one row per key. docs keeps
     # every live metadata column (n_chars/lang/... — getAttribute reads
-    # them): streamed batches wrote theirs in the live docs schema.
+    # them): read_table merges the generations' docs schemas.
     doc_stats = (
         read_table(spark, index_dir, "doc_stats", segs).select("doc_id", "field", "doc_len")
         .dropDuplicates(["doc_id", "field"]).persist()

@@ -10,7 +10,8 @@ that rerunning the mutation completes it; that a reader opened before a
 major compaction keeps answering; that the commit removes only
 generations neither it nor the commit it replaced names, and keeps the
 streamed batches no compaction folded yet; that a replay of a folded
-batch writes nothing; and that older layouts are rejected.
+batch, or a compaction after a ``write_index`` over folded batches,
+commits none of them again; and that older layouts are rejected.
 """
 
 import glob
@@ -340,3 +341,50 @@ def test_compaction_rejects_batches_of_another_bucket_count(spark, states, tmp_p
         with pytest.raises(ValueError, match="bucketed"):
             ingest.compact(spark, path, full_rewrite=full_rewrite)
     assert _snapshot(spark, path) == states["old"]
+
+
+def test_write_index_keeps_folded_batches_folded(spark, states, tmp_path):
+    """A ``write_index`` over a compacted streamed index carries
+    ``folded_through``: the next compaction appends none of the batches
+    it folded, and the commit after the rewrite drops their dirs."""
+    path = str(tmp_path / "idx")
+    shutil.copytree(states["streamed"], path)
+    ingest.compact(spark, path)
+    _write(spark, states["rows"], path)
+    written = _meta(path)
+    assert written["folded_through"] == 0 and written["segs"][0][0] == "w"
+    assert ingest.compact(spark, path) == {"mode": "minor", "phases": {}}
+    assert _meta(path) == written and _snapshot(spark, path) == states["new"]
+    new = [(55 + i, "cat dog eel", f"u{55 + i:04d}") for i in range(3)]
+    ingest.write_batch(spark.createDataFrame(new, SCHEMA), 1, path, analyzer="simple")
+    ingest.compact(spark, path)
+    meta = _meta(path)
+    assert meta["segs"] == written["segs"] + ["d1"] and meta["n_docs"] == 58
+    assert _segs_on_disk(path) == set(meta["segs"])
+
+
+def test_batch_streamed_before_write_index_reads_in_its_docs_schema(spark, states, tmp_path):
+    """A batch streamed into an empty dir holds (doc_id, ext_id) docs;
+    committed after a ``write_index`` whose docs carry a metadata column,
+    both generations read in the merged schema, before and after a
+    major compaction."""
+    path = str(tmp_path / "idx")
+    ingest.write_batch(spark.createDataFrame(states["rows"][40:], SCHEMA), 0, path, analyzer="simple")
+    docs = spark.createDataFrame(states["rows"][:40], SCHEMA).withColumn("n_chars", F.length("text"))
+    write_index(build_index(docs, fields={"body": "text"}, ext_id_col="url", analyzer="simple"), path)
+    expect = {i: (f"u{i:04d}", len(t) if i < 40 else None) for i, t, _u in states["rows"]}
+    for full_rewrite in (False, True):
+        ingest.compact(spark, path, full_rewrite=full_rewrite)
+        got = read_index(spark, path).docs.collect()
+        assert {r["doc_id"]: (r["ext_id"], r["n_chars"]) for r in got} == expect and len(got) == 55
+
+
+def test_page_delivered_twice_in_a_batch_is_one_doc(spark, states, tmp_path):
+    path = str(tmp_path / "idx")
+    shutil.copytree(states["base"], path)
+    rows = states["rows"][40:] + states["rows"][40:43]
+    ingest.write_batch(spark.createDataFrame(rows, SCHEMA), 0, path, analyzer="simple")
+    ingest.compact(spark, path)
+    assert _snapshot(spark, path) == states["new"]
+    fresh = read_index(spark, path)
+    assert fresh.docs.count() == 55 and fresh.doc_stats.count() == 55
