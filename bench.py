@@ -11,8 +11,9 @@ Measures, at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 - pipeline operator runtimes (minhash LSH dedup, simhash, ANN top-k).
 
 Prints ONE JSON line: {"metric": ..., "value": ..., "unit": "sec",
-"queries": {...}, "sf": ...}. ``value`` is the sum of per-item costs
-(lower is better); per-query seconds in "queries". Query/pipeline items
+"queries": {...}, "sf": ...}. ``value`` is the sum of the fixed
+``HEADLINE`` entries (lower is better), so adding or splitting an entry
+does not move it; every entry's seconds are in "queries". Query/pipeline items
 are best-of-k steady-state times (the shared host's outside-VM steal
 swings single-shot wall clock 2-8x — see BASELINE.md §Measured); the two
 index builds are single-shot (they dominate and amortize the noise).
@@ -28,6 +29,26 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from searchengine_spark.session import get_spark  # noqa: E402
+
+
+# the entries ``value`` sums: the 16 shared by the recorded rounds 4
+# and 5 (BENCH_r04/r05.json). Entries added since (the IVF build/query
+# split, media decode) are printed but not summed.
+HEADLINE = (
+    "index_build", "index_build_documents",
+    "q_bm25_sum", "q_bm25_long", "q_indri_and", "q_indri_wand",
+    "q_bool_and", "q_near", "q_window", "q_syn",
+    "q_batch100_fused", "q_batch100_near_fused",
+    "p_minhash_lsh", "p_simhash", "p_ann_topk", "p_token_stats",
+)
+
+
+def headline_total(queries: dict[str, float]) -> float:
+    """Sum of the ``HEADLINE`` entries; raises if one is missing."""
+    missing = [k for k in HEADLINE if k not in queries]
+    if missing:
+        raise KeyError(f"bench headline entries missing: {missing}")
+    return round(sum(queries[k] for k in HEADLINE), 3)
 
 
 def _time(fn) -> float:
@@ -222,7 +243,7 @@ def main() -> None:
 
     lat_sorted = sorted(lat)
     p95 = lat_sorted[min(len(lat_sorted) - 1, int(0.95 * len(lat_sorted)))]
-    total = round(sum(queries.values()), 3)
+    total = headline_total(queries)
 
     print(
         json.dumps(

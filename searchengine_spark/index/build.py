@@ -24,7 +24,7 @@ Layout (chosen for 100 TB scale, not translated from the reference):
   generations (``segs``; see "Layout v5" below).
 
 Skew note: posting rows are produced entirely task-locally (one
-mapInPandas pass per field — a doc's postings never cross an exchange),
+mapInPandas pass over every field — a doc's postings never cross an exchange),
 so the only wide op in the build is ``groupBy(term, field)`` for df/ctf
 (partial aggregation map-side combines head terms before the shuffle).
 We never ``collect_list`` a full posting list per term, so
@@ -57,15 +57,18 @@ POSTING_ROW_SCHEMA = (
 )
 
 
-def _doc_postings_gen(analyzer_name: str, fld: str, src_col: str):
-    """mapInPandas kernel: one doc in -> its complete posting rows out.
+def _doc_postings_gen(analyzer_name: str, fields: dict[str, str]):
+    """mapInPandas kernel: one doc in -> its complete posting rows out,
+    for every field (``fields``: index field -> input column).
 
     Postings are a per-(doc, term) quantity, so tokenize, position
     collection and tf all happen inside ONE Arrow
     batch pass with NO shuffle — the posexplode->groupBy alternative
     ships one row per token occurrence (~corpus token count) through an
-    exchange just to reassemble what each doc already knew. A sentinel
-    row (term='') per doc carries doc_len for doc_stats.
+    exchange just to reassemble what each doc already knew. Every field
+    rides the same pass, so each doc crosses the Python boundary once.
+    A sentinel row (term='') per (doc, field) carries doc_len for
+    doc_stats and the corpus stats, 0 for an empty or null field.
     """
     from searchengine_spark.analyzer import get_analyzer
 
@@ -73,32 +76,33 @@ def _doc_postings_gen(analyzer_name: str, fld: str, src_col: str):
 
     def gen(batches):
         for pdf in batches:
-            terms, fields, dids, tfs, dls, plists = [], [], [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf[src_col]):
-                did = int(did)
-                toks = an.tokens(text if isinstance(text, str) else "")
-                dl = len(toks)
-                bypos: dict[str, list[int]] = {}
-                for pos, t in enumerate(toks):
-                    if t:
-                        bypos.setdefault(t, []).append(pos)
-                terms.append("")
-                fields.append(fld)
-                dids.append(did)
-                tfs.append(0)
-                dls.append(dl)
-                plists.append([])
-                for t, plist in bypos.items():
-                    terms.append(t)
-                    fields.append(fld)
+            terms, flds, dids, tfs, dls, plists = [], [], [], [], [], []
+            for fld, src in fields.items():
+                for did, text in zip(pdf["doc_id"], pdf[src]):
+                    did = int(did)
+                    toks = an.tokens(text if isinstance(text, str) else "")
+                    dl = len(toks)
+                    bypos: dict[str, list[int]] = {}
+                    for pos, t in enumerate(toks):
+                        if t:
+                            bypos.setdefault(t, []).append(pos)
+                    terms.append("")
+                    flds.append(fld)
                     dids.append(did)
-                    tfs.append(len(plist))
+                    tfs.append(0)
                     dls.append(dl)
-                    plists.append(plist)
+                    plists.append([])
+                    for t, plist in bypos.items():
+                        terms.append(t)
+                        flds.append(fld)
+                        dids.append(did)
+                        tfs.append(len(plist))
+                        dls.append(dl)
+                        plists.append(plist)
             yield pd.DataFrame(
                 {
                     "term": terms,
-                    "field": fields,
+                    "field": flds,
                     "doc_id": dids,
                     "tf": tfs,
                     "doc_len": dls,
@@ -107,6 +111,14 @@ def _doc_postings_gen(analyzer_name: str, fld: str, src_col: str):
             )
 
     return gen
+
+
+def split_rows(rows: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The kernel's rows as (postings, sentinels, doc_stats): doc_stats
+    holds the (doc_id, field, doc_len) of the non-empty fields."""
+    sentinels = rows.where(F.col("term") == "")
+    doc_stats = sentinels.where(F.col("doc_len") > 0).select("doc_id", "field", "doc_len")
+    return rows.where(F.col("term") != ""), sentinels, doc_stats
 
 
 @dataclass
@@ -131,41 +143,32 @@ class InvertedIndex:
     path: str | None = None
     segs: tuple = ()
 
-    # build-time tokenize caches (freed by materialize) and per-query
-    # derived-operator caches (bounded by trim_temps) are SEPARATE lists:
-    # a shared FIFO would let query traffic evict the build caches that
-    # doc_stats still reads.
-    _build_temps: list = dc_field(default_factory=list)
+    # the one build cache (``build_index``'s rows: postings, doc_stats
+    # and the corpus stats all filter it; freed by ``release`` only) and
+    # the per-query derived-operator caches (bounded by trim_temps)
+    _build: DataFrame | None = None
     _temps: list = dc_field(default_factory=list)
 
     def materialize(self) -> int:
-        """Force the postings build and drop intermediate build caches."""
-        n = self.postings.count()
-        for fr in self._build_temps:
-            try:
-                fr.unpersist()
-            except Exception:
-                pass
-        self._build_temps = []
-        return n
+        """Force the build cache and return the posting count. Frees
+        nothing: postings and doc_stats read that cache until
+        ``release``."""
+        return self.postings.count()
 
     def release(self) -> None:
-        """Unpersist EVERYTHING this handle cached (postings, stats,
-        build temps, derived frames). For when the in-memory index is
+        """Unpersist EVERYTHING this handle cached (the build cache,
+        stats, derived frames). For when the in-memory index is
         done serving — e.g. after ``write_index`` when queries move to
         the persisted copy; a 55M-posting cache left behind evicts
         later pipeline stages' caches into silent recompute (measured
         4x on the 1M-page minhash run)."""
-        for fr in (
-            [self.postings, self.term_stats, self.doc_stats, self.docs]
-            + self._build_temps
-            + self._temps
-        ):
+        for fr in [self.postings, self.term_stats, self.doc_stats, self.docs, self._build, *self._temps]:
             try:
-                fr.unpersist()
+                if fr is not None:
+                    fr.unpersist()
             except Exception:
                 pass
-        self._build_temps = []
+        self._build = None
         self._temps = []
 
     def trim_temps(self, max_keep: int = 16) -> None:
@@ -257,22 +260,34 @@ def df_ctf(postings: DataFrame, *keys: str) -> DataFrame:
     )
 
 
-def field_stats_of(doc_stats: DataFrame, fields=()) -> dict:
-    """Per-field doc_count / sum_len / avg_len (one small collect);
-    ``fields`` absent from ``doc_stats`` get zeros."""
+def field_stats_of(lens: DataFrame, fields=()) -> tuple[int, dict]:
+    """``(n_docs, {field: {doc_count, sum_len, avg_len}})`` of a frame of
+    (field, doc_len) rows, one per (doc, field), in one small collect.
+    ``doc_count`` counts the rows with ``doc_len > 0`` (an empty field
+    has no doc_stats row); ``n_docs`` is the largest field's row count,
+    the doc count when ``lens`` holds the build's sentinels (one per doc
+    and field, empty ones included). ``fields`` absent from ``lens`` get
+    zeros."""
+    rows = (
+        lens.groupBy("field")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("doc_len") > 0, 1)).alias("doc_count"),
+            F.sum("doc_len").alias("sum_len"),
+        )
+        .collect()
+    )
     stats = {
         r["field"]: {
             "doc_count": int(r["doc_count"]),
             "sum_len": int(r["sum_len"]),
             "avg_len": float(r["sum_len"]) / max(1, int(r["doc_count"])),
         }
-        for r in doc_stats.groupBy("field")
-        .agg(F.count(F.lit(1)).alias("doc_count"), F.sum("doc_len").alias("sum_len"))
-        .collect()
+        for r in rows
     }
     for fld in fields:
         stats.setdefault(fld, {"doc_count": 0, "sum_len": 0, "avg_len": 0.0})
-    return stats
+    return max((int(r["n"]) for r in rows), default=0), stats
 
 
 def build_index(
@@ -295,48 +310,28 @@ def build_index(
     get_analyzer(analyzer)  # fail fast on unknown analyzer names
     ext = ext_id_col or doc_id_col
 
-    per_field = []
-    stats_rows = []
-    temps = []
-    for fld, src in fields.items():
-        # ONE Arrow pass per field: tokenize + position-collect inside
-        # the task that owns the doc — postings never cross
-        # an exchange (the posexplode->groupBy alternative shuffles one
-        # row per token occurrence). Sentinel term='' rows carry doc_len.
-        rows = docs.select(
-            F.col(doc_id_col).cast("long").alias("doc_id"),
-            F.col(src).cast("string").alias("__src"),
-        ).mapInPandas(_doc_postings_gen(analyzer, fld, "__src"), POSTING_ROW_SCHEMA)
-        if cache:
-            # postings AND doc_stats both read this frame; without the
-            # persist the (expensive) tokenize pass runs twice
-            rows = rows.persist()
-            temps.append(rows)
-        per_field.append(rows.where(F.col("term") != ""))
-        stats_rows.append(
-            rows.where((F.col("term") == "") & (F.col("doc_len") > 0)).select(
-                "field", F.col("doc_id"), F.col("doc_len")
-            )
-        )
-
-    postings = per_field[0]
-    for p in per_field[1:]:
-        postings = postings.unionByName(p)
+    # ONE Arrow pass over every field: tokenize + position-collect inside
+    # the task that owns the doc — postings never cross an exchange (the
+    # posexplode->groupBy alternative shuffles one row per token
+    # occurrence), and each doc is read and tokenized once per build.
+    # Sentinel term='' rows carry doc_len.
+    cols = {fld: f"__src{i}" for i, fld in enumerate(fields)}
+    rows = docs.select(
+        F.col(doc_id_col).cast("long").alias("doc_id"),
+        *[F.col(src).cast("string").alias(cols[fld]) for fld, src in fields.items()],
+    ).mapInPandas(_doc_postings_gen(analyzer, cols), POSTING_ROW_SCHEMA)
     if cache:
-        postings = postings.persist()
-
-    doc_stats = stats_rows[0]
-    for s in stats_rows[1:]:
-        doc_stats = doc_stats.unionByName(s)
-    doc_stats = doc_stats.select("doc_id", "field", "doc_len")
-
+        # the one build cache: postings, doc_stats and the stats collect
+        # below all filter it, so the tokenize pass runs once
+        rows = rows.persist()
+    postings, sentinels, doc_stats = split_rows(rows)
     term_stats = df_ctf(postings)
     if cache:
         term_stats = term_stats.persist()
 
-    # corpus scalars (one small action; broadcast by value afterwards)
-    n_docs = docs.count()
-    field_stats = field_stats_of(doc_stats, fields)
+    # corpus scalars (one small action; broadcast by value afterwards):
+    # every doc has a sentinel per field, so no separate docs count
+    n_docs, field_stats = field_stats_of(sentinels, fields)
 
     doc_cols = [F.col(doc_id_col).cast("long").alias("doc_id"), F.col(ext).cast("string").alias("ext_id")]
     extra = [c for c in docs.columns if c not in (doc_id_col, ext)]
@@ -352,7 +347,7 @@ def build_index(
         field_stats=field_stats,
         analyzer=analyzer,
         fields=tuple(fields),
-        _build_temps=temps,
+        _build=rows if cache else None,
     )
 
 

@@ -99,6 +99,13 @@ def get_spark(
         # in round 3 at 100 entries (6.73 and 5.60 CPU-s), and none at
         # 2000 (5.92 and 4.60 CPU-s)
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # PySpark 4 wraps every Column operator in a call-site capture
+        # (a getActiveSession, a conf read, a PySparkCurrentOrigin set and
+        # clear over py4j, and a stack walk). Off, building one warm
+        # `search` plan makes 291 py4j calls instead of 731 (BM25, 3
+        # terms) and 572 instead of 1,342 (Indri #and); analysis errors
+        # then lose the Python file:line of the failing Column.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

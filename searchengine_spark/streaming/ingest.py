@@ -64,6 +64,7 @@ from searchengine_spark.index.build import (
     read_meta,
     read_table,
     seg_name,
+    split_rows,
     write_manifests,
     write_meta,
     write_tables,
@@ -99,20 +100,18 @@ def write_batch(
         F.col("text").cast("string").alias("__src"),
     ).dropDuplicates(["doc_id"]).persist()
     # fused tokenize+positions rows, incl. one term='' doc_len sentinel
-    # per doc: the same shuffle-free kernel as the batch build
+    # per doc: the batch build's shuffle-free kernel, for one field
     rows = pages.select("doc_id", "__src").mapInPandas(
-        _doc_postings_gen(analyzer, field, "__src"), POSTING_ROW_SCHEMA
+        _doc_postings_gen(analyzer, {field: "__src"}), POSTING_ROW_SCHEMA
     ).persist()
     try:
-        sentinels = rows.where(F.col("term") == "")
-        n_docs = sentinels.count()
+        postings, sentinels, doc_stats = split_rows(rows)
+        n_docs, field_stats = field_stats_of(sentinels)
         if not n_docs:
             return
-        doc_stats = sentinels.where(F.col("doc_len") > 0).select("doc_id", "field", "doc_len")
-        field_stats = field_stats_of(doc_stats)
         phases = write_tables(
             index_dir, seg, buckets, field_stats,
-            rows.where(F.col("term") != ""), doc_stats, pages.select("doc_id", "ext_id"),
+            postings, doc_stats, pages.select("doc_id", "ext_id"),
         )
     finally:
         rows.unpersist()
@@ -290,7 +289,7 @@ def _compact_major(spark: SparkSession, index_dir: str, meta: dict, records: dic
         .dropDuplicates(["doc_id", "field"]).persist()
     )
     try:
-        field_stats = field_stats_of(doc_stats, meta.get("fields", []))
+        _, field_stats = field_stats_of(doc_stats, meta.get("fields", []))
         phases = write_tables(
             index_dir, seg, buckets, field_stats,
             read_table(spark, index_dir, "postings", segs).drop("bucket"),

@@ -54,6 +54,61 @@ def test_multifield_build(spark):
     assert idx.field_stats["title"]["doc_count"] == 3
 
 
+def _map_in_pandas(plan, into_caches: bool) -> int:
+    """MapInPandas nodes of a logical plan; ``into_caches`` also counts
+    those inside the cached plans of its InMemoryRelations."""
+    n = int(plan.nodeName() == "MapInPandas")
+    kids = [plan.children()] + ([plan.innerChildren()] if into_caches else [])
+    for seq in kids:
+        for i in range(seq.size()):
+            n += _map_in_pandas(seq.apply(i), into_caches)
+    return n
+
+
+def test_build_tokenizes_every_field_in_one_pass(spark):
+    """One Arrow pass tokenizes every field of every doc, into the one
+    build cache that postings, doc_stats and the stats read; after
+    ``materialize`` nothing is recomputed (doc_stats reads the cache)."""
+    from searchengine_spark.analyzer import get_analyzer
+
+    docs = spark.createDataFrame(
+        [
+            (0, "the cat sat on the mat", "cat story"),
+            (1, "a cat and a dog", None),
+            (2, "dogs dogs dogs", ""),
+            (3, "the quick fox", "quick quick fox"),
+        ],
+        "doc_id long, text string, title string",
+    )
+    fields = {"body": "text", "title": "title"}
+    idx = build_index(docs, fields, analyzer="english")
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan()
+
+    assert _map_in_pandas(optimized(idx.postings), into_caches=True) == 1
+    idx.materialize()
+    # a fresh frame: its plan is matched against the live caches now
+    assert _map_in_pandas(optimized(idx.doc_stats.select("*")), into_caches=False) == 0
+
+    an = get_analyzer("english")
+    lens = {
+        (r["doc_id"], fld): len(an.tokens(r[src] or ""))
+        for r in docs.collect() for fld, src in fields.items()
+    }
+    assert idx.n_docs == 4  # the docs with a null and an empty title count
+    assert {(r.doc_id, r.field): r.doc_len for r in idx.doc_stats.collect()} == {
+        k: v for k, v in lens.items() if v > 0
+    }
+    for fld in fields:
+        ls = [v for (_, f), v in lens.items() if f == fld and v > 0]
+        assert idx.field_stats[fld] == {
+            "doc_count": len(ls), "sum_len": sum(ls), "avg_len": sum(ls) / len(ls),
+        }
+    assert idx.field_stats["title"]["doc_count"] == 2
+    idx.release()
+
+
 def test_write_read_resume(spark, tmp_path):
     path = str(tmp_path / "idx")
     idx = build_index(_tiny_docs(spark), {"body": "text"}, analyzer="simple")

@@ -51,6 +51,15 @@ def test_jit_pool_is_one_c1_and_one_c2_thread(spark):
     assert "CICompilerCount" not in conf.get("spark.driver.extraJavaOptions", "")
 
 
+def test_column_call_site_capture_is_off(spark):
+    """``get_spark`` turns off PySpark's per-Column call-site capture,
+    which costs several py4j round trips per Column operator."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
 def test_codegen_cache_holds_a_warm_query_session(spark):
     """``get_spark`` sizes the (static) generated-class cache above
     Spark's default of 100 entries, which one warm round of the
