@@ -90,8 +90,7 @@ def main() -> None:
     t0 = time.time()
     docs = assign_doc_ids(extract_fields(pages), ext_id_col="url")
     idx_pages = build_index(
-        docs, fields={"body": "body", "title": "title"}, ext_id_col="url",
-        analyzer="english", cache=True,
+        docs, fields={"body": "body", "title": "title"}, ext_id_col="url", analyzer="english"
     )
     n_post = idx_pages.postings.count()  # materializes the full build
     build_sec = time.time() - t0

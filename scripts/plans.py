@@ -6,9 +6,10 @@ Each section shows the `explain("formatted")` output the design claims
 rest on: pushed term filters + constant bucket partition pruning on a
 persisted index, the single-scan flat scorers (BM25 fold, Indri map
 reassembly, positional co-location) for one query and for a batch, the
-tree scorer for a nested query, a whole flat ``search`` ending in one
-top-k collect, and the pipeline operators. Regenerate after compiler changes so the
-committed evidence matches the code.
+tree scorer for a nested query, a nested #NEAR on the flat merge, a
+whole flat ``search`` ending in one top-k collect, and the pipeline
+operators. Regenerate after compiler changes so the committed evidence
+matches the code.
 """
 
 from __future__ import annotations
@@ -112,6 +113,11 @@ def main() -> None:
             "#NEAR/2 (single scan, position co-location, Arrow merge)",
             "One scan, one groupBy; match-ALL via `size(__ps) = k`; the positional kernel is the only Python stage.",
             eng.scores("#near/2(barim batok)", model="rankedboolean"),
+        ),
+        (
+            "Nested #NEAR/2(#SYN(...) ...) (the same merge: no Join)",
+            "`#near/2(#syn(cerim dirim) batok)` takes the same path as a flat #NEAR: the bare term arg from ONE term-IN scan, the #SYN arg from its own JVM groupBy, both tagged by arg index into one union, one groupBy(doc_id) with `size(__ps) = k`, one Arrow merge — no Join, no per-arg doc_id alignment.",
+            eng.scores("#near/2(#syn(cerim dirim) batok)", model="rankedboolean"),
         ),
         (
             "3-query BM25 run_batch (the flat scorer with broadcast constants, one scan)",

@@ -86,11 +86,7 @@ class SearchEngine:
         ``orderBy(rank).limit(k)`` keeps every row and plans as one
         TakeOrderedAndProject collect — a bare ``orderBy`` would add a
         range exchange and its sampling job."""
-        m = self._model(model, **params)
-        ast = self.parse(query, m)
-        out = self.compiler(m).compile(ast)
-        self.index.trim_temps()
-        ranked = topk(out, k)
+        ranked = topk(self.scores(query, model, **params), k)
         if with_ext_id:
             ranked = attach_ext_ids(ranked, self.index.docs).select(
                 "doc_id", "ext_id", "score", "rank"
@@ -107,7 +103,7 @@ class SearchEngine:
         """Evaluate (qid, query) pairs -> (qid, doc_id, ext_id, score, rank).
 
         Flat queries (``Compiler.flat_scorer``: BM25 bags of words and
-        flat ``#NEAR``/``#WINDOW``, flat Indri and Boolean ops) go to
+        ``#NEAR``/``#WINDOW`` roots, flat Indri and Boolean ops) go to
         their model's flat scorer together: per field ONE term-IN
         postings scan for the whole batch, broadcast per-query
         constants, one groupBy(qid, doc_id), one per-qid top-k window —

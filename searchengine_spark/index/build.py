@@ -296,7 +296,6 @@ def build_index(
     doc_id_col: str = "doc_id",
     ext_id_col: str | None = None,
     analyzer: str = "english",
-    cache: bool = True,
 ) -> InvertedIndex:
     """Tokenize ``docs`` and build the postings/stats DataFrames.
 
@@ -320,14 +319,11 @@ def build_index(
         F.col(doc_id_col).cast("long").alias("doc_id"),
         *[F.col(src).cast("string").alias(cols[fld]) for fld, src in fields.items()],
     ).mapInPandas(_doc_postings_gen(analyzer, cols), POSTING_ROW_SCHEMA)
-    if cache:
-        # the one build cache: postings, doc_stats and the stats collect
-        # below all filter it, so the tokenize pass runs once
-        rows = rows.persist()
+    # the one build cache: postings, doc_stats and the stats collect
+    # below all filter it, so the tokenize pass runs once
+    rows = rows.persist()
     postings, sentinels, doc_stats = split_rows(rows)
-    term_stats = df_ctf(postings)
-    if cache:
-        term_stats = term_stats.persist()
+    term_stats = df_ctf(postings).persist()
 
     # corpus scalars (one small action; broadcast by value afterwards):
     # every doc has a sentinel per field, so no separate docs count
@@ -347,7 +343,7 @@ def build_index(
         field_stats=field_stats,
         analyzer=analyzer,
         fields=tuple(fields),
-        _build=rows if cache else None,
+        _build=rows,
     )
 
 

@@ -2,8 +2,8 @@
 
 The reference evaluates these with per-doc location iterators
 (QryIopNear.java:27-83, QryIopWindow.java:27-77, QryIopSyn.java:17-71).
-Here the docid alignment is a Spark inner join / groupBy (distributed,
-sort-merge); only the *within-document* positional merge runs in
+Here the docid alignment is one Spark groupBy over every arg's rows
+(distributed); only the *within-document* positional merge runs in
 Python, over Arrow record batches. Position lists are the postings'
 ``array<int>`` column: they arrive as int arrays and leave as int lists,
 with no codec on either side of the UDF. #SYN needs no Python at all:

@@ -7,11 +7,16 @@ strategy:
 
 - Iop nodes -> positional-postings frames
   ``(doc_id, tf, doc_len, positions)``; a TERM is a pushed-down filter
-  on the postings table (partition-prunable by term bucket), NEAR /
-  WINDOW are doc_id inner joins + Arrow positional-merge UDFs, SYN is
-  a union + groupBy.
+  on the postings table (partition-prunable by term bucket). SYN, NEAR
+  and WINDOW read their args' rows from one helper
+  (``Compiler._arg_rows``: the term args from ONE scan per field, each
+  nested arg from its own frame, tagged by arg index): SYN groups them
+  by doc_id, NEAR / WINDOW group them by (qid, doc_id), keep the docs
+  holding every arg and run ONE Arrow positional merge — the
+  reference's match-ALL merge over its args (QryIopNear.java:27-83),
+  whatever kind of lists they are, with no per-arg join.
 - Flat score roots (``Compiler.flat_scorer``: a BM25 bag of words or
-  ``#SCORE`` of a flat #NEAR/#WINDOW, a flat Indri or Boolean op) take
+  ``#SCORE`` of a #NEAR/#WINDOW, a flat Indri or Boolean op) take
   their model's ONE flat scorer, keyed by ``qid``: a single
   bucket-pruned ``term IN (...)`` scan per field, regrouped per (qid,
   doc_id) with an arg-ordered fold. ``compile`` calls it with one
@@ -93,23 +98,18 @@ class IopResult:
         return self._stats
 
 
-def flat_terms(node) -> list[TermNode] | None:
-    """The term args of a *flat* op, else None.
+def flat_terms(node: SopNode) -> list[TermNode] | None:
+    """The term args of a *flat* Sop, else None.
 
-    Flat: #AND/#OR/#WAND/#WSUM over ``#SCORE(term)`` args, or a
-    positional op over bare term args — at least two args, all of one
-    field, no term repeated. A flat op reads ONE ``term IN (...)``
-    postings scan regrouped per doc (``Compiler.flat_scorer``)."""
-    if isinstance(node, SopNode):
-        if node.op not in ("and", "or", "wand", "wsum") or not all(
-            isinstance(a, SopNode) and a.op == "score" for a in node.args
-        ):
-            return None
-        args = [a.args[0] for a in node.args]
-    elif isinstance(node, IopNode):
-        args = list(node.args)
-    else:
+    Flat: #AND/#OR/#WAND/#WSUM over ``#SCORE(term)`` args — at least two
+    args, all of one field, no term repeated. A flat op reads ONE
+    ``term IN (...)`` postings scan regrouped per doc
+    (``Compiler.flat_scorer``)."""
+    if node.op not in ("and", "or", "wand", "wsum") or not all(
+        isinstance(a, SopNode) and a.op == "score" for a in node.args
+    ):
         return None
+    args = [a.args[0] for a in node.args]
     if len(args) < 2 or not all(isinstance(a, TermNode) for a in args):
         return None
     fld = args[0].field
@@ -204,10 +204,10 @@ def _indri_fold(op, k, w, total, eff) -> Column:
     return out
 
 
-def _merge(frame: DataFrame, positions: Column, kind, dist, keys: tuple = ()) -> DataFrame:
+def _merge(frame: DataFrame, positions: Column, kind, dist) -> DataFrame:
     """Run the positional merge UDF over ``positions`` (array<array<int>>,
-    arg order) -> (*keys, doc_id, tf, doc_len, positions), tf > 0."""
-    cols = [*keys, "doc_id", F.col("__m.tf").alias("tf"), "doc_len",
+    arg order) -> (qid, doc_id, tf, doc_len, positions), tf > 0."""
+    cols = ["qid", "doc_id", F.col("__m.tf").alias("tf"), "doc_len",
             F.col("__m.positions").alias("positions")]
     # project the struct fields BEFORE filtering: a `where` on
     # `__m.tf` followed by a select of `__m.*` duplicates the field
@@ -277,6 +277,14 @@ class Compiler:
         broadcast ``(qid, __ti, term, ...)`` table built from Arrow
         (``arrow_frame``: no Python-worker task), so the scan count
         stays one per field whatever the batch size.
+
+        One query keeps its literals although each fresh query's
+        constants compile new codegen classes: sending it through the
+        broadcast table (and ``_with_meta``'s join) cost more than the
+        compiles saved. On the perfbench ``query`` workload (3
+        interleaved pairs, 4-vCPU host) ``query_cpu_s`` rose
+        0.50-0.58 -> 0.64-0.68 s and ``work_cpu_s`` 9.2-9.4 ->
+        10.8-11.4 s. The item count picks the path.
         """
         names = sorted({r[2] for r in rows})
         cond = (F.col("field") == fld) & F.col("term").isin(names)
@@ -317,8 +325,8 @@ class Compiler:
         tree scorer takes it). This one predicate routes both
         ``compile`` and ``SearchEngine.run_batch``.
 
-        - BM25: a bag of words (``_bow_terms``), or ``#SCORE`` of a flat
-          ``#NEAR``/``#WINDOW``.
+        - BM25: a bag of words (``_bow_terms``), or ``#SCORE`` of a
+          ``#NEAR``/``#WINDOW``, whatever its args.
         - Indri: a flat op (``flat_terms``) over a non-empty field.
         - Ranked/UnrankedBoolean: a flat op.
         """
@@ -328,8 +336,7 @@ class Compiler:
         if isinstance(m, BM25):
             iop = node.args[0] if node.op == "score" else None
             if isinstance(iop, IopNode):
-                flat = iop.op in ("near", "window") and flat_terms(iop) is not None
-                return self._bm25_positional if flat else None
+                return self._bm25_positional if iop.op in ("near", "window") else None
             return self._bm25_flat if _bow_terms(node) else None
         terms = flat_terms(node)
         if terms is None:
@@ -357,56 +364,47 @@ class Compiler:
             st = self.term_stats.get((node.term, node.field))
             return IopResult(fr, node.field, _stats=st, _temps=self.index._temps)
 
-        k = len(node.args)
-        flat = flat_terms(node)
-
         if node.op == "syn":
-            if flat is not None:
-                # ONE term-IN scan feeds the union directly
-                u = self.term_scan(node.field, [("", i, t.term) for i, t in enumerate(flat)])
-            else:
-                children = [self.compile_iop(a) for a in node.args]
-                u = children[0].frame
-                for c in children[1:]:
-                    u = u.unionByName(c.frame)
             # the union is a JVM aggregate; a caller that reads only
             # tf/doc_len gets it pruned by Catalyst
-            fr = u.groupBy("doc_id").agg(
+            fr = self._arg_rows(node.field, [("", node)]).groupBy("doc_id").agg(
                 F.sum("tf").cast("int").alias("tf"),
                 F.max("doc_len").alias("doc_len"),
                 F.array_sort(F.flatten(F.collect_list("positions"))).alias("positions"),
             )
-            return IopResult(fr, node.field, _temps=self.index._temps)
-
-        # near / window: flat args take the shared single-scan merge;
-        # nested args fall back to the k-way inner-join chain
-        if flat is not None:
-            fr = self._positional([("", node)]).drop("qid")
         else:
-            children = [self.compile_iop(a) for a in node.args]
-            joined = children[0].frame.select(
-                "doc_id", "doc_len", F.col("positions").alias("__p0")
-            )
-            for i, c in enumerate(children[1:], start=1):
-                joined = joined.join(
-                    c.frame.select("doc_id", F.col("positions").alias(f"__p{i}")),
-                    on="doc_id",
-                    how="inner",
-                )
-            pcols = F.array(*[F.col(f"__p{i}") for i in range(k)])
-            fr = _merge(joined, pcols, node.op, node.dist)
+            fr = self._positional([("", node)]).drop("qid")
         return IopResult(fr, node.field, _temps=self.index._temps)
 
+    def _arg_rows(self, fld: str, items: list) -> DataFrame:
+        """(qid, __ti, doc_id, tf, doc_len, positions): a row per doc
+        holding arg ``__ti`` of an Iop of ``items`` ``[(qid, iop)]``,
+        all over ``fld``. The term args of every item come from ONE
+        ``term_scan`` (a repeated term yields a row per arg), each
+        nested arg from its own ``compile_iop`` frame."""
+        cols = ("doc_id", "tf", "doc_len", "positions")
+        qt, frames = [], []
+        for qid, iop in items:
+            for i, a in enumerate(iop.args):
+                if isinstance(a, TermNode):
+                    qt.append((qid, i, a.term))
+                else:
+                    frames.append(self.compile_iop(a).frame.select(
+                        F.lit(qid).alias("qid"), F.lit(i).alias("__ti"), *cols
+                    ))
+        if qt:
+            frames.insert(0, self.term_scan(fld, qt).select("qid", "__ti", *cols))
+        return _union(frames)
+
     def _positional(self, items: list) -> DataFrame:
-        """(qid, doc_id, tf, doc_len, positions) for flat #NEAR/#WINDOW
-        items ``[(qid, iop)]``: per field, one scan, one groupBy(qid,
-        doc_id) collecting the arg-ordered position lists, one Arrow
-        merge pass with each query's (kind, dist)."""
+        """(qid, doc_id, tf, doc_len, positions) for #NEAR/#WINDOW items
+        ``[(qid, iop)]``: per field, the args' rows (``_arg_rows``), one
+        groupBy(qid, doc_id) collecting the arg-ordered position lists,
+        one Arrow merge pass with each query's (kind, dist)."""
         frames = []
         for fld, f_items in _by_field(items, lambda iop: iop.field).items():
-            qt = [(qid, i, t.term) for qid, iop in f_items for i, t in enumerate(iop.args)]
             g = (
-                self.term_scan(fld, qt)
+                self._arg_rows(fld, f_items)
                 .groupBy("qid", "doc_id")
                 .agg(
                     F.array_sort(F.collect_list(F.struct("__ti", "positions"))).alias("__ps"),
@@ -420,9 +418,7 @@ class Compiler:
             )
             # NEAR/WINDOW match only docs containing EVERY arg
             g = g.where(F.size("__ps") == F.lit(c["__k"]))
-            frames.append(
-                _merge(g, F.col("__ps.positions"), c["__kind"], c["__dist"], keys=("qid",))
-            )
+            frames.append(_merge(g, F.col("__ps.positions"), c["__kind"], c["__dist"]))
         return _union(frames)
 
     # ------------------------------------------------------------------
@@ -561,7 +557,7 @@ class Compiler:
         )
 
     def _bm25_positional(self, items: list) -> DataFrame:
-        """BM25 ``#SCORE`` of a flat ``#NEAR``/``#WINDOW``. BM25's idf
+        """BM25 ``#SCORE`` of a ``#NEAR``/``#WINDOW``. BM25's idf
         needs each query's df over the merged list (QrySopScore's
         materialize-then-score, QryIop.java:174-190): ONE groupBy(qid)
         action on the persisted merge gives every query's df."""

@@ -274,6 +274,31 @@ def test_nested_iop_plan_runs_one_python_udf(spark, persisted, oracle):
     ]
 
 
+@pytest.mark.parametrize("q", [
+    "#near/2(#syn(cerim dirim) batok)",
+    "#window/3(#near/1(barim batok) cerim)",
+    "#near/1(balan balan)",  # a repeated term: one scan, a row per arg
+])
+def test_nested_and_repeated_iop_args_plan_no_join(spark, persisted, oracle, q):
+    """A #NEAR/#WINDOW over nested or repeated args reads its args'
+    rows into one groupBy(doc_id) and one positional merge: the
+    executed plan (the persisted merge's cached plan included) holds no
+    Join, and the top-10 equals the oracle's to %.18f."""
+    from searchengine_spark.engine import SearchEngine
+
+    path, _ = persisted
+    eng = SearchEngine(read_index(spark, path))
+    df = eng.search(q, model="bm25", k=10, with_ext_id=False)
+    rows = df.collect()
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert not [ln for ln in lines if "Join" in ln], (q, lines)
+    want = orc.search(oracle, eng.parse(q, BM25()), BM25(), k=10)
+    assert want and all(s > 0 for _, s in want)
+    assert [(r["doc_id"], "%.18f" % r["score"]) for r in rows] == [
+        (d, "%.18f" % s) for d, s in want
+    ]
+
+
 def test_near_merge_persists_in_coalesced_partitions(spark, persisted, oracle):
     """AQE coalesces plans over persisted frames too, so a small
     ``#near/2`` merge is persisted in fewer partitions than

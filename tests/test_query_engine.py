@@ -201,11 +201,26 @@ def test_run_batch_fused_bit_identical_to_union(pages_index):
     assert qids == {"q1", "q2", "q3", "q4", "q5"}
 
 
+def _plan_nodes(plan, name: str) -> int:
+    """``name`` nodes of an executed physical plan, descending into the
+    final plans of adaptive and query-stage nodes and into the cached
+    plans of persisted frames."""
+    n = int(plan.nodeName() == name)
+    cls = plan.getClass().getSimpleName()
+    kids = [plan.executedPlan()] if cls == "AdaptiveSparkPlanExec" else []
+    if cls.endswith("QueryStageExec"):
+        kids.append(plan.plan())
+    for seq in (plan.children(), plan.innerChildren()):
+        kids += [seq.apply(i) for i in range(seq.size())]
+    return n + sum(_plan_nodes(k, name) for k in kids)
+
+
 def test_run_batch_fused_positional_bit_identical(pages_index):
     """The positional batch (one shared scan + one Arrow merge pass for
     the whole batch) must reproduce each query's ``search`` exactly —
-    mixed #NEAR/#WINDOW, varying arity and distance, nested/ineligible
-    shapes falling back."""
+    mixed #NEAR/#WINDOW, varying arity and distance, nested args and
+    repeated terms in the same merge. A batch of one flat and one
+    nested #NEAR plans exactly one merge."""
     eng = SearchEngine(pages_index)
     batch = [
         ("n1", "#near/2(barim batok)"),
@@ -214,11 +229,17 @@ def test_run_batch_fused_positional_bit_identical(pages_index):
         ("w1", "#window/4(barim balan)"),
         ("w2", "#window/8(dirim barim batok)"),
         ("m1", "cerim dirim"),                       # flat -> bm25 bag of words
-        ("x1", "#near/2(#syn(barim balan) batok)"),  # nested -> fallback
-        ("x2", "#near/2(barim barim)"),              # dup term -> fallback
+        ("x1", "#near/2(#syn(barim balan) batok)"),  # nested arg, same merge
+        ("x2", "#near/2(barim barim)"),              # repeated term, same merge
     ]
     qids = _assert_batch_equals_search(eng, batch, BM25())
-    assert qids >= {"n1", "n2", "w1", "m1"}
+    assert qids >= {"n1", "n2", "w1", "m1", "x1"}
+
+    pair = [("n1", "#near/2(barim batok)"), ("x1", "#near/2(#syn(barim balan) batok)")]
+    df = eng.run_batch(pair, model=BM25(), k=10)
+    df.collect()
+    assert _plan_nodes(df._jdf.queryExecution().executedPlan(), "ArrowEvalPython") == 1
+    assert _assert_batch_equals_search(eng, pair, BM25()) == {"n1", "x1"}
 
 
 @pytest.mark.parametrize(
@@ -231,7 +252,7 @@ def test_run_batch_fused_positional_bit_identical(pages_index):
                 ("i2", "#or(cerim batok balan)"),
                 ("i3", "#wand(0.7 cerim 0.3 dirim)"),
                 ("i4", "#wsum(0.2 barim 0.8 cerim 1.0 dirim)"),
-                ("i5", "#and(cerim #near/2(barim batok))"),  # nested -> fallback
+                ("i5", "#and(cerim #near/2(barim batok))"),  # nested -> tree scorer
                 ("i6", "#wsum(0.5 barim 1.0 cerim 1.5 dirim)"),  # total 3.0: inexact /
             ],
         ),
