@@ -203,7 +203,7 @@ def main() -> None:
 
     # --- media decode throughput (VERDICT r4 item 3) ------------------------
     # Deterministic MJPEG-in-AVI corpus decoded through the production
-    # multimodal mapInPandas path (decode_stub=False -> pipeline/jpeg.py's
+    # multimodal mapInPandas path (pipeline/jpeg.py's
     # LUT entropy decoder). Corpus generation is driver-side and untimed.
     import numpy as np
 
@@ -234,7 +234,7 @@ def main() -> None:
         mm.MEDIA_SCHEMA,
     ).repartition(cpus).persist()
     media.count()
-    media_fn = lambda: mm.extract_features(media, decode_stub=False).collect()  # noqa: E731
+    media_fn = lambda: mm.extract_features(media).collect()  # noqa: E731
     media_fn()  # warm-up: Arrow worker spin-up
     media_sec = _best_of(media_fn, 2)
     queries["p_media_decode"] = round(media_sec, 3)

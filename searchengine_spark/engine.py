@@ -66,11 +66,7 @@ class SearchEngine:
         """Full (doc_id, score) frame for a query (unranked, untruncated)."""
         m = self._model(model, **params)
         ast = self.parse(query, m)
-        out = self.compiler(m).compile(ast)
-        # derived-operator frames persisted for stats are registered on
-        # index._temps; keep only a bounded working set alive
-        self.index.trim_temps()
-        return out
+        return self.compiler(m).compile(ast)
 
     def search(
         self,
@@ -143,7 +139,6 @@ class SearchEngine:
         for scorer, items in flat.items():
             scored = scorer(items).select("qid", "doc_id", "score")
             frames.append(topk_grouped(scored, k).select("qid", "doc_id", "score", "rank"))
-        self.index.trim_temps()
         if not frames:
             return arrow_frame(
                 self.index.spark, [],

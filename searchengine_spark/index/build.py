@@ -144,10 +144,8 @@ class InvertedIndex:
     segs: tuple = ()
 
     # the one build cache (``build_index``'s rows: postings, doc_stats
-    # and the corpus stats all filter it; freed by ``release`` only) and
-    # the per-query derived-operator caches (bounded by trim_temps)
+    # and the corpus stats all filter it; freed by ``release`` only)
     _build: DataFrame | None = None
-    _temps: list = dc_field(default_factory=list)
 
     def materialize(self) -> int:
         """Force the build cache and return the posting count. Frees
@@ -156,31 +154,19 @@ class InvertedIndex:
         return self.postings.count()
 
     def release(self) -> None:
-        """Unpersist EVERYTHING this handle cached (the build cache,
-        stats, derived frames). For when the in-memory index is
+        """Unpersist EVERYTHING this handle cached (the build cache and
+        the stats). For when the in-memory index is
         done serving — e.g. after ``write_index`` when queries move to
         the persisted copy; a 55M-posting cache left behind evicts
         later pipeline stages' caches into silent recompute (measured
         4x on the 1M-page minhash run)."""
-        for fr in [self.postings, self.term_stats, self.doc_stats, self.docs, self._build, *self._temps]:
+        for fr in [self.postings, self.term_stats, self.doc_stats, self.docs, self._build]:
             try:
                 if fr is not None:
                     fr.unpersist()
             except Exception:
                 pass
         self._build = None
-        self._temps = []
-
-    def trim_temps(self, max_keep: int = 16) -> None:
-        """Bound the derived-frame registry (NEAR/WINDOW frames persisted
-        for stats): unpersist the oldest beyond ``max_keep`` so executor
-        storage stays O(1) in a long-lived query session."""
-        while len(self._temps) > max_keep:
-            fr = self._temps.pop(0)
-            try:
-                fr.unpersist()
-            except Exception:
-                pass
 
     def lookup_term_stats(self, pairs) -> dict[tuple[str, str], tuple[int, int]]:
         """(term, field) -> (df, ctf) for each of ``pairs``, (0, 0) when
@@ -714,21 +700,30 @@ def assign_doc_ids(
     corpus through ONE task — and everything downstream (tokenization,
     posting build) inherits that single partition. Instead:
 
-    1. range-partition by url (parallel global sort) and cache so the
-       partition layout is frozen,
-    2. count rows per partition (tiny collect) -> cumulative offsets,
-    3. doc_id = partition offset + (row_number within partition) - 1.
+    1. one seeded sample of urls (a small collect) gives p-1 literal
+       range bounds; a doc's range is the number of bounds below its url,
+    2. count rows per range (tiny collect) -> cumulative offsets,
+    3. doc_id = range offset + (row_number within range) - 1.
 
-    The mapping is invariant to the sampled range boundaries (a doc's
-    id is exactly the number of urls before it), so rebuilds are
-    reproducible; each partition numbers itself in parallel.
+    The bounds are literals, so the count and the numbering see the
+    same ranges with no cache to hold the layout still (nothing is
+    left persisted). A doc's id is exactly the number of urls before
+    it, whatever the bounds, so rebuilds are reproducible; each range
+    numbers itself in parallel.
     """
     from pyspark.sql import Window
 
     spark = docs.sparkSession
     p = partitions or spark.sparkContext.defaultParallelism * 2
-    part = docs.repartitionByRange(p, F.col(ext_id_col)).persist()
-    with_pid = part.withColumn("__pid", F.spark_partition_id())
+    url = F.col(ext_id_col)
+    sample = sorted(
+        {r[0] for r in docs.select(url).orderBy(F.rand(42)).limit(20 * p).collect()} - {None}
+    )
+    bounds = sorted({sample[len(sample) * j // p] for j in range(1, p)} if sample else ())
+    rng = F.lit(0)
+    for j, b in enumerate(bounds, 1):
+        rng = F.when(url > F.lit(b), j).otherwise(rng)
+    with_pid = docs.withColumn("__pid", rng)
     counts = {
         int(r["__pid"]): int(r["cnt"])
         for r in with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
@@ -740,7 +735,7 @@ def assign_doc_ids(
     omap = F.create_map(
         *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
     )
-    w = Window.partitionBy("__pid").orderBy(F.col(ext_id_col))
+    w = Window.partitionBy("__pid").orderBy(url)
     return (
         with_pid.withColumn(
             "doc_id",

@@ -4,7 +4,7 @@ The container ships no PIL/ffmpeg, but PNG is just zlib + per-row
 filters, WAV is a struct header over PCM, and uncompressed AVI is a
 RIFF walk over DIB frames — all implementable from the public specs
 (RFC 2083 / RIFF / OpenDML AVI) with the standard library. These are
-the ``decode_stub=False`` kernels for ``multimodal.extract_features``:
+the decode kernels for ``multimodal.extract_features``:
 real bytes -> real dimensions/samples/frames, executed inside
 Arrow-batched ``mapInPandas`` tasks.
 

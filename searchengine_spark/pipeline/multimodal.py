@@ -5,23 +5,16 @@ with structured metadata; decode/feature-extraction runs as
 Arrow-batched ``mapInPandas`` so bytes never round-trip through the
 driver and each task decodes only its partition.
 
-Decode has two modes:
-
-- ``decode_stub=True`` (default): a deterministic fake "decode" (md5 of
-  the bytes -> pseudo dimensions / features) so the full Spark plumbing
-  (schema, batching, partitioning, UDF signatures) is real and tested
-  regardless of codecs;
-- ``decode_stub=False``: REAL decoding for all three kinds — images
-  (pure-zlib PNG codec, media_codecs.decode_png), audio (stdlib WAV),
-  and video (uncompressed-AVI RIFF walker, media_codecs.decode_avi) —
-  payloads generated by ``make_media`` are genuine PNG/WAV/AVI bytes.
-  Compressed video codecs remain the documented ffmpeg plug point
-  (``decode_avi`` raises ``NotImplementedError`` on biCompression!=0).
+Decode is real for all three kinds: images (pure-zlib PNG codec,
+media_codecs.decode_png, or JPEG, pipeline/jpeg.py), audio (stdlib WAV)
+and video (uncompressed-AVI or Motion-JPEG RIFF walker,
+media_codecs.decode_avi); payloads generated by ``make_media`` are
+genuine PNG/WAV/AVI bytes. Other video codecs remain the documented
+ffmpeg plug point (``decode_avi`` raises ``NotImplementedError``).
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -86,19 +79,8 @@ def make_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
     return spark.range(0, n, 1, max(2, n // 1000 + 1)).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-def _fake_decode(payload: bytes, kind: str):
-    """Deterministic stand-in for a real decoder."""
-    h = hashlib.md5(payload).digest()
-    width = 16 + h[0]
-    height = 16 + h[1]
-    n_frames = 1 if kind == "image" else 1 + h[2] % 32
-    feat = np.frombuffer(hashlib.md5(b"f" + payload).digest(), dtype=np.uint8)
-    feat = (feat.astype(np.float32) / 255.0)[:FEATURE_DIM]
-    return width, height, n_frames, feat
-
-
-def _real_decode(payload: bytes, kind: str):
-    """Real decode for image (PNG or JPEG — baseline and progressive,
+def _decode(payload: bytes, kind: str):
+    """Decode an image (PNG or JPEG — baseline and progressive,
     dispatched on magic bytes), audio (WAV), and video (uncompressed
     AVI or Motion-JPEG); other codecs need ffmpeg."""
     from searchengine_spark.pipeline.media_codecs import (
@@ -136,23 +118,20 @@ def _real_decode(payload: bytes, kind: str):
     return w, h, int(frames.shape[0]), feat
 
 
-def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode + featurize media partitions via mapInPandas.
 
-    ``decode_stub=False`` runs the real PNG/WAV/AVI kernels
-    (media_codecs) for all three kinds; compressed video raises
-    NotImplementedError inside decode_avi (ffmpeg plug point).
-    Everything around the kernel (schema, batch shape, partition-local
-    execution) is production-shaped in both modes.
+    The PNG/JPEG/WAV/AVI kernels (media_codecs, jpeg) decode all three
+    kinds; other video codecs raise NotImplementedError inside
+    decode_avi (ffmpeg plug point).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _fake_decode if decode_stub else _real_decode
         for pdf in batches:
             out = {"media_id": [], "kind": [], "width": [], "height": [],
                    "n_frames": [], "feature": []}
             for _, row in pdf.iterrows():
-                w, h, nf, feat = decode(bytes(row["payload"]), row["kind"])
+                w, h, nf, feat = _decode(bytes(row["payload"]), row["kind"])
                 out["media_id"].append(row["media_id"])
                 out["kind"].append(row["kind"])
                 out["width"].append(w)
@@ -164,12 +143,10 @@ def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
     return media.mapInPandas(run, FEATURES_SCHEMA)
 
 
-def resize_plan(
-    media: DataFrame, max_side: int = 256, decode_stub: bool = True
-) -> DataFrame:
+def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
     """Resize planning: target dims per item (pure column math; the
     pixel work would live in the same mapInPandas as decode)."""
-    feats = extract_features(media, decode_stub=decode_stub)
+    feats = extract_features(media)
     scale = F.least(
         F.lit(1.0),
         F.lit(float(max_side)) / F.greatest(F.col("width"), F.col("height")),
@@ -183,15 +160,11 @@ def resize_plan(
     )
 
 
-def frame_sample_plan(
-    media: DataFrame, every_n: int = 4, decode_stub: bool = True
-) -> DataFrame:
+def frame_sample_plan(media: DataFrame, every_n: int = 4) -> DataFrame:
     """Frame-sampling plan for videos: (media_id, frame_index) rows.
-    With ``decode_stub=False`` the frame counts come from the real AVI
-    headers, so the plan samples actual decodable frames."""
-    feats = extract_features(media, decode_stub=decode_stub).where(
-        F.col("kind") == "video"
-    )
+    The frame counts come from the decoded AVI headers, so the plan
+    samples actual decodable frames."""
+    feats = extract_features(media).where(F.col("kind") == "video")
     return feats.select(
         "media_id",
         F.explode(

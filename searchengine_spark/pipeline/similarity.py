@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
-from searchengine_spark.session import arrow_frame
+from searchengine_spark.session import arrow_frame, local_frame
 
 PLANE_LITERAL_MAX_DIM = 128
 
@@ -175,13 +175,11 @@ def _localized(result: DataFrame, *caches: DataFrame) -> DataFrame:
     result = result.persist()
     n = result.count()
     if n <= LOCALIZE_MAX_ROWS:
-        table = result.toArrow()
-        schema = result.schema
-        spark = result.sparkSession
+        _, local = local_frame(result)
         result.unpersist()
         for c in caches:
             c.unpersist()
-        return arrow_frame(spark, table, schema)
+        return local
     for c in caches:
         c.unpersist()
     return result

@@ -50,15 +50,18 @@ pyarrow read of the query buckets' ``term_stats`` files in the
 committed generations, with no Spark job. Derived operators (NEAR/...)
 need their df/ctf computed from the merged list, exactly like the
 reference's materialize-then-score discipline (QryIop.java:174-190):
-that costs one small Spark action on the (persisted) derived frame,
-only when the model actually uses those stats.
+only when the model uses those stats, the list is collected once to
+the driver (``session.local_frame``), df/ctf are read off it and the
+scorer reads the same rows back. No frame is cached.
 """
 
 from __future__ import annotations
 
 import math
+from collections import Counter
 from dataclasses import dataclass
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
 from searchengine_spark.functions.xxh64 import term_bucket
@@ -66,7 +69,7 @@ from searchengine_spark.index.build import InvertedIndex
 from searchengine_spark.operators.positional import positional_merge
 from searchengine_spark.plans.ast import IopNode, SopNode, TermNode, is_iop
 from searchengine_spark.plans.models import BM25, Indri, RankedBoolean, UnrankedBoolean
-from searchengine_spark.session import arrow_frame
+from searchengine_spark.session import arrow_frame, local_frame
 
 
 @dataclass
@@ -76,25 +79,14 @@ class IopResult:
     frame: DataFrame
     field: str
     _stats: tuple | None = None  # (df, ctf)
-    _persisted: bool = False
-    # shared registry (index._temps): persisted derived frames are
-    # tracked there so long-lived sessions can trim them — otherwise
-    # executor storage grows by one cached NEAR/WINDOW frame per query
-    _temps: list | None = None
 
     def stats(self) -> tuple[int, int]:
         if self._stats is None:
-            if not self._persisted:
-                # only scorers ask for stats, and they read tf/doc_len:
-                # the cached frame leaves the position lists out
-                self.frame = self.frame.drop("positions").persist()
-                self._persisted = True
-                if self._temps is not None:
-                    self._temps.append(self.frame)
-            row = self.frame.agg(
-                F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ctf")
-            ).first()
-            self._stats = (int(row["df"] or 0), int(row["ctf"] or 0))
+            # only scorers ask for stats, and they read tf/doc_len: the
+            # list is collected once without its position lists and the
+            # frame then reads those rows back from the driver
+            table, self.frame = local_frame(self.frame.drop("positions"))
+            self._stats = (table.num_rows, pc.sum(table["tf"]).as_py() or 0)
         return self._stats
 
 
@@ -362,7 +354,7 @@ class Compiler:
                 "doc_id", "tf", "doc_len", "positions"
             )
             st = self.term_stats.get((node.term, node.field))
-            return IopResult(fr, node.field, _stats=st, _temps=self.index._temps)
+            return IopResult(fr, node.field, _stats=st)
 
         if node.op == "syn":
             # the union is a JVM aggregate; a caller that reads only
@@ -374,7 +366,7 @@ class Compiler:
             )
         else:
             fr = self._positional([("", node)]).drop("qid")
-        return IopResult(fr, node.field, _temps=self.index._temps)
+        return IopResult(fr, node.field)
 
     def _arg_rows(self, fld: str, items: list) -> DataFrame:
         """(qid, __ti, doc_id, tf, doc_len, positions): a row per doc
@@ -559,17 +551,16 @@ class Compiler:
     def _bm25_positional(self, items: list) -> DataFrame:
         """BM25 ``#SCORE`` of a ``#NEAR``/``#WINDOW``. BM25's idf
         needs each query's df over the merged list (QrySopScore's
-        materialize-then-score, QryIop.java:174-190): ONE groupBy(qid)
-        action on the persisted merge gives every query's df."""
+        materialize-then-score, QryIop.java:174-190): the merge of
+        every query is collected once (``local_frame``), its per-qid
+        row counts are the dfs, and the scores read the same rows."""
         iops = [(qid, node.args[0]) for qid, node in items]
-        merged = self._positional(iops).drop("positions").persist()
-        if self.index._temps is not None:
-            self.index._temps.append(merged)
-        dfs = {r["qid"]: r["count"] for r in merged.groupBy("qid").count().collect()}
+        table, merged = local_frame(self._positional(iops).drop("positions"))
+        dfs = Counter(table["qid"].to_pylist())
         consts = []
         for qid, iop in iops:
             avg = self.index.avg_len(iop.field)
-            consts.append((qid, self._idf(dfs.get(qid, 0), avg), avg))
+            consts.append((qid, self._idf(dfs[qid], avg), avg))
         fr, c = self._with_meta(merged, consts, ("__idf double", "__avg double"))
         return fr.select("qid", "doc_id", self._bm25(c["__idf"], c["__avg"]).alias("score"))
 

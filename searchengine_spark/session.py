@@ -71,9 +71,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE coalesce plans over persisted frames too: a small
-        # derived #NEAR merge then runs its Arrow UDF in one task, not
-        # one per shuffle partition
+        # let AQE coalesce plans over persisted frames too: a streamed
+        # batch's deduplicated pages (``streaming.ingest.write_batch``)
+        # and the MinHash dedup caches keep as few partitions as their
+        # rows need. Without it, perfbench `write` on a 4-vCPU host cost
+        # 16% more work_cpu_s (6 interleaved pairs), and its live-index
+        # probes after a streamed batch scanned 12 files each, not 5
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -129,3 +132,19 @@ def arrow_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
             [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
         )
     return spark.createDataFrame(rows, struct)
+
+
+def local_frame(df: DataFrame) -> tuple[pa.Table, DataFrame]:
+    """``df`` collected once to the driver: its rows as a ``pyarrow``
+    table and the same rows as a DataFrame read back from that table
+    (``arrow_frame``: a LocalTableScan). Nothing is cached, so nothing
+    has to be released; the caller reads counts and sums off the table.
+
+    Only for results known to be small. The query path collects the
+    derived list of a scored #NEAR/#WINDOW/#SYN with it: per query a
+    #NEAR/#WINDOW list holds at most its smallest arg's df (a #SYN arg
+    counts as the sum of its terms' dfs), a #SYN list at most that
+    sum. It is the list the reference keeps in memory to score a
+    derived operator (QryIop.java:174-190)."""
+    table = df.toArrow()
+    return table, arrow_frame(df.sparkSession, table, df.schema)

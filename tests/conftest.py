@@ -62,3 +62,21 @@ def py_index(spark, pages_index):
         for r in rows
     }
     return PyIndex(doc_tokens)
+
+
+@pytest.fixture
+def local_frames(monkeypatch):
+    """The frames the compiler collects through ``session.local_frame``
+    (the derived #NEAR/#WINDOW/#SYN lists it scores), in call order:
+    their executed plans run the positional merge."""
+    from searchengine_spark.plans import compiler
+    from searchengine_spark.session import local_frame
+
+    seen = []
+
+    def record(df):
+        seen.append(df)
+        return local_frame(df)
+
+    monkeypatch.setattr(compiler, "local_frame", record)
+    return seen

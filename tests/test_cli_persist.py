@@ -253,10 +253,15 @@ def test_single_query_plans_bind_literals(spark, persisted):
     assert len(scans) == 1, scans
 
 
-def test_nested_iop_plan_runs_one_python_udf(spark, persisted, oracle):
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_nested_iop_plan_runs_one_python_udf(spark, persisted, oracle, local_frames):
     """``#near/2(#syn(a b) c)``: #SYN's union is a JVM aggregate, so the
-    plan's only Python evaluation is the positional merge; the top-10
-    equals the oracle's to %.18f."""
+    only Python evaluation in the collected merge's plan is the
+    positional merge, and the scoring plan, which reads the collected
+    rows, runs none. The top-10 equals the oracle's to %.18f."""
     from searchengine_spark.engine import SearchEngine
 
     path, _ = persisted
@@ -264,9 +269,10 @@ def test_nested_iop_plan_runs_one_python_udf(spark, persisted, oracle):
     q = "#near/2(#syn(cerim dirim) batok)"
     df = eng.search(q, model="bm25", k=10, with_ext_id=False)
     rows = df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    udfs = set(re.findall(r"ArrowEvalPython \[(.*?)\], \[", plan))
+    assert len(local_frames) == 1
+    udfs = set(re.findall(r"ArrowEvalPython \[(.*?)\], \[", _plan(local_frames[0])))
     assert len(udfs) == 1 and next(iter(udfs)).startswith("_merge("), udfs
+    assert "ArrowEvalPython" not in _plan(df)
     want = orc.search(oracle, eng.parse(q, BM25()), BM25(), k=10)
     assert len(want) == 10
     assert [(r["doc_id"], "%.18f" % r["score"]) for r in rows] == [
@@ -279,19 +285,21 @@ def test_nested_iop_plan_runs_one_python_udf(spark, persisted, oracle):
     "#window/3(#near/1(barim batok) cerim)",
     "#near/1(balan balan)",  # a repeated term: one scan, a row per arg
 ])
-def test_nested_and_repeated_iop_args_plan_no_join(spark, persisted, oracle, q):
+def test_nested_and_repeated_iop_args_plan_no_join(spark, persisted, oracle, local_frames, q):
     """A #NEAR/#WINDOW over nested or repeated args reads its args'
-    rows into one groupBy(doc_id) and one positional merge: the
-    executed plan (the persisted merge's cached plan included) holds no
-    Join, and the top-10 equals the oracle's to %.18f."""
+    rows into one groupBy(doc_id) and one positional merge: neither
+    the collected merge's plan nor the scoring plan holds a Join, and
+    the top-10 equals the oracle's to %.18f."""
     from searchengine_spark.engine import SearchEngine
 
     path, _ = persisted
     eng = SearchEngine(read_index(spark, path))
     df = eng.search(q, model="bm25", k=10, with_ext_id=False)
     rows = df.collect()
-    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
-    assert not [ln for ln in lines if "Join" in ln], (q, lines)
+    assert len(local_frames) == 1
+    for fr in (local_frames[0], df):
+        lines = _plan(fr).splitlines()
+        assert not [ln for ln in lines if "Join" in ln], (q, lines)
     want = orc.search(oracle, eng.parse(q, BM25()), BM25(), k=10)
     assert want and all(s > 0 for _, s in want)
     assert [(r["doc_id"], "%.18f" % r["score"]) for r in rows] == [
@@ -299,26 +307,54 @@ def test_nested_and_repeated_iop_args_plan_no_join(spark, persisted, oracle, q):
     ]
 
 
-def test_near_merge_persists_in_coalesced_partitions(spark, persisted, oracle):
-    """AQE coalesces plans over persisted frames too, so a small
-    ``#near/2`` merge is persisted in fewer partitions than
-    ``spark.sql.shuffle.partitions``: its Arrow UDF runs in as few
-    tasks as its rows need. The top-10 equals the oracle's to %.18f."""
+def test_near_merge_runs_in_coalesced_partitions(spark, persisted, oracle, local_frames):
+    """AQE coalesces the merge's shuffle, so a small ``#near/2`` merge
+    runs its Arrow UDF in fewer tasks than ``spark.sql.shuffle
+    .partitions``: as few as its rows need. The top-10 equals the
+    oracle's to %.18f."""
     from searchengine_spark.engine import SearchEngine
 
     path, _ = persisted
-    idx = read_index(spark, path)
-    eng = SearchEngine(idx)
+    eng = SearchEngine(read_index(spark, path))
     q = "#near/2(barim cerim)"
     rows = eng.search(q, model="bm25", k=10, with_ext_id=False).collect()
-    assert len(idx._temps) == 1
+    assert len(local_frames) == 1
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert idx._temps[0].rdd.getNumPartitions() < shuffle
+    merge = local_frames[0]._jdf.queryExecution().executedPlan()
+    assert merge.execute().getNumPartitions() < shuffle
     want = orc.search(oracle, eng.parse(q, BM25()), BM25(), k=10)
     assert len(want) == 10
     assert [(r["doc_id"], "%.18f" % r["score"]) for r in rows] == [
         (d, "%.18f" % s) for d, s in want
     ]
+
+
+@pytest.mark.parametrize("model,q", [
+    ("bm25", "#near/2(barim cerim)"),
+    ("bm25", "#window/3(#near/1(barim batok) cerim)"),
+    ("indri", "#and(#near/1(barim batok) cerim)"),  # IopResult.stats
+])
+def test_derived_operator_queries_leave_no_cache(spark, persisted, oracle, model, q):
+    """A derived operator scored with its df/ctf is collected once to
+    the driver, never persisted: ``search`` (and, for a BM25 root,
+    ``run_batch``) leaves the session's persisted RDDs as they were,
+    and the top-10 equals the oracle's to %.18f."""
+    from searchengine_spark.engine import SearchEngine
+    from searchengine_spark.plans.models import make_model
+
+    path, _ = persisted
+    eng = SearchEngine(read_index(spark, path))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    m = make_model(model)
+    want = [(d, "%.18f" % s) for d, s in orc.search(oracle, eng.parse(q, m), m, k=10)]
+    assert want and all(float(s) > 0 for _, s in want)
+    got = eng.search(q, model=model, k=10, with_ext_id=False).collect()
+    assert [(r["doc_id"], "%.18f" % r["score"]) for r in got] == want
+    if model == "bm25":
+        got = eng.run_batch([("a", q), ("b", "#near/3(cerim dirim)")], model=model, k=10).collect()
+        assert [(r["doc_id"], "%.18f" % r["score"]) for r in got if r["qid"] == "a"] == want
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_nested_trees_plan_one_scan_no_score_joins(spark, persisted):

@@ -172,6 +172,22 @@ def test_extract_fields_and_doc_ids(spark):
     assert idx.postings.where("field='url'").count() > 0
 
 
+def test_doc_ids_build_and_release_leave_no_cache(spark):
+    """``assign_doc_ids`` fixes its url ranges with literal bounds, not
+    a cache: after ``build_index`` + ``materialize`` + ``release`` the
+    session holds as many persisted RDDs as before."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    docs = assign_doc_ids(extract_fields(make_pages(spark, 120, seed=5)), ext_id_col="url")
+    idx = build_index(docs, {"body": "body"}, ext_id_col="url", analyzer="english")
+    assert idx.materialize() > 0
+    idx.release()
+    assert jsc.getPersistentRDDs().size() == before
+    ids = sorted((r.doc_id, r.url) for r in docs.select("doc_id", "url").collect())
+    assert [i for i, _ in ids] == list(range(120))
+    assert [u for _, u in ids] == sorted(u for _, u in ids)
+
+
 def test_read_index_rejects_stale_analyzer_version(spark, tmp_path):
     """meta.json records an analyzer rule-table hash; read_index must
     fail loudly when the code's rules drifted since the index was

@@ -140,7 +140,7 @@ def test_progressive_jpeg_through_multimodal_features(spark):
         [(0, "image", bytearray(payload), "image/jpeg", len(payload))],
         mm.MEDIA_SCHEMA,
     )
-    rows = mm.extract_features(media, decode_stub=False).collect()
+    rows = mm.extract_features(media).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["width"], r["height"], r["n_frames"]) == (32, 24, 1)
@@ -154,10 +154,10 @@ def test_mjpeg_through_multimodal_features():
     """The Spark-side plumbing consumes MJPEG like any other payload:
     real-decode featurization over mapInPandas (schema/batch shape
     unchanged)."""
-    from searchengine_spark.pipeline.multimodal import _real_decode
+    from searchengine_spark.pipeline.multimodal import _decode
 
     frames = np.stack([_gradient(16, 24, seed=f) for f in range(2)])
     payload = encode_avi(frames, fps=4, codec="MJPG")
-    w, h, n, feat = _real_decode(payload, "video")
+    w, h, n, feat = _decode(payload, "video")
     assert (w, h, n) == (24, 16, 2)
     assert feat.shape == (16,) and abs(float(feat.sum()) - 1.0) < 1e-5

@@ -215,12 +215,13 @@ def _plan_nodes(plan, name: str) -> int:
     return n + sum(_plan_nodes(k, name) for k in kids)
 
 
-def test_run_batch_fused_positional_bit_identical(pages_index):
+def test_run_batch_fused_positional_bit_identical(pages_index, local_frames):
     """The positional batch (one shared scan + one Arrow merge pass for
     the whole batch) must reproduce each query's ``search`` exactly —
     mixed #NEAR/#WINDOW, varying arity and distance, nested args and
     repeated terms in the same merge. A batch of one flat and one
-    nested #NEAR plans exactly one merge."""
+    nested #NEAR runs exactly one merge: the batch collects one merged
+    list, and the batch plan, which reads it back, runs none."""
     eng = SearchEngine(pages_index)
     batch = [
         ("n1", "#near/2(barim batok)"),
@@ -236,9 +237,12 @@ def test_run_batch_fused_positional_bit_identical(pages_index):
     assert qids >= {"n1", "n2", "w1", "m1", "x1"}
 
     pair = [("n1", "#near/2(barim batok)"), ("x1", "#near/2(#syn(barim balan) batok)")]
+    local_frames.clear()
     df = eng.run_batch(pair, model=BM25(), k=10)
     df.collect()
-    assert _plan_nodes(df._jdf.queryExecution().executedPlan(), "ArrowEvalPython") == 1
+    plans = [fr._jdf.queryExecution().executedPlan() for fr in [*local_frames, df]]
+    assert len(local_frames) == 1
+    assert [_plan_nodes(p, "ArrowEvalPython") for p in plans] == [1, 0]
     assert _assert_batch_equals_search(eng, pair, BM25()) == {"n1", "x1"}
 
 
@@ -279,19 +283,3 @@ def test_run_batch_fused_models_bit_identical(pages_index, model, batch):
     eng = SearchEngine(pages_index)
     qids = _assert_batch_equals_search(eng, batch, model, mu=1500.0, lam=0.3)
     assert qids == {q for q, _ in batch}
-
-
-
-
-def test_run_batch_trims_derived_frames(pages_index):
-    """``run_batch`` bounds the persisted derived-frame registry the way
-    ``search`` does: 18 distinct positional queries over 9 calls (a
-    flat ``#NEAR`` merge and a nested ``#NEAR`` leaf each persist one
-    frame for their df) leave at most 16 frames cached."""
-    eng = SearchEngine(pages_index)
-    for k in range(1, 10):
-        eng.run_batch(
-            [("p", f"#near/{k}(barim batok)"), ("n", f"#sum(cerim #near/{k}(barim cerim))")],
-            model=BM25(), k=5,
-        )
-    assert len(pages_index._temps) <= 16
