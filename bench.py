@@ -124,7 +124,9 @@ def main() -> None:
     # vocabulary-derived 3-term queries (ranks 50..349 by df: big posting
     # lists but nonzero idf). Fused = ONE term-IN scan + one (qid, doc_id)
     # fold + per-qid top-k; union = 100 per-query ``search`` plans, each
-    # qid rank-identical (test_run_batch_fused_bit_identical_to_union).
+    # qid rank-identical (the run_batch tests in tests/test_query_engine.py:
+    # test_run_batch_fused_bit_identical_to_union,
+    # test_run_batch_fused_models_bit_identical).
     all_terms = [
         r["term"]
         for r in eng.index.term_stats.where(F.col("field") == "body")

@@ -4,18 +4,21 @@
 
 Each section shows the `explain("formatted")` output the design claims
 rest on: pushed term filters + constant bucket partition pruning on a
-persisted index, the single-scan flat scorers (BM25 fold, Indri map
-reassembly, positional co-location) for one query and for a batch, the
-tree scorer for a nested query, a nested #NEAR on the flat merge, a
-whole flat ``search`` ending in one top-k collect, and the pipeline
-operators. Regenerate after compiler changes so the committed evidence
-matches the code.
+persisted index, the one scorer (BM25 fold, Indri map reassembly,
+positional co-location, a nested tree) for one query and for a batch,
+a nested #NEAR on the same merge, a whole ``search`` ending in one
+top-k collect, and the pipeline operators. The temp dir and the
+``[plan_id=N]`` tags are replaced and the expression ids numbered per
+plan, so a regenerated PLANS.md differs only where a plan does.
+Regenerate after compiler changes so the committed evidence matches
+the code.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -34,11 +37,18 @@ from searchengine_spark.corpus import extract_fields, make_pages  # noqa: E402
 from searchengine_spark.session import get_spark  # noqa: E402
 
 
+TMP = tempfile.mkdtemp(prefix="plans_")
+
+
 def formatted(df, max_lines: int = 200) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    lines = buf.getvalue().splitlines()
+    text = re.sub(r" \[plan_id=\d+\]", "", buf.getvalue().replace(TMP, "<tmp>"))
+    # expression ids count up across the session: number them per plan
+    ids: dict[str, int] = {}
+    text = re.sub(r"#\d+", lambda m: f"#{ids.setdefault(m.group(), len(ids) + 1)}", text)
+    lines = text.splitlines()
     # materialized intermediates (persist + AQE) embed their full
     # final/initial plans recursively — cap the dump, the shape evidence
     # is in the head
@@ -58,7 +68,7 @@ def _ivf_plan_frame(spark):
     from searchengine_spark.pipeline import similarity
 
     emb = make_embeddings(spark, 400, dim=16)
-    ivf_dir = os.path.join(tempfile.mkdtemp(prefix="plans_ivf_"), "ivf")
+    ivf_dir = os.path.join(TMP, "ivf")
     similarity.write_ivf_index(emb, ivf_dir, n_cells=8)
     idx = similarity.read_ivf_index(spark, ivf_dir)
     return similarity.ivf_topk(emb, [0, 1, 2], k=10, n_probe=2, prebuilt=idx)
@@ -76,7 +86,7 @@ def main() -> None:
     src = f"persisted index at {pdir}" if pdir else "a fresh 8-bucket index over 400 synthetic pages"
     if not pdir:
         idx_mem = build_index(docs, fields={"body": "body"}, ext_id_col="url", analyzer="english")
-        pdir = os.path.join(tempfile.mkdtemp(prefix="plans_"), "index")
+        pdir = os.path.join(TMP, "index")
         write_index(idx_mem, pdir, buckets=8)
     idx = read_index(spark, pdir)
     eng = SearchEngine(idx)
@@ -90,18 +100,18 @@ def main() -> None:
             eng.scores("cerim", model="bm25"),
         ),
         (
-            "Flat BM25 #SUM (single term-IN scan + in-order fold)",
-            "5 terms, ONE FileScan, bucket pruning to the union of the terms' buckets, literal CASE-on-term idf constants (no broadcast), `aggregate(array_sort(collect_list(...)))` fold.",
+            "BM25 #SUM (one term-IN scan, one groupBy, in-order fold)",
+            "5 terms, ONE FileScan, bucket pruning to the union of the terms' buckets, literal CASE-on-term idf constants (no broadcast), one groupBy(qid, doc_id) into a leaf -> score map, and the argument-order sum of `coalesce(element_at(...), 0.0)`.",
             eng.scores("cerim dirim barim batok balan", model="bm25"),
         ),
         (
-            "Flat Indri #WAND (single scan + map reassembly with defaults)",
+            "Indri #WAND (one scan + map reassembly with defaults)",
             "No joins; `map_from_entries(collect_list(...))`, per-term `element_at` with coalesce-to-default expressions.",
             eng.scores("#wand(0.4 cerim 0.3 dirim 0.3 batok)", model="indri", mu=1500.0, lam=0.3),
         ),
         (
-            "Nested PRF #WAND (tree scorer: one scan, one groupBy)",
-            "The Indri PRF shape `#wand(w #and(orig) 1-w #wand(expansion))`: ONE term-IN FileScan for all seven leaves, one groupBy(doc_id) into a leaf -> score map, one argument-order `_indri_fold` expression per op with `coalesce`-to-default leaves — no Join.",
+            "Nested PRF #WAND (one scan, one groupBy)",
+            "The Indri PRF shape `#wand(w #and(orig) 1-w #wand(expansion))`: ONE term-IN FileScan for all seven leaves, one groupBy(qid, doc_id) into a leaf -> score map, one argument-order `_combine` expression per op with `coalesce`-to-default leaves — no Join.",
             eng.scores(
                 "#wand(0.4 #and(cerim dirim barim) 0.6 #wand(0.3 cetok 0.3 ditok 0.2 celan 0.2 dilan))",
                 model="indri", mu=1500.0, lam=0.3,
@@ -109,25 +119,34 @@ def main() -> None:
         ),
         (
             "#NEAR/2 (single scan, position co-location, Arrow merge)",
-            "One scan, one groupBy; match-ALL via `size(__ps) = k`; the positional kernel is the only Python stage.",
+            "One scan, one groupBy(qid, leaf, doc_id); match-ALL via `size(__ps) = k`; the positional kernel is the only Python stage. A one-leaf tree is a projection of the merged rows: no second groupBy.",
             eng.scores("#near/2(barim batok)", model="rankedboolean"),
         ),
         (
             "Nested #NEAR/2(#SYN(...) ...) (the same merge: no Join)",
-            "`#near/2(#syn(cerim dirim) batok)` takes the same path as a flat #NEAR: the bare term arg from ONE term-IN scan, the #SYN arg from its own JVM groupBy, both tagged by arg index into one union, one groupBy(doc_id) with `size(__ps) = k`, one Arrow merge — no Join, no per-arg doc_id alignment.",
+            "`#near/2(#syn(cerim dirim) batok)` takes the same path as a flat #NEAR: the bare term arg from ONE term-IN scan, the #SYN arg from its own JVM groupBy, both tagged by arg index into one union, one groupBy(qid, leaf, doc_id) with `size(__ps) = k`, one Arrow merge — no Join, no per-arg doc_id alignment.",
             eng.scores("#near/2(#syn(cerim dirim) batok)", model="rankedboolean"),
         ),
         (
-            "3-query BM25 run_batch (the flat scorer with broadcast constants, one scan)",
-            "The same scorer as the flat BM25 #SUM above, fed a batch: ONE term-IN FileScan for the whole batch, BroadcastHashJoin on term with the (qid, __ti, term, __idf) table (built from Arrow: a LocalTableScan, no Python-worker task), groupBy(qid, doc_id) fold, per-qid row_number window — scan count independent of batch size — and ONE `TakeOrderedAndProject` at the root, like `search`: no range exchange for the (qid, rank) order.",
+            "3-query BM25 run_batch (the one scorer with broadcast constants, one scan)",
+            "The same scorer as the BM25 #SUM above, fed a batch: ONE term-IN FileScan for the whole batch, BroadcastHashJoin on term with the (qid, __ti, term, __c) table (built from Arrow: a LocalTableScan, no Python-worker task), groupBy(qid, doc_id) fold with a CASE on the qid picking its shape (2 and 3 leaves), no per-qid table joined, per-qid row_number window — scan count independent of batch size — and ONE `TakeOrderedAndProject` at the root, like `search`: no range exchange for the (qid, rank) order.",
             eng.run_batch(
                 [("q1", "cerim dirim"), ("q2", "barim cerim"), ("q3", "dirim batok")],
                 model="bm25", k=10,
             ),
         ),
         (
-            "Flat BM25 search (one top-k collect)",
-            "`eng.search('cerim dirim barim', k=10)` end to end: df/ctf come from the driver-side term_stats lookup (no plan, no job), so the plan is the flat scorer, the broadcast ext-id join and ONE `TakeOrderedAndProject` at the root — no range exchange for the final rank order.",
+            "RankedBoolean run_batch of #AND, #WINDOW and #SYN roots (one frame)",
+            "The perfbench RankedBoolean batch: `#and(barim cerim)`, `#window/6(barim batok)`, `#syn(cerim dirim)`. ONE plan: the #AND's terms from one term-IN scan, the #WINDOW's args from a second (merged by one Arrow pass), the #SYN's from a third (one JVM groupBy), a union of leaf rows, one groupBy(qid, doc_id), a CASE on the qid picking its shape (no per-qid table joined), one per-qid top-k window. No derived list is collected: RankedBoolean reads no df/ctf.",
+            eng.run_batch(
+                [("r1", "#and(barim cerim)"), ("r2", "#window/6(barim batok)"),
+                 ("r3", "#syn(cerim dirim)")],
+                model="rankedboolean", k=10,
+            ),
+        ),
+        (
+            "BM25 search (one top-k collect)",
+            "`eng.search('cerim dirim barim', k=10)` end to end: df/ctf come from the driver-side term_stats lookup (no plan, no job), so the plan is the scorer, the broadcast ext-id join and ONE `TakeOrderedAndProject` at the root — no range exchange for the final rank order.",
             eng.search("cerim dirim barim", model="bm25", k=10),
         ),
         (

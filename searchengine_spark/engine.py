@@ -9,7 +9,7 @@ DataFrame plan -> TakeOrderedAndProject top-k.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from searchengine_spark.analyzer import get_analyzer
 from searchengine_spark.index.build import InvertedIndex
@@ -98,15 +98,13 @@ class SearchEngine:
     ) -> DataFrame:
         """Evaluate (qid, query) pairs -> (qid, doc_id, ext_id, score, rank).
 
-        Flat queries (``Compiler.flat_scorer``: BM25 bags of words and
-        ``#NEAR``/``#WINDOW`` roots, flat Indri and Boolean ops) go to
-        their model's flat scorer together: per field ONE term-IN
-        postings scan for the whole batch, broadcast per-query
-        constants, one groupBy(qid, doc_id), one per-qid top-k window —
-        batch-size-independent scan count, the shape a 10k-query batch
-        needs. It is the same scorer ``search`` runs on one query, so
-        every qid's rows equal its own ``search``. Other queries compile
-        one by one and union in.
+        The whole batch is one plan from the one scorer
+        (``Compiler.score_tree``, which ``search`` runs on one query):
+        per field ONE term-IN postings scan, one merge for the batch's
+        #NEAR/#WINDOW leaves, broadcast per-query constants, one
+        groupBy(qid, doc_id), one per-qid top-k window. The scan count
+        does not grow with the batch, and every qid's rows equal its own
+        ``search``. A qid given twice raises ``ValueError``.
 
         Each query keeps at most ``k`` unique ranks, so the closing
         ``orderBy(qid, rank).limit(k * len(parsed))`` keeps every row
@@ -114,42 +112,24 @@ class SearchEngine:
         range exchange and no sampling job.
         """
         m = self._model(model, **params)
-        comp = self.compiler(m)
-        parsed = []
+        parsed, seen = [], set()
         for qid, q in queries:
+            if qid in seen:
+                raise ValueError(f"run_batch: qid {qid!r} is given more than once")
+            seen.add(qid)
             ast = self.parse(q, m)
-            if ast is None:
-                continue  # empty query (QryEval.java:131)
-            parsed.append((qid, ast))
-        if parsed:
-            # ONE term-dictionary lookup for every term of every query
-            # in the batch — the scorers and per-query compile()s then
-            # hit the compiler's stats cache instead of each looking up
-            # their own terms
-            comp.prefetch_term_stats(SopNode("sum", tuple(a for _, a in parsed)))
-
-        flat: dict = {}
-        frames = []
-        for qid, ast in parsed:
-            scorer = comp.flat_scorer(ast)
-            if scorer is None:
-                frames.append(topk(comp.compile(ast), k).withColumn("qid", F.lit(qid)))
-            else:
-                flat.setdefault(scorer, []).append((qid, ast))
-        for scorer, items in flat.items():
-            scored = scorer(items).select("qid", "doc_id", "score")
-            frames.append(topk_grouped(scored, k).select("qid", "doc_id", "score", "rank"))
-        if not frames:
+            if ast is not None:  # an empty query is skipped (QryEval.java:131)
+                parsed.append((qid, ast))
+        if not parsed:
             return arrow_frame(
                 self.index.spark, [],
                 "qid string, doc_id long, ext_id string, score double, rank int",
             )
-        u = frames[0]
-        for fr in frames[1:]:
-            u = u.unionByName(fr)
-        out = attach_ext_ids(u, self.index.docs)
+        scored = self.compiler(m).score_tree(parsed)
+        ranked = topk_grouped(scored, k).select("qid", "doc_id", "score", "rank")
         return (
-            out.select("qid", "doc_id", "ext_id", "score", "rank")
+            attach_ext_ids(ranked, self.index.docs)
+            .select("qid", "doc_id", "ext_id", "score", "rank")
             .orderBy("qid", "rank")
             .limit(k * len(parsed))
         )

@@ -1,6 +1,6 @@
-"""Flat queries take their model's single-scan scorer (one scan, one
+"""Flat queries take the one scorer's single scan (one scan, one
 shuffle, no join) and score like the oracle; nested trees take the
-tree scorer, also without joins."""
+same scorer, also without joins."""
 
 import pytest
 
@@ -11,7 +11,7 @@ from tests import oracle as orc
 
 
 def test_flat_bm25_sum_matches_oracle(pages_index, py_index):
-    """A 10-term BM25 #SUM through the flat scorer equals the oracle."""
+    """A 10-term BM25 #SUM through the one scorer equals the oracle."""
     eng = SearchEngine(pages_index)
     m = BM25()
     q = "barim batok balan cerim cetok celan dirim ditok dilan baser"

@@ -332,7 +332,7 @@ def test_near_merge_runs_in_coalesced_partitions(spark, persisted, oracle, local
 @pytest.mark.parametrize("model,q", [
     ("bm25", "#near/2(barim cerim)"),
     ("bm25", "#window/3(#near/1(barim batok) cerim)"),
-    ("indri", "#and(#near/1(barim batok) cerim)"),  # IopResult.stats
+    ("indri", "#and(#near/1(barim batok) cerim)"),  # the derived list's ctf
 ])
 def test_derived_operator_queries_leave_no_cache(spark, persisted, oracle, model, q):
     """A derived operator scored with its df/ctf is collected once to
@@ -358,8 +358,8 @@ def test_derived_operator_queries_leave_no_cache(spark, persisted, oracle, model
 
 
 def test_nested_trees_plan_one_scan_no_score_joins(spark, persisted):
-    """Nested score trees take the tree scorer: one postings scan per
-    field and one groupBy(doc_id), no per-child score joins. The PRF
+    """Nested score trees take the one scorer: one postings scan per
+    field and one groupBy(qid, doc_id), no per-child score joins. The PRF
     shapes (Indri ``#wand`` over ``#and``, BM25 ``#wsum`` over ``#sum``)
     read the postings with exactly one FileScan and join nothing; a
     multi-field Indri tree joins only ``doc_stats`` (its doc-length

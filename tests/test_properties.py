@@ -115,7 +115,7 @@ def test_near_tf_le_min_list_len(a, b, dist):
 
 
 # ---------------------------------------------------------------------------
-# flat scorers vs the tree scorer, and random nested trees vs the oracle
+# a query alone vs in a batch, and random nested trees vs the oracle
 # ---------------------------------------------------------------------------
 
 FLAT_VOCAB = [
@@ -128,26 +128,9 @@ def _scores(df) -> dict:
     return {int(r["doc_id"]): float(r["score"]) for r in df.collect()}
 
 
-@settings(max_examples=12, deadline=None)
-@given(st.data())
-def test_flat_strategy_bit_identical_to_tree_scorer(pages_index, py_index, data):
-    """Random flat Indri/Boolean queries: the model's flat scorer (the
-    route ``compile`` takes) and the tree scorer, called directly on the
-    same AST, give BIT-identical (doc_id, score) frames for every op x
-    weight combination, and both match the oracle — generalizing the
-    specific queries the oracle gates pin."""
-    from searchengine_spark.engine import SearchEngine
-    from searchengine_spark.plans.compiler import Compiler
-    from searchengine_spark.plans.models import Indri, RankedBoolean
-    from tests import oracle as orc
-
-    model_kind = data.draw(st.sampled_from(["indri", "bool"]))
-    if model_kind == "indri":
-        op = data.draw(st.sampled_from(["and", "or", "wand", "wsum"]))
-        m = Indri(mu=data.draw(st.sampled_from([1500.0, 2500.0])), lam=0.3)
-    else:
-        op = data.draw(st.sampled_from(["and", "or"]))
-        m = RankedBoolean()
+def _draw_flat(data, ops) -> str:
+    """A flat ``#op`` over 2-5 distinct terms, weighted for #WAND/#WSUM."""
+    op = data.draw(st.sampled_from(ops))
     n_terms = data.draw(st.integers(min_value=2, max_value=5))
     terms = data.draw(
         st.lists(
@@ -163,20 +146,46 @@ def test_flat_strategy_bit_identical_to_tree_scorer(pages_index, py_index, data)
         body = " ".join(f"{w} {t}" for w, t in zip(weights, terms))
     else:
         body = " ".join(terms)
-    q = f"#{op}({body})"
+    return f"#{op}({body})"
 
-    ast = SearchEngine(pages_index).parse(q, m)
+
+@settings(max_examples=12, deadline=None)
+@given(st.data())
+def test_query_alone_bit_identical_in_a_batch(pages_index, py_index, data):
+    """Random flat Indri/Boolean queries: a query scored alone (the
+    ``compile`` route, literal constants) and the same query scored in
+    a batch with a second drawn query (broadcast constants, and a shape
+    CASE when their shapes differ) give BIT-identical (doc_id, score)
+    frames for every op x weight combination, and match the oracle —
+    generalizing the specific queries the oracle gates pin."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.engine import SearchEngine
+    from searchengine_spark.plans.compiler import Compiler
+    from searchengine_spark.plans.models import Indri, RankedBoolean
+    from tests import oracle as orc
+
+    model_kind = data.draw(st.sampled_from(["indri", "bool"]))
+    if model_kind == "indri":
+        ops = ["and", "or", "wand", "wsum"]
+        m = Indri(mu=data.draw(st.sampled_from([1500.0, 2500.0])), lam=0.3)
+    else:
+        ops = ["and", "or"]
+        m = RankedBoolean()
+    q, q2 = _draw_flat(data, ops), _draw_flat(data, ops)
+
+    eng = SearchEngine(pages_index)
+    ast, ast2 = eng.parse(q, m), eng.parse(q2, m)
     comp = Compiler(pages_index, m)
-    assert comp.flat_scorer(ast) is not None, q
-    flat = _scores(comp.compile(ast))
-    tree = _scores(comp.score_tree(ast))
-    assert set(flat) == set(tree), q
-    for d, s in tree.items():
-        assert flat[d] == s, (q, d, flat[d], s)
+    alone = _scores(comp.compile(ast))
+    batch = comp.score_tree([("a", ast), ("b", ast2)])
+    for qid, a, want in (("a", q, alone), ("b", q2, _scores(comp.compile(ast2)))):
+        got = _scores(batch.where(F.col("qid") == qid))
+        assert got == want, (a, q, q2)
     expected = dict(orc.search(py_index, ast, m, k=10**9))
-    assert set(flat) == set(expected), q
+    assert set(alone) == set(expected), q
     for d, s in expected.items():
-        assert flat[d] == pytest.approx(s, rel=1e-12), (q, d)
+        assert alone[d] == pytest.approx(s, rel=1e-12), (q, d)
 
 
 NESTED_OPS = {

@@ -188,13 +188,13 @@ def _assert_batch_equals_search(eng, batch, model, **params):
 def test_run_batch_fused_bit_identical_to_union(pages_index):
     """The one-plan BM25 batch must reproduce each query's ``search``
     exactly, including single-term, duplicate-term, and mixed batches
-    where structured queries fall back to per-query plans."""
+    of bags of words and structured queries."""
     eng = SearchEngine(pages_index)
     batch = [
         ("q1", "cerim dirim"),
         ("q2", "cerim"),
         ("q3", "cerim cerim dirim"),  # duplicate term under #SUM
-        ("q4", "#near/2(barim batok)"),  # -> flat positional scorer
+        ("q4", "#near/2(barim batok)"),  # a derived leaf in the same plan
         ("q5", "dirim batok cerim fulan"),
     ]
     qids = _assert_batch_equals_search(eng, batch, BM25())
@@ -205,7 +205,7 @@ def _plan_nodes(plan, name: str) -> int:
     """``name`` nodes of an executed physical plan, descending into the
     final plans of adaptive and query-stage nodes and into the cached
     plans of persisted frames."""
-    n = int(plan.nodeName() == name)
+    n = int(plan.nodeName().strip() == name)
     cls = plan.getClass().getSimpleName()
     kids = [plan.executedPlan()] if cls == "AdaptiveSparkPlanExec" else []
     if cls.endswith("QueryStageExec"):
@@ -229,7 +229,7 @@ def test_run_batch_fused_positional_bit_identical(pages_index, local_frames):
         ("n3", "#near/4(balan batok cerim)"),       # arity 3
         ("w1", "#window/4(barim balan)"),
         ("w2", "#window/8(dirim barim batok)"),
-        ("m1", "cerim dirim"),                       # flat -> bm25 bag of words
+        ("m1", "cerim dirim"),                       # bm25 bag of words
         ("x1", "#near/2(#syn(barim balan) batok)"),  # nested arg, same merge
         ("x2", "#near/2(barim barim)"),              # repeated term, same merge
     ]
@@ -256,7 +256,7 @@ def test_run_batch_fused_positional_bit_identical(pages_index, local_frames):
                 ("i2", "#or(cerim batok balan)"),
                 ("i3", "#wand(0.7 cerim 0.3 dirim)"),
                 ("i4", "#wsum(0.2 barim 0.8 cerim 1.0 dirim)"),
-                ("i5", "#and(cerim #near/2(barim batok))"),  # nested -> tree scorer
+                ("i5", "#and(cerim #near/2(barim batok))"),  # nested, same plan
                 ("i6", "#wsum(0.5 barim 1.0 cerim 1.5 dirim)"),  # total 3.0: inexact /
             ],
         ),
@@ -275,11 +275,79 @@ def test_run_batch_fused_positional_bit_identical(pages_index, local_frames):
                 ("u2", "#or(cerim batok)"),
             ],
         ),
+        (
+            # the perfbench RankedBoolean mix: three shapes, two of them
+            # one derived leaf
+            "rankedboolean",
+            [
+                ("r1", "#and(barim cerim)"),
+                ("r2", "#window/6(barim batok)"),
+                ("r3", "#syn(cerim dirim)"),
+            ],
+        ),
+        (
+            "bm25",
+            [
+                ("t1", "#sum(#near/2(barim batok) cerim)"),
+                ("t2", "cerim dirim"),
+                ("t3", "#near/3(cerim dirim)"),
+            ],
+        ),
     ],
 )
 def test_run_batch_fused_models_bit_identical(pages_index, model, batch):
-    """Indri/Boolean batches must reproduce each query's ``search``
-    exactly, including weighted ops and nested-query fallback."""
+    """Every model's batches must reproduce each query's ``search``
+    exactly, including weighted ops, nested trees, and trees of
+    several shapes in one batch."""
     eng = SearchEngine(pages_index)
     qids = _assert_batch_equals_search(eng, batch, model, mu=1500.0, lam=0.3)
     assert qids == {q for q, _ in batch}
+
+
+def test_run_batch_rejects_a_repeated_qid(pages_index):
+    """Two queries under one qid would merge into one mixed ranking."""
+    eng = SearchEngine(pages_index)
+    with pytest.raises(ValueError, match="'q1'"):
+        eng.run_batch([("q1", "cerim dirim"), ("q2", "barim"), ("q1", "batok")], model=BM25())
+
+
+def test_batch_cost_does_not_grow_with_batch_size(spark, pages_index, py_index, tmp_path):
+    """A ``run_batch`` of n Indri ``#and(#near/2(a b) #or(c d))`` queries
+    with distinct terms plans the same postings and docs scans at n =
+    1, 4 and 16, and runs the same Spark jobs at 4 and 16 (one query
+    binds literals where a batch joins broadcast tables, so n = 1 runs
+    fewer). Each ``#near`` pair is adjacent in some doc, so no batch's
+    derived list is empty (an empty one drops its branch and a job)."""
+    from searchengine_spark.index.build import read_index, write_index
+
+    write_index(pages_index, str(tmp_path / "index"), buckets=4)
+    index = read_index(spark, str(tmp_path / "index"))
+    used, pairs, singles = set(), [], []
+    for _, fields in sorted(py_index.doc_tokens.items()):
+        toks = fields["body"]
+        for a, b in zip(toks, toks[1:]):
+            if len(pairs) < 16 and a and b and a != b and not {a, b} & used:
+                pairs.append((a, b))
+                used |= {a, b}
+    for _, fields in sorted(py_index.doc_tokens.items()):
+        for t in fields["body"]:
+            if len(singles) < 32 and t and t not in used:
+                singles.append(t)
+                used.add(t)
+    assert len(pairs) == 16 and len(singles) == 32
+
+    sc = spark.sparkContext
+    scans, jobs = {}, {}
+    for n in (1, 4, 16):
+        batch = [
+            (f"q{j}", f"#and(#near/2({a} {b}) #or({singles[2 * j]} {singles[2 * j + 1]}))")
+            for j, (a, b) in enumerate(pairs[:n])
+        ]
+        sc.setJobGroup(f"batch{n}", "batch")
+        df = SearchEngine(index).run_batch(batch, model="indri", k=10)
+        assert df.collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(f"batch{n}"))
+        scans[n] = _plan_nodes(df._jdf.queryExecution().executedPlan(), "Scan parquet")
+    assert scans[1] == scans[4] == scans[16] > 0, scans
+    assert jobs[4] == jobs[16] and jobs[1] <= jobs[4], jobs
