@@ -101,12 +101,12 @@ def main() -> None:
         ),
         (
             "BM25 #SUM (one term-IN scan, one groupBy, in-order fold)",
-            "5 terms, ONE FileScan, bucket pruning to the union of the terms' buckets, literal CASE-on-term idf constants (no broadcast), one groupBy(qid, doc_id) into a leaf -> score map, and the argument-order sum of `coalesce(element_at(...), 0.0)`.",
+            "5 terms, ONE FileScan, bucket pruning to the union of the terms' buckets, idf constants from one map literal keyed by term (`inline(element_at(map, term))`: no broadcast), one groupBy(qid, doc_id) into a leaf -> score map, and the argument-order sum of `coalesce(element_at(...), 0.0)`.",
             eng.scores("cerim dirim barim batok balan", model="bm25"),
         ),
         (
             "Indri #WAND (one scan + map reassembly with defaults)",
-            "No joins; `map_from_entries(collect_list(...))`, per-term `element_at` with coalesce-to-default expressions.",
+            "No joins; `map_from_entries(collect_list(...))`, per-term `element_at` with coalesce-to-default expressions; the query's leaf defaults and weights are one `array<double>` read from a map literal keyed by qid, projected once.",
             eng.scores("#wand(0.4 cerim 0.3 dirim 0.3 batok)", model="indri", mu=1500.0, lam=0.3),
         ),
         (
@@ -128,8 +128,8 @@ def main() -> None:
             eng.scores("#near/2(#syn(cerim dirim) batok)", model="rankedboolean"),
         ),
         (
-            "3-query BM25 run_batch (the one scorer with broadcast constants, one scan)",
-            "The same scorer as the BM25 #SUM above, fed a batch: ONE term-IN FileScan for the whole batch, BroadcastHashJoin on term with the (qid, __ti, term, __c) table (built from Arrow: a LocalTableScan, no Python-worker task), groupBy(qid, doc_id) fold with a CASE on the qid picking its shape (2 and 3 leaves), no per-qid table joined, per-qid row_number window — scan count independent of batch size — and ONE `TakeOrderedAndProject` at the root, like `search`: no range exchange for the (qid, rank) order.",
+            "3-query BM25 run_batch (the one scorer, map-literal constants, one scan)",
+            "The same scorer as the BM25 #SUM above, fed a batch: ONE term-IN FileScan for the whole batch, each posting tagged by a `Generate inline` of its term's (qid, __ti, __c) entries in one map literal (no constants table, no join, no broadcast but the ext-id one), groupBy(qid, doc_id) fold with a CASE on the qid picking its shape (2 and 3 leaves), no per-qid table joined, per-qid row_number window — scan count independent of batch size — and ONE `TakeOrderedAndProject` at the root, like `search`: no range exchange for the (qid, rank) order.",
             eng.run_batch(
                 [("q1", "cerim dirim"), ("q2", "barim cerim"), ("q3", "dirim batok")],
                 model="bm25", k=10,

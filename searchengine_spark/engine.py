@@ -101,10 +101,11 @@ class SearchEngine:
         The whole batch is one plan from the one scorer
         (``Compiler.score_tree``, which ``search`` runs on one query):
         per field ONE term-IN postings scan, one merge for the batch's
-        #NEAR/#WINDOW leaves, broadcast per-query constants, one
-        groupBy(qid, doc_id), one per-qid top-k window. The scan count
-        does not grow with the batch, and every qid's rows equal its own
-        ``search``. A qid given twice raises ``ValueError``.
+        #NEAR/#WINDOW leaves, per-query constants from map literals (no
+        constants table), one groupBy(qid, doc_id), one per-qid top-k
+        window. The scan count does not grow with the batch, and every
+        qid's rows equal its own ``search``. A qid given twice raises
+        ``ValueError``.
 
         Each query keeps at most ``k`` unique ranks, so the closing
         ``orderBy(qid, rank).limit(k * len(parsed))`` keeps every row

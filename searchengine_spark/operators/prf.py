@@ -20,8 +20,8 @@ Semantics replicated from QryExpand.expand (QryExpand.java:68-147):
 Spark shape: the per-term sum factors into
 ``idf_t * (Σ_present tf/(dl+μ)·s_d  +  μ·ctf_t/collen · S0)`` with
 ``S0 = Σ_topdocs s_d/(dl_d+μ)`` a scalar — so candidate scoring is one
-filter on postings (doc_id IN top — broadcast) + one groupBy(term),
-never a full-corpus pass.
+filter on postings (doc_id IN top, each row's s_d looked up in a map
+literal) + one groupBy(term), never a full-corpus pass.
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from searchengine_spark.engine import SearchEngine
-from searchengine_spark.session import arrow_frame
+from searchengine_spark.session import map_literal
 
 
 @dataclass(frozen=True)
@@ -56,14 +56,11 @@ def candidate_term_scores(
     collen = float(idx.sum_len(f))
 
     doc_ids = [int(d) for d, _ in top_docs]
-    spark = idx.spark
-    top_df = arrow_frame(
-        spark, [(int(d), float(s)) for d, s in top_docs], "doc_id long, fb_doc_score double"
-    )
+    doc_score = map_literal([(int(d), float(s)) for d, s in top_docs], "bigint", "double")
 
     posts = (
         idx.postings.where((F.col("field") == f) & F.col("doc_id").isin(doc_ids))
-        .join(F.broadcast(top_df), on="doc_id")
+        .withColumn("fb_doc_score", F.element_at(doc_score, F.col("doc_id")))
         .where(~F.col("term").rlike("[.,]"))
     )
     # present part: Σ tf/(dl+μ)·s_d ; smoothing scalar S0 = Σ s_d/(dl_d+μ)

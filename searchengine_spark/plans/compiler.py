@@ -33,8 +33,12 @@ shape (ops, arities, leaf fields) share one Column; a batch of several
 shapes picks each qid's with a CASE on the qid.
 
 Per-query numbers (idf, Indri p and defaults, weights, operator
-distances) reach the rows as literals for one query and as broadcast
-Arrow-built tables for a batch (``term_scan``, ``_with_meta``).
+distances) reach the rows the same way for one query and a batch: one
+map literal per key -> values table (``session.map_literal``), read
+with ``element_at`` on the row's term (``term_scan``) or its qid or
+(qid, leaf) (``_with_meta``). No constants table is built or joined,
+and since generated code references a map literal rather than inlining
+its values, a fresh query of a shape already run compiles no classes.
 Score expressions are built strictly in argument order, so
 floating-point results are reproducible, equal for a query alone and
 in a batch, and bit-comparable with the ANSI-SQL oracle.
@@ -60,7 +64,7 @@ from searchengine_spark.index.build import InvertedIndex
 from searchengine_spark.operators.positional import positional_merge
 from searchengine_spark.plans.ast import SopNode, TermNode, is_iop
 from searchengine_spark.plans.models import BM25, Indri, RankedBoolean, UnrankedBoolean
-from searchengine_spark.session import arrow_frame, local_frame
+from searchengine_spark.session import arrow_frame, local_frame, map_literal
 
 
 def _leaves(node):
@@ -87,17 +91,7 @@ def _union(frames: list[DataFrame]) -> DataFrame:
     return u
 
 
-def _case(key: str, by_key: dict) -> Column:
-    """``CASE key WHEN k THEN <value> ...`` over ``{k: value}`` (values
-    are literals or Columns)."""
-    out = None
-    for k, v in by_key.items():
-        match = F.col(key) == k
-        out = F.when(match, F.lit(v)) if out is None else out.when(match, F.lit(v))
-    return out
-
-
-def _merge(frame: DataFrame, positions: Column, kind, dist) -> DataFrame:
+def _merge(frame: DataFrame, positions: Column, kind: Column, dist: Column) -> DataFrame:
     """Run the positional merge UDF over ``positions`` (array<array<int>>,
     arg order) -> (qid, __li, doc_id, tf, doc_len, positions), tf > 0."""
     cols = ["qid", "__li", "doc_id", F.col("__m.tf").alias("tf"), "doc_len",
@@ -109,7 +103,7 @@ def _merge(frame: DataFrame, positions: Column, kind, dist) -> DataFrame:
     # the 400k PLANS.md). Filtering on the projected alias keeps one
     # Arrow pass.
     return (
-        frame.withColumn("__m", positional_merge(positions, F.lit(kind), F.lit(dist)))
+        frame.withColumn("__m", positional_merge(positions, kind, dist))
         .select(*cols)
         .where(F.col("tf") > 0)
     )
@@ -164,69 +158,43 @@ class Compiler:
         ``rows`` holds one ``(qid, ti, term, *values)`` per arg and
         ``consts`` the values' ``"name type"`` columns. Each posting
         comes out once per arg naming its term, with ``qid``, ``__ti``
-        and the constants. One query binds them as literal CASE-on-term
-        columns: no driver-built table, no broadcast, no extra job (a
-        repeated term explodes to one row per arg). Two or more join a
-        broadcast ``(qid, __ti, term, ...)`` table built from Arrow
-        (``arrow_frame``: no Python-worker task), so the scan count
-        stays one per field whatever the batch size.
-
-        One query keeps its literals although each fresh query's
-        constants compile new codegen classes: sending it through the
-        broadcast table (and ``_with_meta``'s join) cost more than the
-        compiles saved. On the perfbench ``query`` workload (3
-        interleaved pairs, 4-vCPU host) ``query_cpu_s`` rose
-        0.50-0.58 -> 0.64-0.68 s and ``work_cpu_s`` 9.2-9.4 ->
-        10.8-11.4 s. The item count picks the path.
-        """
-        names = sorted({r[2] for r in rows})
-        cond = (F.col("field") == fld) & F.col("term").isin(names)
-        bc = self._bucket_cond(names)
+        and the constants: the ``inline`` of its term's array in one
+        ``map_literal`` term -> array<struct<qid, __ti, *consts>>, for
+        one query and a batch alike. No table is built or joined, and
+        the scan count stays one per field whatever the batch size."""
+        terms = sorted({r[2] for r in rows})
+        cond = (F.col("field") == fld) & F.col("term").isin(terms)
+        bc = self._bucket_cond(terms)
         if bc is not None:
             cond = cond & bc
-        fr = self.index.postings.where(cond)
-        if len({r[0] for r in rows}) > 1:
-            schema = ", ".join(["qid string", "__ti int", "term string", *consts])
-            qt = arrow_frame(self.index.spark, rows, schema)
-            return fr.join(F.broadcast(qt), on="term")
-        cols = ["__ti", *(c.split()[0] for c in consts)]
-        by_term: dict[str, list[tuple]] = {}
-        for r in rows:
-            by_term.setdefault(r[2], []).append((r[1], *r[3:]))
-        qid = F.lit(rows[0][0]).alias("qid")
-        if all(len(v) == 1 for v in by_term.values()):
-            return fr.select("*", qid, *(
-                _case("term", {t: v[0][j] for t, v in by_term.items()}).alias(n)
-                for j, n in enumerate(cols)
-            ))
-        arrays = {
-            t: F.array(*(F.struct(*(F.lit(x).alias(n) for x, n in zip(a, cols))) for a in v))
-            for t, v in by_term.items()
-        }
-        return fr.select("*", qid, F.inline(_case("term", arrays)))
+        names = [c.split()[0] for c in consts]
+        by_term: dict[str, list[dict]] = {}
+        for q, ti, t, *vals in rows:
+            by_term.setdefault(t, []).append({"qid": q, "__ti": ti, **dict(zip(names, vals))})
+        entry = ", ".join(["qid string", "__ti int", *consts])
+        args = map_literal(by_term.items(), "string", f"array<struct<{entry}>>")
+        return self.index.postings.where(cond).select(
+            "*", F.inline(F.element_at(args, F.col("term")))
+        )
 
     def _with_meta(self, frame: DataFrame, rows: list[tuple], cols: tuple,
                    keys: tuple = ("qid string",)):
         """Per-key constants ``rows`` = ``[(*key, *values)]`` (``keys``,
         ``cols``: their ``"name type"``) for a frame keyed by ``keys``
-        (the qid, or the qid and a leaf) -> (frame, {name: value}).
+        (the qid, or the qid and a leaf) -> (frame, {name: Column}).
 
-        One query binds literals: a single row gives its values back
-        as Python values, which the scoring expressions fold; several
-        (one query's leaves) a CASE on the leaf key. A batch joins a
-        broadcast Arrow-built table and gets its columns."""
-        names = [c.split()[0] for c in cols]
+        The frame gains ``__meta``, its row's struct of values looked up
+        once in one ``map_literal`` keyed by a struct of ``keys``; each
+        Column reads a field of it."""
         nk = len(keys)
-        if len(rows) == 1:
-            return frame, dict(zip(names, rows[0][nk:]))
-        if len({r[0] for r in rows}) == 1:
-            leaf = keys[-1].split()[0]
-            return frame, {
-                n: _case(leaf, {r[nk - 1]: r[nk + j] for r in rows}) for j, n in enumerate(names)
-            }
-        meta = arrow_frame(self.index.spark, rows, ", ".join([*keys, *cols]))
         on = [k.split()[0] for k in keys]
-        return frame.join(F.broadcast(meta), on=on), {n: F.col(n) for n in names}
+        names = [c.split()[0] for c in cols]
+        meta = map_literal(
+            [(dict(zip(on, r[:nk])), dict(zip(names, r[nk:]))) for r in rows],
+            f"struct<{', '.join(keys)}>", f"struct<{', '.join(cols)}>",
+        )
+        frame = frame.withColumn("__meta", F.element_at(meta, F.struct(*on)))
+        return frame, {n: F.col(f"__meta.{n}") for n in names}
 
     # ------------------------------------------------------------------
     # derived lists: items [(qid, leaf, iop)] over one field
@@ -286,7 +254,7 @@ class Compiler:
             ("qid string", "__li int"),
         )
         # NEAR/WINDOW match only docs containing EVERY arg
-        g = g.where(F.size("__ps") == F.lit(c["__k"]))
+        g = g.where(F.size("__ps") == c["__k"])
         return _merge(g, F.col("__ps.positions"), c["__kind"], c["__dist"])
 
     # ------------------------------------------------------------------
@@ -363,8 +331,7 @@ class Compiler:
                 ps = [p_def[qid, li] for li, _ in enumerate(_leaves(node))]
                 meta.append((qid, self._numbers(node, ps)))
             g, c = self._with_meta(g, meta, ("__n array<double>",))
-            n = c["__n"]
-            num = (lambda j: F.lit(n[j])) if isinstance(n, list) else (lambda j: F.element_at(n, j + 1))
+            num = lambda j: F.element_at(c["__n"], j + 1)  # noqa: E731
 
         # a doc's length in each field: the max over its rows there; a
         # multi-field Indri tree falls back to doc_stats, then 0
@@ -508,7 +475,7 @@ class Compiler:
 
     def _leaf_score(self, fld: str, c) -> Column:
         """Leaf score of posting rows ``(tf, doc_len)`` over ``fld`` with
-        the leaf's row constant ``c`` (a value or a Column)."""
+        the leaf's row constant Column ``c``."""
         m = self.model
         tf = F.col("tf").cast("double")
         if isinstance(m, UnrankedBoolean):
@@ -526,20 +493,19 @@ class Compiler:
         n = float(self.index.n_docs)
         return max(0.0, math.log((n - df + 0.5) / (df + 0.5))) if avg > 0 else 0.0
 
-    def _bm25(self, idf, avg) -> Column:
+    def _bm25(self, idf: Column, avg: float) -> Column:
         """idf * tf/(tf+k1*(1-b+b*len/avglen)); k3 read but unused."""
         m = self.model
         tf = F.col("tf").cast("double")
         denom = tf + F.lit(m.k1) * (
             F.lit(1.0 - m.b) + F.lit(m.b) * F.col("doc_len") / F.lit(avg)
         )
-        return F.lit(idf) * tf / denom
+        return idf * tf / denom
 
-    def _indri(self, tf: Column, dl: Column, p) -> Column:
+    def _indri(self, tf: Column, dl: Column, p: Column) -> Column:
         """(1-λ)(tf+μp)/(len+μ) + λp (QrySopScore.getScoreIndri); the
         default score is tf=0 with p from ctf<1 -> 0.5 (getDefaultScore)."""
         m = self.model
-        p = F.lit(p)
         return (
             F.lit(1.0 - m.lam) * (tf + F.lit(m.mu) * p) / (dl + F.lit(m.mu))
             + F.lit(m.lam) * p

@@ -7,10 +7,11 @@ assumes a single JVM.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -132,6 +133,27 @@ def arrow_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFram
             [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
         )
     return spark.createDataFrame(rows, struct)
+
+
+def map_literal(pairs, key: str, value: str) -> Column:
+    """``pairs`` ``[(key, value)]`` as one ``map<key, value>`` Column
+    (``key``, ``value``: DDL types; a struct given as a dict, an array
+    as a list).
+
+    It is ONE JSON string literal read by ``from_json``: three JVM
+    calls and three plan nodes whatever its size, which the optimizer
+    folds into one map Literal. (A ``lit`` per value, or the SQL text of
+    a ``map(...)``, leaves a node per value in the analyzed plan for
+    every later transformation to walk.) Generated code holds the
+    Literal as a referenced object, so its values never enter a class's
+    source and new values reuse compiled classes. JSON carries strings
+    and doubles exactly; ``FAILFAST`` makes a value of the wrong type
+    raise instead of reading as null. Read the map with ``element_at``
+    on a key column, projected once (``withColumn``) where several
+    expressions use the value."""
+    text = json.dumps([{"key": k, "value": v} for k, v in pairs])
+    schema = f"array<struct<key: {key}, value: {value}>>"
+    return F.map_from_entries(F.from_json(F.lit(text), schema, {"mode": "FAILFAST"}))
 
 
 def local_frame(df: DataFrame) -> tuple[pa.Table, DataFrame]:

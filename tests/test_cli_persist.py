@@ -223,8 +223,8 @@ def test_cli_eval_metrics_output(spark, persisted, tmp_path):
 
 
 def test_single_query_plans_bind_literals(spark, persisted):
-    """``search`` binds one query's constants as literals: its plan has
-    no broadcast and no Python-built (ExistingRDD) table. The 3-query
+    """``search`` binds one query's constants as map literals: its plan
+    has no broadcast and no Python-built (ExistingRDD) table. The 3-query
     BM25 ``run_batch`` of scripts/plans.py still reads the postings with
     exactly one FileScan."""
     from searchengine_spark.engine import SearchEngine

@@ -153,9 +153,9 @@ def _draw_flat(data, ops) -> str:
 @given(st.data())
 def test_query_alone_bit_identical_in_a_batch(pages_index, py_index, data):
     """Random flat Indri/Boolean queries: a query scored alone (the
-    ``compile`` route, literal constants) and the same query scored in
-    a batch with a second drawn query (broadcast constants, and a shape
-    CASE when their shapes differ) give BIT-identical (doc_id, score)
+    ``compile`` route) and the same query scored in a batch with a
+    second drawn query (both queries' constants in one map literal, and
+    a shape CASE when their shapes differ) give BIT-identical (doc_id, score)
     frames for every op x weight combination, and match the oracle —
     generalizing the specific queries the oracle gates pin."""
     from pyspark.sql import functions as F
